@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count}
 
 /** Driver-run benchmark: one JSON line with per-query seconds on
@@ -11,35 +10,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Join-strategy knob (guide §3.1/§9): preferSortMergeJoin=false lets
-    // the planner pick a shuffled-hash join when its size conditions
-    // hold, skipping the two sorts of a medium×medium equi-join. A/B'd
-    // in the r16 optimization pass over the SMJ-bearing catalog queries
-    // (tc1/km2/pr1/d4b, 2×2 runs, local[32] sf0.1): means 19.4 s both
-    // arms — at this scale AQE has already coalesced the exchanges the
-    // sorts run behind, so the sorts are not the bottleneck and the
-    // default stays at Spark's (prefer SMJ, graceful spill). The env
-    // knob keeps the axis a one-flag sweep for a deployment where the
-    // build side provably fits per-partition memory.
-    // validated here (r16 ADVICE): a typo like "ture" would otherwise
-    // surface only as an opaque config error at session build
-    val preferSmj = sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true") match {
-      case v @ ("true" | "false") => v
-      case bad => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_PREFER_SMJ must be 'true' or 'false', got '$bad'")
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
-      .config("spark.sql.session.timeZone", "UTC")
-      // external bucketed tables (bk1) touch the warehouse root even
-      // though their data lives under /tmp — pin it so no spark-warehouse
-      // dir is minted in whatever cwd the driver launches from
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // spark.sql.join.preferSortMergeJoin stays at Spark's default (true):
+    // the r16 A/B measured 19.4 s for both arms (OPTIMIZATION_r16.md §7)
+    val spark = GraftSession.harness(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run for local iteration;
     // the driver leaves it unset and benches everything

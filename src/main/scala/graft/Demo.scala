@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.{Event, EventStreams}
 import graft.api.Tcga
@@ -16,12 +15,7 @@ object Demo {
     // JVM would fail saveAsTable with LOCATION_ALREADY_EXISTS
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File("/tmp/graft_warehouse"))
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
+    val spark = GraftSession.harness(8).getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: write `.explain("formatted")` output for catalog queries to
@@ -19,14 +18,8 @@ object DumpPlans {
     val suffix = args.lift(1).getOrElse("before")
     val names0 = args.lift(2).getOrElse("ALL")
     val d = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.harness(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names: Seq[String] =
       if (names0 == "ALL") queries.QueryCatalog.all.map(_.name)

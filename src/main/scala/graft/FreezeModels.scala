@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev main: runs the five bounded fits (PCA, PQ, BPE, the d3 NB-GLM
@@ -29,12 +28,7 @@ object FreezeModels {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = Tables.embeddings(spark, sfDir)

@@ -27,9 +27,10 @@ import org.apache.spark.sql.SparkSession
   * AQE's coalescing to shrink over-partitioned stages rather than
   * under-partitioning up front.
   *
-  * NOT used by `Bench`/`Verify`: the driver contract pins their exact
-  * configuration (no extensions, explicit master) so gate numbers stay
-  * comparable across rounds.
+  * [[apply]] and [[local]] are NOT used by `Bench`/`Verify`: the driver
+  * contract pins their exact configuration (no extensions, explicit
+  * master) so gate numbers stay comparable across rounds. They, the dev
+  * mains and the test suite build that configuration through [[harness]].
   */
 object GraftSession {
 
@@ -61,4 +62,19 @@ object GraftSession {
     apply(SparkSession.builder().master(s"local[$cores]"), cores)
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .getOrCreate()
+
+  /** The harness session (Bench, Verify, the dev mains, the test suite):
+    * `local[cpus]`, shuffle width = `cpus`, UTC, UI off, and the warehouse
+    * pinned under /tmp — bk1's external bucketed tables touch the
+    * warehouse root, so no spark-warehouse dir is minted in the launch
+    * cwd. Unlike [[apply]] it registers no extensions and overrides no
+    * AQE or parquet defaults. Callers layer their own differences on the
+    * returned builder. */
+  def harness(cpus: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      .config("spark.ui.enabled", "false")
 }

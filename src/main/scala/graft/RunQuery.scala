@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run catalog queries and show a bounded sample + row count.
   * Usage: runMain graft.RunQuery <sfDir> <query1,query2,...> [showN]
   */
@@ -11,15 +9,7 @@ object RunQuery {
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("lr1_quality_classifier"))
     val showN = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // bk1's external bucketed tables touch the warehouse root — pin it
-      // so no spark-warehouse dir is minted in the launch cwd
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"========== $n")

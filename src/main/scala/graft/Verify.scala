@@ -1,12 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // SPARK_GRAFT_SHUFFLE_PARTITIONS decouples the shuffle width from the
     // core count for distributed-correctness sweeps: a real cluster runs
     // hundreds-to-thousands of shuffle partitions, and an operator whose
@@ -14,23 +13,16 @@ object Verify {
     // stitches, salted writers, map-side combines) must be flushed out at
     // an adversarial width (prime, >> CPUs), not only at width = CPUs
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString)
     // SPARK_GRAFT_MAX_PARTITION_BYTES shrinks the scan-split size so the
     // small local fixtures read as MANY input partitions — the other
     // parallelism axis a 100 TB scan always exercises (thousands of
     // splits) and a one-file-per-table local run never does
     val maxPartitionBytes =
       sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.harness(cpus)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.session.timeZone", "UTC")
-      // external bucketed tables (bk1) touch the warehouse root even
-      // though their data lives under /tmp — pin it so no spark-warehouse
-      // dir is minted in whatever cwd the driver launches from
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

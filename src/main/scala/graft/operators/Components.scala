@@ -138,7 +138,6 @@ object Components {
     var rounds = 0
     var converged = false
     while (rounds < maxRounds && !converged) {
-      val tRound = System.nanoTime()
       // hook: fold the neighbour minimum into the node's own label. The
       // union form needs ONE join (neighbour contributions + the node's own
       // labelled row through a single hash agg); the node's pre-round label
@@ -175,8 +174,8 @@ object Components {
       labels = next
       converged = obs.get("changed").asInstanceOf[Long] == 0
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $rounds ${(System.nanoTime() - tRound) / 1e9}%6.3f s changed=${!converged}")
+      // no per-round timer here: `perfbench/run.py --trace 1` times this
+      // loop as its operators.Components layer
     }
     sym.unpersist(blocking = false)
     if (!converged)

@@ -510,7 +510,7 @@ object Dedup {
     // treeAggregate reads next. Cost of auto vs an explicit size: exactly
     // that one extra job over the CACHED dictionary (dictionary-sized,
     // never corpus-sized) — measured at sf0.1 local[32] the A/B delta
-    // sits inside the run-noise band (ProfileBf2 r10: +5.1 s cold boot
+    // sits inside the run-noise band (BASELINE.md:183: +5.1 s cold boot
     // round, −1.2 s warm round), so auto-sizing is safe to default to;
     // callers who know the magnitude should still pass it to skip the
     // job.

@@ -394,10 +394,10 @@ object AnalyticsQueries {
       // class values (whichever duplicate row's cumulative interval
       // covers the target rank carries the same adev), so the raw
       // remapped rows feed the prefix scan directly. Interleaved A/B
-      // (ProfileRzMad, 8 warm pairs): agg form mean 5.8 s vs raw 5.2 s —
-      // the symmetric-merge agg's full-frame exchange costs more than
-      // the ~2× row reduction saves the range scan; output hash
-      // identical both forms.
+      // (OPTIMIZATION_r16.md:144, 8 warm pairs): agg form mean 5.8 s vs
+      // raw 5.2 s — the symmetric-merge agg's full-frame exchange costs
+      // more than the ~2× row reduction saves the range scan; output
+      // hash identical both forms.
       val devCls = cls.join(broadcast(med), "flag")
         .select(col("flag"), col("med"),
           abs(col("price") - col("med")).as("adev"), col("__c"))
@@ -1223,10 +1223,10 @@ object AnalyticsQueries {
     * is quadratic in the block), but since r17 the pairs are emitted by
     * two nested Generates with O(n) per-row buffers rather than one
     * O(n²) in-row array — see the inline comment. Interleaved same-JVM
-    * A/B (ProfileEdges, local[32] sf0.1, full triangleCounts downstream,
-    * 3 reps): old 8.63/6.08/5.84 s vs new 6.59/5.04/4.44 s — a
-    * consistent ~1.1–1.4 s cut at identical edge sets (503,935 rows
-    * both forms). */
+    * A/B (OPTIMIZATION_r16.md:100 and OPTIMIZATION_r17.md:79, local[32]
+    * sf0.1, full triangleCounts downstream, 3 reps): old
+    * 8.63/6.08/5.84 s vs new 6.59/5.04/4.44 s — a consistent ~1.1–1.4 s
+    * cut at identical edge sets (503,935 rows both forms). */
   private def coShipEdges(blk: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     blk

@@ -362,10 +362,6 @@ object DomainQueries {
   private[graft] val stageLevels =
     Seq("Stage_0", "Stage_I", "Stage_II", "Stage_III", "Stage_IV")
 
-  /** Profiling access to the NB-GLM input builder (used by graft.ProfileD3). */
-  private[graft] def profileNbInput(s: SparkSession, d: String, levels: Int): DataFrame =
-    nbInput(s, d, levels)._1
-
   /** Returns the cells frame plus the internal persist handles the caller
     * must pass to `Caches.releaseAfterAction` once its plan is final.
     * Only the prefiltered fact (kc) and the sample-sized size factors are

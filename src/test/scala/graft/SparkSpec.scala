@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one forked test JVM). */
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
+    val s = GraftSession.harness(4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Full local gate: compile, tests, correctness dump + DuckDB oracle replay,
+# Full local gate: compile (library and benchmark build), tests, correctness dump + DuckDB oracle replay,
 # bench. Mirrors what the driver runs per round.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -15,6 +15,9 @@ OUT=${OUT:-/tmp/gate_out}
 rm -rf /tmp/graft_*
 
 sbt -batch compile
+# the benchmark's own build calls GraftSession.apply and the graft.api
+# surface: break either and the gate fails here, not at benchmark time
+(cd perfbench && sbt -batch compile)
 sbt -batch test
 SPARK_GRAFT_CPUS=$CPUS sbt -batch "runMain graft.Verify $SF_ORACLE $OUT"
 python3 tools/compare_oracle.py "$SF_ORACLE" "$OUT"
