@@ -168,9 +168,9 @@ object Demo {
     val okDims = decoded.filter(col("decode_ok") && col("width") === 8 &&
       col("height") === 8).count()
     println(s"[demo] real PNG decode+resize: $okDims/4 payloads at 8x8")
-    graft.expressions.GraftFunctions.register(spark)
     val reservoir = docs.groupBy("lang")
-      .agg(expr("priority_topk(CAST(n_chars AS DOUBLE), doc_id, 3)").as("top3"))
+      .agg(graft.expressions.GraftFunctions.priorityTopK(
+        col("n_chars").cast("double"), col("doc_id"), 3).as("top3"))
     println(s"[demo] per-lang priority_topk groups = ${reservoir.count()}")
     val pcaModel = graft.operators.Pca.fit(emb, "embedding", 8)
     println(f"[demo] PCA top-8 explains " +
@@ -219,7 +219,7 @@ object Demo {
     println(s"[demo] DSIR-weighted docs = ${dsir.count()}")
     val hh = docs
       .select(explode(graft.operators.TextFunctions.tokens(col("text"))).as("term"))
-      .agg(expr("freq_sketch(term, 64)").as("sk"))
+      .agg(graft.expressions.GraftFunctions.freqSketch(col("term"), 64).as("sk"))
       .select(explode(col("sk")).as("e")).count()
     println(s"[demo] freq_sketch entries = $hh (capacity 64)")
     val hop = EventStreams.hoppingTypeCounts(ev,

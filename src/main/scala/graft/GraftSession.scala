@@ -16,11 +16,10 @@ import org.apache.spark.sql.SparkSession
   *    runtime half of the skew story (the deterministic
   *    `operators.Skew.salt` is the plan-time half); PlanSpec asserts the
   *    skew split actually engages on a hot-key sort-merge join.
-  *  - `graft.expressions.GraftExtensions` — registers `cosine_sim`,
-  *    `priority_topk`, `mat_vec_project`, `bloom_might_contain`,
-  *    `freq_sketch` for SQL callers. (Catalog queries also self-register
-  *    per session; the extension makes the functions available to
-  *    `spark-sql`/JDBC users who never touch the Scala API.)
+  *  - `graft.expressions.GraftExtensions` — registers every SQL function
+  *    of the `GraftFunctions` table for SQL callers (`spark-sql`/JDBC
+  *    users who never touch the Scala API). Scala code uses the typed
+  *    Column constructors on `GraftFunctions` and needs no registration.
   *
   * `shufflePartitions` should track the deployment's total cores (the
   * driver harness uses its CPU count); at cluster scale prefer leaving

@@ -402,7 +402,6 @@ object Corpus {
   def semanticDuplicatePairs(emb: DataFrame, cosMin: Double = 0.95,
       cells: Int = 64, idCol: String = "vec_id",
       vecCol: String = "embedding", maxCell: Int = 10000): DataFrame = {
-    graft.expressions.GraftFunctions.register(emb.sparkSession)
     val cents = Ann.kmeansCentroids(emb, idCol, vecCol, k = cells, iters = 3)
     cellBlockedPairs(
       Ann.assigned(emb, idCol, vecCol, cents)
@@ -425,7 +424,7 @@ object Corpus {
       .join(a.select(col("cell"), col("id").as("id_b"), col("vec").as("vb")),
         Seq("cell"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", expr("cosine_sim(va, vb)"))
+      .withColumn("cos", graft.expressions.GraftFunctions.cosineSim(col("va"), col("vb")))
       .filter(col("cos") >= cosMin)
       .select("id_a", "id_b", "cos")
   }
@@ -501,7 +500,6 @@ object Corpus {
       maxCell: Int = 10000, idOut: String = "vec_id",
       auditCorpus: Option[DataFrame] = None,
       auditIdCol: String = "vec_id"): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     auditCorpus.foreach { live =>
       val gap = indexCoverageGap(spark, indexPath, live, auditIdCol).count()
       if (gap > 0) System.err.println(

@@ -1,13 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native codegen cosine similarity over two `ARRAY<DOUBLE>` columns.
   *
@@ -83,77 +80,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-object GraftFunctions {
-  /** Idempotent per-session registration (the non-extensions path used by
-    * the query catalog: any session the driver hands us gains the
-    * functions). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", args => CosineSimilarity(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "priority_topk",
-      args => PriorityTopK(args(0), args(1), args(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mat_vec_project",
-      args => MatVecProject(args(0), args(1), args(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      args => BloomMightContain(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_sketch",
-      args => FreqSketch(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "edit_distance_capped",
-      args => EditDistanceCapped(args(0), args(1), foldableInt(args(2))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "priority_topk_tie",
-      args => PriorityTopKTie(args(0), args(1), args(2), args(3)), "built-in")
-  }
-
-  /** Fold a literal int argument at registration time (the threshold of
-    * edit_distance_capped is part of the expression, not a child). */
-  private def foldableInt(e: Expression): Int = e.eval(null) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(
-      s"expected a foldable integer literal, got $other")
-  }
-}
-
-/** Plug-in registration for user sessions:
-  * `--conf spark.sql.extensions=graft.expressions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("priority_topk"),
-      new ExpressionInfo(classOf[PriorityTopK].getName, "priority_topk"),
-      (args: Seq[Expression]) => PriorityTopK(args(0), args(1), args(2))))
-    ext.injectFunction((
-      FunctionIdentifier("mat_vec_project"),
-      new ExpressionInfo(classOf[MatVecProject].getName, "mat_vec_project"),
-      (args: Seq[Expression]) => MatVecProject(args(0), args(1), args(2))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (args: Seq[Expression]) => BloomMightContain(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("freq_sketch"),
-      new ExpressionInfo(classOf[FreqSketch].getName, "freq_sketch"),
-      (args: Seq[Expression]) => FreqSketch(args(0), args(1))))
-    // the (c)-tier custom operator: plans graft.plans.AsOfJoinPlan as the
-    // sorted-merge/broadcast AsOfJoinExec, with the injected pushdown
-    // rule restoring scan-level filtering through the custom node
-    // (NativeAsOf also self-registers both through the public
-    // experimental hooks for sessions built without extensions)
-    ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.AsOfFilterPushdown)
-    ext.injectOptimizerRule(_ => graft.plans.AsOfColumnPruning)
-  }
 }

@@ -295,7 +295,6 @@ object Ann {
   def ivfTopK(emb: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, nProbe: Int, topK: Int): DataFrame = {
     val spark = emb.sparkSession
-    GraftFunctions.register(spark)
     requireIntegralId(emb, idCol, "ivfTopK")
     // the Lloyd result materializes ONCE; both the corpus assign and the
     // query-side probe pick the literal or broadcast path by k
@@ -321,9 +320,10 @@ object Ann {
     // every scored candidate (n_q x n_corpus x nProbe/k rows at scale)
     probed.join(corpus, Seq("cell"))
       .filter(col("id") =!= col("q_id"))
-      .withColumn("cos", expr("cosine_sim(qv, v)"))
+      .withColumn("cos", GraftFunctions.cosineSim(col("qv"), col("v")))
       .groupBy("q_id")
-      .agg(expr(s"priority_topk_tie(-cos, CAST(id AS BIGINT), struct(id, cos), $topK)").as("tk"))
+      .agg(GraftFunctions.priorityTopK(-col("cos"), col("id").cast("long"),
+        struct(col("id"), col("cos")), topK).as("tk"))
       .select(col("q_id"), posexplode(col("tk")))
       .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
         col("col.id").as("id"), col("col.cos").as("cos"))
@@ -332,8 +332,6 @@ object Ann {
   /** Brute-force exact top-k (the verification baseline). */
   def bruteTopK(emb: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       topK: Int): DataFrame = {
-    val spark = emb.sparkSession
-    GraftFunctions.register(spark)
     requireIntegralId(emb, idCol, "bruteTopK")
     val corpus = normalized(emb, idCol, vecCol)
     val qn = normalized(queries, idCol, vecCol)
@@ -345,9 +343,10 @@ object Ann {
     // are rejected above with a clear error)
     corpus.crossJoin(broadcast(qn))
       .filter(col("id") =!= col("q_id"))
-      .withColumn("cos", expr("cosine_sim(qv, v)"))
+      .withColumn("cos", GraftFunctions.cosineSim(col("qv"), col("v")))
       .groupBy("q_id")
-      .agg(expr(s"priority_topk_tie(-cos, CAST(id AS BIGINT), struct(id, cos), $topK)").as("tk"))
+      .agg(GraftFunctions.priorityTopK(-col("cos"), col("id").cast("long"),
+        struct(col("id"), col("cos")), topK).as("tk"))
       .select(col("q_id"), posexplode(col("tk")))
       .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
         col("col.id").as("id"), col("col.cos").as("cos"))
@@ -1018,7 +1017,6 @@ object Ann {
   def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String,
       nProbe: Int, topK: Int): DataFrame = {
-    GraftFunctions.register(spark)
     requireIntegralId(queries, idCol, "ivfIndexTopK")
     val rows = centroidRows(spark.read.parquet(s"$path/centroids"))
     val shared = if (rows.size > LiteralPathMaxK)
@@ -1043,9 +1041,10 @@ object Ann {
       .filter(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
       .join(broadcast(probed), Seq("cell"))
       .filter(col("id") =!= col("q_id"))
-      .withColumn("cos", expr("cosine_sim(qv, v)"))
+      .withColumn("cos", GraftFunctions.cosineSim(col("qv"), col("v")))
       .groupBy("q_id")
-      .agg(expr(s"priority_topk_tie(-cos, CAST(id AS BIGINT), struct(id, cos), $topK)").as("tk"))
+      .agg(GraftFunctions.priorityTopK(-col("cos"), col("id").cast("long"),
+        struct(col("id"), col("cos")), topK).as("tk"))
       .select(col("q_id"), posexplode(col("tk")))
       .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
         col("col.id").as("id"), col("col.cos").as("cos"))

@@ -182,8 +182,7 @@ object Pca {
     * expression — the model travels as literal arrays in the plan. */
   def project(emb: DataFrame, vecCol: String, model: PcaModel,
       out: String = "proj"): DataFrame = {
-    graft.expressions.GraftFunctions.register(emb.sparkSession)
-    emb.withColumn(out, call_function("mat_vec_project",
+    emb.withColumn(out, graft.expressions.GraftFunctions.matVecProject(
       transform(col(vecCol), x => x.cast("double")),
       typedlit(model.components.toSeq),
       typedlit(model.mean.toSeq)))

@@ -45,17 +45,6 @@ object Pq {
     require(books.length == m, s"expected $m codebooks, got ${books.length}")
     def ksub: Int = books.head.length
     def dim: Int = m * dsub
-    /** Rebuild the approximate vector from its m codes (codebook
-      * centroids concatenated subspace by subspace). */
-    def reconstruct(codes: Array[Int]): Array[Double] = {
-      val out = new Array[Double](dim)
-      var s = 0
-      while (s < m) {
-        System.arraycopy(books(s)(codes(s)), 0, out, s * dsub, dsub)
-        s += 1
-      }
-      out
-    }
   }
 
   private def d2(a: Array[Double], aOff: Int, b: Array[Double], n: Int): Double = {

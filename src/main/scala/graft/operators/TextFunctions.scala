@@ -33,11 +33,6 @@ object TextFunctions {
         sequence(lit(0), size(toks) - n),
         i => concat_ws(" ", (1 to n).map(j => element_at(toks, i + j)): _*)))
 
-  /** Deterministic 60-bit token hash: first 15 hex chars of md5, base-16 →
-    * long. Stays positive (< 2^60), portable across engines. */
-  def tokenHash60(t: Column): Column =
-    conv(substring(md5(t), 1, 15), 16, 10).cast("long")
-
   /** BPE-ish regex token count: alnum runs (a cheap proxy for subword
     * units) counted alongside whitespace tokens. */
   def regexTokenCount(text: Column): Column =

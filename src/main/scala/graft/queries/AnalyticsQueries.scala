@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expressions.GraftFunctions
 import graft.operators.Ranks
 
 /** Round-4 corpus/OLAP analytics: TF-IDF term ranking, unigram-LM document
@@ -596,15 +597,14 @@ object AnalyticsQueries {
   private val ii1 = Q(
     "ii1_inverted_index",
     (s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val terms = Tables.documents(s, d)
         .select(col("doc_id"),
           explode(graft.operators.TextFunctions.tokens(col("text"))).as("term"))
         .distinct()
       terms.groupBy("term")
         .agg(count(lit(1)).as("df"),
-          call_function("priority_topk",
-            col("doc_id").cast("double"), col("doc_id"), lit(iiK)).as("postings"))
+          GraftFunctions.priorityTopK(
+            col("doc_id").cast("double"), col("doc_id"), iiK).as("postings"))
         .select(col("term"), col("df"),
           posexplode(col("postings")).as(Seq("pos0", "doc_id")))
         .select(col("term"), col("df"), (col("pos0") + 1).cast("long").as("pos"),
@@ -927,7 +927,6 @@ object AnalyticsQueries {
   private val hh1 = Q(
     "hh1_heavy_hitters",
     (s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val tok = Tables.documents(s, d)
         .select(explode(graft.operators.TextFunctions.tokens(col("text"))).as("term"))
       // ONE sketch pass serves both candidates and the exact total: the
@@ -935,7 +934,7 @@ object AnalyticsQueries {
       // count agg) is free; the 1-row sketch frame is persisted so its
       // two consumers don't re-run the sketch aggregation
       val sk = tok
-        .agg(call_function("freq_sketch", col("term"), lit(hhK)).as("sk"))
+        .agg(GraftFunctions.freqSketch(col("term"), hhK).as("sk"))
         .persist()
       graft.Caches.releaseAfterAction(sk)
       val cands = sk.select(explode(col("sk")).as("e"))

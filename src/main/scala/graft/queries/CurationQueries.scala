@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expressions.GraftFunctions
 import graft.operators.{Chunking, Dedup, Ranks, Sampling, TextFunctions}
 
 /** Round-4 corpus-curation operators — the remaining steps of a
@@ -14,8 +15,6 @@ import graft.operators.{Chunking, Dedup, Ranks, Sampling, TextFunctions}
   * carries a DuckDB oracle.
   */
 object CurationQueries {
-
-  private def hash60sql(e: String): String = OracleSql.hash60(e)
 
   private val toksSql =
     """SELECT doc_id, lang, source, n_chars,
@@ -46,7 +45,7 @@ object CurationQueries {
           ((col("rn") - 1) % nShards).as("shard_id"))
     },
     Some(s"""WITH k AS (SELECT doc_id,
-                 ${hash60sql(s"'$shuffleSeed:'||CAST(doc_id AS VARCHAR)")} AS shuffle_key
+                 ${OracleSql.hash60(s"'$shuffleSeed:'||CAST(doc_id AS VARCHAR)")} AS shuffle_key
                FROM documents),
              r AS (SELECT doc_id, shuffle_key,
                      CAST(row_number() OVER (ORDER BY shuffle_key, doc_id) AS BIGINT) AS rn
@@ -159,7 +158,7 @@ object CurationQueries {
           SELECT d.doc_id, d.source, d.lang, d.n_chars,
             round(r.rate, 6) AS sample_rate
           FROM documents d JOIN r ON d.source = r.source
-          WHERE ${hash60sql("CAST(d.doc_id AS VARCHAR)")}
+          WHERE ${OracleSql.hash60("CAST(d.doc_id AS VARCHAR)")}
             < CAST(floor(r.rate * CAST(1152921504606846976 AS DOUBLE)) AS BIGINT)"""
     })
 
@@ -193,7 +192,7 @@ object CurationQueries {
           SELECT d.doc_id, d.lang, d.source, d.n_chars,
             r.rate AS sample_rate
           FROM documents d JOIN r ON d.lang = r.lang
-          WHERE ${hash60sql("CAST(d.doc_id AS VARCHAR)")}
+          WHERE ${OracleSql.hash60("CAST(d.doc_id AS VARCHAR)")}
             < CAST(floor(r.rate * CAST(1152921504606846976 AS DOUBLE)) AS BIGINT)"""))
 
   // ------------------------------------------------------- dd7: incremental
@@ -242,7 +241,7 @@ object CurationQueries {
                          unnest(list_transform(range(1, len(toks) - 1),
                            i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
                        FROM t)),
-          hs AS (SELECT doc_id, ${hash60sql("sh")} % $p AS hs FROM sh),
+          hs AS (SELECT doc_id, ${OracleSql.hash60("sh")} % $p AS hs FROM sh),
           mh AS (SELECT doc_id, $mins FROM hs GROUP BY doc_id),
           fl AS (SELECT doc_id, CAST(substring(source, 4) AS INT) < $refSplit AS is_ref
                  FROM documents),
@@ -276,20 +275,18 @@ object CurationQueries {
   private val rs1 = Q(
     "rs1_weighted_sample",
     (s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val u = (Dedup.hash60(col("doc_id").cast("string")) + 1).cast("double") /
         lit(math.pow(2.0, 60))
       Tables.documents(s, d)
         .select(col("lang"), col("doc_id"),
           (negate(log(u)) / col("n_chars")).as("pr"))
         .groupBy("lang")
-        .agg(call_function("priority_topk",
-          col("pr"), col("doc_id"), lit(rsK)).as("sample"))
+        .agg(GraftFunctions.priorityTopK(col("pr"), col("doc_id"), rsK).as("sample"))
         .select(col("lang"), posexplode(col("sample")).as(Seq("pos0", "doc_id")))
         .select(col("lang"), (col("pos0") + 1).cast("long").as("pos"), col("doc_id"))
     },
     Some(s"""WITH p AS (SELECT lang, doc_id,
-                 -ln(CAST(${hash60sql("CAST(doc_id AS VARCHAR)")} + 1 AS DOUBLE)
+                 -ln(CAST(${OracleSql.hash60("CAST(doc_id AS VARCHAR)")} + 1 AS DOUBLE)
                      / CAST(1152921504606846976 AS DOUBLE)) / n_chars AS pr
                FROM documents),
              r AS (SELECT lang, doc_id,
@@ -980,7 +977,7 @@ object CurationQueries {
     s"""$classifierFeatSql,
           l AS (SELECT doc_id, source,
                   CASE WHEN keep !=
-                    (${hash60sql("'lr:'||CAST(doc_id AS VARCHAR)")} % 100 < 10)
+                    (${OracleSql.hash60("'lr:'||CAST(doc_id AS VARCHAR)")} % 100 < 10)
                     THEN 1 ELSE 0 END AS label,
                   round(1.0 / (1.0 + exp(-$lr1bZSql)), 6) AS p
                 FROM f)"""
@@ -1359,21 +1356,20 @@ object CurationQueries {
   private val dc1 = Q(
     "dc1_source_cap",
     (s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val keyed = Tables.documents(s, d).select(col("source"), col("doc_id"),
         (Dedup.hash60(concat(lit(dcSeed + ":"), col("doc_id").cast("string")))
           % lit(9007199254740992L)).as("pk"))
       keyed.groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
-          call_function("priority_topk",
-            col("pk").cast("double"), col("doc_id"), lit(dcCap)).as("kept"))
+          GraftFunctions.priorityTopK(
+            col("pk").cast("double"), col("doc_id"), dcCap).as("kept"))
         .select(col("source"), col("n_docs"),
           posexplode(col("kept")).as(Seq("pos0", "doc_id")))
         .select(col("source"), col("n_docs"),
           (col("pos0") + 1).cast("long").as("pos"), col("doc_id"))
     },
     Some(s"""WITH k AS (SELECT source, doc_id,
-                 ${hash60sql(s"'$dcSeed:'||CAST(doc_id AS VARCHAR)")}
+                 ${OracleSql.hash60(s"'$dcSeed:'||CAST(doc_id AS VARCHAR)")}
                    % 9007199254740992 AS pk
                FROM documents),
              n AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
@@ -1455,8 +1451,8 @@ object CurationQueries {
                    CAST(count(*) AS BIGINT) AS n_true
                  FROM documents GROUP BY 1, 2)
              SELECT source, lang,
-               n_true + ${geomDrawSql(hash60sql("'dp:a:'||source||':'||lang"))}
-                 - ${geomDrawSql(hash60sql("'dp:b:'||source||':'||lang"))}
+               n_true + ${geomDrawSql(OracleSql.hash60("'dp:a:'||source||':'||lang"))}
+                 - ${geomDrawSql(OracleSql.hash60("'dp:b:'||source||':'||lang"))}
                  AS noisy_n
              FROM c"""))
 

@@ -100,15 +100,6 @@ object DomainQueries {
     Tables.supplier(s, d).select(col("s_suppkey"),
       when(col("s_suppkey") % 2 === 0, "NT").otherwise("TP").as("cond"))
 
-  /** Abramowitz–Stegun p-value wrapper (same polynomial as
-    * Stats.normalSfTwoSided) over a column `z` of `inner`. */
-  private def withNormalSf(inner: String, keep: String): String =
-    s"""SELECT $keep,
-          least(1.0, ((((1.061405429*tt - 1.453152027)*tt + 1.421413741)*tt
-            - 0.284496736)*tt + 0.254829592)*tt * exp(-xx*xx)) AS pvalue
-        FROM (SELECT *, 1.0/(1.0 + 0.3275911*xx) AS tt
-              FROM (SELECT *, abs(z)/sqrt(2) AS xx FROM ($inner)))"""
-
   /** DE1 — §3.1 minimum slice (lettercode_DESeq.R minus the GLM):
     * scan → D1 → D2 size factors → D6 VST → join condition → D7 Wilcoxon
     * per gene → D5 BH → F5 banding. One fact-table pass + two dim-sized
@@ -152,7 +143,7 @@ object DomainQueries {
             SELECT gene, n1, n2,
               (r1 - n1 * (n1 + 1) / 2.0 - n1 * n2 / 2.0) / sqrt(sigma2) AS z
             FROM s2 WHERE sigma2 > 0"""
-      val pv = withNormalSf(zInner, "gene, n1, n2, z")
+      val pv = OracleSql.withNormalSf(zInner, "gene, n1, n2, z", rounded = false)
       s"""WITH pv AS ($pv),
           bh AS (SELECT gene, n1, n2, z, pvalue,
                    min(least(1.0, pvalue * n / rk)) OVER (
@@ -305,12 +296,9 @@ object DomainQueries {
                    (observed_a - expected_a) * (observed_a - expected_a) / v_sum AS chi2
                  FROM agg WHERE v_sum > 0),
           z AS (SELECT gene, observed_a, expected_a, chi2, sqrt(chi2) AS z FROM c2)
-          SELECT gene, CAST(observed_a AS BIGINT) AS observed_a,
-            round(expected_a, 6) AS expected_a, round(chi2, 6) AS chi2,
-            round(least(1.0, ((((1.061405429*tt - 1.453152027)*tt + 1.421413741)*tt
-              - 0.284496736)*tt + 0.254829592)*tt * exp(-xx*xx)), 6) AS pvalue
-          FROM (SELECT *, 1.0/(1.0 + 0.3275911*xx) AS tt
-                FROM (SELECT *, abs(z)/sqrt(2) AS xx FROM z))"""
+          ${OracleSql.withNormalSf("SELECT * FROM z",
+            "gene, CAST(observed_a AS BIGINT) AS observed_a, " +
+              "round(expected_a, 6) AS expected_a, round(chi2, 6) AS chi2")}"""
     })
 
   // ---- contrast fan-out (§3.2 structure, SQL-expressible mean contrasts)
@@ -520,11 +508,7 @@ object DomainQueries {
             FROM wd
             WHERE n_nt >= 2 AND n_tp >= 2 AND q_nt > 0 AND q_tp > 0
               AND i_nt > 0 AND i_tp > 0"""
-      val withP =
-        withNormalSf(zInner, "gene, base_mean, log2fc, lfc_se, z AS stat")
-      s"""SELECT gene, base_mean, log2fc, lfc_se, stat,
-            round(pvalue, 6) AS pvalue
-          FROM ($withP)"""
+      OracleSql.withNormalSf(zInner, "gene, base_mean, log2fc, lfc_se, z AS stat")
     })
 
   /** D4 — 10 pairwise contrasts from one 5-level fit
@@ -637,10 +621,7 @@ object DomainQueries {
               round(sqrt(1.0 / a.i + 1.0 / b.i) / $ln2, 6) AS lfc_se,
               round((ln(a.q) - ln(b.q)) / sqrt(1.0 / a.i + 1.0 / b.i), 6) AS z
             FROM k a JOIN k b ON a.gene = b.gene AND a.cond < b.cond"""
-      val withP = withNormalSf(zInner, "gene, contrast, log2fc, lfc_se, z AS stat")
-      s"""SELECT gene, contrast, log2fc, lfc_se, stat,
-            round(pvalue, 6) AS pvalue
-          FROM ($withP)"""
+      OracleSql.withNormalSf(zInner, "gene, contrast, log2fc, lfc_se, z AS stat")
     })
 
   def all: Seq[Q] = Seq(de1, km1, km2, fan1, d3, d3b, d4, d4b)

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expressions.GraftFunctions
 import graft.operators.Pca
 
 /** Embedding-compression operators (round 4): PCA and sparse random
@@ -38,10 +39,9 @@ object EmbeddingQueries {
   private val rp1 = Q(
     "rp1_random_projection",
     (s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       Tables.embeddings(s, d)
         .select(col("vec_id"),
-          call_function("mat_vec_project",
+          GraftFunctions.matVecProject(
             transform(col("embedding"), x => x.cast("double")),
             typedlit(rpSigns.toSeq),
             typedlit(Seq.fill(rpD)(0.0))).as("proj"))

@@ -395,7 +395,7 @@ object PipelineQueries {
       s"""WITH t AS ($toksSql),
           tok AS (SELECT lang, unnest(toks) AS token FROM t),
           h AS (SELECT lang,
-                  CAST(('0x'||substring(md5(token),1,15)) AS BIGINT) AS h
+                  ${OracleSql.hash60("token")} AS h
                 FROM tok),
           r AS (SELECT lang, h % $m AS b, h // $m AS rem FROM h),
           regs AS (SELECT lang, b,
@@ -556,7 +556,7 @@ object PipelineQueries {
         .map { case (l, r) => s"WHEN '$l' THEN ${Sampling.threshold(r)}" }
         .mkString(" ")
       s"""SELECT doc_id, lang, source, n_chars FROM documents
-          WHERE CAST(('0x'||substring(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT)
+          WHERE ${OracleSql.hash60("CAST(doc_id AS VARCHAR)")}
             < CASE lang $cases ELSE 0 END"""
     })
 

@@ -27,6 +27,18 @@ object OracleSql {
     * 60-bit md5 idiom every oracle derives hashes from. */
   def hash60(e: String): String =
     s"CAST(('0x'||substring(md5($e),1,15)) AS BIGINT)"
+
+  /** Two-sided normal p-value of column `z` of `inner` — the ONE SQL copy
+    * of the Abramowitz–Stegun erfc polynomial (identical to
+    * `Stats.normalSfTwoSided`). `keep` is the outer select list; `pvalue`
+    * is rounded to 6 places unless `rounded` is false. */
+  def withNormalSf(inner: String, keep: String, rounded: Boolean = true): String = {
+    val p = """least(1.0, ((((1.061405429*tt - 1.453152027)*tt + 1.421413741)*tt
+            - 0.284496736)*tt + 0.254829592)*tt * exp(-xx*xx))"""
+    s"""SELECT $keep, ${if (rounded) s"round($p, 6)" else p} AS pvalue
+        FROM (SELECT *, 1.0/(1.0 + 0.3275911*xx) AS tt
+              FROM (SELECT *, abs(z)/sqrt(2) AS xx FROM ($inner)))"""
+  }
 }
 
 object QueryCatalog {

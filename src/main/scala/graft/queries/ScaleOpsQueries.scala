@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.expressions.GraftFunctions
 import graft.operators.{Ann, Components, Dedup, TextFunctions}
 
 /** Large-scale training-data-pipeline operators over the `documents` and
@@ -25,14 +26,6 @@ import graft.operators.{Ann, Components, Dedup, TextFunctions}
   * block-local Jaccard variants are the small-side/verification baseline.
   */
 object ScaleOpsQueries {
-
-  /** 60-bit portable hash of a string column. */
-  private def hash60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
-  /** Same hash in DuckDB SQL, over a SQL string expression. */
-  private def h60sql(e: String): String =
-    s"CAST(('0x'||substring(md5($e),1,15)) AS BIGINT)"
 
   /** DELIBERATELY un-cached across queries: the driver's bench contract
     * times each catalog entry in isolation (caches cleared between
@@ -202,7 +195,7 @@ object ScaleOpsQueries {
           FROM mh"""
     }.mkString("\nUNION ALL\n")
     s"""sh AS ($shingleRowsSql),
-        hs AS (SELECT doc_id, ${h60sql("sh")} % $p AS hs FROM sh),
+        hs AS (SELECT doc_id, ${OracleSql.hash60("sh")} % $p AS hs FROM sh),
         mh AS (SELECT doc_id, $mins FROM hs GROUP BY doc_id),
         bands AS ($bandSelects),
         cb AS (SELECT doc_id, band, bkey
@@ -292,7 +285,7 @@ object ScaleOpsQueries {
       val assemble = (0 until simhashBits)
         .map(b => s"(CASE WHEN v$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END)")
         .mkString(" + ")
-      s"""WITH tok AS (SELECT doc_id, ${h60sql("t")} AS h
+      s"""WITH tok AS (SELECT doc_id, ${OracleSql.hash60("t")} AS h
                        FROM (SELECT doc_id, unnest(toks) AS t FROM ($toksSql))),
           v AS (SELECT doc_id, $votes FROM tok GROUP BY doc_id)
           SELECT doc_id, $assemble AS simhash FROM v"""
@@ -368,10 +361,9 @@ object ScaleOpsQueries {
 
   /** Fused single-loop cosine (graft.expressions.CosineSimilarity): same
     * left-to-right accumulation as the fold composition — bit-identical to
-    * the DuckDB list_reduce oracle — but no per-row array allocations.
-    * Callers must GraftFunctions.register(s) first. */
+    * the DuckDB list_reduce oracle — but no per-row array allocations. */
   private def cosine(qvName: String, vName: String): Column =
-    expr(s"cosine_sim($qvName, $vName)")
+    GraftFunctions.cosineSim(col(qvName), col(vName))
 
   /** SS1 — brute-force cosine top-k: query vectors (vec_id % 100 = 0)
     * broadcast against the corpus scan; `priority_topk_tie` keeps k=5 per
@@ -384,7 +376,6 @@ object ScaleOpsQueries {
   private val ss1 = Q(
     "ss1_cosine_topk",
     (s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val e = embNorm(s, d)
       val q = e.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -392,7 +383,8 @@ object ScaleOpsQueries {
         .filter(col("vec_id") =!= col("q_id"))
         .withColumn("cos", cosine("qv", "v"))
         .groupBy("q_id")
-        .agg(expr("priority_topk_tie(-cos, vec_id, struct(vec_id, cos), 5)").as("tk"))
+        .agg(GraftFunctions.priorityTopK(-col("cos"), col("vec_id"),
+          struct(col("vec_id"), col("cos")), 5).as("tk"))
         .select(col("q_id"), posexplode(col("tk")))
         .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
           col("col.vec_id").as("vec_id"), round(col("col.cos"), 6).as("cos"))
@@ -430,7 +422,7 @@ object ScaleOpsQueries {
     val planeDot =
       s"""list_reduce(list_transform(range(1, ${dim + 1}),
             i -> CAST(embedding[i] AS DOUBLE)
-                 * ((${h60sql(s"'${j}_' || CAST(i AS VARCHAR)")} % 2001 - 1000) / 1000.0)),
+                 * ((${OracleSql.hash60(s"'${j}_' || CAST(i AS VARCHAR)")} % 2001 - 1000) / 1000.0)),
             (x, y) -> x + y)"""
     s"(CASE WHEN $planeDot > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)"
   }.mkString(" + ")
@@ -442,7 +434,6 @@ object ScaleOpsQueries {
   private val ss2 = Q(
     "ss2_lsh_ann",
     (s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       // persist: the md5-heavy bucket projection feeds corpus AND queries
       val e = embNorm(s, d).withColumn("bucket", bucketCol(col("v"))).persist()
       graft.Caches.releaseAfterAction(e)
@@ -456,7 +447,8 @@ object ScaleOpsQueries {
         .filter(col("vec_id") =!= col("q_id"))
         .withColumn("cos", cosine("qv", "v"))
         .groupBy("q_id")
-        .agg(expr("priority_topk_tie(-cos, vec_id, struct(vec_id, bucket, cos), 3)").as("tk"))
+        .agg(GraftFunctions.priorityTopK(-col("cos"), col("vec_id"),
+          struct(col("vec_id"), col("bucket"), col("cos")), 3).as("tk"))
         .select(col("q_id"), posexplode(col("tk")))
         .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
           col("col.vec_id").as("vec_id"), col("col.bucket").as("bucket"),
@@ -908,7 +900,6 @@ object ScaleOpsQueries {
   private val dd5 = Q(
     "dd5_embed_neardup",
     (s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val e = graft.operators.Dedup.capBuckets(
         embNorm(s, d), Seq(col("label")), maxBucket = 10000, what = "dd5")
       val a = e.select(col("label"), col("vec_id").as("id_a"), col("v").as("va"))
@@ -980,7 +971,6 @@ object ScaleOpsQueries {
   private val cl1 = Q(
     "cl1_kmeans_step",
     (s, d) => {
-      graft.expressions.GraftFunctions.register(s)
       val e = embNorm(s, d)
       val cent = e.filter(col("vec_id") % 400 === 0)
         .select(col("vec_id").as("cid"), col("v").as("cv"))

@@ -21,15 +21,6 @@ object StatsQueries {
     * what keeps the ENGINE as exact as the oracle. */
   private val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
 
-  /** Shared p-value wrapper: Abramowitz–Stegun erfc polynomial (identical to
-    * Stats.normalSfTwoSided) applied to a column `z` of `inner`. */
-  private def withNormalSf(inner: String, keep: String): String =
-    s"""SELECT $keep,
-          round(least(1.0, ((((1.061405429*tt - 1.453152027)*tt + 1.421413741)*tt
-            - 0.284496736)*tt + 0.254829592)*tt * exp(-xx*xx)), 6) AS pvalue
-        FROM (SELECT *, 1.0/(1.0 + 0.3275911*xx) AS tt
-              FROM (SELECT *, abs(z)/sqrt(2) AS xx FROM ($inner)))"""
-
   /** D1 — grouped sum + HAVING prefilter (`rowSums(counts) >= 10`,
     * vital_status_DESeq.R:47-48). Partial+final hash agg; the filter runs on
     * the aggregated side so no second pass over the fact table. */
@@ -226,7 +217,7 @@ object StatsQueries {
            WHERE n1 > 0 AND n2 > 0
              AND (n1 * n2 / 12.0) *
                  ((n1 + n2 + 1) - tie3 / CAST((n1 + n2) * (n1 + n2 - 1) AS DOUBLE)) > 0"""
-      withNormalSf(inner, "brand, n1, n2, round(u, 6) AS u, round(z, 6) AS z")
+      OracleSql.withNormalSf(inner, "brand, n1, n2, round(u, 6) AS u, round(z, 6) AS z")
     })
 
   /** D8 — scalar max for plot bounds (vital_status_DESeq.R:142). */
@@ -543,7 +534,7 @@ object StatsQueries {
                round((m_a - m_b) / sqrt(v_a / n_a + v_b / n_b), 6) AS z_r
              FROM w
              WHERE n_a >= 2 AND n_b >= 2 AND v_a / n_a + v_b / n_b > 0"""
-      withNormalSf(inner, "gene, n_a, n_b, mean_diff, z_r AS z")
+      OracleSql.withNormalSf(inner, "gene, n_a, n_b, mean_diff, z_r AS z")
     })
 
   /** WT2 — MODERATED z-test per gene: the limma `squeezeVar` complement
@@ -605,9 +596,7 @@ object StatsQueries {
                round(s2post, 6) AS s2_post,
                round((m_a - m_b) / sqrt(s2post * (1.0 / n_a + 1.0 / n_b)), 6) AS z
              FROM p WHERE s2post > 0"""
-      // this file's withNormalSf already rounds pvalue (unlike the
-      // DomainQueries variant d3b wraps) — no outer layer needed
-      withNormalSf(zInner, "gene, n_a, n_b, mean_diff, s2_post, z")
+      OracleSql.withNormalSf(zInner, "gene, n_a, n_b, mean_diff, s2_post, z")
     })
 
   /** OLS1 — grouped simple linear regression SCREEN: per part, the
@@ -698,7 +687,7 @@ object StatsQueries {
             round(num * num / (dx * dyv), 6) AS r2,
             z, round(z, 6) AS z_r
           FROM g"""
-      withNormalSf(inner,
+      OracleSql.withNormalSf(inner,
         "l_partkey, n, slope_usd, intercept_usd, r2, z_r AS z")
     })
 
@@ -769,7 +758,7 @@ object StatsQueries {
             round((p1 - p2) / sqrt(pp * (1.0 - pp)
               * (1.0 / n_docs + 1.0 / (nt - n_docs))), 6) AS z_r
           FROM g"""
-      withNormalSf(inner, "source, n_docs, n_long, p_long, z_r AS z")
+      OracleSql.withNormalSf(inner, "source, n_docs, n_long, p_long, z_r AS z")
     })
 
   /** PV1 — p-value-distribution QC over the wt1 Welch screen: the

@@ -97,11 +97,10 @@ object EventStreams extends Serializable {
   def windowedFrequentTypes(events: DataFrame, tsCol: String = "ts",
       watermark: String = "10 minutes", windowLen: String = "1 hour",
       k: Int = 64): DataFrame = {
-    graft.expressions.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowLen))
-      .agg(call_function("freq_sketch", col("eventType"), lit(k)).as("sk"))
+      .agg(graft.expressions.GraftFunctions.freqSketch(col("eventType"), k).as("sk"))
       .select(col("window.start").as("win_start"), explode(col("sk")).as("e"))
       .select(col("win_start"), col("e.item").as("event_type"),
         col("e.cnt").as("cnt"), col("e.n").as("win_total"))

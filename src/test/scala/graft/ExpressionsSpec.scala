@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{ExtensionFunctions, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import graft.expressions.{GraftExtensions, GraftFunctions}
 import graft.operators.Skew
 
@@ -109,7 +110,17 @@ class ExpressionsSpec extends SparkSpec {
     // injector to a fresh SparkSessionExtensions is the testable part
     // (the per-session GraftFunctions.register path is exercised end to
     // end everywhere else).
-    new GraftExtensions().apply(new SparkSessionExtensions) // must not throw
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext) // must not throw
+    // ...and it installs EVERY function of the table, under its own
+    // expression class, into a registry that lacked it
+    val reg = ExtensionFunctions.registry(ext)
+    GraftFunctions.table.foreach { case (name, cls, _) =>
+      val id = FunctionIdentifier(name)
+      assert(!ExtensionFunctions.builtin.functionExists(id), name)
+      assert(reg.functionExists(id), s"$name not injected by GraftExtensions")
+      assert(reg.lookupFunction(id).map(_.getClassName).contains(cls.getName), name)
+    }
   }
 
   test("saltedJoin equals the plain join on skewed data") {

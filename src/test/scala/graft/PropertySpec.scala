@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -564,6 +565,21 @@ class PropertySpec extends SparkSpec {
   test("priority_topk_tie == row_number window on generated priorities " +
       "(ties, ±0.0, NaN, partial/merge paths)") {
     graft.expressions.GraftFunctions.register(spark)
+    // top-9 per group via the aggregate == via a row_number window sort
+    def agreesWithWindow(prs: Seq[Double], topk: String, order: Column*): Unit = {
+      val df = prs.zipWithIndex.map { case (p, i) => (i % 5, i.toLong, p) }
+        .toDF("g", "id", "p").repartition(7)
+      val viaAgg = df.groupBy("g")
+        .agg(expr(topk).as("tk"))
+        .select(col("g"), posexplode(col("tk")))
+        .select(col("g"), (col("pos") + 1).as("rnk"), col("col").as("id"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("g")).orderBy(order: _*)
+      val viaWindow = df.withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") <= 9).select(col("g"), col("rnk"), col("id"))
+      assert(viaAgg.except(viaWindow).isEmpty && viaWindow.except(viaAgg).isEmpty,
+        s"$topk diverged on priorities ${prs.take(12)}...")
+    }
     // priorities drawn from a SMALL value set (forces real ties) plus the
     // degenerate doubles the r13 total-order fix covers: -0.0 vs 0.0 at
     // the boundary and NaN (ranks last under Spark's ascending sort)
@@ -571,20 +587,24 @@ class PropertySpec extends SparkSpec {
       6 -> Gen.oneOf(-2.0, -1.0, 0.0, 1.0, 2.0),
       1 -> Gen.oneOf(-0.0, Double.NaN, Double.PositiveInfinity,
         Double.NegativeInfinity))
-    val rowsGen = Gen.listOfN(300, prGen)
-    samples(rowsGen, 4).foreach { prs =>
-      val df = prs.zipWithIndex.map { case (p, i) => (i % 5, i.toLong, p) }
-        .toDF("g", "id", "p").repartition(7)
-      val viaAgg = df.groupBy("g")
-        .agg(expr("priority_topk_tie(p, id, id, 9)").as("tk"))
-        .select(col("g"), posexplode(col("tk")))
-        .select(col("g"), (col("pos") + 1).as("rnk"), col("col").as("id"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("g")).orderBy(col("p"), col("id"))
-      val viaWindow = df.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 9).select(col("g"), col("rnk"), col("id"))
-      assert(viaAgg.except(viaWindow).isEmpty && viaWindow.except(viaAgg).isEmpty,
-        s"diverged on priorities ${prs.take(12)}...")
+    samples(Gen.listOfN(300, prGen), 4).foreach { prs =>
+      agreesWithWindow(prs, "priority_topk_tie(p, id, id, 9)", col("p"), col("id"))
+    }
+    // the 3-arg form breaks ties arbitrarily, so it gets DISTINCT
+    // priorities — one NaN and ±Infinity among them — under the same
+    // total order (NaN last)
+    val distinctGen = for {
+      ps <- Gen.listOfN(297, Gen.chooseNum(-1e6, 1e6))
+      at <- Gen.listOfN(3, Gen.chooseNum(0, 296))
+    } yield {
+      // ±0.0 would tie once normalized: fold -0.0 before the distinct
+      val base = ps.map(p => if (p == 0.0) 0.0 else p).distinct.toBuffer
+      Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).zip(at)
+        .foreach { case (x, i) => base.insert(math.min(i, base.size), x) }
+      base.toSeq
+    }
+    samples(distinctGen, 4).foreach { prs =>
+      agreesWithWindow(prs, "priority_topk(p, id, 9)", col("p"))
     }
   }
 }

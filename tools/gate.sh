@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Full local gate: compile (library and benchmark build), tests, correctness dump + DuckDB oracle replay,
-# bench. Mirrors what the driver runs per round.
+# Demo smoke, bench.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_ORACLE=${SF_ORACLE:-/root/testdata/sf0.01}
@@ -21,5 +21,8 @@ sbt -batch compile
 sbt -batch test
 SPARK_GRAFT_CPUS=$CPUS sbt -batch "runMain graft.Verify $SF_ORACLE $OUT"
 python3 tools/compare_oracle.py "$SF_ORACLE" "$OUT"
+# library surfaces outside the catalog (IVF top-k reranks, freq_sketch,
+# PCA projection, streaming, bucketing): the smoke must run to completion
+sbt -batch "runMain graft.Demo $SF_ORACLE"
 SPARK_GRAFT_SF_DIR=$SF_BENCH SPARK_GRAFT_CPUS=$CPUS sbt -batch "runMain graft.Bench" \
   | grep '"metric"' | sed 's/^\[info\] //'
