@@ -77,7 +77,7 @@ case class BloomMightContain(left: Expression, right: Expression)
 /** [[BloomMightContain]] re-plumbed for production-sized sketches: the
   * serialized filter rides a `sparkContext.broadcast` and the plan carries
   * only the HANDLE (the same pattern as the IVF centroid matrix,
-  * `Ann.assignWithBroadcast`). The bitset ships once per executor over the
+  * `Ann.centroidBc`). The bitset ships once per executor over the
   * torrent protocol instead of once per task binary per stage — at a real
   * train-dictionary scale (10⁹ keys @ 1% fpp ≈ 1.2 GB) the literal form
   * would serialize that into EVERY task of every stage referencing it.

@@ -8,21 +8,19 @@ import org.apache.spark.sql.functions._
   * condition level, and the sample's median-of-ratios size factor. */
 final case class CountCell(gene: Long, smp: Long, cnt: Double, cond: String, sf: Double)
 
-/** Per-gene Wald test result for the last-vs-first contrast
-  * (`results(dds)` columns consumed at vital_status_DESeq.R:89-97).
-  * `cooks_outlier` carries DESeq2's Cook's-distance flag: `results()`
-  * NULLs pvalue/padj for flagged genes. `dispersion` is the final
-  * (post-shrinkage) α the Wald covariance was computed at — DESeq2
-  * reports it via `mcols(dds)$dispersion`, and it closes the closed-form
-  * SE identity `se² = Σ_g (1+α·m_g)/(n_g·m_g)` the golden spec checks. */
-final case class DEResult(gene: Long, base_mean: Double, log2fc: Double,
-    lfc_se: Double, stat: Double, pvalue: Double, cooks_outlier: Boolean,
-    dispersion: Double)
-
 /** One row per (gene, contrast) — the K-contrast fan-out of
-  * BRCA_path_stage_DESeq.R:113-122 (10 pairs from one fit). */
+  * BRCA_path_stage_DESeq.R:113-122 (10 pairs from one fit), and the
+  * two-level `results(dds)` columns consumed at vital_status_DESeq.R:89-97.
+  * `base_mean`, `cooks_outlier` and `dispersion` are per-gene (the same
+  * on every contrast row of a gene). `cooks_outlier` carries DESeq2's
+  * Cook's-distance flag: `results()` NULLs pvalue/padj for flagged genes.
+  * `dispersion` is the final (post-shrinkage) α the Wald covariance was
+  * computed at — DESeq2 reports it via `mcols(dds)$dispersion`, and it
+  * closes the closed-form SE identity `se² = Σ_g (1+α·m_g)/(n_g·m_g)`
+  * the golden spec checks. */
 final case class DEContrast(gene: Long, contrast: String, log2fc: Double,
-    lfc_se: Double, stat: Double, pvalue: Double)
+    lfc_se: Double, stat: Double, pvalue: Double, base_mean: Double,
+    cooks_outlier: Boolean, dispersion: Double)
 
 /** Empirical-Bayes prior for per-gene dispersions, DESeq2-style (Love et
   * al. 2014 §M3): the mean-dispersion trend `α_tr(μ) = a0 + a1/μ` plus the
@@ -316,33 +314,13 @@ object DiffExpression {
       }
   }
 
-  /** Two-group Wald test, `levels = Seq(reference, treatment)`. */
+  /** Two-group Wald test, `levels = Seq(reference, treatment)`: the one
+    * treatment-vs-reference contrast of [[contrasts]]. */
   def waldTest(cells: Dataset[CountCell], levels: Seq[String],
       prior: Option[DispersionPrior] = None,
-      minReplicatesForReplace: Int = MinReplicatesForReplace): Dataset[DEResult] = {
+      minReplicatesForReplace: Int = MinReplicatesForReplace): Dataset[DEContrast] = {
     require(levels.size == 2, s"waldTest needs 2 levels, got $levels")
-    val spark = cells.sparkSession
-    import spark.implicits._
-    perGene[DEResult](cells) { (gene, it) =>
-      fitGene(gene, it, levels, prior, minReplicatesForReplace) match {
-        case Some(f) =>
-          val k = f.levelIndex.getOrElse(levels(1), -1)
-          // the same non-positive-variance drop as contrasts(): an
-          // ill-conditioned fit whose inverted covariance rounds to a
-          // non-positive diagonal would otherwise emit NaN se/stat/p —
-          // and a NaN p-value is NOT null, so it would sail through
-          // results()'s universe filter into the BH machinery
-          if (k < 0 || f.cov(k)(k) <= 0) Iterator.empty
-          else {
-            val se = math.sqrt(f.cov(k)(k))
-            val stat = f.beta(k) / se
-            Iterator.single(DEResult(gene, f.baseMean,
-              f.beta(k) / math.log(2.0), se / math.log(2.0), stat,
-              normalSfTwoSided(stat), f.cooksOutlier, f.dispersion))
-          }
-        case None => Iterator.empty
-      }
-    }
+    contrasts(cells, levels, Seq((levels(1), levels(0))), prior, minReplicatesForReplace)
   }
 
   /** Fit once per gene, then evaluate every `(levelA, levelB)` contrast from
@@ -365,12 +343,17 @@ object DiffExpression {
                   if (i == 0 || j == 0) 0.0 else f.cov(i)(j)
                 val diff = b(ia) - b(ib)
                 val variance = v(ia, ia) + v(ib, ib) - 2.0 * v(ia, ib)
+                // an ill-conditioned fit whose inverted covariance rounds
+                // to a non-positive variance would otherwise emit NaN
+                // se/stat/p — and a NaN p-value is NOT null, so it would
+                // sail through results()'s universe filter into BH
                 if (variance <= 0) None
                 else {
                   val se = math.sqrt(variance)
                   val stat = diff / se
                   Some(DEContrast(gene, s"${la}_vs_$lb", diff / math.log(2.0),
-                    se / math.log(2.0), stat, normalSfTwoSided(stat)))
+                    se / math.log(2.0), stat, normalSfTwoSided(stat),
+                    f.baseMean, f.cooksOutlier, f.dispersion))
                 }
               case _ => None
             }
@@ -383,7 +366,7 @@ object DiffExpression {
   /** Per-gene fitted MAP dispersions for an arbitrary K-level design —
     * the checkpoint extractor behind the fit/apply split (FreezeModels
     * freezes these as literals; the apply stages d3b/d4b score against
-    * them closed-form). Same per-gene grouped fit as waldTest/contrasts,
+    * them closed-form). Same per-gene grouped fit as contrasts,
     * emitting only `(gene, alpha)`. */
   def dispersions(cells: Dataset[CountCell], levels: Seq[String],
       prior: Option[DispersionPrior] = None,

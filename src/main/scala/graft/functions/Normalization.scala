@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** DESeq2-style count normalization (reference: `DESeq()` size factors and
@@ -95,11 +95,7 @@ object Normalization {
         (col("sy") - col("a1") * col("sx")) / col("n"), lit(1e-8)))
       .select("a0", "a1")
     q.crossJoin(broadcast(trend))
-      .withColumn("vst", log2(
-        (lit(1.0) + col("a1") + lit(2.0) * col("a0") * col("q") +
-          lit(2.0) * sqrt(col("a0") * col("q") *
-            (lit(1.0) + col("a1") + col("a0") * col("q")))) /
-          (lit(4.0) * col("a0"))))
+      .withColumn("vst", vstOf(col("q"), col("a0"), col("a1")))
       .drop("a0", "a1")
   }
 
@@ -127,12 +123,16 @@ object Normalization {
     val sf = sizeFactors(c, geneCol, sampleCol, countCol)
     c.join(broadcast(sf), sampleCol)
       .withColumn("q", col(countCol) / col("size_factor"))
-      .withColumn("vst", log2(
-        (lit(1.0) + lit(a1) + lit(2.0) * lit(a0) * col("q") +
-          lit(2.0) * sqrt(lit(a0) * col("q") *
-            (lit(1.0) + lit(a1) + lit(a0) * col("q")))) /
-          (lit(4.0) * lit(a0))))
+      .withColumn("vst", vstOf(col("q"), lit(a0), lit(a1)))
   }
+
+  /** DESeq2's closed-form VST of normalized count `q` under the trend
+    * α(μ) = a0 + a1/μ — the one copy [[vstTrend]] and [[vstClosedForm]]
+    * share (`OracleSql.vst` is its SQL twin, same op order). */
+  private def vstOf(q: Column, a0: Column, a1: Column): Column =
+    log2((lit(1.0) + a1 + lit(2.0) * a0 * q +
+        lit(2.0) * sqrt(a0 * q * (lit(1.0) + a1 + a0 * q))) /
+      (lit(4.0) * a0))
 
   /** VST-approximate normalized counts: `log2(count / size_factor + 1)`.
     * Documented deviation from DESeq2's exact VST (which needs the fitted

@@ -8,14 +8,14 @@ import graft.expressions.GraftFunctions
 /** IVF-style approximate nearest neighbour over an embedding column — the
   * coarse-quantizer scale path beside the hyperplane LSH variant
   * (ScaleOpsQueries.ss2): k-means cells built with distributed Lloyd
-  * iterations (fold-argmin assign over a centroid literal → element-wise
+  * iterations (crossJoin argmin over the training sample → element-wise
   * mean update, all DataFrame ops), then search probes only the `nProbe`
   * nearest cells and re-ranks exactly with the codegen `cosine_sim`
   * expression.
   *
-  * At 100 TB: centroids pass through the driver as a k-entry literal (KBs
-  * — the same boundedness as any broadcast dim), so assignment and
-  * probing are NARROW per-row folds: no crossJoin, no per-id window, no
+  * At 100 TB: centroids pass through the driver as one k-row broadcast
+  * (KBs to MBs — the same boundedness as any broadcast dim), so assignment
+  * and probing are NARROW per-row maps: no crossJoin, no per-id window, no
   * k× corpus shuffle. The search-side candidate set shrinks by ~k/nProbe
   * versus brute force. Exact re-rank inside the probed cells makes
   * `nProbe = k` literally equal to brute force (tested).
@@ -114,7 +114,7 @@ object Ann {
       // is the bounded training sample (≤ maxTrain), where a k× expansion
       // is cheap, and keeping the loop lazy means ONE action executes the
       // whole quantizer (no per-iteration job barriers). The corpus-scale
-      // path ([[assign]]) is the narrow fold — never this.
+      // path ([[assign]]) is the narrow map — never this.
       val wa = Window.partitionBy(col("id")).orderBy(col("d2"), col("cell"))
       val assigned = train.crossJoin(broadcast(centroids))
         .withColumn("d2", dist2(col("vn"), col("cv")))
@@ -136,8 +136,8 @@ object Ann {
   }
 
   /** The centroid table collected and cell-sorted — bounded by k (a
-    * quantizer has tens-to-thousands of cells). Shared by both assignment
-    * paths and the probe literal. */
+    * quantizer has tens-to-thousands of cells). The one input every
+    * [[centroidBc]] is built from. */
   private def centroidRows(centroids: DataFrame): Seq[(Int, Seq[Double])] = {
     val rows = centroids.select(col("cell").cast("int"), col("cv")).collect().toSeq
       .map(r => (r.getInt(0), r.getSeq[Double](1)))
@@ -146,86 +146,45 @@ object Ann {
     rows
   }
 
-  /** The centroid table as a literal array-of-structs column — what makes
+  /** The centroid matrix as a `sparkContext.broadcast` — what makes
     * assignment/probing a NARROW map: a crossJoin + per-id window
-    * formulation shuffles k× the corpus, a scale killer both paths avoid. */
-  private def centroidLit(rows: Seq[(Int, Seq[Double])]): Column =
-    // ONE Literal node (typedlit of the nested value) — an array/struct
-    // built from k·dim individual lit()s costs seconds of driver-side
-    // analysis; fields are _1 = cell, _2 = cv
-    typedlit(rows)
+    * formulation shuffles k× the corpus. The plan carries only the
+    * broadcast HANDLE; the k·dim doubles ship once per executor, at any k
+    * (a plan literal would re-serialize them with every task). Callers
+    * build ONE per centroid table — ivfTopK shares it between assign and
+    * probe. */
+  private[graft] type CentroidBc =
+    org.apache.spark.broadcast.Broadcast[(Array[Int], Array[Array[Double]])]
 
-  /** Above this cell count the centroid table stops travelling as a plan
-    * literal (k·dim doubles re-serialized with every task at k ≈ 16k–65k —
-    * multi-MB task descriptions, analyzer cost) and rides a sparkContext
-    * broadcast instead: shipped once per executor, the assignment loop
-    * identical. 4096 cells × 64 dims ≈ 2 MB literal — the comfortable
-    * ceiling. */
-  private[graft] val LiteralPathMaxK = 4096
+  private[graft] def centroidBc(spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[(Int, Seq[Double])]): CentroidBc =
+    spark.sparkContext.broadcast(
+      (rows.map(_._1).toArray, rows.map(_._2.toArray).toArray))
 
   /** Nearest-cell assignment: one row per vector with its `cell` —
-    * embarrassingly parallel, no join, no window, no shuffle, on BOTH
-    * paths (strict `<`, so exact-tie distances keep the lowest cell id,
-    * matching an `orderBy(d2, cell)` rank). k ≤ [[LiteralPathMaxK]] folds
-    * over a plan literal; larger k runs the same argmin as a function
-    * over a once-per-executor broadcast matrix — identical results
-    * (same index-order float accumulation, tested at k = 8192). */
+    * embarrassingly parallel, no join, no window, no shuffle. The argmin
+    * accumulates squared differences left to right and keeps the first
+    * strict `<` minimum, so exact-tie distances keep the lowest cell id,
+    * matching an `orderBy(d2, cell)` rank (AnnSpec checks it against a
+    * plain-Scala argmin at k = 8 and k = 8192). */
   def assign(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    assignRows(vectors, centroidRows(centroids))
+    assignCells(vectors, centroidBc(vectors.sparkSession, centroidRows(centroids)))
 
   /** Normalize + nearest-cell assignment in one narrow scan:
     * `(id, vn, cell)` — the blocking primitive for cell-bounded pairwise
     * work (SemDeDup-style semantic dedup composes on this). */
   def assigned(emb: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame): DataFrame =
-    assignRows(normalized(emb, idCol, vecCol), centroidRows(centroids))
+    assign(normalized(emb, idCol, vecCol), centroids)
 
-  private def assignRows(vectors: DataFrame,
-      rows: Seq[(Int, Seq[Double])],
-      shared: Option[CentroidBc] = None): DataFrame =
-    if (rows.size <= LiteralPathMaxK) assignWithLiteral(vectors, centroidLit(rows))
-    else assignWithBroadcast(vectors, rows, shared)
-
-  private[graft] def assignWithLiteral(vectors: DataFrame, cents: Column): DataFrame = {
-    val best = aggregate(
-      cents,
-      struct(lit(Double.MaxValue).as("d2"), lit(-1).as("cell")),
-      (acc, c) => {
-        val d = dist2(col("vn"), c.getField("_2"))
-        when(d < acc.getField("d2"),
-          struct(d.as("d2"), c.getField("_1").as("cell"))).otherwise(acc)
-      })
-    vectors.withColumn("cell", best.getField("cell"))
-  }
-
-  /** Large-k assignment: the SAME argmin loop (left-to-right squared-diff
-    * accumulation, strict `<` lowest-cell tiebreak — bit-identical to the
-    * literal fold) over a `sparkContext.broadcast` of the centroid matrix.
-    * The plan carries only the broadcast HANDLE; the k·dim doubles ship
-    * once per executor. A function (not codegen) — but so is the
-    * interpreted higher-order fold it replaces, and the hot cost is the
-    * k·dim arithmetic either way. */
-  private[graft] type CentroidBc =
-    org.apache.spark.broadcast.Broadcast[(Array[Int], Array[Array[Double]])]
-
-  /** ONE broadcast of the centroid matrix per ivfTopK call — the assign
-    * and probe paths share it instead of shipping k·dim doubles twice. */
-  private[graft] def centroidBc(spark: org.apache.spark.sql.SparkSession,
-      rows: Seq[(Int, Seq[Double])]): CentroidBc =
-    spark.sparkContext.broadcast(
-      (rows.map(_._1).toArray, rows.map(_._2.toArray).toArray))
-
-  private[graft] def assignWithBroadcast(vectors: DataFrame,
-      rows: Seq[(Int, Seq[Double])],
-      shared: Option[CentroidBc] = None): DataFrame = {
-    val bc = shared.getOrElse(centroidBc(vectors.sparkSession, rows))
+  /** [[assign]] over an already-built centroid broadcast. A function, not
+    * codegen — the hot cost is the k·dim arithmetic either way. */
+  private def assignCells(vectors: DataFrame, bc: CentroidBc): DataFrame = {
     val nearest = udf { (vn: Seq[Double]) =>
       val (cs, m) = bc.value
       var best = -1
       var bestD = Double.MaxValue
-      // dim mismatch = no cell, matching the literal fold (whose
-      // zip_with null-pads and never fires the `<`) — NOT a truncated
-      // prefix distance
+      // dim mismatch = no cell — NOT a truncated prefix distance
       if (m.length == 0 || vn.length == m(0).length) {
         var c = 0
         while (c < m.length) {
@@ -243,36 +202,15 @@ object Ann {
   }
 
   /** The `nProbe` nearest cell ids for each query vector (`qvn`), ordered
-    * by (distance², cell) — an ARRAY<INT> column. k ≤ [[LiteralPathMaxK]]
-    * sorts the centroid literal per row (array_sort over (d2, cell)
-    * structs ≡ orderBy(d2, cell)); larger k runs a bounded selection over
-    * the broadcast matrix — same float accumulation, same tiebreak, so
-    * identical probe sets (tested at k = 8192). Both narrow. */
-  private[graft] def probeCells(queries: DataFrame,
-      rows: Seq[(Int, Seq[Double])], nProbe: Int,
-      shared: Option[CentroidBc] = None): Column =
-    if (rows.size <= LiteralPathMaxK) probeCellsLiteral(rows, nProbe)
-    else probeCellsBroadcast(queries, rows, nProbe, shared)
-
-  private[graft] def probeCellsLiteral(rows: Seq[(Int, Seq[Double])],
-      nProbe: Int): Column =
-    transform(
-      slice(
-        array_sort(transform(centroidLit(rows), c =>
-          struct(dist2(col("qvn"), c.getField("_2")).as("d2"),
-            c.getField("_1").as("cell")))),
-        1, nProbe),
-      pc => pc.getField("cell"))
-
-  private[graft] def probeCellsBroadcast(queries: DataFrame,
-      rows: Seq[(Int, Seq[Double])], nProbe: Int,
-      shared: Option[CentroidBc] = None): Column = {
-    val bc = shared.getOrElse(centroidBc(queries.sparkSession, rows))
+    * by (distance², cell) — an ARRAY<INT> column, narrow. Same left-to-
+    * right float accumulation as [[assign]], so a query's first probe
+    * cell is the cell [[assign]] would give it (AnnSpec checks the probe
+    * sets against a plain-Scala (d2, cell) sort at k = 8 and k = 8192). */
+  private[graft] def probeCells(bc: CentroidBc, nProbe: Int): Column = {
     val nearestN = udf { (qvn: Seq[Double]) =>
       val (cs, m) = bc.value
       // exact (d2, cell) ordering over all k, then take nProbe — k log k
-      // per query row; queries are the thin side, and the full sort
-      // reproduces the literal path's total order bit-for-bit
+      // per query row; queries are the thin side
       val scored = new Array[(Double, Int)](m.length)
       var c = 0
       while (c < m.length) {
@@ -289,37 +227,16 @@ object Ann {
     nearestN(col("qvn"))
   }
 
-  /** IVF top-k: probe the `nProbe` nearest cells per query, exact
-    * cosine re-rank inside them.
+  /** The exact re-rank every search ends in: candidate pairs
+    * `(q_id, qv, id, v)` minus self-matches, scored with `cosine_sim` and
+    * cut to `topK` per query by the O(k)-state deterministic aggregate
+    * (cos desc, id). Its map-side combine ships k rows per (query,
+    * partition) where a row_number window shuffled and sorted EVERY
+    * scored candidate. The tiebreak cast widens integral ids losslessly
+    * (non-integral ids are rejected up front by [[requireIntegralId]]).
     * @return `(q_id, rnk, id, cos)` */
-  def ivfTopK(emb: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int, nProbe: Int, topK: Int): DataFrame = {
-    val spark = emb.sparkSession
-    requireIntegralId(emb, idCol, "ivfTopK")
-    // the Lloyd result materializes ONCE; both the corpus assign and the
-    // query-side probe pick the literal or broadcast path by k
-    val rows = centroidRows(kmeansCentroids(emb, idCol, vecCol, k, iters))
-    val shared = if (rows.size > LiteralPathMaxK)
-      Some(centroidBc(spark, rows)) else None
-    // persist the assigned corpus: this IS the IVF index artifact (cell →
-    // vectors). Without it the interpreted fold that computes `cell`
-    // re-evaluates per join-OUTPUT row (~nProbe× per vector — measured 6×
-    // the whole query); a real deployment would even write it to storage
-    // (sources.Stages.materialize) and reuse it across query batches.
-    val corpus = assignRows(normalized(emb, idCol, vecCol), rows, shared).persist()
-    graft.Caches.releaseAfterAction(corpus)
-    val qn = normalized(queries, idCol, vecCol)
-      .select(col("id").as("q_id"), col("v").as("qv"), col("vn").as("qvn"))
-    val probed = qn
-      .select(col("q_id"), col("qv"),
-        explode(probeCells(qn, rows, nProbe, shared)).as("cell"))
-    // O(k)-state deterministic re-rank (cos desc, id): each corpus vector
-    // lives in exactly ONE cell, so the probe join scores it at most once
-    // per query; the aggregate's map-side combine ships k rows per
-    // (query, partition) where the window spelling shuffled and sorted
-    // every scored candidate (n_q x n_corpus x nProbe/k rows at scale)
-    probed.join(corpus, Seq("cell"))
-      .filter(col("id") =!= col("q_id"))
+  private def rerankTopK(pairs: DataFrame, topK: Int): DataFrame =
+    pairs.filter(col("id") =!= col("q_id"))
       .withColumn("cos", GraftFunctions.cosineSim(col("qv"), col("v")))
       .groupBy("q_id")
       .agg(GraftFunctions.priorityTopK(-col("cos"), col("id").cast("long"),
@@ -327,29 +244,39 @@ object Ann {
       .select(col("q_id"), posexplode(col("tk")))
       .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
         col("col.id").as("id"), col("col.cos").as("cos"))
+
+  /** IVF top-k: probe the `nProbe` nearest cells per query, exact
+    * cosine re-rank inside them.
+    * @return `(q_id, rnk, id, cos)` */
+  def ivfTopK(emb: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      k: Int, iters: Int, nProbe: Int, topK: Int): DataFrame = {
+    requireIntegralId(emb, idCol, "ivfTopK")
+    // the Lloyd result materializes ONCE; the corpus assign and the
+    // query-side probe share one broadcast of it
+    val bc = centroidBc(emb.sparkSession,
+      centroidRows(kmeansCentroids(emb, idCol, vecCol, k, iters)))
+    // persist the assigned corpus: this IS the IVF index artifact (cell →
+    // vectors). Without it the assignment function that computes `cell`
+    // re-evaluates per join-OUTPUT row (~nProbe× per vector); a real
+    // deployment would even write it to storage (sources.Stages.materialize)
+    // and reuse it across query batches.
+    val corpus = assignCells(normalized(emb, idCol, vecCol), bc).persist()
+    graft.Caches.releaseAfterAction(corpus)
+    val probed = normalized(queries, idCol, vecCol)
+      .select(col("id").as("q_id"), col("v").as("qv"), col("vn").as("qvn"))
+      .select(col("q_id"), col("qv"), explode(probeCells(bc, nProbe)).as("cell"))
+    // each corpus vector lives in exactly ONE cell, so the probe join
+    // scores it at most once per query
+    rerankTopK(probed.join(corpus, Seq("cell")), topK)
   }
 
   /** Brute-force exact top-k (the verification baseline). */
   def bruteTopK(emb: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       topK: Int): DataFrame = {
     requireIntegralId(emb, idCol, "bruteTopK")
-    val corpus = normalized(emb, idCol, vecCol)
     val qn = normalized(queries, idCol, vecCol)
       .select(col("id").as("q_id"), col("v").as("qv"))
-    // O(k)-state deterministic top-k (priority_topk_tie, ties broken by
-    // id): partial aggregation ships k rows per (query, partition) — the
-    // row_number window spelling shuffles and sorts EVERY scored row.
-    // The tiebreak cast widens integral ids losslessly (non-integral ids
-    // are rejected above with a clear error)
-    corpus.crossJoin(broadcast(qn))
-      .filter(col("id") =!= col("q_id"))
-      .withColumn("cos", GraftFunctions.cosineSim(col("qv"), col("v")))
-      .groupBy("q_id")
-      .agg(GraftFunctions.priorityTopK(-col("cos"), col("id").cast("long"),
-        struct(col("id"), col("cos")), topK).as("tk"))
-      .select(col("q_id"), posexplode(col("tk")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
-        col("col.id").as("id"), col("col.cos").as("cos"))
+    rerankTopK(normalized(emb, idCol, vecCol).crossJoin(broadcast(qn)), topK)
   }
 
   // ---------------------------------------------------------------------
@@ -652,9 +579,8 @@ object Ann {
     // the quantizer fit reads only `emb`, never the layout — keep it
     // outside the lease so a long Lloyd fit doesn't age the lock
     val rows = centroidRows(kmeansCentroids(emb, idCol, vecCol, k, iters))
-    val shared = if (rows.size > LiteralPathMaxK)
-      Some(centroidBc(emb.sparkSession, rows)) else None
-    val assigned0 = assignRows(normalized(emb, idCol, vecCol), rows, shared)
+    val assigned0 = assignCells(normalized(emb, idCol, vecCol),
+      centroidBc(emb.sparkSession, rows))
     val fsw = fsOf(emb.sparkSession, path)
     // the rebuild is the THIRD writer and holds the same lock as
     // append/compact (review finding: an unlocked rebuild could overwrite
@@ -687,7 +613,7 @@ object Ann {
       // re-running the `cents` plan here would re-execute the whole k-means
       // pipeline — including the full-corpus training-sample scan — since
       // its internal caches release after the centroidRows collect; this
-      // also guarantees the file matches the assignment's literals exactly
+      // also guarantees the file matches the assignment's broadcast exactly
       val sess = emb.sparkSession
       import sess.implicits._
       rows.toDF("cell", "cv")
@@ -719,8 +645,8 @@ object Ann {
         Pq.attachCodes(audited.filter(size(col("v")) === m.dim), "v", m)
       case None =>
         // the UNcoded path gets the SAME domain filter (r14 ADVICE): a
-        // dim-drifted vector assigns to cell=-1 (the fold's null distance
-        // never fires) and would sit in the layout unreachable by every
+        // dim-drifted vector assigns to cell=-1 (the argmin skips a dim
+        // mismatch) and would sit in the layout unreachable by every
         // probe — stored but silently invisible. Shed it loudly instead,
         // mirroring the PQ branch, so coded and uncoded layouts of the
         // same corpus carry identical row sets.
@@ -833,9 +759,8 @@ object Ann {
         require(storedHasCode == pq.isDefined,
           s"appendIvfIndex: stored corpus hasCode=$storedHasCode but " +
             s"pq=${pq.isDefined} — append with the build's own PQ setting")
-        val shared = if (rows.size > LiteralPathMaxK)
-          Some(centroidBc(spark, rows)) else None
-        val assigned = assignRows(normalized(emb, idCol, vecCol), rows, shared)
+        val assigned = assignCells(normalized(emb, idCol, vecCol),
+          centroidBc(spark, rows))
         batchId match {
           case None =>
             writeCorpus(assigned, pq, writeSalts, corpusDir.toString,
@@ -1018,14 +943,11 @@ object Ann {
       queries: DataFrame, idCol: String, vecCol: String,
       nProbe: Int, topK: Int): DataFrame = {
     requireIntegralId(queries, idCol, "ivfIndexTopK")
-    val rows = centroidRows(spark.read.parquet(s"$path/centroids"))
-    val shared = if (rows.size > LiteralPathMaxK)
-      Some(centroidBc(spark, rows)) else None
-    val qn = normalized(queries, idCol, vecCol)
+    val bc = centroidBc(spark,
+      centroidRows(spark.read.parquet(s"$path/centroids")))
+    val probed = normalized(queries, idCol, vecCol)
       .select(col("id").as("q_id"), col("v").as("qv"), col("vn").as("qvn"))
-    val probed = qn
-      .select(col("q_id"), col("qv"),
-        explode(probeCells(qn, rows, nProbe, shared)).as("cell"))
+      .select(col("q_id"), col("qv"), explode(probeCells(bc, nProbe)).as("cell"))
       .persist()
     // bounded driver collect: distinct probe cells ⊆ the k cell ids —
     // never scales with the query batch, and buys STATIC pruning (the
@@ -1037,16 +959,8 @@ object Ann {
     graft.Caches.releaseAfterAction(probed)
     // the cell filter pushes through the tombstone anti-join's left side
     // to the scan, so static partition pruning is intact (PlanSpec)
-    liveCorpus(spark, path)
+    rerankTopK(liveCorpus(spark, path)
       .filter(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
-      .join(broadcast(probed), Seq("cell"))
-      .filter(col("id") =!= col("q_id"))
-      .withColumn("cos", GraftFunctions.cosineSim(col("qv"), col("v")))
-      .groupBy("q_id")
-      .agg(GraftFunctions.priorityTopK(-col("cos"), col("id").cast("long"),
-        struct(col("id"), col("cos")), topK).as("tk"))
-      .select(col("q_id"), posexplode(col("tk")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
-        col("col.id").as("id"), col("col.cos").as("cos"))
+      .join(broadcast(probed), Seq("cell")), topK)
   }
 }

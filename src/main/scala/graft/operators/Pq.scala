@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   *    sizes — unlike a distributed Lloyd, whose reduction order shifts
   *    centroids by ulps per environment (see [[Ann.kmeansCentroids]]).
   *  - ENCODE is a pure narrow map: per subspace, a fold-argmin over the
-  *    codebook literal (m·ksub·dsub doubles — KBs; the same boundedness
-  *    argument as [[Ann]]'s `centroidLit`). No join, no shuffle.
+  *    codebook literal (m·ksub·dsub doubles — KBs, bounded like
+  *    [[Ann]]'s centroid broadcast). No join, no shuffle.
   *  - ADC SEARCH is a narrow scan too: the per-query distance table
   *    (m × ksub doubles, computed driver-side from the codebooks) rides a
   *    plan literal; each corpus row costs m `element_at` lookups + m adds

@@ -438,20 +438,10 @@ object AnalyticsQueries {
 
   private val fzMaxChars = 200L
   private val fzMaxDist = 20L
-  // GRAFT_FZ1_MAXBUCKET: binding-regime test knob (the cap is sized to be
-  // non-binding through sf1.0 — max observed bucket 308 — so exercising
-  // the drop path against real data means lowering it; the oracle SQL
-  // interpolates the SAME value, so Verify + compare replay the capped
-  // join on both engines at any setting). Default unchanged: 1000.
-  private val fzMaxBucket: Long = {
-    val v = sys.env.getOrElse("GRAFT_FZ1_MAXBUCKET", "1000").toLong
-    // the Spark side narrows to Int while the oracle interpolates the
-    // Long literal — an out-of-range value would silently desync the two
-    // engines (toInt wraps), so reject it at initialization instead
-    require(v > 0 && v <= Int.MaxValue,
-      s"GRAFT_FZ1_MAXBUCKET must be in (0, ${Int.MaxValue}], got $v")
-    v
-  }
+  // hot-bucket cap, interpolated into BOTH the Spark side and the oracle
+  // SQL: non-binding through sf1.0 (max observed bucket 308); its binding
+  // regime is exercised synthetically in CorpusSpec
+  private val fzMaxBucket = 1000L
 
   /** FZ1 — fuzzy near-duplicate pairs by edit distance — the
     * character-level complement to the token-level dedup family (dd2–dd4):

@@ -299,26 +299,24 @@ object CurationQueries {
 
   private val ngN = 5 // gram width for span marking
 
-  /** NG1 — duplicated-span coverage (Dedup.duplicatedSpans): the
-    * distributed n-gram stand-in for Lee et al. 2022's suffix-array
-    * exact-substring dedup. Like fz1, the synthetic corpus has no organic
+  /** The ng1–ng6 input. Like fz1, the synthetic corpus has no organic
     * repeated 5-grams, so deterministic twin EXCERPTS are injected on
     * both engines: every 9th long doc gains a 20-token middle slice as a
     * new doc at doc_id + 2·10^7 — the original then shows a partial
-    * duplicated span (tokens 5..24), the excerpt shows full coverage, and
-    * the interval-merge path is exercised non-vacuously. */
-  private val ng1 = Q(
-    "ng1_dup_spans",
-    (s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val toks = TextFunctions.tokens(col("text"))
-      val excerpts = docs
-        .filter(col("doc_id") % 9 === 0 && size(toks) >= 30)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat_ws(" ", slice(toks, 6, 20)).as("text"))
-      Dedup.duplicatedSpans(docs.unionByName(excerpts), "doc_id", "text", ngN)
-    },
-    Some(s"""WITH t0 AS (SELECT doc_id, text FROM documents),
+    * duplicated span (tokens 5..24) and the excerpt full coverage. */
+  private def docsWithTwins(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d).select("doc_id", "text")
+    val toks = TextFunctions.tokens(col("text"))
+    docs.unionByName(docs
+      .filter(col("doc_id") % 9 === 0 && size(toks) >= 30)
+      .select((col("doc_id") + 20000000L).as("doc_id"),
+        concat_ws(" ", slice(toks, 6, 20)).as("text")))
+  }
+
+  /** SQL twin of [[docsWithTwins]], tokenized down to one row per 5-gram
+    * occurrence: CTEs `b (doc_id, toks, n_tok)` and `g (<gCols>, gram)`. */
+  private def twinGramsSql(gCols: String): String =
+    s"""WITH t0 AS (SELECT doc_id, text FROM documents),
              ex AS (SELECT doc_id + 20000000 AS doc_id,
                       array_to_string(list_slice(
                         string_split_regex(trim(lower(text)), '\\s+'), 6, 25),
@@ -335,21 +333,71 @@ object CurationQueries {
              occ AS (SELECT doc_id, n_tok, toks,
                        unnest(range(0, n_tok - ${ngN - 1})) AS pos
                      FROM b WHERE n_tok >= $ngN),
-             g AS (SELECT doc_id, n_tok, pos,
+             g AS (SELECT $gCols,
                      array_to_string(list_slice(toks,
                        CAST(pos + 1 AS INT), CAST(pos + $ngN AS INT)), ' ') AS gram
-                   FROM occ),
-             dict AS (SELECT gram FROM g
+                   FROM occ)"""
+
+  /** ng1–ng3: the gram occurrences seen in ≥ 2 docs. */
+  private val dupGramsSql =
+    """dict AS (SELECT gram FROM g
                       GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
              dup AS (SELECT doc_id, n_tok, pos FROM g
-                     WHERE gram IN (SELECT gram FROM dict)),
-             sp AS (SELECT doc_id, n_tok, pos,
+                     WHERE gram IN (SELECT gram FROM dict))"""
+
+  /** ng1–ng4: each duplicated gram's token interval `[pos, e]` and the
+    * furthest end before it in its doc. */
+  private val spanSql =
+    s"""sp AS (SELECT doc_id, n_tok, pos,
                       least(pos + ${ngN - 1}, n_tok - 1) AS e,
                       max(least(pos + ${ngN - 1}, n_tok - 1)) OVER (
                         PARTITION BY doc_id ORDER BY pos
                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
                         AS prev_end
-                    FROM dup),
+                    FROM dup)"""
+
+  /** ng2–ng4: `sp` intervals numbered into merged islands. */
+  private val islandSql =
+    """isl AS (SELECT doc_id, pos, e,
+                       CAST(sum(CASE WHEN prev_end IS NULL OR pos > prev_end + 1
+                                     THEN 1 ELSE 0 END) OVER (
+                         PARTITION BY doc_id ORDER BY pos
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                         AS BIGINT) AS island
+                     FROM sp)"""
+
+  /** The trim tail of ng3, ng4 and ng6: merged spans `[min(s0), max(e0)]`
+    * per island of `from`, every `b` doc rebuilt from the tokens outside
+    * them. */
+  private def trimSql(s0: String, e0: String, from: String): String =
+    s"""spans AS (SELECT doc_id, min($s0) AS s0, max($e0) AS e0
+                       FROM $from GROUP BY doc_id, island),
+             tok AS (SELECT doc_id, n_tok, unnest(range(0, n_tok)) AS pos, toks
+                     FROM b),
+             kept AS (SELECT t.doc_id, t.n_tok, t.pos,
+                        toks[CAST(t.pos + 1 AS INT)] AS tok
+                      FROM tok t
+                      WHERE NOT EXISTS (SELECT 1 FROM spans s
+                        WHERE s.doc_id = t.doc_id
+                          AND t.pos >= s.s0 AND t.pos <= s.e0)),
+             agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
+                       string_agg(tok, ' ' ORDER BY pos) AS trimmed_text
+                     FROM kept GROUP BY doc_id)
+             SELECT b.doc_id, b.n_tok,
+               coalesce(agg.n_kept, 0) AS n_kept,
+               coalesce(agg.trimmed_text, '') AS trimmed_text
+             FROM b LEFT JOIN agg USING (doc_id)"""
+
+  /** NG1 — duplicated-span coverage (Dedup.duplicatedSpans): the
+    * distributed n-gram stand-in for Lee et al. 2022's suffix-array
+    * exact-substring dedup, over [[docsWithTwins]] — so the interval-merge
+    * path is exercised non-vacuously. */
+  private val ng1 = Q(
+    "ng1_dup_spans",
+    (s, d) => Dedup.duplicatedSpans(docsWithTwins(s, d), "doc_id", "text", ngN),
+    Some(s"""${twinGramsSql("doc_id, n_tok, pos")},
+             $dupGramsSql,
+             $spanSql,
              cv AS (SELECT doc_id,
                       CAST(count(*) AS BIGINT) AS n_dup_grams,
                       CAST(sum(greatest(0, e - greatest(pos,
@@ -366,59 +414,16 @@ object CurationQueries {
   /** NG2 — MAXIMAL duplicated spans (Dedup.duplicatedSpanList): the
     * Lee et al. span-list output — one row per maximal run of text whose
     * 5-gram windows appear in ≥ 2 docs, `(doc_id, span_start, span_len,
-    * n_grams_in_span)`. Same injected twin excerpts as ng1, so the
-    * expected spans are non-trivial on both engines: the excerpt-source
-    * docs report the merged partial span, the excerpts full coverage. */
+    * n_grams_in_span)`. Over [[docsWithTwins]], so the expected spans are
+    * non-trivial on both engines: the excerpt-source docs report the
+    * merged partial span, the excerpts full coverage. */
   private val ng2 = Q(
     "ng2_dup_span_list",
-    (s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val toks = TextFunctions.tokens(col("text"))
-      val excerpts = docs
-        .filter(col("doc_id") % 9 === 0 && size(toks) >= 30)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat_ws(" ", slice(toks, 6, 20)).as("text"))
-      Dedup.duplicatedSpanList(docs.unionByName(excerpts), "doc_id", "text", ngN)
-    },
-    Some(s"""WITH t0 AS (SELECT doc_id, text FROM documents),
-             ex AS (SELECT doc_id + 20000000 AS doc_id,
-                      array_to_string(list_slice(
-                        string_split_regex(trim(lower(text)), '\\s+'), 6, 25),
-                        ' ') AS text
-                    FROM t0
-                    WHERE doc_id % 9 = 0
-                      AND len(string_split_regex(trim(lower(text)), '\\s+')) >= 30),
-             u AS (SELECT * FROM t0 UNION ALL SELECT * FROM ex),
-             b AS (SELECT doc_id,
-                     string_split_regex(trim(lower(text)), '\\s+') AS toks,
-                     CAST(len(string_split_regex(trim(lower(text)), '\\s+'))
-                       AS BIGINT) AS n_tok
-                   FROM u),
-             occ AS (SELECT doc_id, n_tok, toks,
-                       unnest(range(0, n_tok - ${ngN - 1})) AS pos
-                     FROM b WHERE n_tok >= $ngN),
-             g AS (SELECT doc_id, n_tok, pos,
-                     array_to_string(list_slice(toks,
-                       CAST(pos + 1 AS INT), CAST(pos + $ngN AS INT)), ' ') AS gram
-                   FROM occ),
-             dict AS (SELECT gram FROM g
-                      GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-             dup AS (SELECT doc_id, n_tok, pos FROM g
-                     WHERE gram IN (SELECT gram FROM dict)),
-             sp AS (SELECT doc_id, n_tok, pos,
-                      least(pos + ${ngN - 1}, n_tok - 1) AS e,
-                      max(least(pos + ${ngN - 1}, n_tok - 1)) OVER (
-                        PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                        AS prev_end
-                    FROM dup),
-             isl AS (SELECT doc_id, pos, e,
-                       CAST(sum(CASE WHEN prev_end IS NULL OR pos > prev_end + 1
-                                     THEN 1 ELSE 0 END) OVER (
-                         PARTITION BY doc_id ORDER BY pos
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                         AS BIGINT) AS island
-                     FROM sp)
+    (s, d) => Dedup.duplicatedSpanList(docsWithTwins(s, d), "doc_id", "text", ngN),
+    Some(s"""${twinGramsSql("doc_id, n_tok, pos")},
+             $dupGramsSql,
+             $spanSql,
+             $islandSql
              SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
                CAST(max(e) - min(pos) + 1 AS BIGINT) AS span_len,
                CAST(count(*) AS BIGINT) AS n_grams_in_span
@@ -426,77 +431,18 @@ object CurationQueries {
 
   /** NG3 — span-trim APPLY step (Dedup.trimDuplicatedSpans): every doc
     * rebuilt with its maximal duplicated spans excised (aggressive
-    * C4-style removal of ALL duplicated occurrences). Same injected twin
-    * excerpts as ng1/ng2: excerpt docs trim to empty, source docs lose
+    * C4-style removal of ALL duplicated occurrences). Over
+    * [[docsWithTwins]]: excerpt docs trim to empty, source docs lose
     * their middle slice. Full hash oracle — the rebuild is pure token
     * slicing both engines can express. */
   private val ng3 = Q(
     "ng3_span_trim",
-    (s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val toks = TextFunctions.tokens(col("text"))
-      val excerpts = docs
-        .filter(col("doc_id") % 9 === 0 && size(toks) >= 30)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat_ws(" ", slice(toks, 6, 20)).as("text"))
-      Dedup.trimDuplicatedSpans(docs.unionByName(excerpts), "doc_id", "text", ngN)
-    },
-    Some(s"""WITH t0 AS (SELECT doc_id, text FROM documents),
-             ex AS (SELECT doc_id + 20000000 AS doc_id,
-                      array_to_string(list_slice(
-                        string_split_regex(trim(lower(text)), '\\s+'), 6, 25),
-                        ' ') AS text
-                    FROM t0
-                    WHERE doc_id % 9 = 0
-                      AND len(string_split_regex(trim(lower(text)), '\\s+')) >= 30),
-             u AS (SELECT * FROM t0 UNION ALL SELECT * FROM ex),
-             b AS (SELECT doc_id,
-                     string_split_regex(trim(lower(text)), '\\s+') AS toks,
-                     CAST(len(string_split_regex(trim(lower(text)), '\\s+'))
-                       AS BIGINT) AS n_tok
-                   FROM u),
-             occ AS (SELECT doc_id, n_tok, toks,
-                       unnest(range(0, n_tok - ${ngN - 1})) AS pos
-                     FROM b WHERE n_tok >= $ngN),
-             g AS (SELECT doc_id, n_tok, pos,
-                     array_to_string(list_slice(toks,
-                       CAST(pos + 1 AS INT), CAST(pos + $ngN AS INT)), ' ') AS gram
-                   FROM occ),
-             dict AS (SELECT gram FROM g
-                      GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-             dup AS (SELECT doc_id, n_tok, pos FROM g
-                     WHERE gram IN (SELECT gram FROM dict)),
-             sp AS (SELECT doc_id, n_tok, pos,
-                      least(pos + ${ngN - 1}, n_tok - 1) AS e,
-                      max(least(pos + ${ngN - 1}, n_tok - 1)) OVER (
-                        PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                        AS prev_end
-                    FROM dup),
-             isl AS (SELECT doc_id, pos, e,
-                       CAST(sum(CASE WHEN prev_end IS NULL OR pos > prev_end + 1
-                                     THEN 1 ELSE 0 END) OVER (
-                         PARTITION BY doc_id ORDER BY pos
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                         AS BIGINT) AS island
-                     FROM sp),
-             spans AS (SELECT doc_id, min(pos) AS s0, max(e) AS e0
-                       FROM isl GROUP BY doc_id, island),
-             tok AS (SELECT doc_id, n_tok, unnest(range(0, n_tok)) AS pos, toks
-                     FROM b),
-             kept AS (SELECT t.doc_id, t.n_tok, t.pos,
-                        toks[CAST(t.pos + 1 AS INT)] AS tok
-                      FROM tok t
-                      WHERE NOT EXISTS (SELECT 1 FROM spans s
-                        WHERE s.doc_id = t.doc_id
-                          AND t.pos >= s.s0 AND t.pos <= s.e0)),
-             agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-                       string_agg(tok, ' ' ORDER BY pos) AS trimmed_text
-                     FROM kept GROUP BY doc_id)
-             SELECT b.doc_id, b.n_tok,
-               coalesce(agg.n_kept, 0) AS n_kept,
-               coalesce(agg.trimmed_text, '') AS trimmed_text
-             FROM b LEFT JOIN agg USING (doc_id)"""))
+    (s, d) => Dedup.trimDuplicatedSpans(docsWithTwins(s, d), "doc_id", "text", ngN),
+    Some(s"""${twinGramsSql("doc_id, n_tok, pos")},
+             $dupGramsSql,
+             $spanSql,
+             $islandSql,
+             ${trimSql("pos", "e", "isl")}"""))
 
   /** NG4 — keep-one-exemplar span trim (Dedup.trimDuplicatedSpans with
     * `keepFirst`): the FAITHFUL Lee-et-al removal — each duplicated
@@ -505,73 +451,17 @@ object CurationQueries {
     * their text intact, excerpts (+2·10⁷ ids) trim to empty. */
   private val ng4 = Q(
     "ng4_span_trim_keep_one",
-    (s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val toks = TextFunctions.tokens(col("text"))
-      val excerpts = docs
-        .filter(col("doc_id") % 9 === 0 && size(toks) >= 30)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat_ws(" ", slice(toks, 6, 20)).as("text"))
-      Dedup.trimDuplicatedSpans(docs.unionByName(excerpts), "doc_id", "text",
-        ngN, keepFirst = true)
-    },
-    Some(s"""WITH t0 AS (SELECT doc_id, text FROM documents),
-             ex AS (SELECT doc_id + 20000000 AS doc_id,
-                      array_to_string(list_slice(
-                        string_split_regex(trim(lower(text)), '\\s+'), 6, 25),
-                        ' ') AS text
-                    FROM t0
-                    WHERE doc_id % 9 = 0
-                      AND len(string_split_regex(trim(lower(text)), '\\s+')) >= 30),
-             u AS (SELECT * FROM t0 UNION ALL SELECT * FROM ex),
-             b AS (SELECT doc_id,
-                     string_split_regex(trim(lower(text)), '\\s+') AS toks,
-                     CAST(len(string_split_regex(trim(lower(text)), '\\s+'))
-                       AS BIGINT) AS n_tok
-                   FROM u),
-             occ AS (SELECT doc_id, n_tok, toks,
-                       unnest(range(0, n_tok - ${ngN - 1})) AS pos
-                     FROM b WHERE n_tok >= $ngN),
-             g AS (SELECT doc_id, n_tok, pos,
-                     array_to_string(list_slice(toks,
-                       CAST(pos + 1 AS INT), CAST(pos + $ngN AS INT)), ' ') AS gram
-                   FROM occ),
+    (s, d) => Dedup.trimDuplicatedSpans(docsWithTwins(s, d), "doc_id", "text",
+      ngN, keepFirst = true),
+    Some(s"""${twinGramsSql("doc_id, n_tok, pos")},
              dict AS (SELECT gram, min(doc_id) AS keeper FROM g
                       GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
              dup AS (SELECT g.doc_id, g.n_tok, g.pos FROM g
                      JOIN dict ON g.gram = dict.gram
                      WHERE g.doc_id <> dict.keeper),
-             sp AS (SELECT doc_id, n_tok, pos,
-                      least(pos + ${ngN - 1}, n_tok - 1) AS e,
-                      max(least(pos + ${ngN - 1}, n_tok - 1)) OVER (
-                        PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                        AS prev_end
-                    FROM dup),
-             isl AS (SELECT doc_id, pos, e,
-                       CAST(sum(CASE WHEN prev_end IS NULL OR pos > prev_end + 1
-                                     THEN 1 ELSE 0 END) OVER (
-                         PARTITION BY doc_id ORDER BY pos
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                         AS BIGINT) AS island
-                     FROM sp),
-             spans AS (SELECT doc_id, min(pos) AS s0, max(e) AS e0
-                       FROM isl GROUP BY doc_id, island),
-             tok AS (SELECT doc_id, n_tok, unnest(range(0, n_tok)) AS pos, toks
-                     FROM b),
-             kept AS (SELECT t.doc_id, t.n_tok, t.pos,
-                        toks[CAST(t.pos + 1 AS INT)] AS tok
-                      FROM tok t
-                      WHERE NOT EXISTS (SELECT 1 FROM spans s
-                        WHERE s.doc_id = t.doc_id
-                          AND t.pos >= s.s0 AND t.pos <= s.e0)),
-             agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-                       string_agg(tok, ' ' ORDER BY pos) AS trimmed_text
-                     FROM kept GROUP BY doc_id)
-             SELECT b.doc_id, b.n_tok,
-               coalesce(agg.n_kept, 0) AS n_kept,
-               coalesce(agg.trimmed_text, '') AS trimmed_text
-             FROM b LEFT JOIN agg USING (doc_id)"""))
+             $spanSql,
+             $islandSql,
+             ${trimSql("pos", "e", "isl")}"""))
 
   /** Occurrence cap for ng5's pair space — a gram seen more than this
     * many times corpus-wide is dropped from matching (shared literal,
@@ -579,53 +469,10 @@ object CurationQueries {
     * audit on the engine side). */
   private val ng5Cap = 64
 
-  /** NG5 — maximal exact-substring matches via rolling-gram CHAIN
-    * EXTENSION (Dedup.maximalMatchSpans): the real Lee et al. 2022 span
-    * semantics, closing the ng1–ng4 shingle stand-in's documented gap.
-    * Where ng2 merges token-ADJACENT duplicated windows regardless of
-    * which partner document supports them (reporting "spans" contiguous
-    * nowhere else), ng5 chains same-diagonal gram matches per document
-    * PAIR into provably maximal exact matches (grams compared as exact
-    * token strings — a position adjacent to a run means the tokens
-    * differ), then merges only INTERSECTING intervals per doc. Same
-    * injected twin excerpts as ng1–ng4, so every excerpt yields one
-    * full-coverage match row and its source the partial one; organic
-    * cross-doc repeats join them. Pair space capped at [[ng5Cap]]
-    * occurrences per gram on both engines. */
-  private val ng5 = Q(
-    "ng5_maximal_matches",
-    (s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val toks = TextFunctions.tokens(col("text"))
-      val excerpts = docs
-        .filter(col("doc_id") % 9 === 0 && size(toks) >= 30)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat_ws(" ", slice(toks, 6, 20)).as("text"))
-      Dedup.maximalMatchSpans(docs.unionByName(excerpts), "doc_id", "text",
-        ngN, maxOccPerGram = ng5Cap)
-    },
-    Some(s"""WITH t0 AS (SELECT doc_id, text FROM documents),
-             ex AS (SELECT doc_id + 20000000 AS doc_id,
-                      array_to_string(list_slice(
-                        string_split_regex(trim(lower(text)), '\\s+'), 6, 25),
-                        ' ') AS text
-                    FROM t0
-                    WHERE doc_id % 9 = 0
-                      AND len(string_split_regex(trim(lower(text)), '\\s+')) >= 30),
-             u AS (SELECT * FROM t0 UNION ALL SELECT * FROM ex),
-             b AS (SELECT doc_id,
-                     string_split_regex(trim(lower(text)), '\\s+') AS toks,
-                     CAST(len(string_split_regex(trim(lower(text)), '\\s+'))
-                       AS BIGINT) AS n_tok
-                   FROM u),
-             occ AS (SELECT doc_id, n_tok, toks,
-                       unnest(range(0, n_tok - ${ngN - 1})) AS pos
-                     FROM b WHERE n_tok >= $ngN),
-             g AS (SELECT doc_id, pos,
-                     array_to_string(list_slice(toks,
-                       CAST(pos + 1 AS INT), CAST(pos + $ngN AS INT)), ' ') AS gram
-                   FROM occ),
-             dict AS (SELECT gram FROM g GROUP BY gram
+  /** ng5/ng6: same-diagonal gram matches per document pair `(da < db)`
+    * chained into maximal runs `(da, db, diag, pa0, pa1)`. */
+  private val chainRunsSql =
+    s"""dict AS (SELECT gram FROM g GROUP BY gram
                       HAVING count(DISTINCT doc_id) >= 2
                          AND count(*) <= $ng5Cap),
              dup AS (SELECT doc_id, pos, gram FROM g
@@ -647,13 +494,12 @@ object CurationQueries {
                     FROM dg),
              runs AS (SELECT da, db, diag, run,
                         min(pa) AS pa0, max(pa) AS pa1
-                      FROM rn GROUP BY 1, 2, 3, 4),
-             iv AS (SELECT da AS doc_id, pa0 AS sp,
-                      pa1 + ${ngN - 1} AS ep, db AS partner, diag FROM runs
-                    UNION ALL
-                    SELECT db, pa0 - diag, pa1 - diag + ${ngN - 1}, da, diag
-                    FROM runs),
-             m0 AS (SELECT doc_id, sp, ep, partner, diag,
+                      FROM rn GROUP BY 1, 2, 3, 4)"""
+
+  /** ng5/ng6: per-doc match intervals `iv (doc_id, sp, ep, partner,
+    * diag)` merged where they INTERSECT, numbered into islands `m1`. */
+  private val chainIslandsSql =
+    """m0 AS (SELECT doc_id, sp, ep, partner, diag,
                       max(ep) OVER (PARTITION BY doc_id
                         ORDER BY sp, ep, partner, diag
                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
@@ -665,7 +511,33 @@ object CurationQueries {
                         PARTITION BY doc_id ORDER BY sp, ep, partner, diag
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                         AS island
-                    FROM m0)
+                    FROM m0)"""
+
+  /** NG5 — maximal exact-substring matches via rolling-gram CHAIN
+    * EXTENSION (Dedup.maximalMatchSpans): the real Lee et al. 2022 span
+    * semantics, closing the ng1–ng4 shingle stand-in's documented gap.
+    * Where ng2 merges token-ADJACENT duplicated windows regardless of
+    * which partner document supports them (reporting "spans" contiguous
+    * nowhere else), ng5 chains same-diagonal gram matches per document
+    * PAIR into provably maximal exact matches (grams compared as exact
+    * token strings — a position adjacent to a run means the tokens
+    * differ), then merges only INTERSECTING intervals per doc. Over
+    * [[docsWithTwins]] like ng1–ng4, so every excerpt yields one
+    * full-coverage match row and its source the partial one; organic
+    * cross-doc repeats join them. Pair space capped at [[ng5Cap]]
+    * occurrences per gram on both engines. */
+  private val ng5 = Q(
+    "ng5_maximal_matches",
+    (s, d) => Dedup.maximalMatchSpans(docsWithTwins(s, d), "doc_id", "text",
+      ngN, maxOccPerGram = ng5Cap),
+    Some(s"""${twinGramsSql("doc_id, pos")},
+             $chainRunsSql,
+             iv AS (SELECT da AS doc_id, pa0 AS sp,
+                      pa1 + ${ngN - 1} AS ep, db AS partner, diag FROM runs
+                    UNION ALL
+                    SELECT db, pa0 - diag, pa1 - diag + ${ngN - 1}, da, diag
+                    FROM runs),
+             $chainIslandsSql
              SELECT doc_id, CAST(min(sp) AS BIGINT) AS span_start,
                CAST(max(ep) - min(sp) + 1 AS BIGINT) AS span_len,
                CAST(count(*) AS BIGINT) AS n_matches
@@ -683,98 +555,20 @@ object CurationQueries {
     * from every document when no single doc holds the min id for all
     * its grams); the C4-style both-sides variant is NOT a separate
     * query because its covered positions provably equal ng3's (the
-    * DedupSpec coverage property). Same injected twin excerpts as
-    * ng1-ng5 (sources keep their text; excerpts trim to empty); same
+    * DedupSpec coverage property). Over [[docsWithTwins]] like ng1-ng5
+    * (sources keep their text; excerpts trim to empty); same
     * [[ng5Cap]] on the pair space. */
   private val ng6 = Q(
     "ng6_chain_trim_keep_one",
-    (s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val toks = TextFunctions.tokens(col("text"))
-      val excerpts = docs
-        .filter(col("doc_id") % 9 === 0 && size(toks) >= 30)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat_ws(" ", slice(toks, 6, 20)).as("text"))
-      Dedup.trimMaximalMatches(docs.unionByName(excerpts), "doc_id", "text",
-        ngN, maxOccPerGram = ng5Cap, keepLowestId = true)
-    },
-    Some(s"""WITH t0 AS (SELECT doc_id, text FROM documents),
-             ex AS (SELECT doc_id + 20000000 AS doc_id,
-                      array_to_string(list_slice(
-                        string_split_regex(trim(lower(text)), '\\s+'), 6, 25),
-                        ' ') AS text
-                    FROM t0
-                    WHERE doc_id % 9 = 0
-                      AND len(string_split_regex(trim(lower(text)), '\\s+')) >= 30),
-             u AS (SELECT * FROM t0 UNION ALL SELECT * FROM ex),
-             b AS (SELECT doc_id,
-                     string_split_regex(trim(lower(text)), '\\s+') AS toks,
-                     CAST(len(string_split_regex(trim(lower(text)), '\\s+'))
-                       AS BIGINT) AS n_tok
-                   FROM u),
-             occ AS (SELECT doc_id, n_tok, toks,
-                       unnest(range(0, n_tok - ${ngN - 1})) AS pos
-                     FROM b WHERE n_tok >= $ngN),
-             g AS (SELECT doc_id, pos,
-                     array_to_string(list_slice(toks,
-                       CAST(pos + 1 AS INT), CAST(pos + $ngN AS INT)), ' ') AS gram
-                   FROM occ),
-             dict AS (SELECT gram FROM g GROUP BY gram
-                      HAVING count(DISTINCT doc_id) >= 2
-                         AND count(*) <= $ng5Cap),
-             dup AS (SELECT doc_id, pos, gram FROM g
-                     WHERE gram IN (SELECT gram FROM dict)),
-             pr AS (SELECT a.doc_id AS da, CAST(a.pos AS BIGINT) AS pa,
-                      b2.doc_id AS db, CAST(b2.pos AS BIGINT) AS pb
-                    FROM dup a JOIN dup b2
-                      ON a.gram = b2.gram AND a.doc_id < b2.doc_id),
-             dg AS (SELECT da, db, pa - pb AS diag, pa,
-                      lag(pa) OVER (PARTITION BY da, db, pa - pb
-                        ORDER BY pa) AS prev_pa
-                    FROM pr),
-             rn AS (SELECT da, db, diag, pa,
-                      sum(CASE WHEN prev_pa IS NULL OR pa > prev_pa + 1
-                               THEN 1 ELSE 0 END) OVER (
-                        PARTITION BY da, db, diag ORDER BY pa
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS run
-                    FROM dg),
-             runs AS (SELECT da, db, diag, run,
-                        min(pa) AS pa0, max(pa) AS pa1
-                      FROM rn GROUP BY 1, 2, 3, 4),
+    (s, d) => Dedup.trimMaximalMatches(docsWithTwins(s, d), "doc_id", "text",
+      ngN, maxOccPerGram = ng5Cap, keepLowestId = true),
+    Some(s"""${twinGramsSql("doc_id, pos")},
+             $chainRunsSql,
              iv AS (SELECT db AS doc_id, pa0 - diag AS sp,
                       pa1 - diag + ${ngN - 1} AS ep, da AS partner, diag
                     FROM runs),
-             m0 AS (SELECT doc_id, sp, ep, partner, diag,
-                      max(ep) OVER (PARTITION BY doc_id
-                        ORDER BY sp, ep, partner, diag
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                        AS prev_end
-                    FROM iv),
-             m1 AS (SELECT doc_id, sp, ep,
-                      sum(CASE WHEN prev_end IS NULL OR sp > prev_end
-                               THEN 1 ELSE 0 END) OVER (
-                        PARTITION BY doc_id ORDER BY sp, ep, partner, diag
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS island
-                    FROM m0),
-             spans AS (SELECT doc_id, min(sp) AS s0, max(ep) AS e0
-                       FROM m1 GROUP BY doc_id, island),
-             tok AS (SELECT doc_id, n_tok, unnest(range(0, n_tok)) AS pos, toks
-                     FROM b),
-             kept AS (SELECT t.doc_id, t.n_tok, t.pos,
-                        toks[CAST(t.pos + 1 AS INT)] AS tok
-                      FROM tok t
-                      WHERE NOT EXISTS (SELECT 1 FROM spans s
-                        WHERE s.doc_id = t.doc_id
-                          AND t.pos >= s.s0 AND t.pos <= s.e0)),
-             agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-                       string_agg(tok, ' ' ORDER BY pos) AS trimmed_text
-                     FROM kept GROUP BY doc_id)
-             SELECT b.doc_id, b.n_tok,
-               coalesce(agg.n_kept, 0) AS n_kept,
-               coalesce(agg.trimmed_text, '') AS trimmed_text
-             FROM b LEFT JOIN agg USING (doc_id)"""))
+             $chainIslandsSql,
+             ${trimSql("sp", "ep", "m1")}"""))
 
   // ------------------------------------------------------- cu1: mixture cube
 

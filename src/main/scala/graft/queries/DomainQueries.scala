@@ -87,8 +87,7 @@ object DomainQueries {
           qk AS (SELECT gene, smp, cnt / size_factor AS q
                  FROM cellk JOIN sfac USING (smp))
         SELECT gene, smp,
-          round(log2((1.0 + $a1 + 2.0 * $a0 * q +
-            2.0 * sqrt($a0 * q * (1.0 + $a1 + $a0 * q))) / (4.0 * $a0)), 6) AS val
+          round(${OracleSql.vst("q", a0, a1)}, 6) AS val
         FROM qk"""
   }
 

@@ -28,6 +28,12 @@ object OracleSql {
   def hash60(e: String): String =
     s"CAST(('0x'||substring(md5($e),1,15)) AS BIGINT)"
 
+  /** DESeq2's closed-form VST of `q` under the trend α(μ) = a0 + a1/μ —
+    * the SQL twin of `Normalization.vstOf`, same op order. */
+  def vst(q: String, a0: String, a1: String): String =
+    s"""log2((1.0 + $a1 + 2.0 * $a0 * $q +
+          2.0 * sqrt($a0 * $q * (1.0 + $a1 + $a0 * $q))) / (4.0 * $a0))"""
+
   /** Two-sided normal p-value of column `z` of `inner` — the ONE SQL copy
     * of the Abramowitz–Stegun erfc polynomial (identical to
     * `Stats.normalSfTwoSided`). `keep` is the outer select list; `pvalue`

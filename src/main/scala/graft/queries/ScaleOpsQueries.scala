@@ -365,6 +365,19 @@ object ScaleOpsQueries {
   private def cosine(qvName: String, vName: String): Column =
     GraftFunctions.cosineSim(col(qvName), col(vName))
 
+  /** The ANN family's oracle: brute-force cosine top-`topK` of every
+    * query vector (vec_id % 100 = 0) over the corpus minus itself, ranked
+    * (cos desc, vec_id). `extraWhere` narrows the candidate pairs. */
+  private def bruteCosineSql(topK: Int, extraWhere: String = ""): String =
+    s"""WITH e AS ($embNormSql),
+             q AS (SELECT vec_id AS q_id, embedding, nrm AS qn FROM e WHERE vec_id % 100 = 0),
+             pairs AS (SELECT q.q_id, e.vec_id, ${dotSql("q", "e")} / (q.qn * e.nrm) AS cos
+                       FROM e CROSS JOIN q WHERE e.vec_id <> q.q_id$extraWhere),
+             r AS (SELECT q_id, vec_id, cos,
+                     row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
+                   FROM pairs)
+             SELECT q_id, rnk, vec_id, round(cos, 6) AS cos FROM r WHERE rnk <= $topK"""
+
   /** SS1 — brute-force cosine top-k: query vectors (vec_id % 100 = 0)
     * broadcast against the corpus scan; `priority_topk_tie` keeps k=5 per
     * query in O(k) aggregate state with a DETERMINISTIC (cos desc,
@@ -389,14 +402,7 @@ object ScaleOpsQueries {
         .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
           col("col.vec_id").as("vec_id"), round(col("col.cos"), 6).as("cos"))
     },
-    Some(s"""WITH e AS ($embNormSql),
-             q AS (SELECT vec_id AS q_id, embedding, nrm AS qn FROM e WHERE vec_id % 100 = 0),
-             pairs AS (SELECT q.q_id, e.vec_id, ${dotSql("q", "e")} / (q.qn * e.nrm) AS cos
-                       FROM e CROSS JOIN q WHERE e.vec_id <> q.q_id),
-             r AS (SELECT q_id, vec_id, cos,
-                     row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-                   FROM pairs)
-             SELECT q_id, rnk, vec_id, round(cos, 6) AS cos FROM r WHERE rnk <= 5"""))
+    Some(bruteCosineSql(5)))
 
   private val numPlanes = 8
 
@@ -475,19 +481,26 @@ object ScaleOpsQueries {
     "ss3_ivf_ann",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      Ann.ivfTopK(emb, emb.filter(col("vec_id") % 100 === 0),
-          "vec_id", "embedding", k = 8, iters = 2, nProbe = 8, topK = 3)
-        .select(col("q_id"), col("rnk"), col("id").as("vec_id"),
-          round(col("cos"), 6).as("cos"))
+      annOut(Ann.ivfTopK(emb, emb.filter(col("vec_id") % 100 === 0),
+        "vec_id", "embedding", k = 8, iters = 2, nProbe = 8, topK = 3))
     },
-    Some(s"""WITH e AS ($embNormSql),
-             q AS (SELECT vec_id AS q_id, embedding, nrm AS qn FROM e WHERE vec_id % 100 = 0),
-             pairs AS (SELECT q.q_id, e.vec_id, ${dotSql("q", "e")} / (q.qn * e.nrm) AS cos
-                       FROM e CROSS JOIN q WHERE e.vec_id <> q.q_id),
-             r AS (SELECT q_id, vec_id, cos,
-                     row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-                   FROM pairs)
-             SELECT q_id, rnk, vec_id, round(cos, 6) AS cos FROM r WHERE rnk <= 3"""))
+    Some(bruteCosineSql(3)))
+
+  /** An ANN search's `(q_id, rnk, id, cos)` in the [[bruteCosineSql]]
+    * oracle's shape. */
+  private def annOut(r: DataFrame): DataFrame =
+    r.select(col("q_id"), col("rnk"), col("id").as("vec_id"),
+      round(col("cos"), 6).as("cos"))
+
+  /** The ss4–ss7 index codes: the frozen pq1b codebooks. */
+  private lazy val frozenPq = Some(graft.operators.Pq.PqModel(8, 8, FrozenModels.pqBooks))
+
+  /** The ss4–ss7 serve: the same query vectors as the oracle, probed at
+    * nProbe = k (every cell — the exact regime) of a k = 8 disk index. */
+  private def serveIndex(s: SparkSession, d: String, path: String): DataFrame =
+    annOut(Ann.ivfIndexTopK(s, path,
+      Tables.embeddings(s, d).filter(col("vec_id") % 100 === 0),
+      "vec_id", "embedding", nProbe = 8, topK = 3))
 
   /** SS4 — DISK-BACKED IVF-PQ index, the build-once/serve-many end of the
     * ANN family (ss1 brute / ss2 LSH / ss3 in-memory IVF recompute per
@@ -523,22 +536,11 @@ object ScaleOpsQueries {
           RelationalQueries.cacheKey(d, "embeddings.parquet"),
           Seq("corpus/_SUCCESS", "centroids/_SUCCESS")) { p =>
         Ann.writeIvfIndex(Tables.embeddings(s, d), "vec_id", "embedding",
-          p, k = 8, iters = 2,
-          pq = Some(graft.operators.Pq.PqModel(8, 8, FrozenModels.pqBooks)))
+          p, k = 8, iters = 2, pq = frozenPq)
       }
-      val q = Tables.embeddings(s, d).filter(col("vec_id") % 100 === 0)
-      Ann.ivfIndexTopK(s, path, q, "vec_id", "embedding", nProbe = 8, topK = 3)
-        .select(col("q_id"), col("rnk"), col("id").as("vec_id"),
-          round(col("cos"), 6).as("cos"))
+      serveIndex(s, d, path)
     },
-    Some(s"""WITH e AS ($embNormSql),
-             q AS (SELECT vec_id AS q_id, embedding, nrm AS qn FROM e WHERE vec_id % 100 = 0),
-             pairs AS (SELECT q.q_id, e.vec_id, ${dotSql("q", "e")} / (q.qn * e.nrm) AS cos
-                       FROM e CROSS JOIN q WHERE e.vec_id <> q.q_id),
-             r AS (SELECT q_id, vec_id, cos,
-                     row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-                   FROM pairs)
-             SELECT q_id, rnk, vec_id, round(cos, 6) AS cos FROM r WHERE rnk <= 3"""))
+    Some(bruteCosineSql(3)))
 
   /** SS5 — INCREMENTAL APPEND to the disk ANN index
     * ([[Ann.appendIvfIndex]], the r13 verdict's last composition): the
@@ -566,26 +568,15 @@ object ScaleOpsQueries {
           RelationalQueries.cacheKey(d, "embeddings.parquet"),
           Seq("_GRAFT_APPEND_DONE")) { p =>
         val emb = Tables.embeddings(s, d)
-        val pq = Some(graft.operators.Pq.PqModel(8, 8, FrozenModels.pqBooks))
         Ann.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 0),
-          "vec_id", "embedding", p, k = 8, iters = 2, pq = pq)
+          "vec_id", "embedding", p, k = 8, iters = 2, pq = frozenPq)
         Ann.appendIvfIndex(emb.filter(col("vec_id") % 3 === 0),
-          "vec_id", "embedding", p, pq = pq)
+          "vec_id", "embedding", p, pq = frozenPq)
         new java.io.File(s"$p/_GRAFT_APPEND_DONE").createNewFile(): Unit
       }
-      val q = Tables.embeddings(s, d).filter(col("vec_id") % 100 === 0)
-      Ann.ivfIndexTopK(s, path, q, "vec_id", "embedding", nProbe = 8, topK = 3)
-        .select(col("q_id"), col("rnk"), col("id").as("vec_id"),
-          round(col("cos"), 6).as("cos"))
+      serveIndex(s, d, path)
     },
-    Some(s"""WITH e AS ($embNormSql),
-             q AS (SELECT vec_id AS q_id, embedding, nrm AS qn FROM e WHERE vec_id % 100 = 0),
-             pairs AS (SELECT q.q_id, e.vec_id, ${dotSql("q", "e")} / (q.qn * e.nrm) AS cos
-                       FROM e CROSS JOIN q WHERE e.vec_id <> q.q_id),
-             r AS (SELECT q_id, vec_id, cos,
-                     row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-                   FROM pairs)
-             SELECT q_id, rnk, vec_id, round(cos, 6) AS cos FROM r WHERE rnk <= 3"""))
+    Some(bruteCosineSql(3)))
 
   /** SS6 — EXACTLY-ONCE batch append + small-files COMPACTION, the
     * lifecycle completion of the disk-index family (r14 verdict #3/#5):
@@ -609,31 +600,20 @@ object ScaleOpsQueries {
           RelationalQueries.cacheKey(d, "embeddings.parquet"),
           Seq("_GRAFT_COMPACT_DONE")) { p =>
         val emb = Tables.embeddings(s, d)
-        val pq = Some(graft.operators.Pq.PqModel(8, 8, FrozenModels.pqBooks))
         Ann.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 0),
-          "vec_id", "embedding", p, k = 8, iters = 2, pq = pq)
+          "vec_id", "embedding", p, k = 8, iters = 2, pq = frozenPq)
         Ann.appendIvfIndex(emb.filter(col("vec_id") % 3 === 0),
-          "vec_id", "embedding", p, pq = pq, batchId = Some("increment-1"))
+          "vec_id", "embedding", p, pq = frozenPq, batchId = Some("increment-1"))
         // the exactly-once claim, exercised in the oracle path itself:
         // the committed batch re-runs as a no-op
         Ann.appendIvfIndex(emb.filter(col("vec_id") % 3 === 0),
-          "vec_id", "embedding", p, pq = pq, batchId = Some("increment-1"))
+          "vec_id", "embedding", p, pq = frozenPq, batchId = Some("increment-1"))
         Ann.compactIvfIndex(s, p)
         new java.io.File(s"$p/_GRAFT_COMPACT_DONE").createNewFile(): Unit
       }
-      val q = Tables.embeddings(s, d).filter(col("vec_id") % 100 === 0)
-      Ann.ivfIndexTopK(s, path, q, "vec_id", "embedding", nProbe = 8, topK = 3)
-        .select(col("q_id"), col("rnk"), col("id").as("vec_id"),
-          round(col("cos"), 6).as("cos"))
+      serveIndex(s, d, path)
     },
-    Some(s"""WITH e AS ($embNormSql),
-             q AS (SELECT vec_id AS q_id, embedding, nrm AS qn FROM e WHERE vec_id % 100 = 0),
-             pairs AS (SELECT q.q_id, e.vec_id, ${dotSql("q", "e")} / (q.qn * e.nrm) AS cos
-                       FROM e CROSS JOIN q WHERE e.vec_id <> q.q_id),
-             r AS (SELECT q_id, vec_id, cos,
-                     row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-                   FROM pairs)
-             SELECT q_id, rnk, vec_id, round(cos, 6) AS cos FROM r WHERE rnk <= 3"""))
+    Some(bruteCosineSql(3)))
 
   /** SS7 — TOMBSTONE DELETES from the disk ANN index
     * ([[Ann.deleteFromIndex]], the r15 verdict's #1 — the CRUD quadrant
@@ -659,29 +639,17 @@ object ScaleOpsQueries {
           RelationalQueries.cacheKey(d, "embeddings.parquet"),
           Seq("_GRAFT_DELETE_DONE")) { p =>
         val emb = Tables.embeddings(s, d)
-        val pq = Some(graft.operators.Pq.PqModel(8, 8, FrozenModels.pqBooks))
         Ann.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 0),
-          "vec_id", "embedding", p, k = 8, iters = 2, pq = pq)
+          "vec_id", "embedding", p, k = 8, iters = 2, pq = frozenPq)
         Ann.appendIvfIndex(emb.filter(col("vec_id") % 3 === 0),
-          "vec_id", "embedding", p, pq = pq, batchId = Some("increment-1"))
+          "vec_id", "embedding", p, pq = frozenPq, batchId = Some("increment-1"))
         Ann.deleteFromIndex(s, p,
           Tables.embeddings(s, d).filter(col("vec_id") % 7 === 0), "vec_id")
         new java.io.File(s"$p/_GRAFT_DELETE_DONE").createNewFile(): Unit
       }
-      val q = Tables.embeddings(s, d).filter(col("vec_id") % 100 === 0)
-      Ann.ivfIndexTopK(s, path, q, "vec_id", "embedding", nProbe = 8, topK = 3)
-        .select(col("q_id"), col("rnk"), col("id").as("vec_id"),
-          round(col("cos"), 6).as("cos"))
+      serveIndex(s, d, path)
     },
-    Some(s"""WITH e AS ($embNormSql),
-             q AS (SELECT vec_id AS q_id, embedding, nrm AS qn FROM e WHERE vec_id % 100 = 0),
-             pairs AS (SELECT q.q_id, e.vec_id, ${dotSql("q", "e")} / (q.qn * e.nrm) AS cos
-                       FROM e CROSS JOIN q
-                       WHERE e.vec_id <> q.q_id AND e.vec_id % 7 <> 0),
-             r AS (SELECT q_id, vec_id, cos,
-                     row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-                   FROM pairs)
-             SELECT q_id, rnk, vec_id, round(cos, 6) AS cos FROM r WHERE rnk <= 3"""))
+    Some(bruteCosineSql(3, " AND e.vec_id % 7 <> 0")))
 
   /** MM1 — the multimodal plumbing under the driver gate: binary payload
     * + typed meta → batched feature extraction (operators.Multimodal, the

@@ -117,8 +117,7 @@ object StatsQueries {
                       n, sx, sy FROM sums),
              ab AS (SELECT a1, greatest((sy - a1 * sx) / n, 1e-8) AS a0 FROM tr)
              SELECT gene, smp,
-               round(log2((1.0 + a1 + 2.0 * a0 * q +
-                 2.0 * sqrt(a0 * q * (1.0 + a1 + a0 * q))) / (4.0 * a0)), 6) AS vst
+               round(${OracleSql.vst("q", "a0", "a1")}, 6) AS vst
              FROM qt CROSS JOIN ab"""))
 
   /** D6c — the EXACT DESeq2 closed-form VST behind a FROZEN fitted trend
@@ -146,8 +145,7 @@ object StatsQueries {
              qt AS (SELECT gene, smp, cnt / size_factor AS q
                     FROM cell JOIN sf USING (smp))
           SELECT gene, smp,
-            round(log2((1.0 + $a1 + 2.0 * $a0 * q +
-              2.0 * sqrt($a0 * q * (1.0 + $a1 + $a0 * q))) / (4.0 * $a0)), 6) AS vst
+            round(${OracleSql.vst("q", a0, a1)}, 6) AS vst
           FROM qt"""
     })
 

@@ -321,56 +321,65 @@ class AnnSpec extends SparkSpec {
     assert(stored.filter(col("id") % 3 === 0 && col("id") % 2 === 0).count() == 0)
   }
 
-  test("large-k broadcast assignment equals the literal fold at k = 8192") {
-    // 8192 synthetic cells (> LiteralPathMaxK, so Ann.assign takes the
-    // broadcast path) on a deterministic grid; both paths must agree on
-    // every vector — same index-order float accumulation, same strict-<
-    // lowest-cell tiebreak
-    import spark.implicits._
-    val dim = 64 // must match the fixture embeddings' dimension
-    val k = 8192
-    assert(k > Ann.LiteralPathMaxK)
-    val cents = (0 until k).map { c =>
-      (c, (0 until dim).map(i => ((c * 31 + i * 7) % 97) / 97.0))
-    }
-    val centDf = cents.toDF("cell", "cv")
-    val vecs = graft.operators.Ann
-    val sample = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val viaBroadcast = vecs.assign(normalizedFixture(sample), centDf)
-      .select("id", "cell")
-    val viaLiteral = {
-      // force the literal path on the same rows (private[graft] access)
-      val rows = cents.map { case (c, v) => (c, v: Seq[Double]) }
-      import org.apache.spark.sql.functions.typedlit
-      vecs.assignWithLiteral(normalizedFixture(sample), typedlit(rows))
-        .select("id", "cell")
-    }
-    assert(viaBroadcast.exceptAll(viaLiteral).count() == 0 &&
-      viaLiteral.exceptAll(viaBroadcast).count() == 0)
-    // plan guard: the broadcast path is a narrow map — no exchange, no
-    // join, no k-times row expansion anywhere
-    val p = viaBroadcast.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange") && !p.toLowerCase.contains("join"), p)
+  /** Plain-Scala reference geometry for the two tests below: squared
+    * distance summed left to right, ordered by (d2, cell). */
+  private def refD2(v: Seq[Double], c: Seq[Double]): Double =
+    v.indices.foldLeft(0.0)((s, i) => s + (v(i) - c(i)) * (v(i) - c(i)))
+  private val byD2ThenCell =
+    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
+  private def assertSameCells[T](label: String, got: Map[Long, T],
+      want: Map[Long, T]): Unit = {
+    val diff = want.filter { case (id, c) => !got.get(id).contains(c) }
+    assert(got.size == want.size && diff.isEmpty, s"$label: ${diff.size} of " +
+      s"${want.size} vectors differ, e.g. ${diff.take(3).map { case (id, c) =>
+        s"id $id want $c got ${got.get(id)}" }.mkString("; ")}")
   }
 
-  test("large-k broadcast probe equals the literal probe at k = 8192") {
-    import spark.implicits._
-    val dim = 64
-    val k = 8192
-    val cents = (0 until k).map { c =>
+  /** Two centroid tables: k = 8 fitted on the fixture (the catalog's
+    * ss3–ss7/sd2 regime) and k = 8192 synthetic cells on a deterministic
+    * grid whose rows repeat every 97 cells, so exact distance ties occur
+    * and the lowest-cell tiebreak is exercised. */
+  private def centroidInputs: Seq[(String, Seq[(Int, Seq[Double])])] = {
+    val fitted = Ann.kmeansCentroids(emb, "vec_id", "embedding", k = 8, iters = 2)
+      .select(col("cell").cast("int"), col("cv")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
+    val dim = 64 // must match the fixture embeddings' dimension
+    val grid = (0 until 8192).map { c =>
       (c, (0 until dim).map(i => ((c * 31 + i * 7) % 97) / 97.0): Seq[Double])
     }
-    val q = normalizedFixture(
-      Tables.embeddings(spark, "/root/testdata/sf0.001")
-        .filter(col("vec_id") % 100 === 0))
-      .select(col("id").as("q_id"), col("vn").as("qvn"))
-    val vecs = graft.operators.Ann
-    val viaLit = q.select(col("q_id"),
-      vecs.probeCellsLiteral(cents, 5).as("cells"))
-    val viaBc = q.select(col("q_id"),
-      vecs.probeCellsBroadcast(q, cents, 5).as("cells"))
-    assert(viaBc.exceptAll(viaLit).count() == 0 &&
-      viaLit.exceptAll(viaBc).count() == 0)
+    Seq("k = 8" -> fitted, "k = 8192" -> grid)
+  }
+
+  test("Ann.assign equals a plain-Scala argmin at k = 8 and k = 8192") {
+    import spark.implicits._
+    val vecs = normalizedFixture(emb)
+    val local = vecs.select("id", "vn").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1)))
+    centroidInputs.foreach { case (label, cents) =>
+      val got = Ann.assign(vecs, cents.toDF("cell", "cv")).select("id", "cell")
+      val want = local.map { case (id, v) =>
+        id -> cents.map { case (c, cv) => (refD2(v, cv), c) }.min(byD2ThenCell)._2
+      }.toMap
+      assertSameCells(label, got.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap, want)
+      // plan guard: assignment is a narrow map — no exchange, no join, no
+      // k-times row expansion anywhere
+      val p = got.queryExecution.executedPlan.toString
+      assert(!p.contains("Exchange") && !p.toLowerCase.contains("join"), p)
+    }
+  }
+
+  test("Ann.probeCells equals a plain-Scala (d2, cell) sort at k = 8 and k = 8192") {
+    val q = normalizedFixture(emb).select(col("id").as("q_id"), col("vn").as("qvn"))
+    val local = q.collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+    centroidInputs.foreach { case (label, cents) =>
+      val got = q.select(col("q_id"), Ann.probeCells(Ann.centroidBc(spark, cents), 5))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+      val want = local.map { case (id, v) =>
+        id -> cents.map { case (c, cv) => (refD2(v, cv), c) }
+          .sorted(byD2ThenCell).take(5).map(_._2)
+      }.toMap
+      assertSameCells(label, got, want)
+    }
   }
 
   test("deleteFromIndex: tombstones mask the serve; compact materializes and clears them") {

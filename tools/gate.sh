@@ -18,6 +18,8 @@ sbt -batch compile
 # the benchmark's own build calls GraftSession.apply and the graft.api
 # surface: break either and the gate fails here, not at benchmark time
 (cd perfbench && sbt -batch compile)
+# the benchmark's own unit tests: generator determinism, stats, span self-time
+python3 -m unittest discover -s perfbench/tests
 sbt -batch test
 SPARK_GRAFT_CPUS=$CPUS sbt -batch "runMain graft.Verify $SF_ORACLE $OUT"
 python3 tools/compare_oracle.py "$SF_ORACLE" "$OUT"
