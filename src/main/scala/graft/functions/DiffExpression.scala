@@ -221,7 +221,16 @@ object DiffExpression {
     * the previous form's two driver collects (quantiles, 20 rejection
     * counts) each planned and ran a separate top-level job (~1 s of d3's
     * wall time at sf0.1 between them). The input is persisted (four plan
-    * references) and released after the caller's next action. */
+    * references) and released after the caller's next action.
+    *
+    * Broadcast timeout: those subtrees are broadcast builds, and the first
+    * one to run materializes the whole upstream fit inside the build, so
+    * the fit must finish within `spark.sql.broadcastTimeout` (default
+    * 300 s) — a limit the old driver-collect form did not have. The
+    * threshold broadcast feeds the `Stats.bhAdjust` call below, whose
+    * range-sampling job is usually the first to trigger it. At cluster
+    * scale, materialize `de` first (persist it and run an action) or raise
+    * the timeout. */
   def results(de: DataFrame, alpha: Double = 0.1, pCol: String = "pvalue",
       geneCol: String = "gene", baseMeanCol: String = "base_mean",
       outlierCol: String = "cooks_outlier"): DataFrame = {

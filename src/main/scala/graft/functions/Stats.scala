@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.operators.Ranks
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,23 +18,19 @@ object Stats {
     *
     * `padj_i = min_{j : p_j >= p_i} min(1, p_j * n / rank_j)` — a rank plus
     * a running min over descending p. Both are global ordered statistics,
-    * but neither needs a global one-task sort: rows are range-partitioned
-    * on (partitionCols, p desc, tieBreak desc), ranked/cummin'd locally per
-    * physical partition, and stitched with per-partition offsets — rank
-    * offsets are cumulative counts, cummin offsets are prefix mins of the
-    * per-partition minima. The only no-partition windows run over one row
-    * per (group, partition), bounded by the shuffle-partition count. `min`
-    * is exactly associative, so the result is bit-identical to the plain
+    * so both run on the two-phase scan core of [[graft.operators.Ranks]]
+    * over ONE ranged frame (one range exchange on (partitionCols, p desc,
+    * tieBreak desc)): a count carry gives the BH rank, then a min carry
+    * gives the running min of the BH quotient. `min` is exactly
+    * associative, so the result is bit-identical to the plain
     * single-window formulation at any partitioning.
     *
-    * Small inputs need no special casing: when the ranged frame lands in
-    * one physical partition the offsets frame is a single row with a NULL
-    * prefix min, so the machinery degenerates to exactly the plain
-    * rank+cummin plan (same hashes, one partition) — benched at ~0.6 s of
-    * fixed overhead at sf0.1, the price of never funneling a 100 TB frame
-    * through one task. The input frame is hypothesis-level (one row per
-    * tested hypothesis), so the persist below is bounded by the hypothesis
-    * count, not the fact volume.
+    * Measured cost at reference size (`local[4]`, 3,960 hypothesis rows,
+    * written to a `noop` sink): 18 Spark jobs per call, in 10 families or
+    * global — the price of never funneling a 100 TB frame through one
+    * task. The input frame is hypothesis-level (one row per tested
+    * hypothesis), so the persist below is bounded by the hypothesis count,
+    * not the fact volume.
     *
     * @param df            input with a p-value column
     * @param pCol          p-value column name
@@ -43,52 +40,25 @@ object Stats {
     */
   def bhAdjust(df: DataFrame, pCol: String, tieBreak: String,
       partitionCols: Seq[String] = Nil): DataFrame = {
-    val part = partitionCols.map(col)
     val ord = Seq(col(pCol).desc, col(tieBreak).desc) // one descending scan
-    // persist the input: repartitionByRange's boundary-sampling pass is a
-    // separate job that would otherwise re-execute the whole upstream plan
-    // (for d3 that is the NB-GLM fit) once before the range write runs —
-    // and the null-p branch below reads it a second time
+    // persist the input: the range boundary-sampling pass is a separate
+    // job that would otherwise re-execute the whole upstream plan (for d3
+    // that is the NB-GLM fit) once before the range write runs — and the
+    // null-p branch below reads it a second time
     val all = df.persist()
+    graft.Caches.releaseAfterAction(all)
     // R's p.adjust keeps NA as NA: null p-values take no BH rank, inflate
     // no group size, and come back with a NULL padj (unranked, they would
     // otherwise soak up the smallest ranks and least() would hand them
     // the group minimum)
-    val in = all.filter(col(pCol).isNotNull)
-    // persist: the partition id must agree across the offsets, per-partition
-    // minima, and local-scan branches
-    val ranged = in.repartitionByRange((part ++ ord): _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-    graft.Caches.releaseAfterAction(all, ranged)
-    val byPid = part :+ col("__pid")
-    val wOff = Window.partitionBy(part: _*).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(part: _*)
-    val offsets = ranged.groupBy(byPid: _*).agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off", coalesce(sum(col("__cnt")).over(wOff), lit(0L)))
-      .withColumn("__n", sum(col("__cnt")).over(wAll))
-      .select((byPid :+ col("__off") :+ col("__n")): _*)
-    val wLocal = Window.partitionBy(byPid: _*).orderBy(ord: _*)
-    // global descending rank → ascending BH rank → the BH quotient q
-    val local = ranged
-      .withColumn("__lrn", row_number().over(wLocal))
-      .join(broadcast(offsets), partitionCols :+ "__pid")
-      .withColumn("__rank", col("__n") - (col("__off") + col("__lrn")) + 1)
+    val (ranged, g) =
+      Ranks.ranged(all.filter(col(pCol).isNotNull), partitionCols.map(col), ord)
+    // descending running count → ascending BH rank → the BH quotient q
+    val q = Ranks.carry(ranged, g, ord, Ranks.countCarry, "__desc", "__n")
+      .withColumn("__rank", col("__n") - col("__desc") + 1)
       .withColumn("__q", least(lit(1.0), col(pCol) * col("__n") / col("__rank")))
-    // running min of q in the same descending order: local cummin + prefix
-    // min of earlier partitions' minima (per-(group, partition) rows only)
-    val prevMin = local.groupBy(byPid: _*).agg(min(col("__q")).as("__pmin"))
-      .withColumn("__prev", min(col("__pmin")).over(wOff))
-      .select((byPid :+ col("__prev")): _*)
-    val wCumLoc = Window.partitionBy(byPid: _*).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local
-      .withColumn("__locMin", min(col("__q")).over(wCumLoc))
-      .join(broadcast(prevMin), partitionCols :+ "__pid")
-      .withColumn("padj", least(col("__locMin"),
-        coalesce(col("__prev"), col("__locMin"))))
-      .select((df.columns.toIndexedSeq.map(col) :+ col("padj")): _*)
+    Ranks.carry(q, g, ord, Ranks.minCarry(col("__q")), "padj")
+      .select((df.columns.toIndexedSeq :+ "padj").map(col): _*)
       .unionByName(all.filter(col(pCol).isNull)
         .withColumn("padj", lit(null).cast("double")))
   }

@@ -76,14 +76,6 @@ object Survival {
         col("survival"), col("se"), col("ci_lo"), col("ci_hi"))
   }
 
-  /** Two-group log-rank test. Returns one row:
-    * (observed_a, expected_a, chi2, pvalue) where group "a" is the
-    * lexicographically-first stratum value.
-    *
-    * The at-risk table is evaluated on the pooled time grid so each group's
-    * cumulative removals (deaths + censors) are counted between pooled
-    * event times.
-    */
   /** Median survival per stratum (`surv.median.line="hv"`,
     * surv_analysis_median_exp.R:153-163): the first event time where the
     * survival curve drops to ≤ 0.5; NULL when the curve never does. */
@@ -95,6 +87,14 @@ object Survival {
       .groupBy(col(stratCol))
       .agg(min(col(timeCol)).as("median_survival"))
 
+  /** Two-group log-rank test. Returns one row:
+    * (observed_a, expected_a, chi2, pvalue) where group "a" is the
+    * lexicographically-first stratum value.
+    *
+    * The at-risk table is evaluated on the pooled time grid so each group's
+    * cumulative removals (deaths + censors) are counted between pooled
+    * event times.
+    */
   def logRank(df: DataFrame, stratCol: String, timeCol: String,
       eventCol: String): DataFrame =
     logRankBy(df.withColumn("__g", lit(1)), "__g", stratCol, timeCol, eventCol)

@@ -4,116 +4,122 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Two-phase ordered ranking — global or per-group `row_number`/`ntile`
-  * without the one-task-per-group window-sort anti-pattern.
+/** Two-phase ordered scans — global or per-group row numbers, running sums
+  * and running minima without the one-task-per-group window-sort
+  * anti-pattern.
   *
   * A plain `row_number().over(Window.partitionBy(g).orderBy(k))` sorts
   * each group in ONE task; with few (or no) groups that is a scale
-  * killer. Here instead: range-partition on (group, order) keys, rank
-  * locally per physical partition (balanced tasks), then add each
-  * partition's cumulative row-count offset. The only no-partition work
-  * runs over one row per (group, partition) — bounded by groups × the
-  * shuffle partition count. NOTE the offsets frame is broadcast: at
-  * LOW group cardinality (the catalog's flags/langs/classes) that is a
-  * few rows; a million-group caller should pre-aggregate or shard by
-  * group instead — the broadcast would then scale with the group count.
+  * killer. [[rowNumber]], [[prefixSum]] and `Stats.bhAdjust` all run on
+  * one core instead:
+  *
+  *  1. [[ranged]] aliases the group keys to generated names (so arbitrary
+  *     EXPRESSIONS, not just named columns, group — the stitch joins by
+  *     name), range-partitions on (group ++ order), tags each row with its
+  *     physical partition `__pid`, and persists: the partition id must be
+  *     identical across the carry branch and the local branch. The cache
+  *     is released after the caller's consuming action.
+  *  2. [[carry]] computes an exactly associative aggregate (`count`, `sum`
+  *     over integers, `min`) per (group, partition), carries it over the
+  *     group's earlier partitions — with the group total alongside when
+  *     asked — and broadcast-joins that frame back onto the partition-local
+  *     running aggregate (a window over one physical partition, so the
+  *     tasks stay balanced).
+  *
+  * The only no-partition windows run over one row per (group, partition)
+  * — bounded by groups × the shuffle partition count — and the result is
+  * bit-identical to the single-window formulation at any partitioning
+  * (over doubles, `sum` carries the usual float-association caveat). NOTE
+  * the carry frame is broadcast: at LOW group cardinality (the catalog's
+  * flags/langs/classes) that is a few rows; a million-group caller should
+  * pre-aggregate or shard by group instead — the broadcast would then
+  * scale with the group count.
   */
 object Ranks {
 
-  /** `out` = 1-based rank of each row within its `grp` group under
-    * `order`, plus `outN` = the group's total row count (handy for tile
-    * math). Deterministic when (grp ++ order) is a total order; rows with
-    * fully-equal keys are interchangeable. */
-  def rowNumber(df: DataFrame, grp: Seq[Column], order: Seq[Column],
-      out: String = "rn", outN: String = "__n"): DataFrame = {
-    // alias grouping keys to generated names so arbitrary EXPRESSIONS
-    // (not just named columns) work as grp — the offsets join is by name
-    val grpNames = grp.indices.map(i => s"__g$i")
-    val prepared = grp.zip(grpNames).foldLeft(df) {
-      case (d, (c, n)) => d.withColumn(n, c)
-    }
-    val g = grpNames.map(col)
-    val keys = g ++ order
-    // persist: the partition id must be identical across the offsets
-    // branch and the local-rank branch; released after the caller's
-    // consuming action. (The input is deliberately NOT persisted: the
-    // boundary-sampling pass re-reads upstream once, which for the
-    // fact-sized frames this operator targets is cheaper at scale than a
-    // fact-sized cache materialization — unlike Stats.bhAdjust, whose
-    // input is a hypothesis-level frame behind an expensive fit.)
-    val ranged = prepared.repartitionByRange(keys: _*)
+  /** First phase of the core: `df` plus its group keys aliased to `__g0…`
+    * (the names are returned), range-partitioned on (group ++ order),
+    * tagged `__pid`, persisted and released after the caller's next
+    * action. The input is deliberately NOT persisted: the
+    * boundary-sampling pass re-reads upstream once, which for the
+    * fact-sized frames these scans target is cheaper at scale than a
+    * fact-sized cache materialization. A caller behind an expensive
+    * upstream persists its own input (`Stats.bhAdjust` does). */
+  private[graft] def ranged(df: DataFrame, grp: Seq[Column],
+      order: Seq[Column]): (DataFrame, Seq[String]) = {
+    val g = grp.indices.map(i => s"__g$i")
+    val keyed = grp.zip(g).foldLeft(df) { case (d, (c, n)) => d.withColumn(n, c) }
+    val r = keyed.repartitionByRange((g.map(col) ++ order): _*)
       .withColumn("__pid", spark_partition_id())
       .persist()
-    graft.Caches.releaseAfterAction(ranged)
-    val counts = ranged.groupBy((g :+ col("__pid")): _*)
-      .agg(count(lit(1)).as("__cnt"))
-    val wOff = Window.partitionBy(g: _*).orderBy(col("__pid"))
+    graft.Caches.releaseAfterAction(r)
+    (r, g)
+  }
+
+  /** An exactly associative aggregate the core carries: `part` over one
+    * (group, partition), `fold` over such parts, `local` as the running
+    * form inside a partition, and `plus` adding a carry (NULL on the
+    * group's first partition) to a local value. */
+  private[graft] final case class Carry(part: Column, fold: Column => Column,
+      local: Column, plus: (Column, Column) => Column)
+
+  private def offset(carried: Column, local: Column): Column =
+    coalesce(carried, lit(0L)) + local
+  private[graft] val countCarry = Carry(count(lit(1)), sum(_), row_number(), offset)
+  private[graft] def sumCarry(v: Column) = Carry(sum(v), sum(_), sum(v), offset)
+  private[graft] def minCarry(v: Column) =
+    Carry(min(v), min(_), min(v), (c, l) => least(l, coalesce(c, l)))
+
+  /** Second phase of the core over a [[ranged]] frame `r` with group keys
+    * `g`: adds `out` = the running `agg` of each row in (group, `order`),
+    * and — when `total` is named — the group's total of `agg`. The
+    * per-(group, partition) carry frame is broadcast (see the object doc's
+    * group-cardinality note). */
+  private[graft] def carry(r: DataFrame, g: Seq[String], order: Seq[Column],
+      agg: Carry, out: String, total: String = ""): DataFrame = {
+    val gc = g.map(col)
+    val byPid = gc :+ col("__pid")
+    val wPrev = Window.partitionBy(gc: _*).orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(g: _*)
-    val offsets = counts
-      .withColumn("__off", coalesce(sum(col("__cnt")).over(wOff), lit(0L)))
-      .withColumn(outN, sum(col("__cnt")).over(wAll))
-      .select((g :+ col("__pid") :+ col("__off") :+ col(outN)): _*)
-    val wLocal = Window.partitionBy((g :+ col("__pid")): _*).orderBy(order: _*)
-    ranged
-      .withColumn("__lrn", row_number().over(wLocal))
-      .join(broadcast(offsets), grpNames :+ "__pid")
-      .withColumn(out, (col("__off") + col("__lrn")).cast("long"))
-      // using-column joins reorder the schema (and __g*/__pid/__lrn/__off
-      // are internal); restore the input's column order exactly
-      .select((df.columns.toIndexedSeq.map(col) :+ col(out) :+ col(outN)): _*)
+    val parts = r.groupBy(byPid: _*).agg(agg.part.as("__part"))
+      .withColumn("__carry", agg.fold(col("__part")).over(wPrev))
+    val carried =
+      if (total.isEmpty) parts
+      else parts.withColumn(total, agg.fold(col("__part")).over(Window.partitionBy(gc: _*)))
+    val wLocal = Window.partitionBy(byPid: _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    r.withColumn("__local", agg.local.over(wLocal))
+      .join(broadcast(carried.drop("__part")), g :+ "__pid")
+      .withColumn(out, agg.plus(col("__carry"), col("__local")))
+      .drop("__carry", "__local")
+  }
+
+  /** `out` = 1-based rank of each row within its `grp` group under
+    * `order`, plus `outN` = the group's total row count (handy for tile
+    * math) — a count carry of the core. Deterministic when (grp ++ order)
+    * is a total order; rows with fully-equal keys are interchangeable. */
+  def rowNumber(df: DataFrame, grp: Seq[Column], order: Seq[Column],
+      out: String = "rn", outN: String = "__n"): DataFrame = {
+    val (r, g) = ranged(df, grp, order)
+    carry(r, g, order, countCarry, out, outN)
+      .select((df.columns.toIndexedSeq :+ out :+ outN).map(col): _*)
   }
 
   /** Global (or per-group) running total of `value` under `order` — the
-    * distributed prefix-scan, built like [[rowNumber]]: range partition on
-    * (group, order), sum locally per physical partition under a cumulative
-    * window, then add each partition's prefix-total offset (one row per
-    * (group, partition) — broadcast; see the object doc's group-
-    * cardinality note). `sum`
-    * over integers is exactly associative, so the result is bit-identical
-    * to the one-task `sum().over(Window.orderBy(...))` formulation at any
-    * partitioning; over doubles the usual float-association caveat
-    * applies. Deterministic when (grp ++ order) is a total order.
+    * distributed prefix-scan, a sum carry of the core; `outTotal`, when
+    * named, is the per-group grand total. Over integers it is
+    * bit-identical to the one-task `sum().over(Window.orderBy(...))`.
+    * Deterministic when (grp ++ order) is a total order.
     *
     * This is the backbone of sequence-packing style pipelines (cumulative
     * token budgets over a 100 TB corpus) where the naive no-partition
     * window would funnel the corpus through one task. */
   def prefixSum(df: DataFrame, grp: Seq[Column], order: Seq[Column],
       value: Column, out: String = "cumsum", outTotal: String = ""): DataFrame = {
-    val grpNames = grp.indices.map(i => s"__g$i")
-    val prepared = grp.zip(grpNames).foldLeft(df) {
-      case (d, (c, n)) => d.withColumn(n, c)
-    }.withColumn("__v", value)
-    val g = grpNames.map(col)
-    val keys = g ++ order
-    val ranged = prepared.repartitionByRange(keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-    graft.Caches.releaseAfterAction(ranged)
-    val sums = ranged.groupBy((g :+ col("__pid")): _*)
-      .agg(sum(col("__v")).as("__psum"))
-    val wOff = Window.partitionBy(g: _*).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // `outTotal` (the per-group grand total) rides the SAME tiny offsets
-    // frame — consumers needing it (quantilesOfClasses' rank target)
-    // would otherwise re-execute the whole scan for a separate totals agg
-    val offBase = sums
-      .withColumn("__off", coalesce(sum(col("__psum")).over(wOff), lit(0L)))
-    val offCols = g :+ col("__pid") :+ col("__off")
-    val offsets =
-      if (outTotal.isEmpty) offBase.select(offCols: _*)
-      else offBase
-        .withColumn(outTotal, sum(col("__psum")).over(Window.partitionBy(g: _*)))
-        .select(offCols :+ col(outTotal): _*)
-    val wLocal = Window.partitionBy((g :+ col("__pid")): _*).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val outCols = df.columns.toIndexedSeq.map(col) ++
-      (if (outTotal.isEmpty) Seq(col(out)) else Seq(col(out), col(outTotal)))
-    ranged
-      .withColumn("__lcs", sum(col("__v")).over(wLocal))
-      .join(broadcast(offsets), grpNames :+ "__pid")
-      .withColumn(out, col("__off") + col("__lcs"))
-      .select(outCols: _*)
+    val (r, g) = ranged(df.withColumn("__v", value), grp, order)
+    carry(r, g, order, sumCarry(col("__v")), out, outTotal)
+      .select(((df.columns.toIndexedSeq :+ out) ++ Option(outTotal).filter(_.nonEmpty))
+        .map(col): _*)
   }
 
   /** Exact per-group quantiles through the two-phase rank — the scale-safe
@@ -180,118 +186,6 @@ object Ranks {
     }
     cum.groupBy(grp.map(col): _*)
       .agg(max(col("__n")).as("n"), aggs: _*)
-  }
-
-  /** [[quantilesByValue]] through the bucket-refinement path — for
-    * NUMERIC value columns (wz1's shape: fact → class histogram → exact
-    * per-group bands with hash aggregations only, no range exchange). */
-  def quantilesByValueBucketed(df: DataFrame, grp: Seq[String], value: String,
-      qs: Seq[(String, Double)], nBuckets: Int = 4096): DataFrame = {
-    require(grp.nonEmpty, "quantilesByValueBucketed needs grouping keys")
-    val classes = df.groupBy((grp.map(col) :+ col(value)): _*)
-      .agg(count(lit(1)).as("__c"))
-    quantilesOfClassesBucketed(classes, grp, value, "__c", qs, nBuckets)
-  }
-
-  /** Exact per-group quantiles over a NUMERIC tie-class histogram via
-    * BUCKET REFINEMENT — an ALTERNATIVE to [[quantilesOfClasses]] for
-    * numeric values. Instead of range-exchanging the whole class frame
-    * (a sampling job + sort shuffle + two windows + an offsets join),
-    * this runs hash aggregations only:
-    *
-    *  1. per-group (min, max, n) — one map-side-combined agg;
-    *  2. per-group fixed `nBuckets` histogram of the class counts — one
-    *     hash agg, output bounded at groups × nBuckets;
-    *  3. locate each quantile's target bucket on that BOUNDED frame
-    *     (groups × buckets windows — driver-scale);
-    *  4. resolve the exact class inside the target buckets only: a
-    *     broadcast semi-join keeps ~1/nBuckets of the classes, and the
-    *     in-bucket rank window starts from the bucket's known cumulative
-    *     offset.
-    *
-    * Same `ceil(q·n)` rank semantics. The value column is evaluated AS
-    * DOUBLE (and returned as DOUBLE): for double/float inputs results are
-    * bit-identical to [[quantilesOfClasses]] (the selected value is an
-    * exact class value; bucket boundaries only steer WHERE the search
-    * looks, so float bucket math needs no cross-engine parity) — but
-    * integers above 2^53 or decimals would lose precision in the cast,
-    * so non-floating value columns should stay on the range-exchange
-    * form. Scale note: step 4's window is per (group, quantile) over
-    * one bucket's classes — with mass spread so no bucket holds more
-    * than ~1/nBuckets of a group this is tiny; a distribution that
-    * concentrates a group's whole mass inside one bucket-width of an
-    * extreme outlier degrades the in-bucket frame toward the group's
-    * class count (still never worse than the one-task-per-group window
-    * [[quantilesOfClasses]] avoids — switch back to it, or raise
-    * `nBuckets`, for such data).
-    *
-    * REGIME (measured, local[32] @ sf0.1): at ~600k classes / 3 groups
-    * the range-exchange form is ~25% FASTER — its sort shuffle is cheap
-    * and this path pays an extra cache materialization plus more jobs —
-    * so the catalog queries keep [[quantilesOfClasses]]. This form's
-    * shape wins when the class frame is large enough that sampling +
-    * sort-shuffling it dominates (hundreds of millions of classes, wide
-    * group counts): everything here is a map-side-combined hash agg and
-    * only ~1/nBuckets of the classes are ever sorted. */
-  def quantilesOfClassesBucketed(classes: DataFrame, grp: Seq[String],
-      value: String, countCol: String, qs: Seq[(String, Double)],
-      nBuckets: Int = 4096): DataFrame = {
-    require(qs.nonEmpty && qs.forall { case (_, q) => q > 0.0 && q <= 1.0 },
-      s"quantiles must be in (0,1]: $qs")
-    require(grp.nonEmpty, "quantilesOfClassesBucketed needs grouping keys")
-    val g = grp.map(col)
-    // persisted: three consumers read the class frame (bounds agg, bucket
-    // histogram, in-bucket resolution) — unpersisted, the upstream that
-    // produced the classes would execute three times (measured 13.6 s vs
-    // 8.4 s on rz1's shape). Released after the caller's action.
-    val cls = classes.select((g :+ col(value).cast("double").as("__v") :+
-      col(countCol).cast("long").as("__c")): _*).persist()
-    graft.Caches.releaseAfterAction(cls)
-    val bounds = cls.groupBy(g: _*).agg(min(col("__v")).as("__mn"),
-      max(col("__v")).as("__mx"), sum(col("__c")).as("__n"))
-    // bucket id: equal-width over [mn, mx], constant-only-group → bucket 0
-    def bucketOf(v: Column): Column =
-      when(col("__mx") === col("__mn"), lit(0L))
-        .otherwise(least(
-          floor((v - col("__mn")) / ((col("__mx") - col("__mn")) / nBuckets)),
-          lit((nBuckets - 1).toLong)).cast("long"))
-    val withB = cls.join(broadcast(bounds), grp)
-      .withColumn("__b", bucketOf(col("__v")))
-      // project the bounds back off: the target-bucket join below carries
-      // its own __n and a duplicate would make the column ambiguous
-      .select((g :+ col("__v") :+ col("__c") :+ col("__b")): _*)
-    val hist = withB.groupBy((g :+ col("__b")): _*)
-      .agg(sum(col("__c")).as("__bc"))
-    // cumulative count below each bucket — a window over the BOUNDED
-    // (groups × nBuckets) histogram, then one target-bucket row per
-    // (group, quantile)
-    val wB = Window.partitionBy(g: _*).orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bcum = hist
-      .withColumn("__below", coalesce(sum(col("__bc")).over(wB), lit(0L)))
-      .join(broadcast(bounds.select((g :+ col("__n")): _*)), grp)
-    val targets = qs.map { case (name, q) =>
-      val t = ceil(col("__n") * q).cast("long")
-      bcum.filter(col("__below") < t && t <= col("__below") + col("__bc"))
-        .select((g :+ col("__b") :+ col("__below") :+ col("__n") :+
-          lit(name).as("__q") :+ t.as("__t")): _*)
-    }.reduce(_.unionByName(_))
-    // resolve inside the target buckets only: classes there are ~1/nBuckets
-    // of the group, the rank window resumes from the bucket's offset
-    val inBucket = withB.join(broadcast(targets), grp :+ "__b")
-    val wIn = Window.partitionBy((g :+ col("__q")): _*).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val picked = inBucket
-      .withColumn("__cum", col("__below") + sum(col("__c")).over(wIn))
-      .filter(col("__cum") - col("__c") < col("__t") &&
-        col("__t") <= col("__cum"))
-      .select((g :+ col("__q") :+ col("__v") :+ col("__n")): _*)
-    // pivot the (group, quantile) rows back to one row per group
-    picked.groupBy(g: _*).agg(
-      max(col("__n")).as("n"),
-      qs.map { case (name, _) =>
-        max(when(col("__q") === name, col("__v"))).as(name)
-      }: _*)
   }
 
   /** SQL `NTILE(tiles)` semantics via the two-phase rank: the first

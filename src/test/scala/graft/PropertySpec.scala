@@ -175,6 +175,49 @@ class PropertySpec extends SparkSpec {
       val got = Stats.bhAdjust(df, "pval", "id").select($"id", $"pval", $"padj")
       assert(got.except(expect).isEmpty && expect.except(got).isEmpty)
     }
+    // grouped: uneven families with NULL p-values, one all-NULL family and
+    // the empty frame, at shuffle widths where every family fits in one
+    // range partition (1) and where families span several (7)
+    val famGen = Gen.listOf(Gen.zip(Gen.oneOf("a", "b", "c"),
+        Gen.option(Gen.chooseNum(0.0, 1.0))))
+      .map(rows => rows.take(90) ++ Seq.fill(3)(("z", Option.empty[Double])))
+    val inputs = samples(famGen, 4) :+ Nil
+    // AQE would coalesce these small range partitions back into one
+    val confs = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = confs.map(k => k -> spark.conf.get(k))
+    var spanned = 0L
+    // one action per side: bhAdjust's caches last one action
+    def sorted(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3))))
+      .sortBy(_._1)
+    try for (width <- Seq(1, 7)) {
+      spark.conf.set(confs(0), width.toLong)
+      spark.conf.set(confs(1), width == 1)
+      inputs.foreach { rows =>
+        val df = rows.zipWithIndex.map { case ((f, p), i) => (i.toLong, f, p) }
+          .toDF("id", "fam", "pval").repartition(7)
+        spanned = math.max(spanned, df.filter($"pval".isNotNull)
+          .repartitionByRange($"fam", $"pval".desc, $"id".desc)
+          .select(spark_partition_id()).distinct().count())
+        // the textbook per-family reference over the non-NULL rows; NULL p
+        // gets NULL padj
+        val wR = Window.partitionBy($"fam").orderBy($"pval", $"id")
+        val wC = Window.partitionBy($"fam").orderBy($"pval".desc, $"id".desc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val expect = df.filter($"pval".isNotNull)
+          .withColumn("r", row_number().over(wR))
+          .withColumn("n", count(lit(1)).over(Window.partitionBy($"fam")))
+          .withColumn("padj", min(least(lit(1.0), $"pval" * $"n" / $"r")).over(wC))
+          .select($"id", $"fam", $"pval", $"padj")
+          .unionByName(df.filter($"pval".isNull)
+            .select($"id", $"fam", $"pval", lit(null).cast("double").as("padj")))
+        val got = Stats.bhAdjust(df, "pval", "id", partitionCols = Seq("fam"))
+          .select($"id", $"fam", $"pval", $"padj")
+        assert(sorted(got) === sorted(expect), s"width $width: $rows")
+      }
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    assert(spanned > 1, "no input spanned several range partitions")
   }
 
   test("contaminationBloom == contamination on generated split corpora") {

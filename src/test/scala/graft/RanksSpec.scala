@@ -91,43 +91,6 @@ class RanksSpec extends SparkSpec {
       Seq("p50" -> 0.5)).count() === 0)
   }
 
-  test("quantilesOfClassesBucketed equals the range-exchange form") {
-    val qs = Seq("p01" -> 0.01, "p25" -> 0.25, "p50" -> 0.5, "p99" -> 0.99,
-      "p100" -> 1.0)
-    // heavy-tie classes from the fixture
-    val cls = df.groupBy($"g", $"v".cast("double").as("v"))
-      .agg(count(lit(1)).as("c"))
-    val want = Ranks.quantilesOfClasses(cls, Seq("g"), "v", "c", qs)
-    for (buckets <- Seq(2, 7, 4096)) {
-      val got = Ranks.quantilesOfClassesBucketed(cls, Seq("g"), "v", "c",
-        qs, nBuckets = buckets)
-      assert(got.columns.toSeq === want.columns.toSeq, s"buckets=$buckets")
-      assert(got.except(want).isEmpty && want.except(got).isEmpty,
-        s"buckets=$buckets:\n${got.collect().mkString("\n")}\nvs\n" +
-          want.collect().mkString("\n"))
-    }
-    // continuous values (every class count 1), skewed + negative, and a
-    // constant-valued group (mn == mx) — the degenerate bucket branches
-    val rnd = new scala.util.Random(7)
-    val data = (1 to 500).map(i =>
-      ("a", math.exp(rnd.nextGaussian() * 3) - 10.0)) ++
-      (1 to 37).map(i => ("b", rnd.nextDouble())) ++
-      (1 to 5).map(_ => ("k", 42.0))
-    val cls2 = data.toDF("g", "v").groupBy("g", "v").agg(count(lit(1)).as("c"))
-    val want2 = Ranks.quantilesOfClasses(cls2, Seq("g"), "v", "c", qs)
-    val got2 = Ranks.quantilesOfClassesBucketed(cls2, Seq("g"), "v", "c", qs)
-    assert(got2.except(want2).isEmpty && want2.except(got2).isEmpty)
-    // empty input
-    assert(Ranks.quantilesOfClassesBucketed(cls.filter(lit(false)),
-      Seq("g"), "v", "c", Seq("p50" -> 0.5)).count() === 0)
-    // the fact-level wrapper equals the fact-level range-exchange form
-    val wantFact = Ranks.quantilesByValue(
-      df.select($"g", $"v".cast("double").as("v")), Seq("g"), "v", qs)
-    val gotFact = Ranks.quantilesByValueBucketed(
-      df.select($"g", $"v".cast("double").as("v")), Seq("g"), "v", qs)
-    assert(gotFact.except(wantFact).isEmpty && wantFact.except(gotFact).isEmpty)
-  }
-
   test("prefixSum matches the single-window running total, grouped and global") {
     val expectGrouped = df.withColumn("cs",
       sum($"v").over(Window.partitionBy($"g").orderBy($"v", $"id")
@@ -162,29 +125,51 @@ class RanksSpec extends SparkSpec {
   }
 
   test("only the per-partition local rank windows the full data; offsets window on agg") {
+    import graft.functions.Stats
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
     def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
       case q: QueryStageExec        => q +: flatten(q.plan)
+      // the persisted ranged frame's plan holds the range exchange
+      case m: InMemoryTableScanExec => m +: flatten(m.relation.cacheBuilder.cachedPlan)
       case other                    => other +: other.children.flatMap(flatten)
     }
-    val out = Ranks.ntile(df, Seq($"g"), Seq($"v", $"id"), 2)
-    out.collect()
-    val windows = flatten(out.queryExecution.executedPlan)
-      .collect { case w: WindowExec => w }
-    assert(windows.nonEmpty)
-    // every window that is NOT partitioned by __pid (i.e. the offsets /
-    // totals windows) must sit on an aggregate: one row per (g, __pid)
-    windows.filterNot(_.partitionSpec.exists(_.toString.contains("__pid"))).foreach { w =>
-      val aggBelow = flatten(w.child).exists {
-        case _: BaseAggregateExec => true
-        case _ => false
+    val withP = df.withColumn("p", $"v" / 10.0)
+    // built lazily: each frame's caches last until the next action
+    val outs = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "ntile" -> (() => Ranks.ntile(df, Seq($"g"), Seq($"v", $"id"), 2)),
+      "prefixSum" -> (() => Ranks.prefixSum(df, Seq($"g"), Seq($"v", $"id"), $"v")),
+      "bhAdjust" -> (() => Stats.bhAdjust(withP, "p", "id", partitionCols = Seq("g"))))
+    for ((name, build) <- outs) {
+      val out = build()
+      out.collect()
+      val nodes = flatten(out.queryExecution.executedPlan)
+      val windows = nodes.collect { case w: WindowExec => w }
+      assert(windows.nonEmpty, name)
+      // every window that is NOT partitioned by __pid (i.e. the offsets /
+      // totals windows) must sit on an aggregate: one row per (g, __pid)
+      windows.filterNot(_.partitionSpec.exists(_.toString.contains("__pid"))).foreach { w =>
+        val aggBelow = flatten(w.child).exists {
+          case _: BaseAggregateExec => true
+          case _ => false
+        }
+        assert(aggBelow,
+          s"$name: window input must be an aggregate, not the fact table:\n$w")
       }
-      assert(aggBelow,
-        s"window input must be an aggregate, not the fact table:\n$w")
+      if (name == "bhAdjust") {
+        // the rank and the running min share ONE ranged frame (several
+        // branches scan its cache: count each exchange once)
+        val ranges = nodes.collect {
+          case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+        }.distinctBy(System.identityHashCode)
+        assert(ranges.size === 1, s"bhAdjust range exchanges:\n${ranges.mkString("\n")}")
+      }
     }
   }
 }

@@ -15,6 +15,14 @@ OUT=${OUT:-/tmp/gate_out}
 rm -rf /tmp/graft_*
 
 sbt -batch compile
+# the two-phase scan's partition-id stitch lives in one place: the
+# operators.Ranks core. Any other use of spark_partition_id in the library
+# is a second copy of it.
+stitch=$(grep -rln 'spark_partition_id' src/main | grep -v '^src/main/scala/graft/operators/Ranks.scala$' || true)
+if [ -n "$stitch" ]; then
+  echo "spark_partition_id outside operators/Ranks.scala: $stitch" >&2
+  exit 1
+fi
 # the benchmark's own build calls GraftSession.apply and the graft.api
 # surface: break either and the gate fails here, not at benchmark time
 (cd perfbench && sbt -batch compile)
