@@ -2,28 +2,46 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 /** Cache-lifetime discipline for the library's internal `persist()` calls.
   *
   * Library operators persist frames their plans reference more than once
   * (see the scaladoc on each call site). Those caches must outlive the
   * function that created them — the consuming action is the caller's — so
-  * they cannot be unpersisted before returning. `releaseAfterAction`
-  * registers a one-shot listener that unpersists them as soon as the next
-  * SQL action on the session completes (success or failure): the usual
-  * one-action consumers (a write, a count, a collect) pay nothing and leak
-  * nothing. A caller that runs several actions over the same returned frame
-  * recomputes after the first — correct (the plans are deterministic,
-  * `repartitionByRange` boundaries included, because repeated actions on
-  * one DataFrame reuse its physical RDD), just uncached; such callers
-  * should persist the *returned* frame themselves.
+  * they cannot be unpersisted before returning. Two release rules cover
+  * them, both one-shot listeners that unpersist on the trigger below or at
+  * once when an action fails:
+  *
+  *  - [[releaseAfterAction]] — after the next completed SQL action on the
+  *    session. The usual one-action consumers (a write, a count, a
+  *    collect) pay nothing and leak nothing. A caller that runs several
+  *    actions over the same returned frame recomputes after the first —
+  *    correct (the plans are deterministic, `repartitionByRange`
+  *    boundaries included, because repeated actions on one DataFrame
+  *    reuse its physical RDD), just uncached; such callers should persist
+  *    the *returned* frame themselves.
+  *  - [[releaseAfterConsumers]] — once every listed consumer frame has
+  *    fed a completed action (the action's plan holds the consumer's
+  *    plan). For an operator returning several frames over one shared
+  *    cache (`Tcga.kmByMedianExpression`'s curves and tests), or one
+  *    whose construction runs its own jobs (`Ann.ivfIndexTopK`'s probe
+  *    collect), neither of which may release the cache. LEAK CASE: a
+  *    caller that consumes only some of the consumers keeps the cache,
+  *    and its listener, until [[clearCaches]].
+  *
+  * [[persistForAction]] is the persist-plus-first-rule idiom, except that
+  * an input its caller has ALREADY cached is used as is: the caller owns
+  * that cache and its release, so a shared frame is not dropped after the
+  * first of its consumers' actions.
   *
   * CONCURRENCY CONTRACT: "the next action" means the next action on the
-  * WHOLE session — the listener cannot tell the consuming action from an
-  * unrelated one. A session shared by concurrent threads (a notebook
+  * WHOLE session — the first rule cannot tell the consuming action from
+  * an unrelated one. A session shared by concurrent threads (a notebook
   * with parallel cells, a ThriftServer) can release a cache early (the
   * consumer then recomputes — slower, never wrong) and a caller that
   * never runs an action leaves cache + listener registered until
@@ -35,13 +53,51 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object Caches {
 
   /** Unpersist `dfs` after the next completed action on their session. */
-  def releaseAfterAction(dfs: DataFrame*): Unit = {
+  def releaseAfterAction(dfs: DataFrame*): Unit = releaseWhen(dfs)(_ => true)
+
+  /** Unpersist `caches` once each of `consumers` has fed a completed
+    * action: that action's logical plan holds the consumer's plan (or a
+    * frame derived from it: a `select`, a `join`, a writer), matched by
+    * reference. Actions on unrelated frames, and construction-time jobs
+    * that ran before the consumers existed, do not count. */
+  def releaseAfterConsumers(consumers: Seq[DataFrame], caches: DataFrame*): Unit = {
+    // the listener bus delivers one event at a time, so no lock
+    var pending = consumers.map(df =>
+      Seq(df.queryExecution.logical, GraftSqlBridge.logicalPlan(df)))
+    releaseWhen(caches) { qe =>
+      pending = pending.filterNot(plans => holds(qe.logical, plans))
+      pending.isEmpty
+    }
+  }
+
+  /** `df` persisted and released after the next action, or `df` itself
+    * when its caller already cached it (the caller owns that cache). */
+  def persistForAction(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else {
+      val p = df.persist()
+      releaseAfterAction(p)
+      p
+    }
+
+  // leaf writer commands (`saveAsTable`, non-file V1 sources) hold their
+  // query as an inner child, not a child
+  private def holds(plan: LogicalPlan, targets: Seq[LogicalPlan]): Boolean =
+    targets.exists(_ eq plan) || plan.children.exists(holds(_, targets)) ||
+      plan.innerChildren.exists {
+        case p: LogicalPlan => holds(p, targets)
+        case _ => false
+      }
+
+  /** The listener both release rules share: unpersist `dfs` once `done`
+    * holds after a successful action, or at once after a failed one. */
+  private def releaseWhen(dfs: Seq[DataFrame])(done: QueryExecution => Boolean): Unit = {
     if (dfs.isEmpty) return
     val spark = dfs.head.sparkSession
     val listener = new QueryExecutionListener {
-      private val done = new AtomicBoolean(false)
+      private val released = new AtomicBoolean(false)
       private def release(): Unit =
-        if (done.compareAndSet(false, true)) {
+        if (released.compareAndSet(false, true)) {
           dfs.foreach { df =>
             try df.unpersist(blocking = false)
             catch { case _: Throwable => () }
@@ -49,7 +105,7 @@ object Caches {
           spark.listenerManager.unregister(this)
         }
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = release()
+          durationNs: Long): Unit = if (done(qe)) release()
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = release()
     }

@@ -180,11 +180,34 @@ object Tcga {
     * interest, samples split LOW/HIGH at the median VST (E1 ntile), curves
     * via D10, log-rank via D11 — all genes in one plan.
     *
+    * Both outputs read ONE persisted subject frame ([[medianSplit]], one
+    * row per (gene of interest, sample): bounded by goi × samples), so the
+    * prefilter → size factors → VST → ntile chain runs once for the two
+    * sinks. The cache is released once both `curves` and `tests` have fed
+    * a completed action; a caller that consumes only one of them keeps it
+    * until `Caches.clearCaches` (see [[graft.Caches]]).
+    *
     * @return (curves, tests): curves keyed by (gene_name, strat); tests one
     *         row per gene_name with chi2/pvalue
     */
   def kmByMedianExpression(t: TcgaTables, goi: Seq[String],
       tiles: Int = 2): (DataFrame, DataFrame) = {
+    val strat = medianSplit(t, goi, tiles).persist()
+    val curves = Survival.kmCurve(strat, "gs", "time", "event")
+      .withColumn("gene_name", split(col("gs"), "\\|").getItem(0))
+      .withColumn("strat", split(col("gs"), "\\|").getItem(1))
+      .drop("gs")
+    val tests = Survival.logRankBy(strat, "gene_name", "strat", "time", "event")
+    graft.Caches.releaseAfterConsumers(Seq(curves, tests), strat)
+    (curves, tests)
+  }
+
+  /** The subject frame [[kmByMedianExpression]] shares between its
+    * outputs: per gene of interest and sample, `(barcode, gene_name, vst,
+    * tile, strat, time, event)` plus the curve key `gs` =
+    * `gene_name|strat`. Not persisted. */
+  private[graft] def medianSplit(t: TcgaTables, goi: Seq[String],
+      tiles: Int): DataFrame = {
     val subjects = t.samples
       .withColumn("status",
         when(col("vital_status") === "Alive", 1).otherwise(2)) // F7
@@ -198,19 +221,12 @@ object Tcga {
       .join(broadcast(t.genes), "gene_id")
       .filter(col("gene_name").isin(goi.map(_.asInstanceOf[Any]): _*))
     val w = Window.partitionBy(col("gene_name")).orderBy(col("vst"), col("barcode"))
-    val strat = vst
+    vst
       .withColumn("tile", ntile(tiles).over(w))
       .filter(col("tile") === 1 || col("tile") === tiles) // keep extremes (E1)
       .withColumn("strat", when(col("tile") === 1, "LOW").otherwise("HIGH")) // F11
       .join(subjects, "barcode")
-    val curves = Survival.kmCurve(
-      strat.withColumn("gs", concat_ws("|", col("gene_name"), col("strat"))),
-      "gs", "time", "event")
-      .withColumn("gene_name", split(col("gs"), "\\|").getItem(0))
-      .withColumn("strat", split(col("gs"), "\\|").getItem(1))
-      .drop("gs")
-    val tests = Survival.logRankBy(strat, "gene_name", "strat", "time", "event")
-    (curves, tests)
+      .withColumn("gs", concat_ws("|", col("gene_name"), col("strat")))
   }
 
   /** H4 — boxplot-ready long frame `(gene, cond, counts)` (the melt at
@@ -241,6 +257,11 @@ object Tcga {
     * they match (a class-table join over the exploded treatments, so a
     * patient on two classes contributes to both cohorts), then the KM
     * median-split pipeline runs once partitioned by (drug_class, gene).
+    *
+    * As in [[kmByMedianExpression]], both outputs read one persisted
+    * subject frame (one row per (class, gene of interest, cohort sample)),
+    * released once both have fed a completed action; consuming only one
+    * output keeps it until `Caches.clearCaches`.
     *
     * @return (curves, tests) with a leading `drug_class` column
     */
@@ -285,7 +306,8 @@ object Tcga {
     val vst = Normalization.vstTrend(cohortCells, "cg", "cb", "count")
       .join(broadcast(t.genes), "gene_id")
       .filter(col("gene_name").isin(goi.map(_.asInstanceOf[Any]): _*))
-    // median split INSIDE each (class, gene) cohort, as the reference does
+    // median split INSIDE each (class, gene) cohort, as the reference does;
+    // one persisted subject frame feeds both outputs (see the scaladoc)
     val strat = vst.join(subjects, Seq("drug_class", "barcode"))
       .withColumn("tile", ntile(2).over(Window
         .partitionBy(col("drug_class"), col("gene_name"))
@@ -293,17 +315,18 @@ object Tcga {
       .withColumn("strat", when(col("tile") === 1, "LOW").otherwise("HIGH"))
       .withColumn("cgs",
         concat_ws("|", col("drug_class"), col("gene_name"), col("strat")))
+      .withColumn("cg", concat_ws("|", col("drug_class"), col("gene_name")))
+      .persist()
     val curves = Survival.kmCurve(strat, "cgs", "time", "event")
       .withColumn("drug_class", split(col("cgs"), "\\|").getItem(0))
       .withColumn("gene_name", split(col("cgs"), "\\|").getItem(1))
       .withColumn("strat", split(col("cgs"), "\\|").getItem(2))
       .drop("cgs")
-    val tests = Survival.logRankBy(
-      strat.withColumn("cg", concat_ws("|", col("drug_class"), col("gene_name"))),
-      "cg", "strat", "time", "event")
+    val tests = Survival.logRankBy(strat, "cg", "strat", "time", "event")
       .withColumn("drug_class", split(col("cg"), "\\|").getItem(0))
       .withColumn("gene_name", split(col("cg"), "\\|").getItem(1))
       .drop("cg")
+    graft.Caches.releaseAfterConsumers(Seq(curves, tests), strat)
     (curves, tests)
   }
 

@@ -227,8 +227,8 @@ object DiffExpression {
     * one to run materializes the whole upstream fit inside the build, so
     * the fit must finish within `spark.sql.broadcastTimeout` (default
     * 300 s) — a limit the old driver-collect form did not have. The
-    * threshold broadcast feeds the `Stats.bhAdjust` call below, whose
-    * range-sampling job is usually the first to trigger it. At cluster
+    * threshold broadcast feeds the `Stats.bhAdjust` call below, so the
+    * first job of the caller's action usually triggers it. At cluster
     * scale, materialize `de` first (persist it and run an action) or raise
     * the timeout. */
   def results(de: DataFrame, alpha: Double = 0.1, pCol: String = "pvalue",

@@ -32,9 +32,9 @@ object Survival {
       s"confType must be log|linear, got $confType")
     // the subject frame feeds the per-time agg AND the totals agg: persist
     // so an expensive upstream (e.g. the VST pipeline) runs once; released
-    // after the caller's consuming action (Caches contract)
-    val df = df0.persist()
-    graft.Caches.releaseAfterAction(df)
+    // after the caller's consuming action, or left to a caller that
+    // cached it already (Caches contract)
+    val df = graft.Caches.persistForAction(df0)
     val perTime = df.groupBy(col(stratCol), col(timeCol)).agg(
       sum(col(eventCol)).as("d"),
       sum(lit(1) - col(eventCol)).as("c"))
@@ -108,9 +108,9 @@ object Survival {
       timeCol: String, eventCol: String): DataFrame = {
     // four derivations of the subject frame (per-time, grid, strata,
     // totals) — persist or the upstream pipeline runs 4x; released after
-    // the caller's consuming action (Caches contract)
-    val df = df0.persist()
-    graft.Caches.releaseAfterAction(df)
+    // the caller's consuming action, or left to a caller that cached it
+    // already (Caches contract)
+    val df = graft.Caches.persistForAction(df0)
     val perTime = df.groupBy(col(groupCol), col(stratCol), col(timeCol)).agg(
       sum(col(eventCol)).as("d"),
       sum(lit(1) - col(eventCol)).as("c"))

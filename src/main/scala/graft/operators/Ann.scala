@@ -951,16 +951,15 @@ object Ann {
       .persist()
     // bounded driver collect: distinct probe cells ⊆ the k cell ids —
     // never scales with the query batch, and buys STATIC pruning (the
-    // file listing itself skips unprobed cell directories). Runs BEFORE
-    // releaseAfterAction is registered — the release listener fires on
-    // the next completed action, which must be the CALLER's consuming
-    // one, not this collect (the pq1 lesson).
+    // file listing itself skips unprobed cell directories)
     val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
-    graft.Caches.releaseAfterAction(probed)
     // the cell filter pushes through the tombstone anti-join's left side
     // to the scan, so static partition pruning is intact (PlanSpec)
-    rerankTopK(liveCorpus(spark, path)
+    val out = rerankTopK(liveCorpus(spark, path)
       .filter(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
       .join(broadcast(probed), Seq("cell")), topK)
+    // released after the caller's action on `out`, not after the collect
+    graft.Caches.releaseAfterConsumers(Seq(out), probed)
+    out
   }
 }

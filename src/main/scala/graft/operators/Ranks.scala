@@ -4,14 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Two-phase ordered scans — global or per-group row numbers, running sums
-  * and running minima without the one-task-per-group window-sort
-  * anti-pattern.
+/** Two-phase ordered scans — global or per-group row numbers and running
+  * sums without the one-task-per-group window-sort anti-pattern.
   *
   * A plain `row_number().over(Window.partitionBy(g).orderBy(k))` sorts
   * each group in ONE task; with few (or no) groups that is a scale
-  * killer. [[rowNumber]], [[prefixSum]] and `Stats.bhAdjust` all run on
-  * one core instead:
+  * killer. [[rowNumber]] and [[prefixSum]] (and so [[ntile]] and the
+  * quantiles) run on one core instead:
   *
   *  1. [[ranged]] aliases the group keys to generated names (so arbitrary
   *     EXPRESSIONS, not just named columns, group — the stitch joins by
@@ -19,8 +18,8 @@ import org.apache.spark.sql.functions._
   *     physical partition `__pid`, and persists: the partition id must be
   *     identical across the carry branch and the local branch. The cache
   *     is released after the caller's consuming action.
-  *  2. [[carry]] computes an exactly associative aggregate (`count`, `sum`
-  *     over integers, `min`) per (group, partition), carries it over the
+  *  2. [[carry]] computes an exactly associative aggregate (`count`, or
+  *     `sum` over integers) per (group, partition), carries it over the
   *     group's earlier partitions — with the group total alongside when
   *     asked — and broadcast-joins that frame back onto the partition-local
   *     running aggregate (a window over one physical partition, so the
@@ -44,8 +43,8 @@ object Ranks {
     * boundary-sampling pass re-reads upstream once, which for the
     * fact-sized frames these scans target is cheaper at scale than a
     * fact-sized cache materialization. A caller behind an expensive
-    * upstream persists its own input (`Stats.bhAdjust` does). */
-  private[graft] def ranged(df: DataFrame, grp: Seq[Column],
+    * upstream persists its own input. */
+  private def ranged(df: DataFrame, grp: Seq[Column],
       order: Seq[Column]): (DataFrame, Seq[String]) = {
     val g = grp.indices.map(i => s"__g$i")
     val keyed = grp.zip(g).foldLeft(df) { case (d, (c, n)) => d.withColumn(n, c) }
@@ -57,25 +56,21 @@ object Ranks {
   }
 
   /** An exactly associative aggregate the core carries: `part` over one
-    * (group, partition), `fold` over such parts, `local` as the running
-    * form inside a partition, and `plus` adding a carry (NULL on the
-    * group's first partition) to a local value. */
-  private[graft] final case class Carry(part: Column, fold: Column => Column,
-      local: Column, plus: (Column, Column) => Column)
+    * (group, partition), `fold` over such parts, and `local` as the
+    * running form inside a partition. A row's result is its local value
+    * plus the carry (NULL, read as 0, on the group's first partition). */
+  private final case class Carry(part: Column, fold: Column => Column,
+      local: Column)
 
-  private def offset(carried: Column, local: Column): Column =
-    coalesce(carried, lit(0L)) + local
-  private[graft] val countCarry = Carry(count(lit(1)), sum(_), row_number(), offset)
-  private[graft] def sumCarry(v: Column) = Carry(sum(v), sum(_), sum(v), offset)
-  private[graft] def minCarry(v: Column) =
-    Carry(min(v), min(_), min(v), (c, l) => least(l, coalesce(c, l)))
+  private val countCarry = Carry(count(lit(1)), sum(_), row_number())
+  private def sumCarry(v: Column) = Carry(sum(v), sum(_), sum(v))
 
   /** Second phase of the core over a [[ranged]] frame `r` with group keys
     * `g`: adds `out` = the running `agg` of each row in (group, `order`),
     * and — when `total` is named — the group's total of `agg`. The
     * per-(group, partition) carry frame is broadcast (see the object doc's
     * group-cardinality note). */
-  private[graft] def carry(r: DataFrame, g: Seq[String], order: Seq[Column],
+  private def carry(r: DataFrame, g: Seq[String], order: Seq[Column],
       agg: Carry, out: String, total: String = ""): DataFrame = {
     val gc = g.map(col)
     val byPid = gc :+ col("__pid")
@@ -90,7 +85,7 @@ object Ranks {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     r.withColumn("__local", agg.local.over(wLocal))
       .join(broadcast(carried.drop("__part")), g :+ "__pid")
-      .withColumn(out, agg.plus(col("__carry"), col("__local")))
+      .withColumn(out, coalesce(col("__carry"), lit(0L)) + col("__local"))
       .drop("__carry", "__local")
   }
 

@@ -25,6 +25,113 @@ class CachesSpec extends SparkSpec {
     assert(live() <= 1, s"leaked cached RDDs: ${live()}")
   }
 
+  private def cached(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+  // QueryExecutionListener delivery is asynchronous: a cache that must
+  // stay is checked on several polls, one that must go is polled for
+  private def stays(df: org.apache.spark.sql.DataFrame, why: String): Unit =
+    (1 to 5).foreach { _ => Thread.sleep(100); assert(cached(df), why) }
+  private def goes(df: org.apache.spark.sql.DataFrame, why: String): Unit = {
+    val deadline = System.currentTimeMillis() + 20000
+    while (cached(df) && System.currentTimeMillis() < deadline) Thread.sleep(100)
+    assert(!cached(df), why)
+  }
+
+  test("a cache shared by two consumers outlives the first consumer's action") {
+    import org.apache.spark.sql.functions._
+    for (first <- Seq(0, 1)) {
+      spark.catalog.clearCache()
+      val shared = spark.range(200).withColumn("k", col("id") % 7).persist()
+      val consumers = Seq(shared.groupBy("k").agg(sum("id").as("s")),
+        shared.filter(col("id") > 20).select(max("id")))
+      Caches.releaseAfterConsumers(consumers, shared)
+      // an unrelated action does not count
+      spark.range(3).count()
+      stays(shared, s"released by an unrelated action (first = $first)")
+      // the first consumer feeds a writer through a derived frame
+      consumers(first).select(col(consumers(first).columns.head))
+        .write.format("noop").mode("overwrite").save()
+      stays(shared, s"released after one of two consumers (first = $first)")
+      consumers(1 - first).collect()
+      goes(shared, s"kept after both consumers (first = $first)")
+    }
+  }
+
+  test("bhAdjust, kmCurve and logRankBy leave a caller's cache in place") {
+    import graft.functions.{Stats, Survival}
+    import org.apache.spark.sql.functions._
+    spark.catalog.clearCache()
+    val hyps = spark.range(60).select(col("id"),
+      ((col("id") * 37) % 60 / 60.0).as("p"), (col("id") % 3).as("fam"))
+      .persist()
+    val subjects = spark.range(80).select(
+      (col("id") % 4).as("g"), (col("id") % 2).cast("string").as("s"),
+      ((col("id") * 13) % 29).cast("double").as("time"),
+      (col("id") % 3 =!= 0).cast("long").as("event")).persist()
+    Stats.bhAdjust(hyps, "p", "id", Seq("fam")).collect()
+    Survival.kmCurve(subjects, "s", "time", "event").collect()
+    Survival.logRankBy(subjects, "g", "s", "time", "event").collect()
+    spark.range(3).count() // a later action must not release them either
+    stays(hyps, "bhAdjust released its caller's cache")
+    stays(subjects, "kmCurve or logRankBy released its caller's cache")
+    spark.catalog.clearCache()
+  }
+
+  test("a failed action releases the caches of both release rules") {
+    import org.apache.spark.sql.functions._
+    spark.catalog.clearCache()
+    val shared = spark.range(50).withColumn("k", col("id") % 5).persist()
+    val single = spark.range(40).withColumn("k", col("id") % 3).persist()
+    val consumers = Seq(shared.groupBy("k").count(), shared.select(sum("id")))
+    Caches.releaseAfterConsumers(consumers, shared)
+    Caches.releaseAfterAction(single)
+    val boom = udf((k: Long) => if (k >= 0) throw new IllegalStateException("boom") else k)
+    intercept[Exception](consumers.head.select(boom(col("k"))).collect())
+    goes(shared, "a failed consumer action kept the shared cache")
+    goes(single, "a failed action kept the one-action cache")
+  }
+
+  test("ivfIndexTopK keeps its probe frame cached for the caller's action") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.functions._
+    import graft.operators.Ann
+    val emb = spark.range(400).select(col("id").as("vec_id"),
+      array((1 to 8).map(j => sin(col("id") * j).cast("float")): _*).as("embedding"))
+    val path = java.nio.file.Files.createTempDirectory("graft_caches_ivf").toString
+    Ann.writeIvfIndex(emb, "vec_id", "embedding", path, k = 4, iters = 2)
+    spark.catalog.clearCache()
+    // hold the listener bus on its first event until the serve is built,
+    // as a busy session does: the serve's own construction-time action
+    // events are then still queued when ivfIndexTopK returns
+    val built = new java.util.concurrent.CountDownLatch(1)
+    val hold = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        built.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(hold)
+    val served =
+      try Ann.ivfIndexTopK(spark, path,
+        emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
+        nProbe = 2, topK = 3)
+      finally built.countDown()
+    spark.listenerManager.unregister(hold)
+    // the queued events are delivered now: none may release the probe frame
+    Thread.sleep(1000)
+    val cm = spark.sharedState.cacheManager
+    assert(!cm.isEmpty, "the probe frame was released before the caller's action")
+    val out = served.select(col("q_id"), col("id"))
+    assert(out.collect().nonEmpty)
+    assert(PlanNodes(out.queryExecution.executedPlan)
+        .exists(_.isInstanceOf[InMemoryTableScanExec]),
+      "the caller's action recomputed the probe frame")
+    val deadline = System.currentTimeMillis() + 20000
+    while (!cm.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+    assert(cm.isEmpty, "the probe frame outlived the caller's action")
+  }
+
   test("pretrainingRun releases every internal cache after the consuming action") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

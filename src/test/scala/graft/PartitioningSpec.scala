@@ -109,15 +109,7 @@ class PartitioningSpec extends SparkSpec {
       assert(n == docs.filter(col("lang") === "en").count())
       val plan = joined.queryExecution.executedPlan
       assert(plan.toString.contains("dynamicpruning"), plan.toString)
-      def flatten(p: org.apache.spark.sql.execution.SparkPlan):
-          Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          flatten(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          q +: flatten(q.plan)
-        case other => other +: other.children.flatMap(flatten)
-      }
-      val factScan = flatten(plan).collectFirst {
+      val factScan = PlanNodes(plan).collectFirst {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.metadata.get("Location").exists(_.contains("graft_dpp")) &&
             !f.metadata.get("Location").exists(_.contains("graft_dpp_dim")) => f

@@ -25,13 +25,7 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
-  /** Flatten the executed plan, descending through AQE wrappers and
-    * materialized query stages (their subtrees are not `children`). */
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-    case q: QueryStageExec        => q +: flatten(q.plan)
-    case other                    => other +: other.children.flatMap(flatten)
-  }
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = PlanNodes(p)
 
   /** A no-partition window is only scale-safe when its input cardinality is
     * bounded below it — by an aggregation (rows = groups) or a limit

@@ -102,10 +102,12 @@ class PropertySpec extends SparkSpec {
       tiles <- Gen.chooseNum(1, 9)
       vs <- Gen.listOfN(n, Gen.chooseNum(0, 7)) // heavy ties on purpose
     } yield (groups, tiles, vs)
-    samples(gen, 5).foreach { case (groups, tiles, vs) =>
+    var spanned = 0L
+    atWidth7(samples(gen, 5).foreach { case (groups, tiles, vs) =>
       val df = vs.zipWithIndex
         .map { case (v, i) => (s"g${i % groups}", v, i.toLong) }
         .toDF("g", "v", "id").repartition(5)
+      spanned = math.max(spanned, rangeSpan(df, $"g", $"v", $"id"))
       val w = Window.partitionBy($"g").orderBy($"v", $"id")
       val expect = df.withColumn("rn", row_number().over(w).cast("long"))
         .withColumn("tile", ntile(tiles).over(w))
@@ -114,7 +116,8 @@ class PropertySpec extends SparkSpec {
         Seq($"g"), Seq($"v", $"id"), tiles)
       assert(got.except(expect).isEmpty && expect.except(got).isEmpty,
         s"groups=$groups tiles=$tiles n=${vs.length}")
-    }
+    })
+    assert(spanned > 1, "no input spanned several range partitions")
   }
 
   test("prefixSum: two-phase scan equals the single cumulative window exactly") {
@@ -125,17 +128,20 @@ class PropertySpec extends SparkSpec {
       groups <- Gen.chooseNum(1, 4)
       vs <- Gen.listOfN(n, Gen.chooseNum(-5L, 20L)) // negatives too
     } yield (groups, vs)
-    samples(gen, 5).foreach { case (groups, vs) =>
+    var spanned = 0L
+    atWidth7(samples(gen, 5).foreach { case (groups, vs) =>
       val df = vs.zipWithIndex
         .map { case (v, i) => (s"g${i % groups}", v, i.toLong) }
         .toDF("g", "v", "id").repartition(5)
+      spanned = math.max(spanned, rangeSpan(df, $"g", $"v", $"id"))
       val w = Window.partitionBy($"g").orderBy($"v", $"id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val expect = df.withColumn("cs", sum($"v").over(w))
       val got = Ranks.prefixSum(df, Seq($"g"), Seq($"v", $"id"), $"v", "cs")
       assert(got.except(expect).isEmpty && expect.except(got).isEmpty,
         s"groups=$groups n=${vs.length}")
-    }
+    })
+    assert(spanned > 1, "no input spanned several range partitions")
   }
 
   test("quantiles: every reported quantile is the ceil(q*n)-th sorted value") {
@@ -144,9 +150,11 @@ class PropertySpec extends SparkSpec {
       n <- Gen.chooseNum(1, 90)
       vs <- Gen.listOfN(n, Gen.chooseNum(0, 9))
     } yield vs
-    samples(gen, 5).foreach { vs =>
+    var spanned = 0L
+    atWidth7(samples(gen, 5).foreach { vs =>
       val df = vs.zipWithIndex.map { case (v, i) => ("g", v, i.toLong) }
         .toDF("g", "v", "id").repartition(3)
+      spanned = math.max(spanned, rangeSpan(df, $"g", $"v", $"id"))
       val got = Ranks.quantiles(df, Seq("g"), "v", "id",
         Seq("q25" -> 0.25, "q50" -> 0.5, "q90" -> 0.9)).collect().head
       val sorted = vs.sorted
@@ -154,7 +162,8 @@ class PropertySpec extends SparkSpec {
       assert(got.getAs[Long]("n") === vs.length.toLong)
       assert(got.getAs[Int]("q25") === at(0.25) &&
         got.getAs[Int]("q50") === at(0.5) && got.getAs[Int]("q90") === at(0.9))
-    }
+    })
+    assert(spanned > 1, "no input spanned several range partitions")
   }
 
   test("BH two-phase equals the plain single-window formulation exactly") {

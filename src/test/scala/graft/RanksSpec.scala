@@ -6,9 +6,12 @@ import org.apache.spark.sql.functions._
 
 /** Two-phase rank/ntile must be value-identical to the built-in window
   * functions under a total order — including groups smaller than the tile
-  * count and group counts that don't divide evenly. */
+  * count and group counts that don't divide evenly. Every case runs at
+  * [[SparkSpec.atWidth7]], so the carries cross range partitions. */
 class RanksSpec extends SparkSpec {
   import spark.implicits._
+
+  override def withFixture(test: NoArgTest) = atWidth7(super.withFixture(test))
 
   // 3 uneven groups (sizes 103, 40, 1) with duplicate order values so the
   // id tiebreak is load-bearing, scattered over 7 input partitions
@@ -22,6 +25,8 @@ class RanksSpec extends SparkSpec {
       row_number().over(Window.partitionBy($"g").orderBy($"v", $"id")).cast("long"))
     val got = Ranks.rowNumber(df, Seq($"g"), Seq($"v", $"id")).drop("__n")
     assert(got.except(expect).isEmpty && expect.except(got).isEmpty)
+    assert(rangeSpan(df, $"g", $"v", $"id") > 1,
+      "the input fits one range partition: no carry is exercised")
   }
 
   test("rowNumber with no grouping matches a global row_number") {
@@ -125,27 +130,15 @@ class RanksSpec extends SparkSpec {
   }
 
   test("only the per-partition local rank windows the full data; offsets window on agg") {
-    import graft.functions.Stats
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec        => q +: flatten(q.plan)
-      // the persisted ranged frame's plan holds the range exchange
-      case m: InMemoryTableScanExec => m +: flatten(m.relation.cacheBuilder.cachedPlan)
-      case other                    => other +: other.children.flatMap(flatten)
-    }
-    val withP = df.withColumn("p", $"v" / 10.0)
+    // the persisted ranged frame's plan holds the range exchange
+    def flatten(p: org.apache.spark.sql.execution.SparkPlan) =
+      PlanNodes(p, intoCaches = true)
     // built lazily: each frame's caches last until the next action
     val outs = Seq[(String, () => org.apache.spark.sql.DataFrame)](
       "ntile" -> (() => Ranks.ntile(df, Seq($"g"), Seq($"v", $"id"), 2)),
-      "prefixSum" -> (() => Ranks.prefixSum(df, Seq($"g"), Seq($"v", $"id"), $"v")),
-      "bhAdjust" -> (() => Stats.bhAdjust(withP, "p", "id", partitionCols = Seq("g"))))
+      "prefixSum" -> (() => Ranks.prefixSum(df, Seq($"g"), Seq($"v", $"id"), $"v")))
     for ((name, build) <- outs) {
       val out = build()
       out.collect()
@@ -161,14 +154,6 @@ class RanksSpec extends SparkSpec {
         }
         assert(aggBelow,
           s"$name: window input must be an aggregate, not the fact table:\n$w")
-      }
-      if (name == "bhAdjust") {
-        // the rank and the running min share ONE ranged frame (several
-        // branches scan its cache: count each exchange once)
-        val ranges = nodes.collect {
-          case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
-        }.distinctBy(System.identityHashCode)
-        assert(ranges.size === 1, s"bhAdjust range exchanges:\n${ranges.mkString("\n")}")
       }
     }
   }

@@ -96,6 +96,32 @@ class StatsSpec extends SparkSpec {
     assert(math.abs(got(2) - 0.04) < 1e-12)
   }
 
+  test("bhAdjust plans one window per family: no range exchange, no __pid") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = (1 to 144).map(i => (i.toLong, s"f${i % 3}", (i * 37 % 101) / 101.0))
+      .toDF("id", "fam", "pval").repartition(7)
+    for (fams <- Seq(Seq("fam"), Nil)) atWidth7 {
+      val out = Stats.bhAdjust(df, "pval", "id", fams)
+      out.collect()
+      val nodes = PlanNodes(out.queryExecution.executedPlan, intoCaches = true)
+      val ranges = nodes.collect {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(ranges.isEmpty, s"$fams: range exchange in\n${ranges.mkString("\n")}")
+      assert(!nodes.exists(_.output.exists(_.name == "__pid")), s"$fams: __pid")
+      val windows = nodes.collect { case w: WindowExec => w }
+      assert(windows.nonEmpty, s"$fams: no window")
+      windows.foreach { w =>
+        assert(w.partitionSpec.map { case a: Attribute => a.name; case e => e.sql } === fams,
+          s"$fams: window not partitioned by the family keys:\n$w")
+      }
+    }
+  }
+
   test("BH padj preserves p-value order (property)") {
     val ps = (1 to 97).map(i => (i.toLong, (i * 2654435761L % 1000003) / 1000003.0))
     val out = Stats.bhAdjust(ps.toDF("id", "pval"), "pval", "id")

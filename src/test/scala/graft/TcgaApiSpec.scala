@@ -91,6 +91,33 @@ class TcgaApiSpec extends SparkSpec {
     }
   }
 
+  test("§3.3 KM: curves and tests share one cached subject frame, same results") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.functions.Survival
+    val goi = Seq("DEG10", "GENE1", "GENE2")
+    spark.catalog.clearCache()
+    val (curves, tests) = Tcga.kmByMedianExpression(t, goi)
+    val gotCurves = curves.collect().toSet
+    val gotTests = tests.collect().toSet
+    // the second sink reads the frame the first one cached
+    assert(PlanNodes(tests.queryExecution.executedPlan)
+        .exists(_.isInstanceOf[InMemoryTableScanExec]),
+      "the tests action recomputed the subject frame")
+    // reference: the same functions over a fresh, uncached subject frame
+    val refCurves = Survival.kmCurve(Tcga.medianSplit(t, goi, 2),
+        "gs", "time", "event")
+      .withColumn("gene_name", split(col("gs"), "\\|").getItem(0))
+      .withColumn("strat", split(col("gs"), "\\|").getItem(1))
+      .drop("gs")
+    val refTests = Survival.logRankBy(Tcga.medianSplit(t, goi, 2),
+      "gene_name", "strat", "time", "event")
+    assert(curves.columns.toSeq === refCurves.columns.toSeq)
+    assert(gotCurves === refCurves.collect().toSet)
+    assert(tests.columns.toSeq === refTests.columns.toSeq)
+    assert(gotTests === refTests.collect().toSet)
+    assert(gotTests.size === goi.size)
+  }
+
   test("drug cohort explodes nested treatments and semi-joins samples") {
     val tamox = Tcga.drugCohort(t.samples, Seq("Tamoxifen"))
     val all = t.samples.count()
