@@ -37,7 +37,12 @@ import org.apache.spark.storage.StorageLevel
   * [[persistForAction]] is the persist-plus-first-rule idiom, except that
   * an input its caller has ALREADY cached is used as is: the caller owns
   * that cache and its release, so a shared frame is not dropped after the
-  * first of its consumers' actions.
+  * first of its consumers' actions. Its caller is `Stats.bhAdjust`, whose
+  * plan reads its input twice (the p-value rows and the NULL-p union).
+  * An operator whose plan reads its input once persists nothing
+  * (`Survival.kmCurve` and `logRankBy`); a caller feeding such operators
+  * one expensive frame persists it once for all of them and releases it
+  * with [[releaseAfterConsumers]] (`Tcga.kmByMedianExpression`).
   *
   * CONCURRENCY CONTRACT: "the next action" means the next action on the
   * WHOLE session — the first rule cannot tell the consuming action from

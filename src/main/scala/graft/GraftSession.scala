@@ -20,6 +20,8 @@ import org.apache.spark.sql.SparkSession
   *    of the `GraftFunctions` table for SQL callers (`spark-sql`/JDBC
   *    users who never touch the Scala API). Scala code uses the typed
   *    Column constructors on `GraftFunctions` and needs no registration.
+  *  - `spark.sql.codegen.cache.maxEntries` (see `CodegenCacheEntries`),
+  *    set by [[harness]] too.
   *
   * `shufflePartitions` should track the deployment's total cores (the
   * driver harness uses its CPU count); at cluster scale prefer leaving
@@ -32,6 +34,18 @@ import org.apache.spark.sql.SparkSession
   * mains and the test suite build that configuration through [[harness]].
   */
 object GraftSession {
+
+  /** Size of Spark's JVM-wide generated-class cache (a static conf, read
+    * once when the first session in the JVM generates code; default 100).
+    * The cache is an LRU, so a working set larger than it misses on every
+    * entry. One round of `Tcga.differentialExpression` over 10 contrasts
+    * plus `Tcga.kmByMedianExpression` over 60 genes compiles ~180 distinct
+    * classes: at 100 entries every steady round recompiled 84 + 122 of
+    * them, at 1000 none (`CodegenMetrics`, local[4] on 4 cores, the
+    * perfbench seed-1 cohort, one session). Entries are keyed by the task
+    * thread's class loader too, so a new SparkContext in the same JVM
+    * compiles its executor-side classes once more. */
+  private val CodegenCacheEntries = 1000
 
   /** Configure `builder` with the engine's assumed settings. Call sites
     * add master/appName/cluster-manager settings themselves:
@@ -47,6 +61,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
     if (shufflePartitions > 0)
       b.config("spark.sql.shuffle.partitions", shufflePartitions)
     else b
@@ -63,12 +78,12 @@ object GraftSession {
       .getOrCreate()
 
   /** The harness session (Bench, Verify, the dev mains, the test suite):
-    * `local[cpus]`, shuffle width = `cpus`, UTC, UI off, and the warehouse
-    * pinned under /tmp — bk1's external bucketed tables touch the
-    * warehouse root, so no spark-warehouse dir is minted in the launch
-    * cwd. Unlike [[apply]] it registers no extensions and overrides no
-    * AQE or parquet defaults. Callers layer their own differences on the
-    * returned builder. */
+    * `local[cpus]`, shuffle width = `cpus`, UTC, UI off, the codegen cache
+    * size of [[apply]], and the warehouse pinned under /tmp — bk1's
+    * external bucketed tables touch the warehouse root, so no
+    * spark-warehouse dir is minted in the launch cwd. Unlike [[apply]] it
+    * registers no extensions and overrides no AQE or parquet defaults.
+    * Callers layer their own differences on the returned builder. */
   def harness(cpus: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -76,4 +91,5 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Kaplan–Meier product-limit estimator and log-rank test (reference:
@@ -9,13 +9,25 @@ import org.apache.spark.sql.functions._
   * surv_analysis_median_exp.R:129-155, drug_km_median_exp.R:103-117),
   * re-expressed as grouped aggregation + cumulative windows.
   *
-  * Scale: the heavy input (one row per subject) collapses to one row per
-  * (stratum, distinct time) in a single hash agg before any window runs, so
-  * the ordered windows sort only event-table-sized data per stratum.
+  * Plan shape: [[kmCurve]] and [[logRankBy]] each plan ONE shuffle
+  * exchange. The subject frame is hash-partitioned by its outer key (the
+  * stratum, or the test's group), and every later aggregate and window is
+  * keyed by that key plus more, so it needs no further exchange. Each
+  * reads its input once and persists nothing: a caller whose input is
+  * expensive and feeds several outputs persists it once for all of them
+  * (`Tcga.kmByMedianExpression`). The exchange carries one row per subject
+  * and a stratum (or group) sits in one task; on the TCGA paths that is
+  * one row per (gene of interest, sample).
+  *
+  * Subjects with a NULL stratum, group, time or event are dropped, as
+  * `survfit` drops NA rows.
   */
 object Survival {
 
   /** KM curve per stratum.
+    *
+    * Degenerate inputs: a stratum with no event contributes no row, so an
+    * all-censored (or empty) subject set gives an empty curve.
     *
     * @param df       one row per subject: (stratCol, timeCol, eventCol)
     * @param eventCol 1 = event (death), 0 = censored
@@ -26,27 +38,21 @@ object Survival {
     * @return per (stratum, death time): n_risk, n_event, n_censor,
     *         survival, se (Greenwood), ci_lo/ci_hi
     */
-  def kmCurve(df0: DataFrame, stratCol: String, timeCol: String,
+  def kmCurve(df: DataFrame, stratCol: String, timeCol: String,
       eventCol: String, confType: String = "log"): DataFrame = {
     require(confType == "log" || confType == "linear",
       s"confType must be log|linear, got $confType")
-    // the subject frame feeds the per-time agg AND the totals agg: persist
-    // so an expensive upstream (e.g. the VST pipeline) runs once; released
-    // after the caller's consuming action, or left to a caller that
-    // cached it already (Caches contract)
-    val df = graft.Caches.persistForAction(df0)
-    val perTime = df.groupBy(col(stratCol), col(timeCol)).agg(
-      sum(col(eventCol)).as("d"),
-      sum(lit(1) - col(eventCol)).as("c"))
-    val totals = df.groupBy(col(stratCol)).agg(count(lit(1)).as("n_total"))
-    val wPrev = Window.partitionBy(stratCol).orderBy(timeCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.partitionBy(stratCol).orderBy(timeCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // the one exchange: the per-time aggregate and the windows below are
+    // keyed by the stratum first, so they keep this partitioning
+    val perTime = complete(df, stratCol, timeCol, eventCol)
+      .repartition(col(stratCol))
+      .groupBy(col(stratCol), col(timeCol)).agg(
+        sum(col(eventCol)).as("d"),
+        sum(lit(1) - col(eventCol)).as("c"))
+    val byTime = Window.partitionBy(stratCol).orderBy(timeCol)
+    val wCum = byTime.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     perTime
-      .join(broadcast(totals), stratCol)
-      .withColumn("n_risk",
-        col("n_total") - coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
+      .withColumn("n_risk", atRisk(col("d") + col("c"), byTime))
       // ln(1 - d/n) only while d < n; once d == n survival is exactly 0.
       .withColumn("lnterm",
         when(col("d") < col("n_risk"), log(lit(1.0) - col("d") / col("n_risk"))))
@@ -89,11 +95,8 @@ object Survival {
 
   /** Two-group log-rank test. Returns one row:
     * (observed_a, expected_a, chi2, pvalue) where group "a" is the
-    * lexicographically-first stratum value.
-    *
-    * The at-risk table is evaluated on the pooled time grid so each group's
-    * cumulative removals (deaths + censors) are counted between pooled
-    * event times.
+    * lexicographically-first stratum value; see [[logRankBy]] for more
+    * than two strata and for the degenerate inputs that give no row.
     */
   def logRank(df: DataFrame, stratCol: String, timeCol: String,
       eventCol: String): DataFrame =
@@ -101,38 +104,38 @@ object Survival {
       .select(col("observed_a"), col("expected_a"), col("chi2"), col("pvalue"))
 
   /** Grouped two-group log-rank: one test per `groupCol` value (the per-gene
-    * fan-out of the KM pipeline, §3.3 run once per gene). Same math as
-    * `logRank`, with every stage additionally keyed by the group — the
-    * whole fan-out is ONE plan, no per-gene driver loop. */
-  def logRankBy(df0: DataFrame, groupCol: String, stratCol: String,
+    * fan-out of the KM pipeline, §3.3 run once per gene). The whole fan-out
+    * is ONE plan, no per-gene driver loop.
+    *
+    * Per group, stratum "a" is the lexicographically-first stratum and is
+    * tested against the pooled rest: with more than two strata the others
+    * are one comparison group (observed, expected and variance of "a" over
+    * the pooled at-risk table), not a k-sample test. The at-risk counts
+    * are evaluated on the group's pooled event times, so each stratum's
+    * removals (deaths + censors) are counted between them.
+    *
+    * Degenerate inputs give no row for the group: a group with one
+    * stratum (zero variance), and a group with no event (all censored).
+    */
+  def logRankBy(df: DataFrame, groupCol: String, stratCol: String,
       timeCol: String, eventCol: String): DataFrame = {
-    // four derivations of the subject frame (per-time, grid, strata,
-    // totals) — persist or the upstream pipeline runs 4x; released after
-    // the caller's consuming action, or left to a caller that cached it
-    // already (Caches contract)
-    val df = graft.Caches.persistForAction(df0)
-    val perTime = df.groupBy(col(groupCol), col(stratCol), col(timeCol)).agg(
-      sum(col(eventCol)).as("d"),
-      sum(lit(1) - col(eventCol)).as("c"))
-    val grid = df.select(col(groupCol), col(timeCol)).distinct()
-    val strata = df.select(col(groupCol), col(stratCol)).distinct()
-    val totals = df.groupBy(col(groupCol), col(stratCol)).agg(count(lit(1)).as("n_total"))
-    val wPrev = Window.partitionBy(groupCol, stratCol).orderBy(timeCol)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val full = strata.join(grid, groupCol)
-      .join(perTime, Seq(groupCol, stratCol, timeCol), "left")
-      .na.fill(0L, Seq("d", "c"))
-      .join(totals, Seq(groupCol, stratCol))
-      .withColumn("n_risk",
-        col("n_total") - coalesce(sum(col("d") + col("c")).over(wPrev), lit(0L)))
-    val wTime = Window.partitionBy(groupCol, timeCol)
-    val firstStrat = strata.groupBy(groupCol).agg(min(col(stratCol)).as("strat_a"))
-    val perTimePooled = full
-      .withColumn("d_tot", sum(col("d")).over(wTime))
-      .withColumn("n_tot", sum(col("n_risk")).over(wTime))
+    val group = Window.partitionBy(groupCol)
+    val isA = col(stratCol) === col("strat_a")
+    // the one exchange: the stratum-a window, the per-time aggregate and
+    // the at-risk windows are all keyed by the group first
+    val perTime = complete(df, groupCol, stratCol, timeCol, eventCol)
+      .repartition(col(groupCol))
+      .withColumn("strat_a", min(col(stratCol)).over(group))
+      .groupBy(col(groupCol), col(timeCol)).agg(
+        sum(when(isA, col(eventCol)).otherwise(lit(0L))).as("d"),
+        count(when(isA, lit(1))).as("r_a"),
+        sum(col(eventCol)).as("d_tot"),
+        count(lit(1)).as("r_tot"))
+    val byTime = group.orderBy(timeCol)
+    val perTimePooled = perTime
+      .withColumn("n_risk", atRisk(col("r_a"), byTime))
+      .withColumn("n_tot", atRisk(col("r_tot"), byTime))
       .filter(col("d_tot") > 0 && col("n_tot") > 1)
-      .join(broadcast(firstStrat), Seq(groupCol))
-      .filter(col(stratCol) === col("strat_a"))
       .withColumn("e_a", col("d_tot") * (col("n_risk") / col("n_tot")))
       .withColumn("v_a",
         col("d_tot") * (col("n_risk") / col("n_tot")) *
@@ -150,4 +153,18 @@ object Survival {
       .select(col(groupCol), col("observed_a"), col("expected_a"), col("chi2"),
         col("pvalue"))
   }
+
+  /** At risk at each of `byTime`'s distinct times: everything `removed`
+    * over the whole stratum (or group) minus what was removed before. The
+    * coalesce keeps the column non-nullable, as a count is. */
+  private def atRisk(removed: Column, byTime: WindowSpec): Column = {
+    def removedOver(from: Long, to: Long) =
+      coalesce(sum(removed).over(byTime.rowsBetween(from, to)), lit(0L))
+    removedOver(Window.unboundedPreceding, Window.unboundedFollowing) -
+      removedOver(Window.unboundedPreceding, -1)
+  }
+
+  /** The subjects with no NULL in `cols`. */
+  private def complete(df: DataFrame, cols: String*): DataFrame =
+    df.filter(cols.map(col(_).isNotNull).reduce(_ && _))
 }

@@ -1,5 +1,8 @@
 package graft.operators
 
+import javax.imageio.ImageIO
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,16 +26,29 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** javax.imageio's default stream cache is a TEMP FILE per call
-    * (`ImageIO.setUseCache(true)` is the JDK default): every
-    * `ImageIO.read`/`write`, even over an in-memory byte array, creates
-    * and deletes a disk-backed cache file. All payloads here are
-    * in-memory, so switch the JVM to the memory cache once per task —
-    * byte-identical encode/decode output, no filesystem I/O. The set is
-    * an idempotent static boolean write (racing tasks store the same
-    * value), guarded to skip the call once flipped. */
-  private def useMemoryImageCache(): Unit =
-    if (javax.imageio.ImageIO.getUseCache) javax.imageio.ImageIO.setUseCache(false)
+  /** javax.imageio's default stream cache is a TEMP FILE per call: every
+    * `ImageIO.read`/`write` over a plain byte stream creates and deletes a
+    * disk-backed cache file while `ImageIO.getUseCache` is on (the JDK
+    * default). All payloads here are in memory, so each call wraps its
+    * stream in a memory cache itself and leaves the JVM-global flag alone:
+    * the same bytes as the file-cached path, no filesystem I/O. */
+  private def readImage(bytes: Array[Byte]): java.awt.image.BufferedImage = {
+    val in = new MemoryCacheImageInputStream(new java.io.ByteArrayInputStream(bytes))
+    // ImageIO.read closes the stream once a reader takes it
+    val img = ImageIO.read(in)
+    if (img == null) in.close()
+    img
+  }
+
+  /** `img` encoded as PNG through a memory-cached stream (see
+    * [[readImage]]). */
+  private def pngBytes(img: java.awt.image.RenderedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(bos)
+    try ImageIO.write(img, "png", out)
+    finally out.close() // flushes into bos
+    bos.toByteArray
+  }
 
   /** Typed metadata carried beside every payload. */
   val mediaMetaType: StructType = StructType(Seq(
@@ -113,7 +129,6 @@ object Multimodal {
     val rdd = df.select(idCol.cast("long"), wCol.cast("int"), hCol.cast("int"),
         rgbCol.cast("int")).rdd
       .mapPartitions { it =>
-        useMemoryImageCache()
         it.map { r =>
           val (w, h, rgb) = (math.max(1, r.getInt(1)), math.max(1, r.getInt(2)),
             r.getInt(3))
@@ -128,9 +143,7 @@ object Multimodal {
             img.getRaster.getDataBuffer
               .asInstanceOf[java.awt.image.DataBufferInt].getData,
             rgb & 0xffffff)
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          Row(r.getLong(0), bos.toByteArray)
+          Row(r.getLong(0), pngBytes(img))
         }
       }
     spark.createDataFrame(rdd, schema)
@@ -155,12 +168,11 @@ object Multimodal {
     val spark = media.sparkSession
     val rdd = media.select(col("media_id").cast("long"), col("payload")).rdd
       .mapPartitions { it =>
-        useMemoryImageCache()
         it.map { r =>
           val id = r.getLong(0)
           val bytes = r.getAs[Array[Byte]](1)
           val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+            try readImage(bytes)
             catch { case _: Throwable => null }
           if (img == null) Row(id, false, null, null, null, null)
           else {
@@ -205,12 +217,10 @@ object Multimodal {
       StructField("payload", BinaryType)))
     val rdd = media.select(col("media_id").cast("long"), col("payload")).rdd
       .mapPartitions { it =>
-        useMemoryImageCache()
         it.map { r =>
           val id = r.getLong(0)
           val img =
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
+            try readImage(r.getAs[Array[Byte]](1))
             catch { case _: Throwable => null }
           if (img == null) Row(id, null)
           else {
@@ -221,9 +231,7 @@ object Multimodal {
               java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
             g.drawImage(img, 0, 0, w, h, null)
             g.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            Row(id, bos.toByteArray)
+            Row(id, pngBytes(out))
           }
         }
       }
@@ -366,7 +374,6 @@ object Multimodal {
     val spark = media.sparkSession
     val rdd = media.select(col("media_id").cast("long"), col("payload")).rdd
       .mapPartitions { it =>
-        useMemoryImageCache()
         // DCT basis for N=32, built once per task: cos((2x+1)·u·π/64)
         val N = 32
         val cosT = Array.tabulate(N, N)((u, x) =>
@@ -374,8 +381,7 @@ object Multimodal {
         it.map { r =>
           val id = r.getLong(0)
           val img =
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
+            try readImage(r.getAs[Array[Byte]](1))
             catch { case _: Throwable => null }
           if (img == null) Row(id, false, null)
           else {

@@ -33,6 +33,7 @@ class GraftSessionSpec extends SparkSpec {
     val sc = spark.sparkContext
     assert(sc.master == "local[4]")
     assert(sc.getConf.get("spark.ui.enabled") == "false")
+    assert(sc.getConf.get("spark.sql.codegen.cache.maxEntries") == "1000")
     assert(spark.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:") == "/tmp/graft_warehouse")
     // runtime confs apply to the shared session through getOrCreate

@@ -46,13 +46,13 @@ class JobBudgetSpec extends SparkSpec {
     assert(n <= 19, s"differentialExpression ran $n Spark jobs")
   }
 
-  test("kmByMedianExpression's curves and tests stay within 24 jobs") {
+  test("kmByMedianExpression's curves and tests stay within 16 jobs") {
     val n = jobs {
       val (curves, tests) = Tcga.kmByMedianExpression(t,
         Seq("DEG10", "DEG20", "GENE1", "GENE2"))
       sink(curves)
       sink(tests)
     }
-    assert(n <= 24, s"kmByMedianExpression ran $n Spark jobs")
+    assert(n <= 16, s"kmByMedianExpression ran $n Spark jobs")
   }
 }

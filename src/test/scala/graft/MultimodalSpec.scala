@@ -100,6 +100,18 @@ class MultimodalSpec extends SparkSpec {
     bos.toByteArray
   }
 
+  test("the image codecs leave ImageIO's JVM-global cache flag alone") {
+    val df = Seq((1L, pngBytes(8, 8, 0x336699)), (2L, Array[Byte](1, 2, 3)))
+      .toDF("media_id", "payload")
+    Multimodal.decodeImageFeatures(df).collect()
+    Multimodal.resizeImage(df, 4, 4).collect()
+    Multimodal.phash64(df).collect()
+    Multimodal.renderSolidPng(Seq((1L, 3, 2, 0xff0000)).toDF("id", "w", "h", "rgb"),
+      col("id"), col("w"), col("h"), col("rgb")).collect()
+    // the JDK default; a task that flips it changes every ImageIO user
+    assert(javax.imageio.ImageIO.getUseCache)
+  }
+
   test("decodeWavFeatures: real WAV parse — rate, duration, RMS of a square wave") {
     // 8000 Hz, 4000 samples (500 ms) of a full-scale square wave: rms = 1
     val square = Array.tabulate(4000)(i =>

@@ -53,6 +53,105 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** A survival subject: (group, stratum, time, event). */
+  private type Subj = (String, Option[String], Long, Long)
+
+  test("Survival: kmCurve and logRankBy equal a plain-Scala reference at widths 1 and 7") {
+    // per group: one to three strata, a few NULL-stratum rows, times drawn
+    // from 1..6 so strata tie at one time and some times only censor
+    val groupGen = for {
+      k <- Gen.chooseNum(1, 3)
+      n <- Gen.chooseNum(2, 14)
+      rows <- Gen.listOfN(n, Gen.zip(
+        Gen.frequency(8 -> Gen.chooseNum(0, k - 1).map(i => Option("ABC".substring(i, i + 1))),
+          1 -> Gen.const(Option.empty[String])),
+        Gen.chooseNum(1L, 6L), Gen.oneOf(0L, 1L)))
+    } yield rows
+    val gen = Gen.listOfN(4, groupGen).map(_.zipWithIndex.flatMap { case (rows, g) =>
+      rows.map { case (st, t, e) => (s"g$g", st, t, e) }
+    })
+    // every sample also holds: a three-stratum group with ties across strata
+    // at t = 2 and a censor-only time (t = 3), a one-stratum group, NULL strata
+    val fixed: Seq[Subj] = Seq(
+      ("w3", Some("A"), 2L, 1L), ("w3", Some("B"), 2L, 1L), ("w3", Some("C"), 2L, 1L),
+      ("w3", Some("A"), 3L, 0L), ("w3", Some("C"), 3L, 0L), ("w3", Some("B"), 4L, 1L),
+      ("w3", Some("A"), 5L, 1L), ("w3", Some("C"), 1L, 1L), ("w3", None, 2L, 1L),
+      ("w1", Some("A"), 1L, 1L), ("w1", Some("A"), 2L, 0L), ("w1", Some("A"), 4L, 1L),
+      ("w1", None, 3L, 1L))
+
+    /** KM rows per (stratum, event time): the product-limit and Greenwood
+      * sums over the subjects at risk, counted directly. */
+    def kmRef(subj: Seq[Subj]): Map[(String, Long), (Long, Long, Long, Double, Double)] =
+      subj.collect { case (g, Some(st), t, e) => (s"$g|$st", t, e) }.groupBy(_._1)
+        .toSeq.flatMap { case (key, rows) =>
+          var surv = 1.0
+          var gw = 0.0
+          rows.map(_._2).distinct.sorted.flatMap { t =>
+            val n = rows.count(_._2 >= t).toLong
+            val d = rows.count(r => r._2 == t && r._3 == 1L).toLong
+            val c = rows.count(r => r._2 == t && r._3 == 0L).toLong
+            if (d >= n) surv = 0.0
+            else if (d > 0) { surv *= 1.0 - d.toDouble / n; gw += d.toDouble / (n * (n - d)) }
+            if (d > 0) Some((key, t) -> (n, d, c, surv, if (surv == 0.0) 0.0 else surv * math.sqrt(gw)))
+            else None
+          }
+        }.toMap
+
+    /** Log-rank per group: the first stratum against the pooled rest. */
+    def logRankRef(subj: Seq[Subj]): Map[String, (Long, Double, Double, Double)] =
+      subj.collect { case (g, Some(st), t, e) => (g, st, t, e) }.groupBy(_._1)
+        .toSeq.flatMap { case (g, rows) =>
+          val a = rows.map(_._2).min
+          var (o, ex, v) = (0L, 0.0, 0.0)
+          rows.map(_._3).distinct.sorted.foreach { t =>
+            val n = rows.count(_._3 >= t).toDouble
+            val na = rows.count(r => r._2 == a && r._3 >= t).toDouble
+            val d = rows.count(r => r._3 == t && r._4 == 1L).toDouble
+            if (d > 0 && n > 1) {
+              o += rows.count(r => r._2 == a && r._3 == t && r._4 == 1L)
+              ex += d * na / n
+              v += d * (na / n) * (1 - na / n) * (n - d) / (n - 1)
+            }
+          }
+          if (v > 0) {
+            val chi2 = (o - ex) * (o - ex) / v
+            Some(g -> (o, ex, chi2,
+              org.apache.commons.math3.special.Erf.erfc(math.sqrt(chi2) / math.sqrt(2.0))))
+          } else None
+        }.toMap
+
+    def close(x: Double, y: Double, tol: Double = 1e-9) =
+      math.abs(x - y) <= tol * math.max(1.0, math.abs(y))
+    def check(subj: Seq[Subj]): Unit = {
+      val df = subj.toDF("grp", "strat", "time", "event")
+      val curve = Survival.kmCurve(
+          df.withColumn("gs", when($"strat".isNotNull, concat_ws("|", $"grp", $"strat"))),
+          "gs", "time", "event").collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getDouble(5), r.getDouble(6))).toMap
+      val kRef = kmRef(subj)
+      assert(curve.keySet == kRef.keySet, subj)
+      kRef.foreach { case (k, (n, d, c, s, se)) =>
+        val (gn, gd, gc, gs, gse) = curve(k)
+        assert((gn, gd, gc) == (n, d, c) && close(gs, s) && close(gse, se), s"$k in $subj")
+      }
+      val tests = Survival.logRankBy(df, "grp", "strat", "time", "event").collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3),
+          r.getDouble(4))).toMap
+      val lRef = logRankRef(subj)
+      assert(tests.keySet == lRef.keySet, subj)
+      lRef.foreach { case (g, (o, ex, chi2, p)) =>
+        val (go, gex, gchi2, gp) = tests(g)
+        // the p-value's erfc is a 1.5e-7 polynomial
+        assert(go == o && close(gex, ex) && close(gchi2, chi2) && math.abs(gp - p) < 3e-7,
+          s"$g in $subj")
+      }
+    }
+    val inputs = samples(gen, 6).map(_ ++ fixed)
+    withConf("spark.sql.shuffle.partitions" -> "1")(inputs.foreach(check))
+    atWidth7(inputs.foreach(check))
+  }
+
   test("ntile(2): bucket sizes differ by at most 1") {
     samples(Gen.chooseNum(1, 60), 6).foreach { n =>
       val df = (1 to n).map(i => ("g", i)).toDF("g", "v")

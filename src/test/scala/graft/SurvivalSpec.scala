@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+
 import graft.functions.Survival
 
 class SurvivalSpec extends SparkSpec {
@@ -92,5 +95,44 @@ class SurvivalSpec extends SparkSpec {
     val r2 = Survival.logRank(split, "strat", "time", "event").collect().head
     assert(r2.getAs[Double]("chi2") > 10.0)
     assert(r2.getAs[Double]("pvalue") < 0.01)
+  }
+
+  test("degenerate inputs: all censored gives no curve and no test; one stratum no test") {
+    val censored = Seq(("g", "a", 1L, 0L), ("g", "a", 2L, 0L), ("g", "b", 2L, 0L),
+      ("g", "b", 3L, 0L)).toDF("grp", "strat", "time", "event")
+    assert(Survival.kmCurve(censored, "strat", "time", "event").count() == 0)
+    assert(Survival.logRankBy(censored, "grp", "strat", "time", "event").count() == 0)
+    // "one" has a single stratum (zero variance), "two" a real comparison
+    val mixed = Seq(("one", "a", 1L, 1L), ("one", "a", 2L, 1L), ("one", "a", 3L, 0L),
+      ("two", "a", 1L, 1L), ("two", "b", 2L, 1L), ("two", "b", 3L, 1L))
+      .toDF("grp", "strat", "time", "event")
+    val tests = Survival.logRankBy(mixed, "grp", "strat", "time", "event")
+      .select("grp").as[String].collect().toSeq
+    assert(tests == Seq("two"))
+    assert(Survival.logRank(mixed.filter($"grp" === "one"), "strat", "time", "event")
+      .count() == 0)
+  }
+
+  test("kmCurve and logRankBy plan one shuffle exchange and persist nothing of their own") {
+    val input = (1 to 60).map(i => (s"g${i % 3}", if (i % 2 == 0) "a" else "b",
+        (i * 7 % 11).toLong, (i % 3 min 1).toLong))
+      .toDF("grp", "strat", "time", "event").persist()
+    try {
+      input.count()
+      val inputCache = input.queryExecution.withCachedData
+        .collectFirst { case r: InMemoryRelation => r.cacheBuilder }.get
+      Seq(Survival.kmCurve(input, "strat", "time", "event"),
+          Survival.logRankBy(input, "grp", "strat", "time", "event")).foreach { out =>
+        out.collect()
+        val nodes = PlanNodes(out.queryExecution.executedPlan)
+        val exchanges = nodes.collect { case e: Exchange => e }
+        assert(exchanges.size == 1 && exchanges.head.isInstanceOf[ShuffleExchangeExec],
+          out.queryExecution.executedPlan)
+        // the only cache read is the caller's input
+        val scans = nodes.collect { case m: InMemoryTableScanExec => m }
+        assert(scans.size == 1 && (scans.head.relation.cacheBuilder eq inputCache),
+          out.queryExecution.executedPlan)
+      }
+    } finally input.unpersist()
   }
 }
