@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import org.apache.spark.storage.StorageLevel
 
 /** Cache-lifetime discipline for the library's internal `persist()` calls.
   *
@@ -21,10 +20,12 @@ import org.apache.spark.storage.StorageLevel
   *    session. The usual one-action consumers (a write, a count, a
   *    collect) pay nothing and leak nothing. A caller that runs several
   *    actions over the same returned frame recomputes after the first —
-  *    correct (the plans are deterministic, `repartitionByRange`
-  *    boundaries included, because repeated actions on one DataFrame
-  *    reuse its physical RDD), just uncached; such callers should persist
-  *    the *returned* frame themselves.
+  *    correct, just uncached; such callers should persist the *returned*
+  *    frame themselves. `operators.Ranks` is the exception: its stitch
+  *    needs one range-partitioned copy for both of its branches, so it
+  *    reads its cache's relation directly, and a later action rebuilds
+  *    that cache, which then lives until the returned frame is
+  *    garbage-collected.
   *  - [[releaseAfterConsumers]] — once every listed consumer frame has
   *    fed a completed action (the action's plan holds the consumer's
   *    plan). For an operator returning several frames over one shared
@@ -34,15 +35,17 @@ import org.apache.spark.storage.StorageLevel
   *    caller that consumes only some of the consumers keeps the cache,
   *    and its listener, until [[clearCaches]].
   *
-  * [[persistForAction]] is the persist-plus-first-rule idiom, except that
-  * an input its caller has ALREADY cached is used as is: the caller owns
-  * that cache and its release, so a shared frame is not dropped after the
-  * first of its consumers' actions. Its caller is `Stats.bhAdjust`, whose
-  * plan reads its input twice (the p-value rows and the NULL-p union).
-  * An operator whose plan reads its input once persists nothing
-  * (`Survival.kmCurve` and `logRankBy`); a caller feeding such operators
-  * one expensive frame persists it once for all of them and releases it
-  * with [[releaseAfterConsumers]] (`Tcga.kmByMedianExpression`).
+  * `api.Tcga` has two persist sites:
+  *  - `differentialExpression` persists its NB-GLM cells (read by the
+  *    dispersion-prior collect and by the fit) under
+  *    [[releaseAfterAction]], registered after the prior's collect;
+  *  - the one KM tail under `kmByMedianExpression` and `drugKmFanOut`
+  *    persists its subject frame (read by the curves and by the tests)
+  *    under [[releaseAfterConsumers]].
+  * Every other library persist names its rule at its call site. An
+  * operator whose plan reads its input once persists nothing
+  * (`Stats.bhAdjust`, `Survival.kmCurve` and `logRankBy`), and leaves a
+  * cache its caller made in place.
   *
   * CONCURRENCY CONTRACT: "the next action" means the next action on the
   * WHOLE session — the first rule cannot tell the consuming action from
@@ -74,16 +77,6 @@ object Caches {
       pending.isEmpty
     }
   }
-
-  /** `df` persisted and released after the next action, or `df` itself
-    * when its caller already cached it (the caller owns that cache). */
-  def persistForAction(df: DataFrame): DataFrame =
-    if (df.storageLevel != StorageLevel.NONE) df
-    else {
-      val p = df.persist()
-      releaseAfterAction(p)
-      p
-    }
 
   // leaf writer commands (`saveAsTable`, non-file V1 sources) hold their
   // query as an inner child, not a child

@@ -69,10 +69,7 @@ object Tcga {
       goi: Seq[String] = Nil): DataFrame = {
     val spark = t.expression.sparkSession
     import spark.implicits._
-    val cond = t.samples
-      .withColumn("cond", factor(col(conditionCol), levels))
-      .filter(col("cond").isNotNull)
-      .select(col("barcode"), col("cond"))
+    val cond = conditions(t, conditionCol, levels)
     val expr0 = prefilterGenes(t.expression)
     val sf = Normalization.sizeFactors(expr0, "gene_id", "barcode", "count")
     // surrogate ids: the typed NB fit groups by a long key. A 60-bit
@@ -100,9 +97,7 @@ object Tcga {
       .join(broadcast(t.genes), "gene_id")
     // goi restriction BEFORE the BH adjustment: `results(data[keep,])`
     // (vital_status_DESeq.R:88-89) computes padj over the subset only
-    val selected =
-      if (goi.isEmpty) named
-      else named.filter(col("gene_name").isin(goi.map(_.asInstanceOf[Any]): _*))
+    val selected = if (goi.isEmpty) named else named.filter(inGoi(goi))
     Stats.bhAdjust(selected, "pvalue", "gene_id", partitionCols = Seq("contrast"))
       .withColumn("p_signif", Stats.signifBand(col("padj")))
       .select(col("gene_id"), col("gene_name"), col("contrast"),
@@ -115,15 +110,9 @@ object Tcga {
     * vital_status_DESeq.R:130), plus F5 banding on BH-adjusted p. */
   def wilcoxonByGene(t: TcgaTables, conditionCol: String,
       levels: (String, String), goi: Seq[String] = Nil): DataFrame = {
-    val vst = normalizedCounts(prefilterGenes(t.expression))
-    val vstNamed = vst.join(broadcast(t.genes), "gene_id")
-    val selected =
-      if (goi.isEmpty) vstNamed
-      else vstNamed.filter(col("gene_name").isin(goi.map(_.asInstanceOf[Any]): _*))
-    val cond = t.samples
-      .withColumn("cond", factor(col(conditionCol), Seq(levels._1, levels._2)))
-      .filter(col("cond").isNotNull)
-      .select(col("barcode"), col("cond"))
+    val vst = namedVst(t)
+    val selected = if (goi.isEmpty) vst else vst.filter(inGoi(goi))
+    val cond = conditions(t, conditionCol, Seq(levels._1, levels._2))
     val long = selected.join(cond, "barcode")
       .select(col("gene_name"), col("cond"), col("vst"))
     val wil = Stats.wilcoxon(long, "gene_name", "cond", "vst", levels._1, levels._2)
@@ -154,7 +143,7 @@ object Tcga {
   def wideCounts(t: TcgaTables, goi: Seq[String]): DataFrame = {
     val vst = normalizedCounts(t.expression)
       .join(broadcast(t.genes), "gene_id")
-      .filter(col("gene_name").isin(goi.map(_.asInstanceOf[Any]): _*))
+      .filter(inGoi(goi))
     vst.groupBy("barcode").pivot("gene_name", goi).agg(first(col("vst")))
   }
 
@@ -164,7 +153,7 @@ object Tcga {
       groups: Seq[String]): DataFrame = {
     val vst = normalizedCounts(t.expression)
       .join(broadcast(t.genes), "gene_id")
-      .filter(col("gene_name").isin(goi.map(_.asInstanceOf[Any]): _*))
+      .filter(inGoi(goi))
       .join(t.samples.select(col("barcode"),
         factor(col(conditionCol), groups).as("grp")), "barcode")
       .filter(col("grp").isNotNull)
@@ -177,73 +166,30 @@ object Tcga {
   }
 
   /** §3.3 — KM survival stratified by median expression: per gene of
-    * interest, samples split LOW/HIGH at the median VST (E1 ntile), curves
-    * via D10, log-rank via D11 — all genes in one plan.
-    *
-    * Both outputs read ONE persisted subject frame ([[medianSplit]], one
-    * row per (gene of interest, sample): bounded by goi × samples), so the
-    * prefilter → size factors → VST → ntile chain runs once for the two
-    * sinks. The cache is released once both `curves` and `tests` have fed
-    * a completed action; a caller that consumes only one of them keeps it
-    * until `Caches.clearCaches` (see [[graft.Caches]]).
+    * interest, samples split LOW/HIGH at the median VST (E1 ntile; VST
+    * normalized over all samples), curves via D10, log-rank via D11 — all
+    * genes in one plan, through the KM tail shared with [[drugKmFanOut]]
+    * ([[kmTail]]: one persisted subject frame feeds both outputs,
+    * released once both have fed a completed action).
     *
     * @return (curves, tests): curves keyed by (gene_name, strat); tests one
-    *         row per gene_name with chi2/pvalue
+    *         row per gene_name (the leading column) with chi2/pvalue
     */
-  def kmByMedianExpression(t: TcgaTables, goi: Seq[String],
-      tiles: Int = 2): (DataFrame, DataFrame) = {
-    val strat = medianSplit(t, goi, tiles).persist()
-    val curves = Survival.kmCurve(strat, "gs", "time", "event")
-      .withColumn("gene_name", split(col("gs"), "\\|").getItem(0))
-      .withColumn("strat", split(col("gs"), "\\|").getItem(1))
-      .drop("gs")
-    val tests = Survival.logRankBy(strat, "gene_name", "strat", "time", "event")
-    graft.Caches.releaseAfterConsumers(Seq(curves, tests), strat)
-    (curves, tests)
-  }
-
-  /** The subject frame [[kmByMedianExpression]] shares between its
-    * outputs: per gene of interest and sample, `(barcode, gene_name, vst,
-    * tile, strat, time, event)` plus the curve key `gs` =
-    * `gene_name|strat`. Not persisted. */
-  private[graft] def medianSplit(t: TcgaTables, goi: Seq[String],
-      tiles: Int): DataFrame = {
-    val subjects = t.samples
-      .withColumn("status",
-        when(col("vital_status") === "Alive", 1).otherwise(2)) // F7
-      .withColumn("time",
-        when(col("vital_status") === "Alive",
-          col("paper_days_to_last_followup").cast("double"))
-          .otherwise(col("days_to_death").cast("double"))) // F8+F9
-      .filter(col("time").isNotNull && col("vital_status").isNotNull) // B7
-      .select(col("barcode"), col("time"), (col("status") - 1).cast("long").as("event"))
-    val vst = normalizedCounts(prefilterGenes(t.expression))
-      .join(broadcast(t.genes), "gene_id")
-      .filter(col("gene_name").isin(goi.map(_.asInstanceOf[Any]): _*))
-    val w = Window.partitionBy(col("gene_name")).orderBy(col("vst"), col("barcode"))
-    vst
-      .withColumn("tile", ntile(tiles).over(w))
-      .filter(col("tile") === 1 || col("tile") === tiles) // keep extremes (E1)
-      .withColumn("strat", when(col("tile") === 1, "LOW").otherwise("HIGH")) // F11
-      .join(subjects, "barcode")
-      .withColumn("gs", concat_ws("|", col("gene_name"), col("strat")))
+  def kmByMedianExpression(t: TcgaTables, goi: Seq[String]): (DataFrame, DataFrame) = {
+    val (curves, tests) =
+      kmTail(namedVst(t).filter(inGoi(goi)), survivalSubjects(t.samples), Nil)
+    (curves, tests.select("gene_name", "observed_a", "expected_a", "chi2", "pvalue"))
   }
 
   /** H4 — boxplot-ready long frame `(gene, cond, counts)` (the melt at
     * vital_status_DESeq.R:118-126 feeding ggplot, A7): the engine's
     * deliverable for the plot sink. */
   def boxplotFrame(t: TcgaTables, conditionCol: String, levels: Seq[String],
-      goi: Seq[String]): DataFrame = {
-    val cond = t.samples
-      .withColumn("cond", factor(col(conditionCol), levels))
-      .filter(col("cond").isNotNull)
-      .select(col("barcode"), col("cond"))
-    normalizedCounts(prefilterGenes(t.expression))
-      .join(broadcast(t.genes), "gene_id")
-      .filter(col("gene_name").isin(goi.map(_.asInstanceOf[Any]): _*))
-      .join(cond, "barcode")
+      goi: Seq[String]): DataFrame =
+    namedVst(t)
+      .filter(inGoi(goi))
+      .join(conditions(t, conditionCol, levels), "barcode")
       .select(col("gene_name").as("gene"), col("cond"), col("vst").as("counts"))
-  }
 
   /** F12 — the all-ns plot-fallback branch (BRCA_path_stage_DESeq.R:182-201):
     * driver-side control flow on one collected scalar, never a fact-path
@@ -255,15 +201,16 @@ object Tcga {
   /** N2 — the per-drug-class KM fan-out (drug_km_median_exp.R:38-130's
     * outer loop) as ONE plan: samples are tagged with every drug class
     * they match (a class-table join over the exploded treatments, so a
-    * patient on two classes contributes to both cohorts), then the KM
-    * median-split pipeline runs once partitioned by (drug_class, gene).
+    * patient on two classes contributes to both cohorts), normalized per
+    * cohort, then split at the median inside each (drug_class, gene)
+    * cohort through the KM tail shared with [[kmByMedianExpression]]
+    * ([[kmTail]], with `drug_class` as the cohort key: one persisted
+    * subject frame, released once both outputs have fed a completed
+    * action).
     *
-    * As in [[kmByMedianExpression]], both outputs read one persisted
-    * subject frame (one row per (class, gene of interest, cohort sample)),
-    * released once both have fed a completed action; consuming only one
-    * output keeps it until `Caches.clearCaches`.
-    *
-    * @return (curves, tests) with a leading `drug_class` column
+    * @return (curves, tests): curves keyed by (drug_class, gene_name,
+    *         strat); tests one row per (drug_class, gene_name), the two
+    *         trailing columns
     */
   def drugKmFanOut(t: TcgaTables, drugClasses: Seq[String],
       goi: Seq[String]): (DataFrame, DataFrame) = {
@@ -281,21 +228,15 @@ object Tcga {
       .join(matches, substring(col("submitter_id"), 1, 12) === col("patient")) // C4
       .select(col("drug_class"), t.samples("barcode").as("barcode"),
         col("vital_status"), col("days_to_death"), col("paper_days_to_last_followup"))
-    val subjects = cohortSamples
-      .withColumn("time",
-        when(col("vital_status") === "Alive",
-          col("paper_days_to_last_followup").cast("double"))
-          .otherwise(col("days_to_death").cast("double")))
-      .filter(col("time").isNotNull && col("vital_status").isNotNull)
-      .withColumn("event",
-        when(col("vital_status") === "Alive", 0L).otherwise(1L))
-      .select(col("drug_class"), col("barcode"), col("time"), col("event"))
+    val subjects = survivalSubjects(cohortSamples, "drug_class")
     // per-cohort normalization, as the reference does (vst on the SUBSET,
     // drug_km_median_exp.R:61-67): expression replicated per matching
     // class, then prefilter + geomeans + size factors keyed by
     // (class, gene) / (class, sample) via composite keys. The dispersion
     // trend pools across cohorts (documented deviation: more stable for
     // small cohorts; per-cohort sf is the load-bearing normalization).
+    // Every cell's (class, sample) is one subject, so the tail's median
+    // split sees exactly the cohort's subjects.
     val cohortCells = t.expression
       .join(subjects.select(col("drug_class"), col("barcode")), "barcode")
       .withColumn("cg", concat_ws("|", col("drug_class"), col("gene_id")))
@@ -305,29 +246,8 @@ object Tcga {
       .drop("tot")
     val vst = Normalization.vstTrend(cohortCells, "cg", "cb", "count")
       .join(broadcast(t.genes), "gene_id")
-      .filter(col("gene_name").isin(goi.map(_.asInstanceOf[Any]): _*))
-    // median split INSIDE each (class, gene) cohort, as the reference does;
-    // one persisted subject frame feeds both outputs (see the scaladoc)
-    val strat = vst.join(subjects, Seq("drug_class", "barcode"))
-      .withColumn("tile", ntile(2).over(Window
-        .partitionBy(col("drug_class"), col("gene_name"))
-        .orderBy(col("vst"), col("barcode"))))
-      .withColumn("strat", when(col("tile") === 1, "LOW").otherwise("HIGH"))
-      .withColumn("cgs",
-        concat_ws("|", col("drug_class"), col("gene_name"), col("strat")))
-      .withColumn("cg", concat_ws("|", col("drug_class"), col("gene_name")))
-      .persist()
-    val curves = Survival.kmCurve(strat, "cgs", "time", "event")
-      .withColumn("drug_class", split(col("cgs"), "\\|").getItem(0))
-      .withColumn("gene_name", split(col("cgs"), "\\|").getItem(1))
-      .withColumn("strat", split(col("cgs"), "\\|").getItem(2))
-      .drop("cgs")
-    val tests = Survival.logRankBy(strat, "cg", "strat", "time", "event")
-      .withColumn("drug_class", split(col("cg"), "\\|").getItem(0))
-      .withColumn("gene_name", split(col("cg"), "\\|").getItem(1))
-      .drop("cg")
-    graft.Caches.releaseAfterConsumers(Seq(curves, tests), strat)
-    (curves, tests)
+      .filter(inGoi(goi))
+    kmTail(vst, subjects, Seq("drug_class"))
   }
 
   /** N1+B5+D12+F3+C4 — drug-cohort restriction (drug_km_median_exp.R:36-56):
@@ -343,5 +263,79 @@ object Tcga {
       .distinct()
     samples.join(patients,
       substring(col("submitter_id"), 1, 12) === col("patient"), "left_semi")
+  }
+
+  /** `gene_name` is one of the genes of interest (B4). */
+  private def inGoi(goi: Seq[String]): Column =
+    col("gene_name").isin(goi.map(_.asInstanceOf[Any]): _*)
+
+  /** F6 — the condition frame `(barcode, cond)`: samples whose
+    * `conditionCol` is one of `levels`. */
+  private def conditions(t: TcgaTables, conditionCol: String,
+      levels: Seq[String]): DataFrame =
+    t.samples
+      .withColumn("cond", factor(col(conditionCol), levels))
+      .filter(col("cond").isNotNull)
+      .select(col("barcode"), col("cond"))
+
+  /** D1 → D2+D6 → gene names: the prefiltered VST counts of every sample,
+    * `(gene_id, barcode, vst, gene_name)`. Callers apply their own goi
+    * filter. */
+  private[graft] def namedVst(t: TcgaTables): DataFrame =
+    normalizedCounts(prefilterGenes(t.expression))
+      .join(broadcast(t.genes), "gene_id")
+
+  /** F7–F9 + B7 — survival subjects `(keys…, barcode, time, event)`: time
+    * is days to death, or to the last follow-up for a living patient;
+    * event is 1 for a death; rows with no time or vital status drop. */
+  private[graft] def survivalSubjects(samples: DataFrame, keys: String*): DataFrame = {
+    val alive = col("vital_status") === "Alive"
+    samples
+      .withColumn("time",
+        when(alive, col("paper_days_to_last_followup").cast("double"))
+          .otherwise(col("days_to_death").cast("double")))
+      .filter(col("time").isNotNull && col("vital_status").isNotNull)
+      .select((keys :+ "barcode").map(col) :+ col("time") :+
+        when(alive, 0L).otherwise(1L).as("event"): _*)
+  }
+
+  /** E1 + F11 — the subject frame of the KM tail: `vst` (one row per
+    * (cohort `keys`, gene_name, barcode)) split LOW/HIGH at the median
+    * of each (keys, gene_name) cohort (ntile(2) over (vst, barcode)),
+    * joined to `subjects` on (keys, barcode), with the test key `gk` =
+    * `keys|gene_name` and the curve key `gs` = `gk|strat`. The split's
+    * window is partitioned by `gk`, the key the tests group by, so the
+    * tests need no exchange of their own over this frame. Not persisted. */
+  private[graft] def medianStrata(vst: DataFrame, subjects: DataFrame,
+      keys: Seq[String]): DataFrame =
+    vst
+      .withColumn("gk", concat_ws("|", (keys :+ "gene_name").map(col): _*))
+      .withColumn("strat", when(ntile(2).over(Window.partitionBy(col("gk"))
+        .orderBy(col("vst"), col("barcode"))) === 1, "LOW").otherwise("HIGH"))
+      .join(subjects, keys :+ "barcode")
+      .withColumn("gs", concat_ws("|", col("gk"), col("strat")))
+
+  /** §3.3's KM tail, the one copy behind [[kmByMedianExpression]] (no
+    * cohort keys) and [[drugKmFanOut]] (`drug_class`): the
+    * [[medianStrata]] subject frame is persisted once (bounded by
+    * cohorts × genes of interest × samples), curves run per (keys,
+    * gene_name, strat) and log-rank tests per (keys, gene_name) over it,
+    * and both outputs get their keys split back out as trailing columns.
+    * The cache is released once both outputs have fed a completed action;
+    * a caller that consumes only one keeps it until `Caches.clearCaches`
+    * (see [[graft.Caches]]). */
+  private def kmTail(vst: DataFrame, subjects: DataFrame,
+      keys: Seq[String]): (DataFrame, DataFrame) = {
+    val strata = medianStrata(vst, subjects, keys).persist()
+    def unkey(df: DataFrame, key: String, names: Seq[String]): DataFrame =
+      names.zipWithIndex.foldLeft(df) { case (d, (n, i)) =>
+        d.withColumn(n, split(col(key), "\\|").getItem(i))
+      }.drop(key)
+    val curves = unkey(Survival.kmCurve(strata, "gs", "time", "event"),
+      "gs", keys :+ "gene_name" :+ "strat")
+    val tests = unkey(Survival.logRankBy(strata, "gk", "strat", "time", "event"),
+      "gk", keys :+ "gene_name")
+    graft.Caches.releaseAfterConsumers(Seq(curves, tests), strata)
+    (curves, tests)
   }
 }

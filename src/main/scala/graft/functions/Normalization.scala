@@ -16,35 +16,32 @@ object Normalization {
 
   /** Median-of-ratios size factors.
     *
+    * The median is exact: each sample's ratios are buffered, one per gene
+    * with a positive count, so the buffer is bounded by the gene count
+    * (~60k for a whole transcriptome) at any data volume.
+    *
     * @param counts long-form fact `(geneCol, sampleCol, countCol)`
     * @return one row per sample: `(sampleCol, size_factor)`
     */
   def sizeFactors(counts: DataFrame, geneCol: String, sampleCol: String,
-      countCol: String, exact: Boolean = true): DataFrame = {
+      countCol: String): DataFrame = {
     // Per-gene geometric mean across samples (counts > 0, as DESeq2 does
     // with its log-based geomean).
     val geomean = counts
       .filter(col(countCol) > 0)
       .groupBy(geneCol)
       .agg(exp(avg(log(col(countCol)))).as("geomean"))
-    // Per-sample median of count/geomean ratios. exact=true buffers each
-    // sample's ratios for a true median (oracle-matching; fine while
-    // |genes| fits a task). exact=false is the 100 TB path: a bounded-
-    // memory t-digest sketch whose ~1e-4-relative-error median is
-    // statistically identical for normalization purposes.
-    // (A rank-window exact median — row_number + count windows + an extra
-    // agg — was benched and rejected: same shuffle volume, and the added
-    // window pass costs more than the off-codegen ObjectHashAggregate
-    // saves at per-sample group sizes.)
-    val median =
-      if (exact) expr("percentile(ratio, 0.5)")
-      else percentile_approx(col("ratio"), lit(0.5), lit(10000))
+    // Per-sample median of count/geomean ratios. (A rank-window median —
+    // row_number + count windows + an extra agg — was benched and
+    // rejected: same shuffle volume, and the added window pass costs more
+    // than the off-codegen ObjectHashAggregate saves at per-sample group
+    // sizes.)
     counts
       .filter(col(countCol) > 0)
       .join(broadcast(geomean), geneCol)
       .withColumn("ratio", col(countCol) / col("geomean"))
       .groupBy(sampleCol)
-      .agg(median.as("size_factor"))
+      .agg(expr("percentile(ratio, 0.5)").as("size_factor"))
   }
 
   /** Parametric dispersion-trend VST — DESeq2's closed-form variance-

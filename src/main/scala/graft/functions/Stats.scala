@@ -28,15 +28,14 @@ object Stats {
     * `local[4]` with a 3 GB heap (one global family of (id, p) rows from
     * `spark.range`, written to a `noop` sink, steady runs): 10⁶ rows in
     * 2.6–3.5 s and 10⁷ rows in 17–21 s, with no disk spill at either
-    * size; a family far past 10⁷ hypotheses is out of scope. Every call
-    * runs 3 Spark jobs: 0.6–0.9 s at reference size (10 families × 396
-    * rows).
+    * size; a family far past 10⁷ hypotheses is out of scope. At reference
+    * size (10 families × 396 rows, some p NULL, `local[4]`, `noop` sink) a
+    * call runs 2 Spark jobs in 0.37–0.42 s (steady runs).
     *
-    * The input is persisted — the NULL-p branch reads it a second time,
-    * and for d3 its upstream is the NB-GLM fit — and released after the
-    * caller's next action, unless the caller already cached it (see
-    * [[graft.Caches.persistForAction]]). The persist is bounded by the
-    * hypothesis count, not the fact volume.
+    * NULL p-values (R's `p.adjust` keeps NA as NA) ride the same window:
+    * `desc` sorts them last, so the non-NULL ranks do not move; the family
+    * size is `count(p)`, which skips them; and their `padj` is NULL. The
+    * input is read once and nothing is persisted.
     *
     * @param df            input with a p-value column
     * @param pCol          p-value column name
@@ -46,25 +45,19 @@ object Stats {
     */
   def bhAdjust(df: DataFrame, pCol: String, tieBreak: String,
       partitionCols: Seq[String] = Nil): DataFrame = {
-    val all = graft.Caches.persistForAction(df)
     val w = Window.partitionBy(partitionCols.map(col): _*)
       .orderBy(col(pCol).desc, col(tieBreak).desc)
     val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // R's p.adjust keeps NA as NA: null p-values take no BH rank, inflate
-    // no group size, and come back with a NULL padj (unranked, they would
-    // otherwise soak up the smallest ranks and least() would hand them
-    // the group minimum)
-    all.filter(col(pCol).isNotNull)
+    df
       // descending row number → ascending BH rank → the BH quotient q
       .withColumn("__desc", row_number().over(running).cast("long"))
-      .withColumn("__n", count(lit(1)).over(
+      .withColumn("__n", count(col(pCol)).over(
         w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .withColumn("__rank", col("__n") - col("__desc") + 1)
       .withColumn("__q", least(lit(1.0), col(pCol) * col("__n") / col("__rank")))
-      .withColumn("padj", min(col("__q")).over(running))
+      // least() skips NULLs, so a NULL p has q = 1: the guard keeps it NULL
+      .withColumn("padj", when(col(pCol).isNotNull, min(col("__q")).over(running)))
       .select((df.columns.toIndexedSeq :+ "padj").map(col): _*)
-      .unionByName(all.filter(col(pCol).isNull)
-        .withColumn("padj", lit(null).cast("double")))
   }
 
   /** Exact CDF of the Mann–Whitney U statistic under H0 for group sizes

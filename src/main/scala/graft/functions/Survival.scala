@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * keyed by that key plus more, so it needs no further exchange. Each
   * reads its input once and persists nothing: a caller whose input is
   * expensive and feeds several outputs persists it once for all of them
-  * (`Tcga.kmByMedianExpression`). The exchange carries one row per subject
-  * and a stratum (or group) sits in one task; on the TCGA paths that is
-  * one row per (gene of interest, sample).
+  * (the KM tail under `Tcga.kmByMedianExpression` and `drugKmFanOut`).
+  * The exchange carries one row per subject and a stratum (or group) sits
+  * in one task; on the TCGA paths that is one row per (cohort, gene of
+  * interest, sample).
   *
   * Subjects with a NULL stratum, group, time or event are dropped, as
   * `survfit` drops NA rows.
@@ -29,19 +30,17 @@ object Survival {
     * Degenerate inputs: a stratum with no event contributes no row, so an
     * all-censored (or empty) subject set gives an empty curve.
     *
+    * The 95% CI is `survfit`'s default `conf.type = "log"`:
+    * S·exp(±1.96·se(log S)) with se(log S) = √Σd/(n(n−d)), the upper bound
+    * clipped at 1, and NULL once the curve hits 0.
+    *
     * @param df       one row per subject: (stratCol, timeCol, eventCol)
     * @param eventCol 1 = event (death), 0 = censored
-    * @param confType CI transform — "log" (the `survfit` default:
-    *                 S·exp(±1.96·se(log S)) with se(log S) = √Σd/(n(n−d)),
-    *                 upper clipped at 1, NULL once the curve hits 0) or
-    *                 "linear" (S ± 1.96·se clamped to [0,1])
     * @return per (stratum, death time): n_risk, n_event, n_censor,
     *         survival, se (Greenwood), ci_lo/ci_hi
     */
   def kmCurve(df: DataFrame, stratCol: String, timeCol: String,
-      eventCol: String, confType: String = "log"): DataFrame = {
-    require(confType == "log" || confType == "linear",
-      s"confType must be log|linear, got $confType")
+      eventCol: String): DataFrame = {
     // the one exchange: the per-time aggregate and the windows below are
     // keyed by the stratum first, so they keep this partitioning
     val perTime = complete(df, stratCol, timeCol, eventCol)
@@ -66,16 +65,10 @@ object Survival {
       .withColumn("selog", sqrt(sum(col("gwterm")).over(wCum)))
       .withColumn("se",
         when(col("extinct") === 1, 0.0).otherwise(col("survival") * col("selog")))
-      .withColumn("ci_lo",
-        if (confType == "log")
-          when(col("extinct") === 1, lit(null).cast("double"))
-            .otherwise(col("survival") * exp(lit(-1.96) * col("selog")))
-        else greatest(lit(0.0), col("survival") - lit(1.96) * col("se")))
-      .withColumn("ci_hi",
-        if (confType == "log")
-          when(col("extinct") === 1, lit(null).cast("double"))
-            .otherwise(least(lit(1.0), col("survival") * exp(lit(1.96) * col("selog"))))
-        else least(lit(1.0), col("survival") + lit(1.96) * col("se")))
+      .withColumn("ci_lo", when(col("extinct") === 1, lit(null).cast("double"))
+        .otherwise(col("survival") * exp(lit(-1.96) * col("selog"))))
+      .withColumn("ci_hi", when(col("extinct") === 1, lit(null).cast("double"))
+        .otherwise(least(lit(1.0), col("survival") * exp(lit(1.96) * col("selog")))))
       .filter(col("d") > 0)
       .select(col(stratCol), col(timeCol), col("n_risk"),
         col("d").as("n_event"), col("c").as("n_censor"),

@@ -12,16 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object Graphs {
 
-  /** Release a per-round frame's storage blocks — cache-entry OR
-    * localCheckpoint blocks (plain `Dataset.unpersist` is a no-op on the
-    * latter; see [[graft.Caches.releaseBlocks]], r16 ADVICE). The round
-    * loops below call it strictly on the PREVIOUS round's frame after
-    * the next round's eager checkpoint has materialized — checkpoint
-    * blocks are not recomputable, so this must never run on a frame a
-    * live plan still references. */
-  private def releaseRound(df: DataFrame): Unit =
-    graft.Caches.releaseBlocks(df)
-
   /** PageRank with a FIXED iteration count (power iteration, damping
     * `d`): pr₀(v) = 1/N; prₜ₊₁(v) = (1−d)/N + d·Σ_{u→v} prₜ(u)/outdeg(u).
     * Dangling nodes (no out-edges) simply leak their mass — the formula
@@ -201,7 +191,7 @@ object Graphs {
     * Exchanges over an RDD scan and the isolated catalog query dropped
     * 5.4 → 2.6–2.9 s (local[32], sf0.1; oracle hash unchanged).
     * Previous rounds' blocks are dropped as each round lands (via
-    * [[releaseRound]] — `Dataset.unpersist` alone is a no-op on a
+    * `Caches.releaseBlocks` — `Dataset.unpersist` alone is a no-op on a
     * checkpointed frame), so peak storage is two edge frames; the FINAL
     * round's blocks outlive the function (the caller's action reads
     * them) and are reclaimed by the ContextCleaner once the frame is
@@ -233,7 +223,10 @@ object Graphs {
       val next = e.join(keep.withColumnRenamed("id", "a"), Seq("a"), "leftsemi")
         .join(keep.withColumnRenamed("id", "b"), Seq("b"), "leftsemi")
         .select("a", "b").localCheckpoint(eager = true)
-      releaseRound(last)
+      // the PREVIOUS round only, and only once `next` has materialized:
+      // checkpoint blocks are not recomputable, so a frame a live plan
+      // still reads must keep them
+      graft.Caches.releaseBlocks(last)
       e = next
       last = next
       i += 1
@@ -264,7 +257,7 @@ object Graphs {
     * guide §3.3's truncate-with-localCheckpoint case; isolated catalog
     * query 3.4 → 1.7–1.9 s (local[32], sf0.1; oracle hash unchanged).
     * Previous rounds' blocks are dropped as each round lands (via
-    * [[releaseRound]] — plain `unpersist` is a no-op on checkpointed
+    * `Caches.releaseBlocks` — plain `unpersist` is a no-op on checkpointed
     * frames): peak storage is two node-sized frames plus the adjacency;
     * the final round's blocks are ContextCleaner-reclaimed after the
     * caller's action. Same durability trade as [[pageRank]]/[[kCore]]:
@@ -298,7 +291,8 @@ object Graphs {
         .withColumn("dist", lit(d.toLong))
       // eager localCheckpoint = materialize + truncate lineage (see doc)
       val next = visited.union(fresh).localCheckpoint(eager = true)
-      releaseRound(last)
+      // the PREVIOUS round only, once `next` has materialized (see kCore)
+      graft.Caches.releaseBlocks(last)
       visited = next
       last = next
       d += 1

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,7 +52,16 @@ object Ranks {
       .withColumn("__pid", spark_partition_id())
       .persist()
     graft.Caches.releaseAfterAction(r)
-    (r, g)
+    // Both stitch branches scan the cache's own relation, not a lookup by
+    // plan. A lookup misses once the cache is released (a second action,
+    // or a second output built before the first one's action), and in the
+    // self-join's fresh copy of a checkpoint leaf that records its
+    // partitioning (a checkpointed `spark.range`). The branch that misses
+    // runs its own range exchange with its own boundary sample, and its
+    // `__pid`s disagree with the other branch's. Read directly, a released
+    // cache is rebuilt by the next action, and that copy lives until the
+    // returned frame is garbage-collected.
+    (GraftSqlBridge.ofRows(df.sparkSession, r.queryExecution.withCachedData), g)
   }
 
   /** An exactly associative aggregate the core carries: `part` over one

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.api.Tcga
 
-/** Spark-job budgets for the two TCGA reference operations. At reference
+/** Spark-job budgets for the TCGA reference operations. At reference
   * size a job costs scheduling, planning and codegen rather than data
   * work, so the job count of an operation is its main fixed cost. The
   * budgets are the counts measured on [[TcgaFixtures]] with every result
@@ -54,5 +54,15 @@ class JobBudgetSpec extends SparkSpec {
       sink(tests)
     }
     assert(n <= 16, s"kmByMedianExpression ran $n Spark jobs")
+  }
+
+  test("drugKmFanOut's curves and tests stay within 22 jobs") {
+    val n = jobs {
+      val (curves, tests) = Tcga.drugKmFanOut(t,
+        Seq("Tamoxifen", "Chemotherapy"), Seq("DEG10", "DEG20", "GENE1", "GENE2"))
+      sink(curves)
+      sink(tests)
+    }
+    assert(n <= 22, s"drugKmFanOut ran $n Spark jobs")
   }
 }

@@ -295,7 +295,6 @@ class PropertySpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.enabled")
     val saved = confs.map(k => k -> spark.conf.get(k))
     var spanned = 0L
-    // one action per side: bhAdjust's caches last one action
     def sorted(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq
       .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3))))
       .sortBy(_._1)

@@ -111,6 +111,43 @@ class RanksSpec extends SparkSpec {
       expectGlobal.except(gotGlobal).isEmpty)
   }
 
+  test("rowNumber and prefixSum over localCheckpoint and RDD inputs match a driver-side rank, twice") {
+    // more rows per input partition than the range exchange samples, so
+    // the boundaries depend on the sample: a stitch branch that re-ran the
+    // range exchange instead of reading the persisted ranged frame would
+    // disagree with it on __pid and misrank rows. Both outputs are built
+    // before the first action, whose end releases both ranged caches.
+    val n = 40000
+    val base = spark.range(0, n, 1, 4).select($"id",
+      (($"id" * 7919) % n).as("k"), ($"id" % 5).as("g")) // k: a permutation
+    val rows = base.as[(Long, Long, Long)].collect()
+    val rank = rows.sortBy(_._2).zipWithIndex.map { case (r, i) => r._1 -> (i + 1L) }.toMap
+    val cumsum = rows.groupBy(_._3).values.flatMap { grp =>
+      grp.sortBy(_._2).scanLeft((0L, 0L)) { case ((_, acc), r) => (r._1, acc + r._2) }.tail
+    }.toMap
+    val checkpointed = base.localCheckpoint(eager = true)
+    val inputs = Seq("localCheckpoint" -> checkpointed,
+      "createDataFrame(rdd)" -> spark.createDataFrame(base.rdd, base.schema))
+    try withConf("spark.sql.shuffle.partitions" -> "16") {
+      for ((kind, in) <- inputs) {
+        val ranked = Ranks.rowNumber(in, Nil, Seq($"k")).select($"id", $"rn")
+        val summed = Ranks.prefixSum(in, Seq($"g"), Seq($"k"), $"k", "cs")
+          .select($"id", $"cs")
+        // the second action runs after the first released the ranged cache
+        for (action <- Seq("first", "repeated")) {
+          val gotRank = ranked.as[(Long, Long)].collect()
+          val badRank = gotRank.count { case (id, rn) => rank(id) != rn }
+          assert(gotRank.length == n && badRank == 0,
+            s"$kind, $action action: $badRank wrong ranks")
+          val gotSum = summed.as[(Long, Long)].collect()
+          val badSum = gotSum.count { case (id, cs) => cumsum(id) != cs }
+          assert(gotSum.length == n && badSum == 0,
+            s"$kind, $action action: $badSum wrong running sums")
+        }
+      }
+    } finally graft.Caches.releaseBlocks(checkpointed)
+  }
+
   test("prefixSum accepts value expressions and keeps the input columns") {
     val got = Ranks.prefixSum(df, Nil, Seq($"id"), $"v" * 2, "cs")
     assert(got.columns.toSeq === df.columns.toSeq :+ "cs")

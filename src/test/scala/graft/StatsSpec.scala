@@ -98,10 +98,14 @@ class StatsSpec extends SparkSpec {
 
   test("bhAdjust plans one window per family: no range exchange, no __pid") {
     import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.Union
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
-    val df = (1 to 144).map(i => (i.toLong, s"f${i % 3}", (i * 37 % 101) / 101.0))
+    // every 11th p is NULL, so the NULL rows are planned, not pruned
+    val df = (1 to 144).map(i => (i.toLong, s"f${i % 3}",
+        Option((i * 37 % 101) / 101.0).filter(_ => i % 11 != 0)))
       .toDF("id", "fam", "pval").repartition(7)
     for (fams <- Seq(Seq("fam"), Nil)) atWidth7 {
       val out = Stats.bhAdjust(df, "pval", "id", fams)
@@ -113,6 +117,11 @@ class StatsSpec extends SparkSpec {
       }
       assert(ranges.isEmpty, s"$fams: range exchange in\n${ranges.mkString("\n")}")
       assert(!nodes.exists(_.output.exists(_.name == "__pid")), s"$fams: __pid")
+      // the input is read once: no cache of bhAdjust's own, no NULL-p union
+      assert(!out.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]),
+        s"$fams: bhAdjust cached its input")
+      assert(!out.queryExecution.optimizedPlan.exists(_.isInstanceOf[Union]),
+        s"$fams: bhAdjust plans a union")
       val windows = nodes.collect { case w: WindowExec => w }
       assert(windows.nonEmpty, s"$fams: no window")
       windows.foreach { w =>

@@ -43,11 +43,6 @@ class SurvivalSpec extends SparkSpec {
     assert(rows(2).getAs[Double]("survival") == 0.0)
     assert(rows(2).isNullAt(rows(2).fieldIndex("ci_lo")))
     assert(rows(2).isNullAt(rows(2).fieldIndex("ci_hi")))
-    // linear mode keeps the old clamped behavior
-    val lin = Survival.kmCurve(df, "strat", "time", "event", confType = "linear")
-      .orderBy("time").collect()
-    val s1 = lin(0).getAs[Double]("survival"); val e1 = lin(0).getAs[Double]("se")
-    assert(math.abs(lin(0).getAs[Double]("ci_lo") - math.max(0.0, s1 - 1.96 * e1)) < 1e-12)
   }
 
   test("KM survival is non-increasing within [0,1] (property)") {

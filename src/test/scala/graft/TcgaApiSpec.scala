@@ -103,14 +103,17 @@ class TcgaApiSpec extends SparkSpec {
     assert(PlanNodes(tests.queryExecution.executedPlan)
         .exists(_.isInstanceOf[InMemoryTableScanExec]),
       "the tests action recomputed the subject frame")
-    // reference: the same functions over a fresh, uncached subject frame
-    val refCurves = Survival.kmCurve(Tcga.medianSplit(t, goi, 2),
-        "gs", "time", "event")
+    // reference: the same functions over a fresh, uncached copy of the
+    // KM tail's subject frame
+    spark.catalog.clearCache()
+    def strata = Tcga.medianStrata(
+      Tcga.namedVst(t).filter(col("gene_name").isin(goi: _*)),
+      Tcga.survivalSubjects(t.samples), Nil)
+    val refCurves = Survival.kmCurve(strata, "gs", "time", "event")
       .withColumn("gene_name", split(col("gs"), "\\|").getItem(0))
       .withColumn("strat", split(col("gs"), "\\|").getItem(1))
       .drop("gs")
-    val refTests = Survival.logRankBy(Tcga.medianSplit(t, goi, 2),
-      "gene_name", "strat", "time", "event")
+    val refTests = Survival.logRankBy(strata, "gene_name", "strat", "time", "event")
     assert(curves.columns.toSeq === refCurves.columns.toSeq)
     assert(gotCurves === refCurves.collect().toSet)
     assert(tests.columns.toSeq === refTests.columns.toSeq)

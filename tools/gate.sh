@@ -26,6 +26,18 @@ fi
 # the benchmark's own build calls GraftSession.apply and the graft.api
 # surface: break either and the gate fails here, not at benchmark time
 (cd perfbench && sbt -batch compile)
+# output drift: the benchmark's tcga and corpus runs check every sink
+# against the digests of the first run at the seed, and the traced tcga run
+# goes through perfbench's Replica (the API compositions step by step), so
+# a refactor that moves one bit of an output fails here
+for run in "tcga 0" "tcga 1" "corpus_pretrain 0"; do
+  set -- $run
+  python3 perfbench/run.py --workload "$1" --seed 1 --seconds 1 --trace "$2" |
+    python3 -c 'import json, sys
+recs = [json.loads(l) for l in sys.stdin if l.strip()]
+sys.exit(0 if recs and all(r["correct"] for r in recs) else 1)' ||
+    { echo "perfbench $1 (trace $2): an output failed its check or digest" >&2; exit 1; }
+done
 # the benchmark's own unit tests: generator determinism, stats, span self-time
 python3 -m unittest discover -s perfbench/tests
 sbt -batch test
