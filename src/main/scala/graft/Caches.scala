@@ -47,6 +47,15 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (`Stats.bhAdjust`, `Survival.kmCurve` and `logRankBy`), and leaves a
   * cache its caller made in place.
   *
+  * Checkpointed frames are not caches. An eager `localCheckpoint` that
+  * the library returns is the frame's data, since its lineage is cut:
+  * `Components.connectedComponents`' labels, and `Corpus.pretrainingRun`'s
+  * `cleaned` and `deduped` stages. No release rule applies, and
+  * [[clearCaches]] does not see them. Their blocks live until the caller
+  * drops every frame that reads them (Spark's `ContextCleaner` frees them
+  * then) or calls [[releaseBlocks]]. `pretrainingRun` releases the
+  * labels itself once its `deduped` checkpoint holds their outcome.
+  *
   * CONCURRENCY CONTRACT: "the next action" means the next action on the
   * WHOLE session — the first rule cannot tell the consuming action from
   * an unrelated one. A session shared by concurrent threads (a notebook

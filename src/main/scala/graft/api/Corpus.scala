@@ -107,19 +107,30 @@ object Corpus {
       textCol: String = "text", shingleN: Int = 3, numHashes: Int = 6,
       bandsOf: Int = 2, jaccardMin: Double = 0.5,
       maxBucket: Int = 1000, keeperBy: Option[Column] = None): DataFrame = {
-    // fail fast: the component walk's min-label algebra needs NUMERIC
-    // ids — a string id would cast to null deep inside an executor task
+    requireIntegralId(docs, idCol, "dedupClusters")
+    val pairs = nearDuplicates(docs, idCol, textCol, shingleN, numHashes,
+      bandsOf, jaccardMin, maxBucket)
+    electKeepers(graft.operators.Components
+      .connectedComponents(pairs, "doc_a", "doc_b"), docs, idCol, keeperBy)
+  }
+
+  // fail fast: the component walk's min-label algebra needs NUMERIC ids —
+  // a string id would cast to null deep inside an executor task
+  private def requireIntegralId(docs: DataFrame, idCol: String,
+      caller: String): Unit = {
     val idType = docs.schema(idCol).dataType
     require(Seq(org.apache.spark.sql.types.LongType,
         org.apache.spark.sql.types.IntegerType,
         org.apache.spark.sql.types.ShortType,
         org.apache.spark.sql.types.ByteType).contains(idType),
-      s"dedupClusters: $idCol must be an integral id column, got ${idType.sql}" +
+      s"$caller: $idCol must be an integral id column, got ${idType.sql}" +
         " (hash or zip non-numeric ids first)")
-    val pairs = nearDuplicates(docs, idCol, textCol, shingleN, numHashes,
-      bandsOf, jaccardMin, maxBucket)
-    val comps = graft.operators.Components
-      .connectedComponents(pairs, "doc_a", "doc_b")
+  }
+
+  /** [[dedupClusters]]' keeper election over the component labels
+    * `comps(id, comp)`. */
+  private def electKeepers(comps: DataFrame, docs: DataFrame, idCol: String,
+      keeperBy: Option[Column]): DataFrame =
     keeperBy match {
       case None =>
         comps.select(col("id").as(idCol), col("comp"),
@@ -135,7 +146,6 @@ object Corpus {
           .select(col("id").as(idCol), col("comp"),
             (col("__rk") === 1).as("keeper"))
     }
-  }
 
   /** Deterministic corpus subsample (SM1): keep iff
     * `hash60(id) < rate·2^60` — reproducible across reruns, layouts and
@@ -646,9 +656,12 @@ object Corpus {
       .agg(count(lit(1)).as("n_ref_matches"), min("ref_id").as("first_ref"))
   }
 
-  /** The staged frames of [[pretrainingRun]] — each builds lazily on the
-    * previous, so a caller can act on any stage (or just the last) and
-    * audit the funnel with plain counts. */
+  /** The staged frames of [[pretrainingRun]]. `cleaned` and `deduped`
+    * hold data: each is an eager `localCheckpoint`, materialized before
+    * [[pretrainingRun]] returns, so no later action re-scores or
+    * re-deduplicates the raw documents. `decontaminated`, `mixed` and
+    * `packed` are lazy plans over `deduped`; a caller can act on any
+    * stage (or just the last) and audit the funnel with plain counts. */
   final case class PretrainStages(cleaned: DataFrame, deduped: DataFrame,
       decontaminated: DataFrame, mixed: DataFrame, packed: DataFrame)
 
@@ -659,8 +672,23 @@ object Corpus {
     * ≥ `contaminationMax` overlap) → temperature language mixture
     * ([[Sampling.temperatureResample]]) → token-budget packing
     * (`Sharding.packByBudget`). Every stage is the library's own
-    * oracle-checked operator; the composition itself is lazy — nothing
-    * runs until the caller acts on a stage.
+    * oracle-checked operator.
+    *
+    * The call itself runs the first two stages. It checkpoints the
+    * cleaned corpus, runs the near-dup component walk over it (an edge
+    * count and a checkpointed label frame), checkpoints the deduped
+    * corpus and then drops the labels. Every later stage reads those two
+    * checkpoints, so its plan starts there. Decontamination, mixture and
+    * packing run only when the caller acts on a stage.
+    *
+    * The two checkpoints' blocks live until the caller drops `cleaned`,
+    * `deduped` and every frame derived from them; Spark's `ContextCleaner`
+    * then frees them, or `Caches.releaseBlocks` on both frees them at
+    * once. At scale this puts the cleaned corpus, every kept document's
+    * text, into executor block storage, and, like the component walk's
+    * labels (see [[graft.operators.Components]]), a block lost with its
+    * executor is not recomputed: lineage is truncated, so a later action
+    * on the stage fails.
     *
     * @param evalFlag  rows marking the EVAL/held-out reference split;
     *                  kept docs sharing ≥ `contaminationMax` of their
@@ -672,12 +700,22 @@ object Corpus {
       jaccardMin: Double = 0.5, contaminationMax: Double = 0.5,
       alpha: Double = 0.7, budget: Double = 1.0,
       packBudget: Long = 4096L): PretrainStages = {
+    requireIntegralId(docs, idCol, "pretrainingRun")
+    // c1 and c2 feed every later stage, and the sink re-plans the whole
+    // chain: the checkpoints cut each plan there, so the quality-scoring
+    // scan of `docs` and the dedup run once
     val c1 = cleaned(docs, idCol, textCol)
       .select(docs.columns.map(col).toSeq: _*)
-    val losers = dedupClusters(c1, idCol, textCol, jaccardMin = jaccardMin,
-        keeperBy = Some(length(col(textCol))))
+      .localCheckpoint(eager = true)
+    val labels = graft.operators.Components.connectedComponents(
+      nearDuplicates(c1, idCol, textCol, jaccardMin = jaccardMin),
+      "doc_a", "doc_b")
+    val losers = electKeepers(labels, c1, idCol, Some(length(col(textCol))))
       .filter(!col("keeper")).select(idCol)
     val c2 = c1.join(losers, Seq(idCol), "left_anti")
+      .localCheckpoint(eager = true)
+    // c2 holds the election's outcome; no plan reads the labels again
+    graft.Caches.releaseBlocks(labels)
     // contamination normalizes its id column to "doc_id" — rename back
     // so a non-default idCol joins correctly
     val leaked = contamination(c2.filter(!evalFlag).unionByName(docs.filter(evalFlag)),

@@ -61,8 +61,8 @@ object Tcga {
     * @param contrasts    extra pairwise contrasts (D4); empty → the default
     *                     last-vs-first `results()` contrast
     * @param goi          genes of interest by `gene_name` (B4); empty → all
-    * @return long results `(gene_id, gene_name, contrast, base_mean,
-    *         log2fc, lfc_se, stat, pvalue, padj, p_signif)`
+    * @return long results `(gene_id, gene_name, contrast, log2fc,
+    *         lfc_se, stat, pvalue, padj, p_signif)`
     */
   def differentialExpression(t: TcgaTables, conditionCol: String,
       levels: Seq[String], contrasts: Seq[(String, String)] = Nil,
@@ -305,11 +305,16 @@ object Tcga {
     * joined to `subjects` on (keys, barcode), with the test key `gk` =
     * `keys|gene_name` and the curve key `gs` = `gk|strat`. The split's
     * window is partitioned by `gk`, the key the tests group by, so the
-    * tests need no exchange of their own over this frame. Not persisted. */
+    * tests need no exchange of their own over this frame. Not persisted.
+    * A key value that contains `|` would split back into the wrong
+    * columns, so the plan fails on it with an error naming the value. */
   private[graft] def medianStrata(vst: DataFrame, subjects: DataFrame,
       keys: Seq[String]): DataFrame =
     vst
-      .withColumn("gk", concat_ws("|", (keys :+ "gene_name").map(col): _*))
+      .withColumn("gk", concat_ws("|", (keys :+ "gene_name").map(k =>
+        when(col(k).contains("|"), raise_error(concat(
+          lit(s"KM key $k contains '|', the key separator: "), col(k))))
+          .otherwise(col(k))): _*))
       .withColumn("strat", when(ntile(2).over(Window.partitionBy(col("gk"))
         .orderBy(col("vst"), col("barcode"))) === 1, "LOW").otherwise("HIGH"))
       .join(subjects, keys :+ "barcode")

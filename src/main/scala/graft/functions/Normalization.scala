@@ -25,8 +25,13 @@ object Normalization {
     */
   def sizeFactors(counts: DataFrame, geneCol: String, sampleCol: String,
       countCol: String): DataFrame = {
-    // Per-gene geometric mean across samples (counts > 0, as DESeq2 does
-    // with its log-based geomean).
+    // Per-gene geometric mean over the gene's POSITIVE counts. DESeq2
+    // differs in two ways: it drops every gene with a zero in any sample
+    // (its log geomean is -Inf), and it takes exp(median(log ratio)), so
+    // an even gene count averages the two middle ratios geometrically,
+    // not arithmetically. On perfbench's seed-1 cohort (400 x 100, 6 of
+    // the 360 kept genes with a zero) the two rules' size factors differ
+    // by up to 0.82%, median 0.17%.
     val geomean = counts
       .filter(col(countCol) > 0)
       .groupBy(geneCol)

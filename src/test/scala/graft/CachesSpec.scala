@@ -142,20 +142,38 @@ class CachesSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "split")
     spark.catalog.clearCache()
     try {
+      def ids() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val earlier = ids()
       // thresholds loosened so rows survive every stage — this test is
       // about CACHE lifetime, not funnel semantics (CorpusSpec pins those)
       val st = graft.api.Corpus.pretrainingRun(docs, col("split") === "eval",
         jaccardMin = 0.95, contaminationMax = 1.01, budget = 0.9)
+      // the checkpoints of `cleaned` and `deduped` are the stages' DATA
+      // (truncated lineage), not leaked caches; they are all that may
+      // stay
+      def checkpointId(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.analyzed match {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+          case other => fail(s"not a checkpoint: ${other.nodeName}")
+        }
+      val stages = Set(checkpointId(st.cleaned), checkpointId(st.deduped))
+      // the component walk's labels are released by the call itself, not
+      // left for the ContextCleaner once they are unreferenced
+      val checkpoints = spark.sparkContext.getPersistentRDDs.collect {
+        case (id, rdd) if !earlier(id) && rdd.isCheckpointed => id
+      }.toSet
+      assert(checkpoints == stages,
+        s"checkpoints $checkpoints after construction, expected the stages' $stages")
       assert(st.packed.collect().nonEmpty)
       def live() = spark.sparkContext.getPersistentRDDs.size
-      // the component walk's localCheckpoint RDD is DATA (truncated
-      // lineage), not a leaked cache — allow it plus at most one
-      // in-flight release
       val deadline = System.currentTimeMillis() + 20000
-      while (live() > 2 && System.currentTimeMillis() < deadline) Thread.sleep(200)
+      while (ids() -- earlier != stages && System.currentTimeMillis() < deadline)
+        Thread.sleep(200)
       assert(live() <= 2, s"leaked cached RDDs: ${live()}")
+      assert(ids() -- earlier == stages,
+        s"persistent RDDs ${ids() -- earlier} are not the stage checkpoints $stages")
     } finally {
-      // checkpointed label RDDs survive catalog.clearCache (raw RDD
+      // checkpointed stage RDDs survive catalog.clearCache (raw RDD
       // persists) — drop them so later tests count a clean slate
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))

@@ -243,20 +243,22 @@ class CorpusSpec extends SparkSpec {
     assert(!out.exists(r => r._1 == 20L || r._1 == 21L))
   }
 
-  test("pretrainingRun: the staged funnel composes end to end") {
-    val corpus = Seq(
+  private lazy val funnelCorpus = Seq(
       (1L, good, "en", "train"),
       (2L, good, "en", "train"), // exact dup of 1
       (3L, good + " with extra tail words here", "en", "train"), // near dup, LONGEST
       (6L, "completely different content about spark catalyst engines and the planner", "de", "train"),
       (7L, "held out evaluation text that must never leak into the training data", "en", "eval"),
       (8L, "held out evaluation text that must never leak into the training data okay", "en", "train"))
-      .toDF("doc_id", "text", "lang", "split")
-    val st = Corpus.pretrainingRun(corpus, col("split") === "eval",
-      jaccardMin = 0.3, contaminationMax = 0.5,
-      alpha = 1.0, budget = 1.0, packBudget = 8)
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id").as[Long].collect().toSet
+    .toDF("doc_id", "text", "lang", "split")
+  private def funnel() = Corpus.pretrainingRun(funnelCorpus,
+    col("split") === "eval", jaccardMin = 0.3, contaminationMax = 0.5,
+    alpha = 1.0, budget = 1.0, packBudget = 8)
+  private def ids(df: org.apache.spark.sql.DataFrame) =
+    df.select("doc_id").as[Long].collect().toSet
+
+  test("pretrainingRun: the staged funnel composes end to end") {
+    val st = funnel()
     assert(ids(st.cleaned) == Set(1L, 3L, 6L, 7L, 8L)) // exact dup 2 gone
     // near-dup clusters {1,3} and {7,8}: the LONGEST exemplar keeps in
     // each — note 8 (train) wins over 7 (eval) here, which is exactly why
@@ -269,6 +271,30 @@ class CorpusSpec extends SparkSpec {
     val packs = st.packed.select("doc_id", "pack_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(packs.keySet == Set(3L, 6L) && packs.values.forall(_ >= 0L))
+  }
+
+  test("pretrainingRun: cleaned and deduped are checkpoints the sink reads, not re-scores") {
+    import org.apache.spark.sql.catalyst.expressions.{RegExpExtractAll, RegExpReplace}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val st = funnel()
+    for ((name, df) <- Seq("cleaned" -> st.cleaned, "deduped" -> st.deduped))
+      assert(df.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+        s"$name is not a checkpoint: ${df.queryExecution.analyzed.nodeName}")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+    val before = Seq(rows(st.cleaned), rows(st.deduped))
+    val sink = st.packed
+    assert(sink.collect().nonEmpty)
+    // Corpus.scored's punctuation and stopword ratios are the only regex
+    // expressions on the pretraining path
+    val scoring = PlanNodes(sink.queryExecution.executedPlan, intoCaches = true)
+      .flatMap(_.expressions.flatMap(_.collect {
+        case e: RegExpExtractAll => e
+        case e: RegExpReplace => e
+      }))
+    assert(scoring.isEmpty, s"the packed sink re-scores the documents: $scoring")
+    // the sink neither released nor re-planned the stages it read
+    assert(Seq(rows(st.cleaned), rows(st.deduped)) == before)
   }
 
   test("semanticDuplicates: a corpus with no near pairs yields an empty result") {

@@ -166,6 +166,26 @@ class TcgaApiSpec extends SparkSpec {
     assert(nTam != nChe)
   }
 
+  test("KM keys containing the '|' separator fail with an error naming the value") {
+    def failure(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+    }
+    val t2 = t.copy(genes = t.genes.withColumn("gene_name",
+      when(col("gene_name") === "DEG10", "DEG|10").otherwise(col("gene_name"))))
+    val (curves, _) = Tcga.kmByMedianExpression(t2, Seq("DEG|10", "GENE1"))
+    val msg = failure(curves.collect())
+    assert(msg.contains("gene_name") && msg.contains("DEG|10"), msg)
+    val t3 = t.copy(samples = t.samples.withColumn("treatments",
+      transform(col("treatments"), tr => tr.withField("therapeutic_agents",
+        when(tr.getField("therapeutic_agents") === "Tamoxifen", "Tamox|ifen")
+          .otherwise(tr.getField("therapeutic_agents"))))))
+    val (_, tests) = Tcga.drugKmFanOut(t3, Seq("Tamox|ifen"), Seq("DEG10"))
+    val msg2 = failure(tests.collect())
+    assert(msg2.contains("drug_class") && msg2.contains("Tamox|ifen"), msg2)
+  }
+
   test("presentation edge: wide pivot and ragged export shapes") {
     val wide = Tcga.wideCounts(t, Seq("DEG10", "GENE1", "GENE2"))
     assert(wide.columns.toSeq == Seq("barcode", "DEG10", "GENE1", "GENE2"))

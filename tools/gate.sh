@@ -27,10 +27,10 @@ fi
 # surface: break either and the gate fails here, not at benchmark time
 (cd perfbench && sbt -batch compile)
 # output drift: the benchmark's tcga and corpus runs check every sink
-# against the digests of the first run at the seed, and the traced tcga run
-# goes through perfbench's Replica (the API compositions step by step), so
-# a refactor that moves one bit of an output fails here
-for run in "tcga 0" "tcga 1" "corpus_pretrain 0"; do
+# against the digests of the first run at the seed, and the traced runs go
+# through perfbench's Replica (the API compositions step by step), so a
+# refactor that moves one bit of an output fails here
+for run in "tcga 0" "tcga 1" "corpus_pretrain 0" "corpus_pretrain 1"; do
   set -- $run
   python3 perfbench/run.py --workload "$1" --seed 1 --seconds 1 --trace "$2" |
     python3 -c 'import json, sys
