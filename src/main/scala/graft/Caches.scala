@@ -2,47 +2,62 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 /** Cache-lifetime discipline for the library's internal `persist()` calls.
   *
   * Library operators persist frames their plans reference more than once
   * (see the scaladoc on each call site). Those caches must outlive the
   * function that created them — the consuming action is the caller's — so
-  * they cannot be unpersisted before returning. Two release rules cover
-  * them, both one-shot listeners that unpersist on the trigger below or at
-  * once when an action fails:
+  * they cannot be unpersisted before returning. Each is tied to the frame
+  * the function returns instead:
   *
-  *  - [[releaseAfterAction]] — after the next completed SQL action on the
-  *    session. The usual one-action consumers (a write, a count, a
-  *    collect) pay nothing and leak nothing. A caller that runs several
-  *    actions over the same returned frame recomputes after the first —
-  *    correct, just uncached; such callers should persist the *returned*
-  *    frame themselves. `operators.Ranks` is the exception: its stitch
-  *    needs one range-partitioned copy for both of its branches, so it
-  *    reads its cache's relation directly, and a later action rebuilds
-  *    that cache, which then lives until the returned frame is
-  *    garbage-collected.
-  *  - [[releaseAfterConsumers]] — once every listed consumer frame has
-  *    fed a completed action (the action's plan holds the consumer's
-  *    plan). For an operator returning several frames over one shared
-  *    cache (`Tcga.kmByMedianExpression`'s curves and tests), or one
-  *    whose construction runs its own jobs (`Ann.ivfIndexTopK`'s probe
-  *    collect), neither of which may release the cache. LEAK CASE: a
-  *    caller that consumes only some of the consumers keeps the cache,
-  *    and its listener, until [[clearCaches]].
+  *  - [[releaseAfterConsumers]] — the batch rule. The caches are released
+  *    once every listed consumer frame (usually the one returned frame;
+  *    `Tcga.kmByMedianExpression`'s curves and tests share one cache) has
+  *    fed a completed action, i.e. the action's plan holds the consumer's
+  *    plan. Actions on unrelated frames, on other threads, and the
+  *    function's own construction-time jobs (the DE dispersion-prior
+  *    collect, Ann's Lloyd counts, `contaminationBloom`'s sizing count)
+  *    do not count, so where a call site registers is irrelevant. (A
+  *    frame another caller built to the same plan does count: the two
+  *    share one cache entry anyway.) An action that fails while its plan
+  *    holds a pending consumer releases at once; an unrelated failure
+  *    releases nothing.
+  *  - [[releaseAfterStreams]] — the stream rule, for a stream-static
+  *    join's static side, which must live as long as the streaming query
+  *    that reads it.
+  *
+  * A caller that runs several actions over one returned frame recomputes
+  * after the first — correct, just uncached; such callers should persist
+  * the returned frame themselves. `operators.Ranks` goes one step
+  * further: its stitch reads its cache's relation directly (both branches
+  * need the one range-partitioned copy), so an action that re-plans an
+  * output after its release rebuilds that cache outside the cache manager,
+  * and the rebuilt copy lives until the output frame is
+  * garbage-collected.
+  *
+  * LEAK CASE: a consumer that is never acted on keeps its caches, and its
+  * listener, until [[clearCaches]] (or until another release of the same
+  * plan drops the cache). A listener whose caches are all gone unregisters
+  * itself on the session's next action, so `Verify`'s and `Bench`'s
+  * per-query `clearCache` also drains them.
   *
   * `api.Tcga` has two persist sites:
   *  - `differentialExpression` persists its NB-GLM cells (read by the
-  *    dispersion-prior collect and by the fit) under
-  *    [[releaseAfterAction]], registered after the prior's collect;
+  *    dispersion-prior collect and by the fit), released by the caller's
+  *    action on the returned frame;
   *  - the one KM tail under `kmByMedianExpression` and `drugKmFanOut`
-  *    persists its subject frame (read by the curves and by the tests)
-  *    under [[releaseAfterConsumers]].
-  * Every other library persist names its rule at its call site. An
+  *    persists its subject frame, released once both the curves and the
+  *    tests have fed an action.
+  * Every other library persist names its frames at its call site. An
   * operator whose plan reads its input once persists nothing
   * (`Stats.bhAdjust`, `Survival.kmCurve` and `logRankBy`), and leaves a
   * cache its caller made in place.
@@ -55,81 +70,76 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * drops every frame that reads them (Spark's `ContextCleaner` frees them
   * then) or calls [[releaseBlocks]]. `pretrainingRun` releases the
   * labels itself once its `deduped` checkpoint holds their outcome.
-  *
-  * CONCURRENCY CONTRACT: "the next action" means the next action on the
-  * WHOLE session — the first rule cannot tell the consuming action from
-  * an unrelated one. A session shared by concurrent threads (a notebook
-  * with parallel cells, a ThriftServer) can release a cache early (the
-  * consumer then recomputes — slower, never wrong) and a caller that
-  * never runs an action leaves cache + listener registered until
-  * `clearCaches`. The engine's own entry points (Verify/Bench/Demo) are
-  * single-action-at-a-time by construction.
-  *
-  * `clearCaches` is the blunt escape hatch for long-lived sessions.
   */
 object Caches {
 
-  /** Unpersist `dfs` after the next completed action on their session. */
-  def releaseAfterAction(dfs: DataFrame*): Unit = releaseWhen(dfs)(_ => true)
-
   /** Unpersist `caches` once each of `consumers` has fed a completed
-    * action: that action's logical plan holds the consumer's plan (or a
-    * frame derived from it: a `select`, a `join`, a writer), matched by
-    * reference. Actions on unrelated frames, and construction-time jobs
-    * that ran before the consumers existed, do not count. */
+    * action: that action's plan holds the consumer's plan (or a frame
+    * derived from it: a `select`, a `join`, a writer). A failed action
+    * releases at once when its plan holds a pending consumer. The
+    * listener unregisters itself, on the next event, once none of
+    * `caches` is cached any more. */
   def releaseAfterConsumers(consumers: Seq[DataFrame], caches: DataFrame*): Unit = {
+    if (caches.isEmpty) return
+    val spark = caches.head.sparkSession
     // the listener bus delivers one event at a time, so no lock
-    var pending = consumers.map(df =>
-      Seq(df.queryExecution.logical, GraftSqlBridge.logicalPlan(df)))
-    releaseWhen(caches) { qe =>
-      pending = pending.filterNot(plans => holds(qe.logical, plans))
-      pending.isEmpty
-    }
-  }
-
-  // leaf writer commands (`saveAsTable`, non-file V1 sources) hold their
-  // query as an inner child, not a child
-  private def holds(plan: LogicalPlan, targets: Seq[LogicalPlan]): Boolean =
-    targets.exists(_ eq plan) || plan.children.exists(holds(_, targets)) ||
-      plan.innerChildren.exists {
-        case p: LogicalPlan => holds(p, targets)
-        case _ => false
-      }
-
-  /** The listener both release rules share: unpersist `dfs` once `done`
-    * holds after a successful action, or at once after a failed one. */
-  private def releaseWhen(dfs: Seq[DataFrame])(done: QueryExecution => Boolean): Unit = {
-    if (dfs.isEmpty) return
-    val spark = dfs.head.sparkSession
+    var pending = consumers
     val listener = new QueryExecutionListener {
-      private val released = new AtomicBoolean(false)
-      private def release(): Unit =
-        if (released.compareAndSet(false, true)) {
-          dfs.foreach { df =>
+      private def observe(qe: QueryExecution, failed: Boolean): Unit = {
+        val (fed, rest) = pending.partition(fedBy(qe, _))
+        pending = rest
+        if (rest.isEmpty || (failed && fed.nonEmpty)) {
+          caches.foreach { df =>
             try df.unpersist(blocking = false)
             catch { case _: Throwable => () }
           }
           spark.listenerManager.unregister(this)
-        }
+        } else if (caches.forall(_.storageLevel == StorageLevel.NONE))
+          spark.listenerManager.unregister(this)
+      }
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = if (done(qe)) release()
+          durationNs: Long): Unit = observe(qe, failed = false)
       override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = release()
+          exception: Exception): Unit = observe(qe, failed = true)
     }
     spark.listenerManager.register(listener)
   }
 
+  /** Whether the action `qe` read `consumer`: its plan holds the
+    * consumer's plan by reference, or, where the analyzer copied that
+    * plan with fresh attribute ids (the right side of a join whose sides
+    * share lineage), a subtree with the same result. A frame built over a
+    * cache's relation (`operators.Ranks`' stitch) holds the cached plan. */
+  private def fedBy(qe: QueryExecution, consumer: DataFrame): Boolean = {
+    val plan = GraftSqlBridge.logicalPlan(consumer)
+    val logical = consumer.queryExecution.logical
+    holds(qe.logical, p => (p eq plan) || (p eq logical)) ||
+      Try(holds(qe.analyzed, _.sameResult(plan))).getOrElse(false)
+  }
+
+  // leaf writer commands (`saveAsTable`, non-file V1 sources) hold their
+  // query as an inner child, not a child
+  private def holds(plan: LogicalPlan, hit: LogicalPlan => Boolean): Boolean =
+    hit(plan) || plan.children.exists(holds(_, hit)) ||
+      (plan match {
+        case m: InMemoryRelation =>
+          Option(m.cacheBuilder.logicalPlan).exists(holds(_, hit))
+        case _ => plan.innerChildren.exists {
+          case p: LogicalPlan => holds(p, hit)
+          case _ => false
+        }
+      })
+
   /** Unpersist `dfs` once the session has no active streaming queries
-    * left — the streaming twin of [[releaseAfterAction]]. A stream-static
+    * left — the streaming twin of [[releaseAfterConsumers]]. A stream-static
     * join's cached static side (the banded minhash reference, an index
     * artifact) must live for the WHOLE streaming query, not one action,
     * so the release trigger is a query-terminated event with no other
-    * query still active. Same blunt-but-safe contract as the batch
-    * listener: a session running several concurrent streaming queries
-    * releases only when the last one stops (caches live longer than
-    * strictly needed, never shorter), and repeated builder calls each
-    * release their own frames at that point instead of accumulating for
-    * the session's lifetime.
+    * query still active. A session running several concurrent streaming
+    * queries releases only when the last one stops (caches live longer
+    * than strictly needed, never shorter), and repeated builder calls
+    * each release their own frames at that point instead of accumulating
+    * for the session's lifetime.
     *
     * The trigger ARMS only once a query STARTED AFTER registration has
     * been observed: builders register during plan construction, before

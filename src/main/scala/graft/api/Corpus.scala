@@ -60,14 +60,12 @@ object Corpus {
       textCol: String = "text", shingleN: Int = 3, numHashes: Int = 6,
       bandsOf: Int = 2, jaccardMin: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
-    // persist: shingles feed the signatures AND both sides of the verify;
-    // released after the caller's consuming action
+    // persist: shingles feed the signatures AND both sides of the verify
     val sh = Dedup.shingleRows(docs, idCol, textCol, shingleN).persist()
-    graft.Caches.releaseAfterAction(sh)
     val cands = Dedup.minhashCandidates(
       Dedup.minhashSignatures(sh, numHashes), numHashes, bandsOf, maxBucket)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
-    cands
+    val out = cands
       .join(sh.select(col("doc_id").as("doc_a"), col("sh")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_inter"))
@@ -77,6 +75,8 @@ object Corpus {
         col("n_inter") / (col("na") + col("nb") - col("n_inter")))
       .filter(col("jaccard") >= jaccardMin)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    graft.Caches.releaseAfterConsumers(Seq(out), sh)
+    out
   }
 
   /** Content fingerprints (X3): md5 of the first `prefixK` tokens and the
@@ -221,7 +221,6 @@ object Corpus {
         explode(TextFunctions.tokens(col(textCol))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       .persist()
-    graft.Caches.releaseAfterAction(tc)
     val withN = tc.withColumn("n_tok",
       sum(col("tf")).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id"))))
@@ -229,7 +228,7 @@ object Corpus {
     val nDocs = tc.select(countDistinct(col("doc_id")).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
       .orderBy(round(col("score"), 9).desc, col("term").asc)
-    withN.join(df, "term")
+    val out = withN.join(df, "term")
       .crossJoin(broadcast(nDocs))
       .withColumn("score",
         (col("tf").cast("double") / col("n_tok")) *
@@ -238,6 +237,8 @@ object Corpus {
       .filter(col("rnk") <= topK)
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
         col("score"), col("rnk"))
+    graft.Caches.releaseAfterConsumers(Seq(out), tc)
+    out
   }
 
   /** Unigram-LM document scores (LM1): corpus-MLE token probabilities,
@@ -679,7 +680,11 @@ object Corpus {
     * count and a checkpointed label frame), checkpoints the deduped
     * corpus and then drops the labels. Every later stage reads those two
     * checkpoints, so its plan starts there. Decontamination, mixture and
-    * packing run only when the caller acts on a stage.
+    * packing run only when the caller acts on a stage. Their internal
+    * caches (contamination's shingle dictionary, packing's ranged frame)
+    * are released once a stage that reads them has fed an action; one
+    * that is never acted on keeps its (unmaterialized) cache entry until
+    * `Caches.clearCaches` (see [[graft.Caches]]).
     *
     * The two checkpoints' blocks live until the caller drops `cleaned`,
     * `deduped` and every frame derived from them; Spark's `ContextCleaner`

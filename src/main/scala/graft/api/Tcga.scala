@@ -62,11 +62,30 @@ object Tcga {
     *                     last-vs-first `results()` contrast
     * @param goi          genes of interest by `gene_name` (B4); empty → all
     * @return long results `(gene_id, gene_name, contrast, log2fc,
-    *         lfc_se, stat, pvalue, padj, p_signif)`
+    *         lfc_se, stat, pvalue, padj, p_signif)`. The NB-GLM cells are
+    *         persisted (the dispersion-prior collect and the fit read
+    *         them) and released once the returned frame has fed an
+    *         action (see [[graft.Caches]]).
+    * @throws IllegalArgumentException before any job runs, naming the
+    *         value, when `levels` has fewer than two distinct levels or
+    *         repeats one, or a contrast names a level outside `levels` or
+    *         the same level on both sides: the fit has no such
+    *         coefficient, and the result would be silently empty
     */
   def differentialExpression(t: TcgaTables, conditionCol: String,
       levels: Seq[String], contrasts: Seq[(String, String)] = Nil,
       goi: Seq[String] = Nil): DataFrame = {
+    require(levels.distinct.size >= 2, "differentialExpression needs at least two " +
+      s"levels, got ${levels.mkString("[", ", ", "]")}")
+    val repeated = levels.diff(levels.distinct)
+    require(repeated.isEmpty,
+      s"differentialExpression: level ${repeated.headOption.orNull} appears more than once in levels")
+    contrasts.foreach { case (a, b) =>
+      val unknown = Seq(a, b).filterNot(levels.contains)
+      require(unknown.isEmpty, s"differentialExpression: contrast ${a}_vs_$b names " +
+        s"${unknown.mkString(" and ")}, not in levels ${levels.mkString("[", ", ", "]")}")
+      require(a != b, s"differentialExpression: contrast ${a}_vs_$b compares level $a with itself")
+    }
     val spark = t.expression.sparkSession
     import spark.implicits._
     val cond = conditions(t, conditionCol, levels)
@@ -90,19 +109,19 @@ object Tcga {
     val pairs = if (contrasts.nonEmpty) contrasts else Seq((levels.last, levels.head))
     val prior = DiffExpression.dispersionPrior(cells, levels.size)
     val de = DiffExpression.contrasts(cells, levels, pairs, Some(prior)).toDF()
-    // registered AFTER the prior's collect — released on the caller's action
-    graft.Caches.releaseAfterAction(cells.toDF())
     val named = de
       .join(broadcast(geneIds), de("gene") === geneIds("gid"))
       .join(broadcast(t.genes), "gene_id")
     // goi restriction BEFORE the BH adjustment: `results(data[keep,])`
     // (vital_status_DESeq.R:88-89) computes padj over the subset only
     val selected = if (goi.isEmpty) named else named.filter(inGoi(goi))
-    Stats.bhAdjust(selected, "pvalue", "gene_id", partitionCols = Seq("contrast"))
+    val out = Stats.bhAdjust(selected, "pvalue", "gene_id", partitionCols = Seq("contrast"))
       .withColumn("p_signif", Stats.signifBand(col("padj")))
       .select(col("gene_id"), col("gene_name"), col("contrast"),
         col("log2fc"), col("lfc_se"), col("stat"), col("pvalue"),
         col("padj"), col("p_signif"))
+    graft.Caches.releaseAfterConsumers(Seq(out), cells.toDF())
+    out
   }
 
   /** D7 — per-gene two-group Wilcoxon on VST counts

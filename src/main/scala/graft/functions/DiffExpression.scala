@@ -221,7 +221,7 @@ object DiffExpression {
     * the previous form's two driver collects (quantiles, 20 rejection
     * counts) each planned and ran a separate top-level job (~1 s of d3's
     * wall time at sf0.1 between them). The input is persisted (four plan
-    * references) and released after the caller's next action.
+    * references) and released once the returned frame has fed an action.
     *
     * Broadcast timeout: those subtrees are broadcast builds, and the first
     * one to run materializes the whole upstream fit inside the build, so
@@ -274,7 +274,7 @@ object DiffExpression {
     val out = in.join(adj, Seq(geneCol), "left")
       .withColumn(pCol,
         when(col(outlierCol), lit(null).cast("double")).otherwise(col(pCol)))
-    graft.Caches.releaseAfterAction(in)
+    graft.Caches.releaseAfterConsumers(Seq(out), in)
     out
   }
 

@@ -129,9 +129,7 @@ object Ann {
           s => s.getField("m")).as("cv"))
       i += 1
     }
-    // registered AFTER the internal count() actions above — the training
-    // cache survives the Lloyd plan until the caller's consuming action
-    graft.Caches.releaseAfterAction(train)
+    graft.Caches.releaseAfterConsumers(Seq(centroids), train)
     centroids
   }
 
@@ -261,13 +259,14 @@ object Ann {
     // deployment would even write it to storage (sources.Stages.materialize)
     // and reuse it across query batches.
     val corpus = assignCells(normalized(emb, idCol, vecCol), bc).persist()
-    graft.Caches.releaseAfterAction(corpus)
     val probed = normalized(queries, idCol, vecCol)
       .select(col("id").as("q_id"), col("v").as("qv"), col("vn").as("qvn"))
       .select(col("q_id"), col("qv"), explode(probeCells(bc, nProbe)).as("cell"))
     // each corpus vector lives in exactly ONE cell, so the probe join
     // scores it at most once per query
-    rerankTopK(probed.join(corpus, Seq("cell")), topK)
+    val out = rerankTopK(probed.join(corpus, Seq("cell")), topK)
+    graft.Caches.releaseAfterConsumers(Seq(out), corpus)
+    out
   }
 
   /** Brute-force exact top-k (the verification baseline). */

@@ -205,14 +205,15 @@ object Dedup {
     require(k % bandsOf == 0, "k must divide into bands")
     val sigs = signatures.persist()
     val bands = bandRows(sigs, k, bandsOf).persist()
-    graft.Caches.releaseAfterAction(sigs, bands)
     val capped = capBuckets(bands, Seq(col("band"), col("bkey")), maxBucket,
       "minhashCandidates")
-    capped.as("x").join(capped.as("y"),
+    val out = capped.as("x").join(capped.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
+    graft.Caches.releaseAfterConsumers(Seq(out), sigs, bands)
+    out
   }
 
   /** Signature-based Jaccard ESTIMATE for candidate pairs: the fraction
@@ -299,16 +300,17 @@ object Dedup {
           .bitwiseAND(lit((1L << bandBits) - 1)).as("bkey"),
         col("simhash"))
     }.reduce(_ unionByName _).persist()
-    graft.Caches.releaseAfterAction(sigs, bands)
     val capped = capBuckets(bands, Seq(col("band"), col("bkey")), maxBucket,
       "simhashNearPairs")
-    capped.as("x").join(capped.as("y"),
+    val out = capped.as("x").join(capped.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
+    graft.Caches.releaseAfterConsumers(Seq(out), sigs, bands)
+    out
   }
 
   /** Train→test contamination check — the benchmark-leakage scan every
@@ -345,7 +347,6 @@ object Dedup {
       .filter(col("__ndocs") <= maxShingleTrainDocs)
       .select("sh")
       .persist()
-    graft.Caches.releaseAfterAction(trainSh)
     // ONE pass over the test side: distinct (doc, sh) — the same
     // partial-dedup shuffle a count_distinct pays internally, paid once
     // instead of once per aggregate — then totals AND hits off a single
@@ -355,7 +356,7 @@ object Dedup {
     // too (ADVICE r10: the dictionary join here is on sh, not doc_id, so
     // a NULL-id test doc with shared shingles WOULD otherwise emit a row
     // that the Bloom path drops)
-    pairs.filter(!col("is_train"))
+    val out = pairs.filter(!col("is_train"))
       .filter(col("doc_id").isNotNull)
       .select("doc_id", "sh").distinct()
       .join(trainSh.withColumn("__hit", lit(1)), Seq("sh"), "left")
@@ -364,6 +365,8 @@ object Dedup {
       .filter(col("n_shared") > 0)
       .withColumn("contamination", round(col("n_shared") / col("n_sh"), 6))
       .select("doc_id", "n_sh", "n_shared", "contamination")
+    graft.Caches.releaseAfterConsumers(Seq(out), trainSh)
+    out
   }
 
   /** Exact n-gram Jaccard inside a blocking key: pairs with
@@ -394,11 +397,10 @@ object Dedup {
         Seq("doc_id" -> col(idCol), "blk" -> col(blockCol)), textCol, n)
       .distinct()
       .persist()
-    graft.Caches.releaseAfterAction(sh)
     val sized = capBuckets(sh, Seq(col("blk"), col("sh")), maxShingleDocs,
         "jaccardPairs")
       .withColumn("nsh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-    sized.as("x").join(sized.as("y"),
+    val out = sized.as("x").join(sized.as("y"),
         col("x.blk") === col("y.blk") && col("x.sh") === col("y.sh") &&
           col("x.doc_id") < col("y.doc_id") &&
           least(col("x.nsh"), col("y.nsh")) >=
@@ -410,6 +412,8 @@ object Dedup {
         round(col("n_inter") / (col("na") + col("nb") - col("n_inter")), 6))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "na", "nb", "n_inter", "jaccard")
+    graft.Caches.releaseAfterConsumers(Seq(out), sh)
+    out
   }
 
   /** Serialized Bloom sketch of a string column — the build side of the
@@ -520,14 +524,6 @@ object Dedup {
     val bytes = bloomOf(trainSh, "sh", sized, fpp)
     log.info(s"contaminationBloom: sketch of ${bytes.length} bytes " +
       s"(expectedItems=$sized, fpp=$fpp)")
-    // Release registration AFTER the construction-time sketch jobs: the
-    // Dataset→RDD conversions above run SQL-tracked executions, so a
-    // listener registered before them would release the dictionary cache
-    // during CONSTRUCTION — the verify anti join below would then replan
-    // the whole dictionary build inline (a second train-side corpus scan)
-    // instead of reading the cache. Registered here, the one-shot release
-    // fires on the CALLER's consuming action, as intended.
-    graft.Caches.releaseAfterAction(trainSh)
     val bc = spark.sparkContext.broadcast(bytes)
     val probe = graft.expressions.BloomMightContain.probe(bc, col("sh"))
     // doc_id IS NOT NULL is explicit, not inferred — and MIRRORED in
@@ -550,11 +546,13 @@ object Dedup {
     val falsePos = byPair.filter(col("cand"))
       .join(trainSh, Seq("sh"), "left_anti")
       .groupBy("doc_id").agg(count(lit(1)).as("n_fp"))
-    perDoc.join(falsePos, Seq("doc_id"), "left")
+    val out = perDoc.join(falsePos, Seq("doc_id"), "left")
       .withColumn("n_shared", col("n_cand") - coalesce(col("n_fp"), lit(0L)))
       .filter(col("n_shared") > 0)
       .withColumn("contamination", round(col("n_shared") / col("n_sh"), 6))
       .select("doc_id", "n_sh", "n_shared", "contamination")
+    graft.Caches.releaseAfterConsumers(Seq(out), trainSh)
+    out
   }
 
   /** Cross-document duplicated-SPAN coverage — the distributed stand-in
@@ -582,7 +580,6 @@ object Dedup {
     val occ = toked.select(col("doc_id"), col("n_tok"),
         posexplode(TextFunctions.shingles(col("toks"), n)).as(Seq("pos", "gram")))
       .persist()
-    graft.Caches.releaseAfterAction(occ)
     val dict = occ.groupBy("gram")
       .agg(count_distinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2)
@@ -599,7 +596,7 @@ object Dedup {
           coalesce(col("prev_end") + 1, col("pos"))) + 1))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_dup_grams"), sum("cov").as("n_cov_tokens"))
-    toked.select(col("doc_id"), col("n_tok"),
+    val out = toked.select(col("doc_id"), col("n_tok"),
         greatest(lit(0L), col("n_tok") - (n - 1)).as("n_grams"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tok"), col("n_grams"),
@@ -607,6 +604,8 @@ object Dedup {
         coalesce(col("n_cov_tokens"), lit(0L)).as("n_cov_tokens"),
         round(coalesce(col("n_cov_tokens"), lit(0L)) / col("n_tok"), 6)
           .as("dup_frac"))
+    graft.Caches.releaseAfterConsumers(Seq(out), occ)
+    out
   }
 
   /** MAXIMAL duplicated spans per document — the Lee et al. 2022 output
@@ -639,7 +638,6 @@ object Dedup {
     val occ = toked.select(col("doc_id"), col("n_tok"),
         posexplode(TextFunctions.shingles(col("toks"), n)).as(Seq("pos", "gram")))
       .persist()
-    graft.Caches.releaseAfterAction(occ)
     val dict = occ.groupBy("gram")
       .agg(count_distinct(col("doc_id")).as("nd"),
         min(col("doc_id")).as("keeper"))
@@ -653,7 +651,7 @@ object Dedup {
     val flagged =
       if (keepFirst) flagged0.filter(col("doc_id") =!= col("keeper"))
       else flagged0
-    flagged.drop("keeper")
+    val out = flagged.drop("keeper")
       .withColumn("e", least(col("pos") + (n - 1), col("n_tok") - 1))
       .withColumn("prev_end", max(col("e")).over(wPrev))
       // a window starts a NEW maximal span iff it neither overlaps nor
@@ -668,6 +666,8 @@ object Dedup {
         count(lit(1)).as("n_grams_in_span"))
       .select(col("doc_id"), col("span_start"), col("span_len"),
         col("n_grams_in_span"))
+    graft.Caches.releaseAfterConsumers(Seq(out), occ)
+    out
   }
 
   /** MAXIMAL cross-document exact matches via rolling-gram CHAIN
@@ -714,7 +714,6 @@ object Dedup {
     val occ = toked.select(col("doc_id"),
         posexplode(TextFunctions.shingles(col("toks"), n)).as(Seq("pos", "gram")))
       .persist()
-    graft.Caches.releaseAfterAction(occ)
     DropAudit.ensure(docs.sparkSession)
     val name = s"graft_capped_maximal_match_${auditSeq.getAndIncrement()}"
     val dict = occ.groupBy("gram")
@@ -805,7 +804,7 @@ object Dedup {
       .rowsBetween(Window.unboundedPreceding, -1)
     val wRun = Window.partitionBy("doc_id").orderBy(ivOrd: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    iv.withColumn("prev_end", max(col("ep")).over(wPrev))
+    val out = iv.withColumn("prev_end", max(col("ep")).over(wPrev))
       .withColumn("new_span",
         when(col("prev_end").isNull || col("sp") > col("prev_end"), 1L)
           .otherwise(0L))
@@ -816,6 +815,8 @@ object Dedup {
         count(lit(1)).as("n_matches"))
       .select(col("doc_id"), col("span_start"), col("span_len"),
         col("n_matches"))
+    graft.Caches.releaseAfterConsumers(Seq(out), occ)
+    out
   }
 
   /** WITHIN-document longest repeated substring (token-level) — the
@@ -858,7 +859,6 @@ object Dedup {
         posexplode(TextFunctions.shingles(col("toks"), n))
           .as(Seq("pos", "gram")))
       .persist()
-    graft.Caches.releaseAfterAction(toked, occ)
     DropAudit.ensure(docs.sparkSession)
     val name = s"graft_capped_self_repeat_${auditSeq.getAndIncrement()}"
     // within-doc repeated grams only, occurrence-capped per (doc, gram)
@@ -889,12 +889,14 @@ object Dedup {
       .agg((max(col("pa")) - min(col("pa")) + n).as("rep_len"))
       .groupBy("doc_id")
       .agg(max(col("rep_len")).as("longest_repeat"))
-    toked.select(col("doc_id"), col("n_tok"))
+    val out = toked.select(col("doc_id"), col("n_tok"))
       .join(best, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tok"),
         coalesce(col("longest_repeat"), lit(0L)).as("longest_repeat"),
         round(coalesce(col("longest_repeat"), lit(0L)) / col("n_tok"), 6)
           .as("repeat_frac"))
+    graft.Caches.releaseAfterConsumers(Seq(out), toked, occ)
+    out
   }
 
   /** The APPLY step of span-level dedup: rebuild each document with every

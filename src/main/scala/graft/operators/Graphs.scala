@@ -75,15 +75,10 @@ object Graphs {
       // never changes a bit of the result — only the plan shape. LAZY
       // (eager = false): the plan truncates immediately either way, but
       // an eager checkpoint runs the full job during plan CONSTRUCTION.
-      // NOTE (measured, CachesSpec r10): BOTH forms route through
-      // Dataset.withAction and fire QueryExecutionListeners, so neither
-      // is safe BEFORE a releaseAfterAction registration — this function
-      // registers its releases AFTER the loop, which is the actual
-      // guarantee; lazy-ness here only avoids paying the job eagerly.
       if (i % checkpointEvery == 0 && i < iters)
         rank = rank.localCheckpoint(eager = false)
     }
-    graft.Caches.releaseAfterAction(e, eo, nodesN)
+    graft.Caches.releaseAfterConsumers(Seq(rank), e, eo, nodesN)
     rank
   }
 
@@ -161,7 +156,7 @@ object Graphs {
     val counts = tri
       .select(explode(array(col("x"), col("y"), col("z"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_tri"))
-    graft.Caches.releaseAfterAction(e, deg, eo)
+    graft.Caches.releaseAfterConsumers(Seq(counts), e, deg, eo)
     counts
   }
 
@@ -231,10 +226,9 @@ object Graphs {
       last = next
       i += 1
     }
-    val out = e.select(explode(array(col("a"), col("b"))).as("id"))
+    // `e` is the last round's checkpoint, not a cache: see the scaladoc
+    e.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-    graft.Caches.releaseAfterAction(e)
-    out
   }
 
   /** Level-synchronous BFS to a FIXED depth over an undirected edge
@@ -297,7 +291,7 @@ object Graphs {
       last = next
       d += 1
     }
-    graft.Caches.releaseAfterAction(adj, visited)
+    graft.Caches.releaseAfterConsumers(Seq(visited), adj)
     visited
   }
 }

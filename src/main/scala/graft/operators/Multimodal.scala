@@ -591,9 +591,4 @@ object Multimodal {
           i => substring(col("payload"), (i * stride + 1).cast("int"), lit(frameBytes))))
           .as(Seq("frame_idx", "frame")))
   }
-
-  /** "Resize": crop/pad the payload to `targetBytes` (stand-in for a pixel
-    * resize; binary-in binary-out contract). */
-  def resizeStub(payload: Column, targetBytes: Int): Column =
-    rpad(substring(payload, 1, targetBytes), targetBytes, Array[Byte](0))
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *     name), range-partitions on (group ++ order), tags each row with its
   *     physical partition `__pid`, and persists: the partition id must be
   *     identical across the carry branch and the local branch. The cache
-  *     is released after the caller's consuming action.
+  *     is released once the returned output has fed an action.
   *  2. [[carry]] computes an exactly associative aggregate (`count`, or
   *     `sum` over integers) per (group, partition), carries it over the
   *     group's earlier partitions — with the group total alongside when
@@ -38,30 +38,31 @@ object Ranks {
 
   /** First phase of the core: `df` plus its group keys aliased to `__g0…`
     * (the names are returned), range-partitioned on (group ++ order),
-    * tagged `__pid`, persisted and released after the caller's next
-    * action. The input is deliberately NOT persisted: the
-    * boundary-sampling pass re-reads upstream once, which for the
-    * fact-sized frames these scans target is cheaper at scale than a
-    * fact-sized cache materialization. A caller behind an expensive
-    * upstream persists its own input. */
+    * tagged `__pid` and persisted. The persisted frame is returned too:
+    * the caller registers its release against the output it builds. The
+    * input is deliberately NOT persisted: the boundary-sampling pass
+    * re-reads upstream once, which for the fact-sized frames these scans
+    * target is cheaper at scale than a fact-sized cache materialization.
+    * A caller behind an expensive upstream persists its own input. */
   private def ranged(df: DataFrame, grp: Seq[Column],
-      order: Seq[Column]): (DataFrame, Seq[String]) = {
+      order: Seq[Column]): (DataFrame, Seq[String], DataFrame) = {
     val g = grp.indices.map(i => s"__g$i")
     val keyed = grp.zip(g).foldLeft(df) { case (d, (c, n)) => d.withColumn(n, c) }
     val r = keyed.repartitionByRange((g.map(col) ++ order): _*)
       .withColumn("__pid", spark_partition_id())
       .persist()
-    graft.Caches.releaseAfterAction(r)
     // Both stitch branches scan the cache's own relation, not a lookup by
-    // plan. A lookup misses once the cache is released (a second action,
-    // or a second output built before the first one's action), and in the
-    // self-join's fresh copy of a checkpoint leaf that records its
-    // partitioning (a checkpointed `spark.range`). The branch that misses
-    // runs its own range exchange with its own boundary sample, and its
-    // `__pid`s disagree with the other branch's. Read directly, a released
-    // cache is rebuilt by the next action, and that copy lives until the
-    // returned frame is garbage-collected.
-    (GraftSqlBridge.ofRows(df.sparkSession, r.queryExecution.withCachedData), g)
+    // plan. A lookup misses once the cache is released (a second action
+    // on the output), and in the self-join's fresh copy of a checkpoint
+    // leaf that records its partitioning (a checkpointed `spark.range`).
+    // The branch that misses runs its own range exchange with its own
+    // boundary sample, and its `__pid`s disagree with the other branch's.
+    // Read directly, a released cache is rebuilt by the next action that
+    // re-plans the output (a repeated action, or a second output over the
+    // same ranged plan acted on after the first one's release), and that
+    // copy lives outside the cache manager until the output is
+    // garbage-collected.
+    (GraftSqlBridge.ofRows(df.sparkSession, r.queryExecution.withCachedData), g, r)
   }
 
   /** An exactly associative aggregate the core carries: `part` over one
@@ -104,9 +105,11 @@ object Ranks {
     * is a total order; rows with fully-equal keys are interchangeable. */
   def rowNumber(df: DataFrame, grp: Seq[Column], order: Seq[Column],
       out: String = "rn", outN: String = "__n"): DataFrame = {
-    val (r, g) = ranged(df, grp, order)
-    carry(r, g, order, countCarry, out, outN)
+    val (r, g, cache) = ranged(df, grp, order)
+    val ranked = carry(r, g, order, countCarry, out, outN)
       .select((df.columns.toIndexedSeq :+ out :+ outN).map(col): _*)
+    graft.Caches.releaseAfterConsumers(Seq(ranked), cache)
+    ranked
   }
 
   /** Global (or per-group) running total of `value` under `order` — the
@@ -120,10 +123,12 @@ object Ranks {
     * window would funnel the corpus through one task. */
   def prefixSum(df: DataFrame, grp: Seq[Column], order: Seq[Column],
       value: Column, out: String = "cumsum", outTotal: String = ""): DataFrame = {
-    val (r, g) = ranged(df.withColumn("__v", value), grp, order)
-    carry(r, g, order, sumCarry(col("__v")), out, outTotal)
+    val (r, g, cache) = ranged(df.withColumn("__v", value), grp, order)
+    val summed = carry(r, g, order, sumCarry(col("__v")), out, outTotal)
       .select(((df.columns.toIndexedSeq :+ out) ++ Option(outTotal).filter(_.nonEmpty))
         .map(col): _*)
+    graft.Caches.releaseAfterConsumers(Seq(summed), cache)
+    summed
   }
 
   /** Exact per-group quantiles through the two-phase rank — the scale-safe

@@ -38,9 +38,4 @@ object Skew {
       explode(sequence(lit(0L), lit(saltBuckets - 1L))))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Top-k hot keys by row count — the diagnostic that decides whether
-    * salting is warranted and how many buckets to use. */
-  def hotKeys(df: DataFrame, key: String, k: Int = 10): DataFrame =
-    df.groupBy(col(key)).agg(count(lit(1)).as("n")).orderBy(col("n").desc).limit(k)
 }

@@ -106,15 +106,16 @@ object AnalyticsQueries {
         .select(col("doc_id"), round(col("ppl"), 6).as("ppl"))
         .join(docs.select(col("doc_id"), col("lang")), "doc_id")
         .persist()
-      graft.Caches.releaseAfterAction(scores)
       val th = Ranks.quantiles(scores, Seq("lang"), "ppl", "doc_id",
         Seq(("t1", 1.0 / 3), ("t2", 2.0 / 3))).drop("n")
-      scores.join(broadcast(th), "lang")
+      val out = scores.join(broadcast(th), "lang")
         .withColumn("bucket",
           when(col("ppl") <= col("t1"), "head")
             .when(col("ppl") <= col("t2"), "middle")
             .otherwise("tail"))
         .select(col("doc_id"), col("lang"), col("ppl"), col("bucket"))
+      graft.Caches.releaseAfterConsumers(Seq(out), scores)
+      out
     },
     Some(s"""WITH t AS ($toksSql),
              tok AS (SELECT doc_id, unnest(toks) AS term FROM t),
@@ -380,7 +381,6 @@ object AnalyticsQueries {
       // dev-class remap) — unpersisted, the fact agg would run 3×
       val cls = li.groupBy(col("flag"), col("price"))
         .agg(count(lit(1)).as("__c")).persist()
-      graft.Caches.releaseAfterAction(cls)
       val med = Ranks.quantilesOfClasses(cls, Seq("flag"), "price", "__c",
           Seq("med" -> 0.5))
         .select(col("flag"), col("med"))
@@ -405,11 +405,13 @@ object AnalyticsQueries {
       val stats = Ranks.quantilesOfClasses(devCls, Seq("flag", "med"),
           "adev", "__c", Seq("mad" -> 0.5))
         .select(col("flag"), col("med"), col("mad"))
-      li.join(broadcast(stats), "flag")
+      val out = li.join(broadcast(stats), "flag")
         .select(col("l_orderkey"), col("l_linenumber"), col("flag"),
           round(col("price"), 6).as("price"),
           round((col("price") - col("med")) / (lit(1.4826) * col("mad")), 6)
             .as("robust_z"))
+      graft.Caches.releaseAfterConsumers(Seq(out), cls)
+      out
     },
     Some("""WITH r AS (SELECT l_orderkey, l_linenumber,
                          l_returnflag AS flag, l_extendedprice AS v,
@@ -926,17 +928,18 @@ object AnalyticsQueries {
       val sk = tok
         .agg(GraftFunctions.freqSketch(col("term"), hhK).as("sk"))
         .persist()
-      graft.Caches.releaseAfterAction(sk)
       val cands = sk.select(explode(col("sk")).as("e"))
         .select(col("e.item").as("term"))
       val n = sk.select(coalesce(element_at(col("sk"), 1).getField("n"),
         lit(0L)).as("n_total"))
-      tok.join(broadcast(cands), "term")
+      val out = tok.join(broadcast(cands), "term")
         .groupBy("term").agg(count(lit(1)).as("cnt"))
         .crossJoin(broadcast(n))
         .filter(col("cnt") > lit(hhPhi) * col("n_total"))
         .select(col("term"), col("cnt"),
           round(col("cnt") / col("n_total"), 6).as("share"))
+      graft.Caches.releaseAfterConsumers(Seq(out), sk)
+      out
     },
     Some(s"""WITH t AS ($toksSql),
              tok AS (SELECT unnest(toks) AS term FROM t),
@@ -1101,7 +1104,6 @@ object AnalyticsQueries {
       val perDoc = tok.groupBy("doc_id")
         .agg(perDocAggs.head, perDocAggs.tail: _*)
         .persist()
-      graft.Caches.releaseAfterAction(perDoc)
       val statAggs = Seq(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl")) ++
         bmTerms.map(t => sum((col(s"tf_$t") > 0).cast("long")).as(s"df_$t"))
       val stats = perDoc.agg(statAggs.head, statAggs.tail: _*)
@@ -1113,13 +1115,15 @@ object AnalyticsQueries {
           .otherwise(lit(0.0))
       }.reduce(_ + _)
       val nTerms = bmTerms.map(t => (col(s"tf_$t") > 0).cast("long")).reduce(_ + _)
-      perDoc.filter(bmTerms.map(t => col(s"tf_$t") > 0).reduce(_ || _))
+      val out = perDoc.filter(bmTerms.map(t => col(s"tf_$t") > 0).reduce(_ || _))
         .crossJoin(broadcast(stats))
         .withColumn("score0", w)
         .withColumn("n_terms", nTerms)
         .orderBy(round(col("score0"), 9).desc, col("doc_id"))
         .limit(bmTopK)
         .select(col("doc_id"), col("n_terms"), round(col("score0"), 6).as("score"))
+      graft.Caches.releaseAfterConsumers(Seq(out), perDoc)
+      out
     },
     Some(s"""WITH t AS ($toksSql),
              tok AS (SELECT doc_id, unnest(toks) AS term FROM t),
@@ -1576,14 +1580,15 @@ object AnalyticsQueries {
           .as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
         .persist()
-      graft.Caches.releaseAfterAction(tc)
       val regs = graft.operators.Sketches
         .countMinRegisters(tc, "token", "cnt", cmDepth, cmWidth)
       val top = tc.orderBy(col("cnt").desc, col("token")).limit(50)
-      graft.operators.Sketches
+      val out = graft.operators.Sketches
         .countMinEstimate(top, "token", regs, cmDepth, cmWidth)
         .select(col("token"), col("cnt").as("n_true"), col("est").as("n_est"),
           (col("est") - col("cnt")).as("overcount"))
+      graft.Caches.releaseAfterConsumers(Seq(out), tc)
+      out
     },
     Some {
       val h = OracleSql.hash60("'cm:'||CAST(r AS VARCHAR)||':'||token")

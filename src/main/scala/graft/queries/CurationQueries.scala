@@ -217,13 +217,14 @@ object CurationQueries {
         docs.select(col("doc_id"),
           (substring(col("source"), 4, 10).cast("int") < refSplit).as("is_ref")),
         "doc_id").persist()
-      graft.Caches.releaseAfterAction(flagged)
-      Dedup.minhashCandidatesAgainst(
+      val out = Dedup.minhashCandidatesAgainst(
           flagged.filter(!col("is_ref")).drop("is_ref"),
           flagged.filter(col("is_ref")).drop("is_ref"),
           ddK, ddBandsOf, ddMaxBucket)
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_ref_matches"), min("ref_id").as("first_ref"))
+      graft.Caches.releaseAfterConsumers(Seq(out), flagged)
+      out
     },
     Some {
       val p = Dedup.MinhashP
@@ -1335,7 +1336,6 @@ object CurationQueries {
         .groupBy(col("source")).agg(
           count(lit(1)).as("n_docs"), sum(col("smi")).as("ts"))
         .persist()
-      graft.Caches.releaseAfterAction(ds)
       val g = ds.agg(sum(col("n_docs")).as("gn"), sum(col("ts")).as("gs"))
       val e = ds.crossJoin(broadcast(g))
         .withColumn("mean_nll", col("ts").cast("double") /
@@ -1345,11 +1345,13 @@ object CurationQueries {
             col("gs").cast("double") / (col("gn").cast("double") * lit(1000000.0))))
         .withColumn("em", round(exp(col("excess")) * lit(1000000.0)).cast("long"))
       val z = e.agg(sum(col("em")).as("zt"))
-      e.crossJoin(broadcast(z))
+      val out = e.crossJoin(broadcast(z))
         .select(col("source"), col("n_docs"),
           round(col("mean_nll"), 6).as("mean_nll"),
           round(col("excess"), 6).as("excess"),
           round(col("em").cast("double") / col("zt").cast("double"), 6).as("weight"))
+      graft.Caches.releaseAfterConsumers(Seq(out), ds)
+      out
     },
     Some(s"""WITH ${AnalyticsQueries.lmDocSql},
           sc AS (SELECT doc_id,

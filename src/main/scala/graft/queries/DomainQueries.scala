@@ -349,8 +349,8 @@ object DomainQueries {
   private[graft] val stageLevels =
     Seq("Stage_0", "Stage_I", "Stage_II", "Stage_III", "Stage_IV")
 
-  /** Returns the cells frame plus the internal persist handles the caller
-    * must pass to `Caches.releaseAfterAction` once its plan is final.
+  /** Returns the cells frame plus the internal persist handles, which the
+    * caller releases against the frame it returns.
     * Only the prefiltered fact (kc) and the sample-sized size factors are
     * cached — NOT the joined cells: the dispersion-prior pass and the
     * per-gene fit each re-read the kc cache through two broadcast joins,
@@ -391,8 +391,7 @@ object DomainQueries {
           round(col("log2fc"), 6).as("log2fc"), round(col("lfc_se"), 6).as("lfc_se"),
           round(col("stat"), 6).as("stat"), round(col("pvalue"), 6).as("pvalue"),
           round(col("padj"), 6).as("padj"), col("p_signif"))
-      // registered AFTER the prior's collect — fires on the caller's action
-      graft.Caches.releaseAfterAction(handles: _*)
+      graft.Caches.releaseAfterConsumers(Seq(out), handles: _*)
       out
     },
     None)
@@ -466,7 +465,7 @@ object DomainQueries {
           round(col("se") / lit(ln2), 6).as("lfc_se"),
           col("zr").as("stat"),
           round(Stats.normalSfTwoSided(col("zr")), 6).as("pvalue"))
-      graft.Caches.releaseAfterAction(kc, sf)
+      graft.Caches.releaseAfterConsumers(Seq(out), kc, sf)
       out
     },
     Some {
@@ -527,7 +526,7 @@ object DomainQueries {
         .select(col("gene"), col("contrast"), round(col("log2fc"), 6).as("log2fc"),
           round(col("lfc_se"), 6).as("lfc_se"), round(col("stat"), 6).as("stat"),
           round(col("pvalue"), 6).as("pvalue"))
-      graft.Caches.releaseAfterAction(handles: _*)
+      graft.Caches.releaseAfterConsumers(Seq(out), handles: _*)
       out
     },
     None)
@@ -591,7 +590,7 @@ object DomainQueries {
           round(col("se") / lit(ln2), 6).as("lfc_se"),
           col("zr").as("stat"),
           round(Stats.normalSfTwoSided(col("zr")), 6).as("pvalue"))
-      graft.Caches.releaseAfterAction(kc, sf)
+      graft.Caches.releaseAfterConsumers(Seq(out), kc, sf)
       out
     },
     Some {

@@ -225,22 +225,18 @@ object EmbeddingQueries {
       import graft.operators.Pq
       val emb = Tables.embeddings(s, d)
       val model = Pq.fit(emb, "embedding", m = 8, ksub = 16, iters = 8)
-      // qvecs collect runs BEFORE the codes persist is registered for
-      // release: releaseAfterAction drops the cache on the NEXT completed
-      // action, which must be the caller's consuming one — an
-      // intermediate collect here would strand all three ADC branches on
-      // uncached triple re-encodes
       val qids = Seq(0L, 100L, 200L)
       val qvecs = emb.filter(col("vec_id").isin(qids: _*))
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
       val codes = Pq.encode(emb, "embedding", model).persist()
-      graft.Caches.releaseAfterAction(codes)
-      qids.filter(qvecs.contains).map { qid =>
+      val out = qids.filter(qvecs.contains).map { qid =>
         Pq.adcTopK(codes, model, qvecs(qid), k = 10)
           .select(lit(qid).as("q_id"), col("vec_id"),
             round(col("adc_d2"), 6).as("adc_d2"))
       }.reduce(_.unionByName(_))
+      graft.Caches.releaseAfterConsumers(Seq(out), codes)
+      out
     },
     None)
 

@@ -142,11 +142,10 @@ object PipelineQueries {
     (s, d) => {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val tc = sourceTokenCounts(s, d).persist()
-      graft.Caches.releaseAfterAction(tc)
       val ns = tc.groupBy(col("source")).agg(sum(col("k")).as("n_s"))
       val ct = tc.groupBy(col("token")).agg(sum(col("k")).as("kt"))
       val nn = ns.agg(sum(col("n_s")).as("nn"))
-      tc.join(ct, "token")
+      val out = tc.join(ct, "token")
         .join(broadcast(ns), "source")
         .crossJoin(broadcast(nn))
         .withColumn("e",
@@ -164,6 +163,8 @@ object PipelineQueries {
             (col("n_s").cast("double") * lit(1000000.0)), 6).as("entropy"),
           round(col("sf").cast("double") /
             (col("n_s").cast("double") * lit(1000000.0)), 6).as("kl_corpus"))
+      graft.Caches.releaseAfterConsumers(Seq(out), tc)
+      out
     },
     Some(s"""WITH $tcSql,
              ns AS (SELECT source, CAST(sum(k) AS BIGINT) AS n_s
@@ -303,15 +304,13 @@ object PipelineQueries {
       val uni = t.select(explode(col("toks")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("cw"))
         .persist()
-      graft.Caches.releaseAfterAction(uni)
       val bi0 = t
         .select(explode(TextFunctions.shingles(col("toks"), 2)).as("bg"))
         .groupBy(col("bg")).agg(count(lit(1)).as("cxy"))
         .persist()
-      graft.Caches.releaseAfterAction(bi0)
       val totals = uni.agg(sum(col("cw")).as("nn"))
         .crossJoin(bi0.agg(sum(col("cxy")).as("mm")))
-      bi0.filter(col("cxy") >= pmiMinCount)
+      val out = bi0.filter(col("cxy") >= pmiMinCount)
         .withColumn("w1", split(col("bg"), " ").getItem(0))
         .withColumn("w2", split(col("bg"), " ").getItem(1))
         .join(uni.select(col("w").as("w1"), col("cw").as("cx")), "w1")
@@ -325,6 +324,8 @@ object PipelineQueries {
           col("cx").as("n_left"), col("cy").as("n_right"), col("pmi"))
         .orderBy(col("pmi").desc, col("bigram"))
         .limit(100)
+      graft.Caches.releaseAfterConsumers(Seq(out), uni, bi0)
+      out
     },
     Some(s"""WITH t AS ($toksSql),
              u0 AS (SELECT unnest(toks) AS w FROM t),

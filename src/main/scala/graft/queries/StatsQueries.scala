@@ -774,17 +774,9 @@ object StatsQueries {
     * rides a broadcast 1-row cross join; the 2000-row p frame is
     * persisted so the Welch chain runs once).
     *
-    * ONE-ACTION assumption: `releaseAfterAction` unpersists after the
-    * FIRST completed action on the session, so the persist saves the
-    * Welch recompute only for the internal multi-consumer fan-out inside
-    * a single action (the n-frame broadcast + the bin agg). A caller
-    * running TWO top-level actions on the returned frame (count then
-    * collect) recomputes the Welch chain on the second — results stay
-    * correct, only the cache win is forfeited; such a caller should
-    * persist/unpersist around its own actions instead. Verify (one
-    * parquet write) and Bench (one count) each run exactly one action.
-    * The re-run of the full wt1 chain when BOTH wt1 and pv1 execute in
-    * one session is likewise deliberate: catalog queries are
+    * The p frame is released once the returned frame has fed an action
+    * (see [[graft.Caches]]). The re-run of the full wt1 chain when BOTH
+    * wt1 and pv1 execute in one session is deliberate: catalog queries are
     * self-contained by contract (no cross-query shared caches), and the
     * 2000-gene screen is cheap relative to cache-coordination coupling;
     * a caller auditing a truly expensive screen should pass its own
@@ -793,10 +785,9 @@ object StatsQueries {
     "pv1_pvalue_qc",
     (s, d) => {
       val base = wt1.run(s, d).select(col("pvalue")).persist()
-      graft.Caches.releaseAfterAction(base)
       val n = base.agg(count(lit(1)).as("n_tot"),
         sum(when(col("pvalue") > 0.5, 1L).otherwise(0L)).as("n_hi"))
-      base
+      val out = base
         .withColumn("bin",
           least(floor(col("pvalue") * lit(20.0)).cast("long"), lit(19L)))
         .groupBy(col("bin")).agg(count(lit(1)).as("n_genes"))
@@ -806,6 +797,8 @@ object StatsQueries {
             .as("frac"),
           round(least(lit(1.0), col("n_hi").cast("double") /
             (lit(0.5) * col("n_tot").cast("double"))), 6).as("pi0"))
+      graft.Caches.releaseAfterConsumers(Seq(out), base)
+      out
     },
     Some(s"""WITH base AS (${wt1.oracle.get}),
           s AS (SELECT CAST(count(*) AS BIGINT) AS n_tot,

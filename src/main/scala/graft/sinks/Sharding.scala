@@ -6,24 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.operators.Ranks
 
 /** Training-shard writers — the output end of a tokenize-and-pack
-  * pipeline. A training job wants (a) a fixed number of roughly equal
-  * files so data loaders can stripe over them, or (b) files that respect
-  * a token budget so sequence packing is a pure reader-side concat.
-  *
-  * Both are plain `DataFrameWriter` plans — no driver-side loops, no
-  * collect; the layout work is a range shuffle, exactly one pass.
+  * pipeline: files that respect a token budget, so sequence packing is a
+  * pure reader-side concat. A plain `DataFrameWriter` plan — no
+  * driver-side loops, no collect.
   */
 object Sharding {
-
-  /** Write `df` as `numShards` contiguous, balanced, globally ordered
-    * parquet files: range-partition on `order` (balanced by sampling),
-    * sort within each shard, one file per shard. Readers that consume
-    * shards in partition order see one global `order`-sorted stream. */
-  def writeShards(df: DataFrame, path: String, numShards: Int,
-      order: Seq[Column]): Unit =
-    df.repartitionByRange(numShards, order: _*)
-      .sortWithinPartitions(order: _*)
-      .write.mode("overwrite").parquet(path)
 
   /** Assign every row a `pack_id` by binning the running `sizeCol` total
     * into budget-width bins: the two-phase prefix scan

@@ -303,24 +303,23 @@ object EventStreams extends Serializable {
   def bloomSemiStatic(stream: DataFrame, dict: DataFrame, key: String,
       expectedItems: Long = 0L, fpp: Double = 0.01): DataFrame = {
     // persisted: the sizing count, the sketch treeAggregate, and the
-    // verify join's first resolution all read the distinct dictionary —
-    // uncached it would recompute (scan + distinct shuffle) per consumer.
-    // Release registered AFTER the construction jobs (the r10 rule: a
-    // Dataset->RDD job fires the one-shot listener, see CachesSpec). A
-    // long-running STREAM re-resolves the dictionary per micro-batch once
-    // the release fires — deliberate, the same slowly-changing-dimension
-    // re-resolution enrichStatic documents.
+    // verify join all read the distinct dictionary — uncached it would
+    // recompute (scan + distinct shuffle) per consumer. A stream reads it
+    // every micro-batch, so it lives as long as the streaming query; a
+    // batch call releases it once the returned frame has fed an action.
     val keys = dict.select(col(key)).distinct().persist()
     val sized =
       if (expectedItems > 0) expectedItems
       else math.max(keys.count(), 1L << 10)
     val bytes = graft.operators.Dedup.bloomOf(keys, key, sized, fpp)
     val bc = keys.sparkSession.sparkContext.broadcast(bytes)
-    graft.Caches.releaseAfterAction(keys)
-    stream
+    val out = stream
       .filter(graft.expressions.BloomMightContain.probe(
         bc, col(key).cast("string")))
       .join(keys, Seq(key), "leftsemi")
+    if (stream.isStreaming) graft.Caches.releaseAfterStreams(keys)
+    else graft.Caches.releaseAfterConsumers(Seq(out), keys)
+    out
   }
 
   /** Stream-side duplicated-span COVERAGE against a static gram

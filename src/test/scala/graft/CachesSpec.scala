@@ -2,27 +2,57 @@ package graft
 
 import graft.api.Tcga
 
-/** The Caches release-after-action contract, end to end: a realistic
-  * session running the two flagship pipelines (KM by median expression +
-  * NB-GLM differential expression) must not accumulate cached frames —
-  * every library-internal persist is released once the caller's consuming
-  * action completes (VERDICT r02 #4). */
+/** The Caches contract, end to end: a realistic session running the two
+  * flagship pipelines (KM by median expression + NB-GLM differential
+  * expression) must not accumulate cached frames — every library-internal
+  * persist is released once the frame it feeds has run (VERDICT r02 #4),
+  * and no other action on the session, failed or not, releases it. */
 class CachesSpec extends SparkSpec {
+
+  // the shared session outlives each suite: count only the persistent RDDs
+  // a test made itself
+  private def rddIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  // QueryExecutionListener delivery is asynchronous — poll briefly
+  private def settle(done: => Boolean): Unit = {
+    val deadline = System.currentTimeMillis() + 20000
+    while (!done && System.currentTimeMillis() < deadline) Thread.sleep(200)
+  }
+  // raw RDD persists (checkpoints) survive catalog.clearCache: drop the
+  // ones a test made so later tests count a clean slate
+  private def dropRddsSince(earlier: Set[Int]): Unit =
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!earlier(id)) rdd.unpersist(blocking = true)
+    }
 
   test("a full KM + DE session leaves at most one cached RDD behind") {
     val t = TcgaFixtures.tables(spark)
     spark.catalog.clearCache()
+    val earlier = rddIds()
     val (curves, tests) =
       Tcga.kmByMedianExpression(t, Seq("DEG10", "GENE1", "GENE2"))
     assert(curves.collect().nonEmpty)
     assert(tests.collect().nonEmpty)
     val de = Tcga.differentialExpression(t, "short_letter_code", Seq("NT", "TP"))
     assert(de.collect().nonEmpty)
-    // QueryExecutionListener delivery is asynchronous — poll briefly
-    def live() = spark.sparkContext.getPersistentRDDs.size
-    val deadline = System.currentTimeMillis() + 20000
-    while (live() > 1 && System.currentTimeMillis() < deadline) Thread.sleep(200)
+    def live() = (rddIds() -- earlier).size
+    settle(live() <= 1)
     assert(live() <= 1, s"leaked cached RDDs: ${live()}")
+  }
+
+  test("an unrelated action keeps differentialExpression's cells; the caller's action releases them") {
+    val t = TcgaFixtures.tables(spark)
+    spark.catalog.clearCache()
+    val cm = spark.sharedState.cacheManager
+    val de = Tcga.differentialExpression(t, "short_letter_code", Seq("NT", "TP"))
+    assert(!cm.isEmpty, "differentialExpression cached nothing")
+    spark.range(3).count()
+    (1 to 5).foreach { _ =>
+      Thread.sleep(100)
+      assert(!cm.isEmpty, "an unrelated action released the cells")
+    }
+    de.write.format("noop").mode("overwrite").save()
+    settle(cm.isEmpty)
+    assert(cm.isEmpty, "the cells outlived the caller's action")
   }
 
   private def cached(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -77,18 +107,37 @@ class CachesSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("a failed action releases the caches of both release rules") {
+  test("a failed action releases a cache only when its plan holds a consumer") {
     import org.apache.spark.sql.functions._
     spark.catalog.clearCache()
     val shared = spark.range(50).withColumn("k", col("id") % 5).persist()
-    val single = spark.range(40).withColumn("k", col("id") % 3).persist()
     val consumers = Seq(shared.groupBy("k").count(), shared.select(sum("id")))
     Caches.releaseAfterConsumers(consumers, shared)
-    Caches.releaseAfterAction(single)
     val boom = udf((k: Long) => if (k >= 0) throw new IllegalStateException("boom") else k)
+    intercept[Exception](spark.range(5).select(boom(col("id"))).collect())
+    stays(shared, "an unrelated failed action released the cache")
     intercept[Exception](consumers.head.select(boom(col("k"))).collect())
-    goes(shared, "a failed consumer action kept the shared cache")
-    goes(single, "a failed action kept the one-action cache")
+    goes(shared, "a failed consumer action kept the cache")
+  }
+
+  test("a listener whose consumer never runs unregisters once clearCache drops its cache") {
+    import org.apache.spark.sql.functions._
+    def pending() = org.apache.spark.sql.QueryListeners.of(spark)
+      .count(_.getClass.getName.startsWith("graft.Caches$"))
+    // earlier suites may leave never-consumed listeners: drain them first
+    spark.catalog.clearCache()
+    spark.range(1).count()
+    settle(pending() == 0)
+    assert(pending() == 0, s"${pending()} listeners survived clearCache")
+    val cache = spark.range(30).withColumn("k", col("id") % 3).persist()
+    Caches.releaseAfterConsumers(Seq(cache.groupBy("k").count()), cache)
+    spark.range(3).count()
+    stays(cache, "an unrelated action released the cache")
+    assert(pending() == 1)
+    spark.catalog.clearCache()
+    spark.range(3).count()
+    settle(pending() == 0)
+    assert(pending() == 0, "the listener outlived its cache")
   }
 
   test("ivfIndexTopK keeps its probe frame cached for the caller's action") {
@@ -132,18 +181,63 @@ class CachesSpec extends SparkSpec {
     assert(cm.isEmpty, "the probe frame outlived the caller's action")
   }
 
-  test("pretrainingRun releases every internal cache after the consuming action") {
+  private def pretrainDocs = {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val docs = (1L to 80L)
+    (1L to 80L)
       .map(i => (i, s"document body ${i % 9} with some shared tokens and a " +
         s"longer tail of words to clear the quality gate number $i",
         if (i % 2 == 0) "en" else "de", if (i % 10 == 0) "eval" else "train"))
       .toDF("doc_id", "text", "lang", "split")
-    spark.catalog.clearCache()
+  }
+
+  test("DE + KM and pretrainingRun + writePacked on two threads match a serial run") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.sinks.Sharding
+    val t = TcgaFixtures.tables(spark)
+    val docs = pretrainDocs
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    def tcgaRound(): Seq[Seq[String]] = {
+      val de = Tcga.differentialExpression(t, "short_letter_code", Seq("NT", "TP"))
+      val (curves, tests) = Tcga.kmByMedianExpression(t, Seq("DEG10", "GENE1", "GENE2"))
+      Seq(rows(de), rows(curves), rows(tests))
+    }
+    def corpusRound(): Seq[Seq[String]] = {
+      val st = graft.api.Corpus.pretrainingRun(docs, col("split") === "eval",
+        jaccardMin = 0.95, contaminationMax = 1.01, budget = 0.9)
+      val dir = java.nio.file.Files.createTempDirectory("graft_caches_packed").toString
+      Sharding.writePacked(st.mixed.withColumn("n_tokens",
+          size(graft.operators.TextFunctions.tokens(col("text"))).cast("long")),
+        dir, "n_tokens", 4096L, Seq(col("doc_id")))
+      Seq(rows(st.packed), rows(spark.read.parquet(dir)))
+    }
+    val earlier = rddIds()
     try {
-      def ids() = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      val earlier = ids()
+      spark.catalog.clearCache()
+      val serial = tcgaRound() ++ corpusRound()
+      spark.catalog.clearCache()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val concurrent =
+        try {
+          val tcga = pool.submit(() => tcgaRound())
+          val corpus = pool.submit(() => corpusRound())
+          tcga.get(300, java.util.concurrent.TimeUnit.SECONDS) ++
+            corpus.get(300, java.util.concurrent.TimeUnit.SECONDS)
+        } finally pool.shutdown()
+      assert(serial.forall(_.nonEmpty))
+      assert(concurrent == serial, "the concurrent run's outputs differ from the serial run's")
+      val cm = spark.sharedState.cacheManager
+      settle(cm.isEmpty)
+      assert(cm.isEmpty, "a library cache outlived both threads' actions")
+    } finally dropRddsSince(earlier)
+  }
+
+  test("pretrainingRun releases every internal cache after the consuming action") {
+    import org.apache.spark.sql.functions._
+    val docs = pretrainDocs
+    spark.catalog.clearCache()
+    val earlier = rddIds()
+    try {
       // thresholds loosened so rows survive every stage — this test is
       // about CACHE lifetime, not funnel semantics (CorpusSpec pins those)
       val st = graft.api.Corpus.pretrainingRun(docs, col("split") === "eval",
@@ -165,89 +259,38 @@ class CachesSpec extends SparkSpec {
       assert(checkpoints == stages,
         s"checkpoints $checkpoints after construction, expected the stages' $stages")
       assert(st.packed.collect().nonEmpty)
-      def live() = spark.sparkContext.getPersistentRDDs.size
-      val deadline = System.currentTimeMillis() + 20000
-      while (ids() -- earlier != stages && System.currentTimeMillis() < deadline)
-        Thread.sleep(200)
+      def live() = (rddIds() -- earlier).size
+      settle(rddIds() -- earlier == stages)
       assert(live() <= 2, s"leaked cached RDDs: ${live()}")
-      assert(ids() -- earlier == stages,
-        s"persistent RDDs ${ids() -- earlier} are not the stage checkpoints $stages")
-    } finally {
-      // checkpointed stage RDDs survive catalog.clearCache (raw RDD
-      // persists) — drop them so later tests count a clean slate
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
+      assert(rddIds() -- earlier == stages,
+        s"persistent RDDs ${rddIds() -- earlier} are not the stage checkpoints $stages")
+    } finally dropRddsSince(earlier)
   }
 
-  test("which construction-time operations fire the one-shot release") {
-    // Pins the trigger surface discovered in the r10 bf1 fix: the old
-    // contaminationBloom registered releaseAfterAction BEFORE its
-    // sketch-build jobs and lost the dictionary cache during
-    // CONSTRUCTION, so the verify join silently replanned the dictionary
-    // build inline. The rule for operator authors: register the release
-    // LAST, after every construction-time job — this test documents
-    // exactly which job kinds consume the one-shot listener.
+  test("construction-time jobs on a cache do not release it under the consumer rule") {
     import spark.implicits._
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
-    def fresh() = {
+    // each of these ran inside some operator's construction and fired the
+    // deleted one-action rule; none holds the consumer's plan
+    val jobs: Seq[(String, DataFrame => Unit)] = Seq(
+      "collect" -> (df => { df.collect(); () }),
+      "rdd count" -> (df => { df.rdd.count(); () }),
+      "eager localCheckpoint" -> (df => { df.localCheckpoint(); () }),
+      "lazy localCheckpoint" -> (df => { df.localCheckpoint(eager = false); () }))
+    val earlier = rddIds()
+    try jobs.foreach { case (label, job) =>
+      spark.catalog.clearCache()
       val df = (1 to 100).toDF("v")
         .groupBy((col("v") % 10).as("k")).agg(count(lit(1)).as("n"))
         .persist()
-      df.count() // materialize; the listener is registered AFTER this
-      df
-    }
-    // ask the cache manager about THIS df — a global getPersistentRDDs
-    // check would be satisfied by unrelated RDDs (localCheckpoint itself
-    // persists a checkpoint RDD, which would make that probe vacuous)
-    def cached(df: org.apache.spark.sql.DataFrame): Boolean =
-      spark.sharedState.cacheManager.lookupCachedData(
-        df.asInstanceOf[org.apache.spark.sql.classic.Dataset[
-          org.apache.spark.sql.Row]]).isDefined
-    def settle(): Unit = { Thread.sleep(400) } // async listener delivery
-    def probe(label: String, fire: org.apache.spark.sql.DataFrame => Unit): Boolean = {
-      spark.catalog.clearCache()
-      val df = fresh()
-      Caches.releaseAfterAction(df)
-      fire(df)
-      settle()
-      val alive = cached(df)
-      spark.catalog.clearCache()
-      // drop any raw RDD persists the probe itself created (the
-      // localCheckpoint RDD survives catalog.clearCache) so later tests
-      // count a clean slate
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // drain the listener if the probe did NOT fire it, so probes stay
-      // independent (a later unrelated action would otherwise release a
-      // later probe's frame early)
-      if (alive) { spark.range(1).count(); settle() }
-      alive
-    }
-    // SQL actions fire it: collect/count on any frame in the session
-    assert(!probe("sql count", _.sparkSession.range(5).count()),
-      "a SQL action must fire the one-shot release")
-    assert(!probe("collect", _.collect().length: Unit),
-      "collect must fire the one-shot release")
-    // Dataset->RDD jobs (the bloomOf/treeAggregate shape) fire it too —
-    // THE bf1 bug: registering before a .rdd job loses the cache
-    assert(!probe("rdd count", df => { df.rdd.count(); () }),
-      "a Dataset->RDD job must fire the one-shot release (bf1's root " +
-        "cause — if this flips on a Spark upgrade, revisit the " +
-        "register-last rule)")
-    // localCheckpoint fires it in BOTH forms — even the lazy one runs no
-    // job but still routes through Dataset.withAction, which notifies
-    // QueryExecutionListeners. So registration order is the ONLY safety:
-    // every iterative loop in the repo (Graphs.pageRank/kCore/bfs,
-    // Components) checkpoints/counts INSIDE the loop and registers its
-    // releases AFTER it — audited r10.
-    assert(!probe("localCheckpoint", df => { df.localCheckpoint(); () }),
-      "eager localCheckpoint no longer fires the one-shot release — " +
-        "the register-last rule could be relaxed for it")
-    assert(!probe("lazy localCheckpoint",
-        df => { df.localCheckpoint(eager = false); () }),
-      "lazy localCheckpoint no longer fires the one-shot release — " +
-        "the register-last rule could be relaxed for it")
+      val consumer = df.filter(col("n") > 0)
+      Caches.releaseAfterConsumers(Seq(consumer), df)
+      job(df)
+      stays(df, s"$label on the cache released it")
+      consumer.collect()
+      goes(df, s"the cache outlived its consumer's action ($label)")
+    } finally dropRddsSince(earlier)
   }
 
   test("releaseAfterStreams unpersists once the last streaming query stops") {
@@ -262,8 +305,8 @@ class CachesSpec extends SparkSpec {
       spark.sharedState.cacheManager.lookupCachedData(
         static.asInstanceOf[org.apache.spark.sql.classic.Dataset[
           org.apache.spark.sql.Row]]).isDefined
-    // batch actions must NOT release it (that's releaseAfterAction's
-    // trigger, not this one) — the stream-static cache outlives actions.
+    // batch actions must NOT release it — the stream-static cache
+    // outlives actions.
     // Positive-condition POLLING, not one fixed sleep (r13 ADVICE: a
     // loaded host could race the async listener bus): the cache must
     // STAY live across repeated checks after the batch action lands.
@@ -330,11 +373,11 @@ class CachesSpec extends SparkSpec {
       .map(i => (i, s"shared prefix body ${i % 7} tail $i tokens spread"))
       .toDF("doc_id", "text")
     spark.catalog.clearCache()
+    val earlier = rddIds()
     val pairs = graft.api.Corpus.nearDuplicates(docs, jaccardMin = 0.2)
     pairs.collect()
-    def live() = spark.sparkContext.getPersistentRDDs.size
-    val deadline = System.currentTimeMillis() + 20000
-    while (live() > 1 && System.currentTimeMillis() < deadline) Thread.sleep(200)
+    def live() = (rddIds() -- earlier).size
+    settle(live() <= 1)
     assert(live() <= 1, s"leaked cached RDDs: ${live()}")
   }
 }

@@ -132,8 +132,6 @@ class ExpressionsSpec extends SparkSpec {
     val salted = Skew.saltedJoin(facts, dim, "k", 8).groupBy("k", "name")
       .agg(count(lit(1)).as("n"), sum("v").as("s"))
     assert(plain.exceptAll(salted).count() == 0 && salted.exceptAll(plain).count() == 0)
-    val hot = Skew.hotKeys(facts, "k", 1).collect().head
-    assert(hot.getLong(0) == 1L && hot.getLong(1) == 900L)
   }
 
   test("saltedJoin salt is deterministic across input partitionings") {

@@ -39,15 +39,6 @@ class MultimodalSpec extends SparkSpec {
     assert(new String(frames(1).getAs[Array[Byte]]("frame")) == "defg")
   }
 
-  test("resizeStub crops or zero-pads to the target size") {
-    val out = media.select(col("media_id"),
-        Multimodal.resizeStub(col("payload"), 4).as("r"))
-      .orderBy("media_id").collect()
-    assert(new String(out(0).getAs[Array[Byte]]("r")) == "abcd")
-    val padded = out(1).getAs[Array[Byte]]("r")
-    assert(padded.length == 4 && padded(2) == 0 && padded(3) == 0)
-  }
-
   // ----- real codecs (java.desktop: ImageIO + javax.sound) ---------------
 
   private def pngBytes(w: Int, h: Int, rgb: Int): Array[Byte] = {

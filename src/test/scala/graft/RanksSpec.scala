@@ -166,13 +166,35 @@ class RanksSpec extends SparkSpec {
     }
   }
 
+  test("two rowNumber outputs built before either one's action leave no cache behind") {
+    spark.catalog.clearCache()
+    def ids() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // listener delivery is asynchronous: poll for the release
+    def settled(done: => Boolean): Boolean = {
+      val deadline = System.currentTimeMillis() + 20000
+      while (!done && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      done
+    }
+    val earlier = ids()
+    val a = Ranks.rowNumber(df, Seq($"g"), Seq($"v", $"id"))
+    val b = Ranks.rowNumber(df, Nil, Seq($"id"))
+    assert(a.collect().length == 144)
+    // a's action releases a's ranged cache and leaves b's in place
+    assert(settled((ids() -- earlier).isEmpty), "a's ranged cache outlived its action")
+    assert(!spark.sharedState.cacheManager.isEmpty, "a's action released b's ranged cache")
+    assert(b.collect().length == 144)
+    spark.catalog.clearCache()
+    assert(settled((ids() -- earlier).isEmpty),
+      s"persistent RDDs left: ${ids() -- earlier}")
+  }
+
   test("only the per-partition local rank windows the full data; offsets window on agg") {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.window.WindowExec
     // the persisted ranged frame's plan holds the range exchange
     def flatten(p: org.apache.spark.sql.execution.SparkPlan) =
       PlanNodes(p, intoCaches = true)
-    // built lazily: each frame's caches last until the next action
+    // built lazily: each output plans while its own ranged cache is live
     val outs = Seq[(String, () => org.apache.spark.sql.DataFrame)](
       "ntile" -> (() => Ranks.ntile(df, Seq($"g"), Seq($"v", $"id"), 2)),
       "prefixSum" -> (() => Ranks.prefixSum(df, Seq($"g"), Seq($"v", $"id"), $"v")))

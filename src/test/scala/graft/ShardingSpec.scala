@@ -7,24 +7,6 @@ import graft.sinks.Sharding
 class ShardingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("writeShards: exact file count, balanced, globally ordered across shards") {
-    val dir = Files.createTempDirectory("graft_shards").toString
-    val df = spark.range(0, 1000).select($"id", ($"id" % 7).as("v"))
-    Sharding.writeShards(df, dir, numShards = 4, order = Seq($"id"))
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    assert(files.length === 4)
-    // each shard internally sorted, and shard key ranges don't overlap
-    val perFile = files.map(f => spark.read.parquet(f.getPath)
-      .select("id").as[Long].collect())
-    perFile.foreach(ids => assert(ids.sameElements(ids.sorted)))
-    val ranges = perFile.map(ids => (ids.min, ids.max)).sortBy(_._1)
-    ranges.sliding(2).foreach { case Array((_, hi), (lo, _)) => assert(hi < lo) }
-    assert(perFile.map(_.length).sum === 1000)
-    // balanced: range partitioning on a uniform key keeps shards comparable
-    assert(perFile.map(_.length).min > 100)
-  }
-
   test("packByBudget: bin totals respect budget + straddling-doc bound") {
     val df = (1L to 200L).map(i => (i, 10L + i % 7)).toDF("doc_id", "n_tokens")
     val packed = Sharding.packByBudget(df, "n_tokens", budget = 100,

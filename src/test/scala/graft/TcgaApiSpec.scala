@@ -186,6 +186,27 @@ class TcgaApiSpec extends SparkSpec {
     assert(msg2.contains("drug_class") && msg2.contains("Tamox|ifen"), msg2)
   }
 
+  test("differentialExpression rejects degenerate levels and contrasts before any job runs") {
+    val tables = t
+    val sc = spark.sparkContext
+    def rejected(levels: Seq[String], contrasts: Seq[(String, String)] = Nil): String =
+      intercept[IllegalArgumentException](Tcga.differentialExpression(
+        tables, "short_letter_code", levels, contrasts)).getMessage
+    sc.setJobGroup("graft_de_arguments", "degenerate DE arguments")
+    try {
+      val one = rejected(Seq("NT"))
+      assert(one.contains("[NT]"), one)
+      val repeated = rejected(Seq("NT", "TP", "NT"))
+      assert(repeated.contains("level NT"), repeated)
+      val unknown = rejected(Seq("NT", "TP"), Seq("TP" -> "XX"))
+      assert(unknown.contains("TP_vs_XX names XX"), unknown)
+      val self = rejected(Seq("NT", "TP"), Seq("TP" -> "TP"))
+      assert(self.contains("TP_vs_TP"), self)
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("graft_de_arguments").isEmpty,
+      "a Spark job ran before the arguments were checked")
+  }
+
   test("presentation edge: wide pivot and ragged export shapes") {
     val wide = Tcga.wideCounts(t, Seq("DEG10", "GENE1", "GENE2"))
     assert(wide.columns.toSeq == Seq("barcode", "DEG10", "GENE1", "GENE2"))

@@ -23,6 +23,17 @@ if [ -n "$stitch" ]; then
   echo "spark_partition_id outside operators/Ranks.scala: $stitch" >&2
   exit 1
 fi
+# cache lifetimes have one home: every release rule is a listener in
+# Caches.scala. The only other query listener is Dedup's bucket-cap audit
+# (its one DropAudit registration), which logs and releases nothing.
+listeners=$(grep -rln 'listenerManager.register' src/main |
+  grep -v -e '^src/main/scala/graft/Caches.scala$' \
+    -e '^src/main/scala/graft/operators/Dedup.scala$' || true)
+audits=$(grep -c 'listenerManager.register' src/main/scala/graft/operators/Dedup.scala || true)
+if [ -n "$listeners" ] || [ "$audits" -gt 1 ]; then
+  echo "listenerManager.register outside Caches.scala and Dedup's DropAudit: $listeners" >&2
+  exit 1
+fi
 # the benchmark's own build calls GraftSession.apply and the graft.api
 # surface: break either and the gate fails here, not at benchmark time
 (cd perfbench && sbt -batch compile)
