@@ -37,13 +37,17 @@ object Tcga {
     regexp_replace(regexp_replace(c, "A|B|C", ""), " ", "_")
 
   /** D1 — drop genes with total count < `minTotal`
-    * (`rowSums(counts) >= 10`, vital_status_DESeq.R:47-48). */
-  def prefilterGenes(expression: DataFrame, minTotal: Long = 10): DataFrame = {
-    val keep = expression.groupBy("gene_id")
-      .agg(sum(col("count")).as("tot")).filter(col("tot") >= minTotal)
-      .select("gene_id")
-    expression.join(keep, Seq("gene_id"), "left_semi")
-  }
+    * (`rowSums(counts) >= 10`, vital_status_DESeq.R:47-48). Built on the
+    * size factors' per-gene pass (`Normalization.withGeomean`), so a
+    * caller that goes on to normalize reads one gene aggregate; a
+    * `minTotal ≤ 0` keeps all-zero genes. */
+  def prefilterGenes(expression: DataFrame, minTotal: Long = 10): DataFrame =
+    kept(expression, minTotal).drop("geomean")
+
+  /** D1's kept fact with each row's gene `geomean`: what the size factors
+    * read, so they need no gene aggregate of their own. */
+  private def kept(expression: DataFrame, minTotal: Long = 10): DataFrame =
+    Normalization.withGeomean(expression, "gene_id", "count", Some(minTotal))
 
   /** D2+D6 — VST-normalized long counts `(gene_id, barcode, vst)`
     * (vst(), vital_status_DESeq.R:100-101): the parametric dispersion-
@@ -65,7 +69,9 @@ object Tcga {
     *         lfc_se, stat, pvalue, padj, p_signif)`. The NB-GLM cells are
     *         persisted (the dispersion-prior collect and the fit read
     *         them) and released once the returned frame has fed an
-    *         action (see [[graft.Caches]]).
+    *         action (see [[graft.Caches]]). An `expression` with no
+    *         rows (or no gene passing D1) gives an empty frame with
+    *         these columns.
     * @throws IllegalArgumentException before any job runs, naming the
     *         value, when `levels` has fewer than two distinct levels or
     *         repeats one, or a contrast names a level outside `levels` or
@@ -89,37 +95,35 @@ object Tcga {
     val spark = t.expression.sparkSession
     import spark.implicits._
     val cond = conditions(t, conditionCol, levels)
-    val expr0 = prefilterGenes(t.expression)
-    val sf = Normalization.sizeFactors(expr0, "gene_id", "barcode", "count")
+    val expr0 = kept(t.expression)
+    val sf = Normalization.sizeFactorsOf(expr0, "barcode", "count")
     // surrogate ids: the typed NB fit groups by a long key. A 60-bit
     // md5-prefix hash is deterministic and collision-free w.h.p. (~60k
     // genes vs 2^60) — unlike dense_rank over a no-partition Window it
-    // never funnels the dim through one task.
-    val geneIds = t.genes.select(col("gene_id"))
-      .withColumn("gid", graft.operators.Dedup.hash60(col("gene_id")))
+    // never funnels the dim through one task. One broadcast of the gene
+    // dim gives the cells their id and the results their names.
+    val genes = t.genes.select(col("gene_id"), col("gene_name"),
+      graft.operators.Dedup.hash60(col("gene_id")).as("gid"))
     val cells = expr0
       .join(broadcast(sf), "barcode")
       .join(cond, "barcode")
-      .join(broadcast(geneIds), "gene_id")
-      .withColumn("bid", abs(hash(col("barcode"))).cast("long"))
-      .select(col("gid").as("gene"), col("bid").as("smp"),
+      .join(broadcast(genes), "gene_id")
+      .select(col("gid").as("gene"),
+        abs(hash(col("barcode"))).cast("long").as("smp"),
         col("count").cast("double").as("cnt"), col("cond"),
         col("size_factor").as("sf")).as[CountCell]
       .persist() // feeds the dispersion-prior pass AND the per-gene fit
     val pairs = if (contrasts.nonEmpty) contrasts else Seq((levels.last, levels.head))
     val prior = DiffExpression.dispersionPrior(cells, levels.size)
     val de = DiffExpression.contrasts(cells, levels, pairs, Some(prior)).toDF()
-    val named = de
-      .join(broadcast(geneIds), de("gene") === geneIds("gid"))
-      .join(broadcast(t.genes), "gene_id")
+    val named = de.join(broadcast(genes), de("gene") === genes("gid"))
     // goi restriction BEFORE the BH adjustment: `results(data[keep,])`
     // (vital_status_DESeq.R:88-89) computes padj over the subset only
     val selected = if (goi.isEmpty) named else named.filter(inGoi(goi))
     val out = Stats.bhAdjust(selected, "pvalue", "gene_id", partitionCols = Seq("contrast"))
-      .withColumn("p_signif", Stats.signifBand(col("padj")))
       .select(col("gene_id"), col("gene_name"), col("contrast"),
         col("log2fc"), col("lfc_se"), col("stat"), col("pvalue"),
-        col("padj"), col("p_signif"))
+        col("padj"), Stats.signifBand(col("padj")).as("p_signif"))
     graft.Caches.releaseAfterConsumers(Seq(out), cells.toDF())
     out
   }
@@ -192,7 +196,9 @@ object Tcga {
     * released once both have fed a completed action).
     *
     * @return (curves, tests): curves keyed by (gene_name, strat); tests one
-    *         row per gene_name (the leading column) with chi2/pvalue
+    *         row per gene_name (the leading column) with chi2/pvalue. An
+    *         `expression` with no rows gives two empty frames with these
+    *         columns.
     */
   def kmByMedianExpression(t: TcgaTables, goi: Seq[String]): (DataFrame, DataFrame) = {
     val (curves, tests) =
@@ -300,9 +306,13 @@ object Tcga {
   /** D1 → D2+D6 → gene names: the prefiltered VST counts of every sample,
     * `(gene_id, barcode, vst, gene_name)`. Callers apply their own goi
     * filter. */
-  private[graft] def namedVst(t: TcgaTables): DataFrame =
-    normalizedCounts(prefilterGenes(t.expression))
+  private[graft] def namedVst(t: TcgaTables): DataFrame = {
+    val expr0 = kept(t.expression)
+    Normalization.vstTrendOf(expr0, Normalization.sizeFactorsOf(expr0, "barcode", "count"),
+        "gene_id", "barcode", "count")
+      .select(col("gene_id"), col("barcode"), col("vst"))
       .join(broadcast(t.genes), "gene_id")
+  }
 
   /** F7–F9 + B7 — survival subjects `(keys…, barcode, time, event)`: time
     * is days to death, or to the last follow-up for a living patient;
@@ -322,43 +332,45 @@ object Tcga {
     * (cohort `keys`, gene_name, barcode)) split LOW/HIGH at the median
     * of each (keys, gene_name) cohort (ntile(2) over (vst, barcode)),
     * joined to `subjects` on (keys, barcode), with the test key `gk` =
-    * `keys|gene_name` and the curve key `gs` = `gk|strat`. The split's
-    * window is partitioned by `gk`, the key the tests group by, so the
-    * tests need no exchange of their own over this frame. Not persisted.
+    * `keys|gene_name`. The split's window is partitioned by `gk`, the key
+    * the tests group by and the curves' leading stratum column, so neither
+    * output needs an exchange of its own over this frame. Not persisted.
     * A key value that contains `|` would split back into the wrong
     * columns, so the plan fails on it with an error naming the value. */
   private[graft] def medianStrata(vst: DataFrame, subjects: DataFrame,
       keys: Seq[String]): DataFrame =
     vst
-      .withColumn("gk", concat_ws("|", (keys :+ "gene_name").map(k =>
+      .select(col("*"), concat_ws("|", (keys :+ "gene_name").map(k =>
         when(col(k).contains("|"), raise_error(concat(
           lit(s"KM key $k contains '|', the key separator: "), col(k))))
-          .otherwise(col(k))): _*))
-      .withColumn("strat", when(ntile(2).over(Window.partitionBy(col("gk"))
-        .orderBy(col("vst"), col("barcode"))) === 1, "LOW").otherwise("HIGH"))
+          .otherwise(col(k))): _*).as("gk"))
+      .select(col("*"), when(ntile(2).over(Window.partitionBy(col("gk"))
+        .orderBy(col("vst"), col("barcode"))) === 1, "LOW").otherwise("HIGH").as("strat"))
       .join(subjects, keys :+ "barcode")
-      .withColumn("gs", concat_ws("|", col("gk"), col("strat")))
 
   /** §3.3's KM tail, the one copy behind [[kmByMedianExpression]] (no
     * cohort keys) and [[drugKmFanOut]] (`drug_class`): the
     * [[medianStrata]] subject frame is persisted once (bounded by
-    * cohorts × genes of interest × samples), curves run per (keys,
-    * gene_name, strat) and log-rank tests per (keys, gene_name) over it,
-    * and both outputs get their keys split back out as trailing columns.
-    * The cache is released once both outputs have fed a completed action;
-    * a caller that consumes only one keeps it until `Caches.clearCaches`
-    * (see [[graft.Caches]]). */
+    * cohorts × genes of interest × samples), curves run per (gk, strat)
+    * and log-rank tests per gk over it, both on the cache's own `gk`
+    * partitioning, and only `gk` is split back into the key columns
+    * (keys, gene_name), which trail each output, `strat` last on the
+    * curves. The cache is released once both outputs have fed a
+    * completed action; a caller that consumes only one keeps it until
+    * `Caches.clearCaches` (see [[graft.Caches]]). */
   private def kmTail(vst: DataFrame, subjects: DataFrame,
       keys: Seq[String]): (DataFrame, DataFrame) = {
     val strata = medianStrata(vst, subjects, keys).persist()
-    def unkey(df: DataFrame, key: String, names: Seq[String]): DataFrame =
-      names.zipWithIndex.foldLeft(df) { case (d, (n, i)) =>
-        d.withColumn(n, split(col(key), "\\|").getItem(i))
-      }.drop(key)
-    val curves = unkey(Survival.kmCurve(strata, "gs", "time", "event"),
-      "gs", keys :+ "gene_name" :+ "strat")
-    val tests = unkey(Survival.logRankBy(strata, "gk", "strat", "time", "event"),
-      "gk", keys :+ "gene_name")
+    val names = keys :+ "gene_name"
+    def unkey(df: DataFrame, trailing: String*): DataFrame = {
+      val parts = names.zipWithIndex.map { case (n, i) =>
+        split(col("gk"), "\\|").getItem(i).as(n) }
+      df.select(df.columns.toIndexedSeq.filterNot(("gk" +: trailing).contains)
+        .map(col) ++ parts ++ trailing.map(col): _*)
+    }
+    val curves = unkey(Survival.kmCurve(strata, Seq("gk", "strat"), "time", "event"),
+      "strat")
+    val tests = unkey(Survival.logRankBy(strata, "gk", "strat", "time", "event"))
     graft.Caches.releaseAfterConsumers(Seq(curves, tests), strata)
     (curves, tests)
   }

@@ -50,14 +50,15 @@ object Stats {
     val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df
       // descending row number → ascending BH rank → the BH quotient q
-      .withColumn("__desc", row_number().over(running).cast("long"))
-      .withColumn("__n", count(col(pCol)).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("__rank", col("__n") - col("__desc") + 1)
-      .withColumn("__q", least(lit(1.0), col(pCol) * col("__n") / col("__rank")))
+      .select(col("*"), row_number().over(running).cast("long").as("__desc"),
+        count(col(pCol)).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).as("__n"))
+      .select(col("*"), (col("__n") - col("__desc") + 1).as("__rank"))
+      .select(col("*"),
+        least(lit(1.0), col(pCol) * col("__n") / col("__rank")).as("__q"))
       // least() skips NULLs, so a NULL p has q = 1: the guard keeps it NULL
-      .withColumn("padj", when(col(pCol).isNotNull, min(col("__q")).over(running)))
-      .select((df.columns.toIndexedSeq :+ "padj").map(col): _*)
+      .select(df.columns.toIndexedSeq.map(col) :+
+        when(col(pCol).isNotNull, min(col("__q")).over(running)).as("padj"): _*)
   }
 
   /** Exact CDF of the Mann–Whitney U statistic under H0 for group sizes

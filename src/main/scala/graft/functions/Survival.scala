@@ -9,10 +9,13 @@ import org.apache.spark.sql.functions._
   * surv_analysis_median_exp.R:129-155, drug_km_median_exp.R:103-117),
   * re-expressed as grouped aggregation + cumulative windows.
   *
-  * Plan shape: [[kmCurve]] and [[logRankBy]] each plan ONE shuffle
-  * exchange. The subject frame is hash-partitioned by its outer key (the
-  * stratum, or the test's group), and every later aggregate and window is
-  * keyed by that key plus more, so it needs no further exchange. Each
+  * Plan shape: [[kmCurve]] and [[logRankBy]] each plan at most ONE
+  * shuffle exchange: the subject frame is hash-partitioned by its outer
+  * key (the leading stratum column, or the test's group), and every later
+  * aggregate and window is keyed by that key plus more, so it needs no
+  * further exchange. Over input already hash-partitioned by that key (the
+  * KM tail's subject frame, partitioned by its test key) they plan none:
+  * `EnsureRequirements` drops the repartition. Each
   * reads its input once and persists nothing: a caller whose input is
   * expensive and feeds several outputs persists it once for all of them
   * (the KM tail under `Tcga.kmByMedianExpression` and `drugKmFanOut`).
@@ -40,39 +43,52 @@ object Survival {
     *         survival, se (Greenwood), ci_lo/ci_hi
     */
   def kmCurve(df: DataFrame, stratCol: String, timeCol: String,
+      eventCol: String): DataFrame =
+    kmCurve(df, Seq(stratCol), timeCol, eventCol)
+
+  /** [[kmCurve]] with the stratum given as several columns `strata`: the
+    * subjects are partitioned by the leading one and grouped and windowed
+    * by all of them, so input already hash-partitioned by `strata.head`
+    * (the KM tail's subject frame, by its test key) plans no exchange.
+    *
+    * @return `strata`, then the columns of the one-column form */
+  def kmCurve(df: DataFrame, strata: Seq[String], timeCol: String,
       eventCol: String): DataFrame = {
+    val keys = strata.map(col)
     // the one exchange: the per-time aggregate and the windows below are
-    // keyed by the stratum first, so they keep this partitioning
-    val perTime = complete(df, stratCol, timeCol, eventCol)
-      .repartition(col(stratCol))
-      .groupBy(col(stratCol), col(timeCol)).agg(
+    // keyed by the leading stratum column first, so they keep this
+    // partitioning
+    val perTime = complete(df, strata :+ timeCol :+ eventCol: _*)
+      .repartition(keys.head)
+      .groupBy(keys :+ col(timeCol): _*).agg(
         sum(col(eventCol)).as("d"),
         sum(lit(1) - col(eventCol)).as("c"))
-    val byTime = Window.partitionBy(stratCol).orderBy(timeCol)
+    val byTime = Window.partitionBy(keys: _*).orderBy(timeCol)
     val wCum = byTime.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val extinct = col("extinct") === 1
+    // one select per dependency level: each level's windows read the last
     perTime
-      .withColumn("n_risk", atRisk(col("d") + col("c"), byTime))
-      // ln(1 - d/n) only while d < n; once d == n survival is exactly 0.
-      .withColumn("lnterm",
-        when(col("d") < col("n_risk"), log(lit(1.0) - col("d") / col("n_risk"))))
-      .withColumn("gwterm",
+      .select(col("*"), atRisk(col("d") + col("c"), byTime).as("n_risk"))
+      .select(col("*"),
+        // ln(1 - d/n) only while d < n; once d == n survival is exactly 0.
+        when(col("d") < col("n_risk"), log(lit(1.0) - col("d") / col("n_risk")))
+          .as("lnterm"),
         when(col("d") < col("n_risk"),
-          col("d") / (col("n_risk") * (col("n_risk") - col("d")))))
-      .withColumn("extinct", max((col("d") >= col("n_risk")).cast("int")).over(wCum))
-      .withColumn("survival",
-        when(col("extinct") === 1, 0.0).otherwise(exp(sum(col("lnterm")).over(wCum))))
-      // se(log S) — the Greenwood sum before the delta-method S· factor
-      .withColumn("selog", sqrt(sum(col("gwterm")).over(wCum)))
-      .withColumn("se",
-        when(col("extinct") === 1, 0.0).otherwise(col("survival") * col("selog")))
-      .withColumn("ci_lo", when(col("extinct") === 1, lit(null).cast("double"))
-        .otherwise(col("survival") * exp(lit(-1.96) * col("selog"))))
-      .withColumn("ci_hi", when(col("extinct") === 1, lit(null).cast("double"))
-        .otherwise(least(lit(1.0), col("survival") * exp(lit(1.96) * col("selog")))))
+          col("d") / (col("n_risk") * (col("n_risk") - col("d")))).as("gwterm"),
+        max((col("d") >= col("n_risk")).cast("int")).over(wCum).as("extinct"))
+      .select(col("*"),
+        when(extinct, 0.0).otherwise(exp(sum(col("lnterm")).over(wCum))).as("survival"),
+        // se(log S) — the Greenwood sum before the delta-method S· factor
+        sqrt(sum(col("gwterm")).over(wCum)).as("selog"))
       .filter(col("d") > 0)
-      .select(col(stratCol), col(timeCol), col("n_risk"),
-        col("d").as("n_event"), col("c").as("n_censor"),
-        col("survival"), col("se"), col("ci_lo"), col("ci_hi"))
+      .select(keys ++ Seq(col(timeCol), col("n_risk"),
+        col("d").as("n_event"), col("c").as("n_censor"), col("survival"),
+        when(extinct, 0.0).otherwise(col("survival") * col("selog")).as("se"),
+        when(extinct, lit(null).cast("double"))
+          .otherwise(col("survival") * exp(lit(-1.96) * col("selog"))).as("ci_lo"),
+        when(extinct, lit(null).cast("double"))
+          .otherwise(least(lit(1.0), col("survival") * exp(lit(1.96) * col("selog"))))
+          .as("ci_hi")): _*)
   }
 
   /** Median survival per stratum (`surv.median.line="hv"`,
@@ -118,7 +134,7 @@ object Survival {
     // the at-risk windows are all keyed by the group first
     val perTime = complete(df, groupCol, stratCol, timeCol, eventCol)
       .repartition(col(groupCol))
-      .withColumn("strat_a", min(col(stratCol)).over(group))
+      .select(col("*"), min(col(stratCol)).over(group).as("strat_a"))
       .groupBy(col(groupCol), col(timeCol)).agg(
         sum(when(isA, col(eventCol)).otherwise(lit(0L))).as("d"),
         count(when(isA, lit(1))).as("r_a"),
@@ -126,25 +142,23 @@ object Survival {
         count(lit(1)).as("r_tot"))
     val byTime = group.orderBy(timeCol)
     val perTimePooled = perTime
-      .withColumn("n_risk", atRisk(col("r_a"), byTime))
-      .withColumn("n_tot", atRisk(col("r_tot"), byTime))
+      .select(col("*"), atRisk(col("r_a"), byTime).as("n_risk"),
+        atRisk(col("r_tot"), byTime).as("n_tot"))
       .filter(col("d_tot") > 0 && col("n_tot") > 1)
-      .withColumn("e_a", col("d_tot") * (col("n_risk") / col("n_tot")))
-      .withColumn("v_a",
-        col("d_tot") * (col("n_risk") / col("n_tot")) *
+      .select(col(groupCol), col("d"),
+        (col("d_tot") * (col("n_risk") / col("n_tot"))).as("e_a"),
+        (col("d_tot") * (col("n_risk") / col("n_tot")) *
           (lit(1.0) - col("n_risk") / col("n_tot")) *
-          ((col("n_tot") - col("d_tot")) / (col("n_tot") - lit(1.0))))
+          ((col("n_tot") - col("d_tot")) / (col("n_tot") - lit(1.0)))).as("v_a"))
+    val diff = col("observed_a") - col("expected_a")
     perTimePooled.groupBy(groupCol).agg(
       sum(col("d")).as("observed_a"),
       sum(col("e_a")).as("expected_a"),
       sum(col("v_a")).as("v_sum"))
       .filter(col("v_sum") > 0)
-      .withColumn("chi2",
-        (col("observed_a") - col("expected_a")) * (col("observed_a") - col("expected_a"))
-          / col("v_sum"))
-      .withColumn("pvalue", Stats.normalSfTwoSided(sqrt(col("chi2"))))
-      .select(col(groupCol), col("observed_a"), col("expected_a"), col("chi2"),
-        col("pvalue"))
+      .select(col(groupCol), col("observed_a"), col("expected_a"),
+        (diff * diff / col("v_sum")).as("chi2"))
+      .select(col("*"), Stats.normalSfTwoSided(sqrt(col("chi2"))).as("pvalue"))
   }
 
   /** At risk at each of `byTime`'s distinct times: everything `removed`

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, lit}
 
 /** A5/A6 — delimited parameter-list scan and wide CSV export
   * (reference: `read.delim("genes.txt", header=F)[,1]` at
@@ -10,26 +11,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CsvIO {
 
-  /** Read a tab-delimited parameter file. Tiny driver-side config tables —
-    * the one legitimate `collect()` in the engine (they parameterize plans,
-    * they are not on the fact path). */
-  def readDelim(spark: SparkSession, path: String, header: Boolean = false,
-      sep: String = "\t"): DataFrame =
-    spark.read.option("sep", sep).option("header", header.toString).csv(path)
-
-  /** First column of a param file as an uppercased gene/cancer list
-    * (`toupper(goi)`, vital_status_DESeq.R:4). */
+  /** First column of a tab-delimited param file as an uppercased
+    * gene/cancer list (`toupper(goi)`, vital_status_DESeq.R:4). Tiny
+    * driver-side config tables — the one legitimate `collect()` in the
+    * engine (they parameterize plans, they are not on the fact path) —
+    * read in ONE Spark job: the reader is given a one-column string
+    * schema, so no job infers one. Parsing stays Spark's CSV parser:
+    * quotes honored, blank lines skipped, any column after the first
+    * ignored; values are trimmed and uppercased, and blank ones (an empty
+    * first column reads as NULL) dropped. */
   def readParamList(spark: SparkSession, path: String): Seq[String] =
-    readDelim(spark, path).collect().map(_.getString(0).trim.toUpperCase)
+    spark.read.schema("value STRING").option("sep", "\t").csv(path)
+      .collect().flatMap(r => Option(r.getString(0))).map(_.trim.toUpperCase)
       .filter(_.nonEmpty).toSeq
 
   /** Wide CSV export, NULL→"" (F10), single header file. `coalesce(1)` is
     * presentation-edge only — the frames exported this way are
     * genes×groups wide tables, never the fact table. */
-  def writeWideCsv(df: DataFrame, path: String): Unit = {
-    val stringified = df.select(df.columns.toIndexedSeq.map(c => df(c).cast("string").as(c)): _*)
-    stringified.na.fill("")
+  def writeWideCsv(df: DataFrame, path: String): Unit =
+    df.select(df.columns.toIndexedSeq.map(c =>
+        coalesce(df(c).cast("string"), lit("")).as(c)): _*)
       .coalesce(1)
       .write.mode("overwrite").option("header", "true").csv(path)
-  }
 }

@@ -25,6 +25,21 @@ class NormalizationSpec extends SparkSpec {
     assert(sf.forall(r => !r.getAs[Double]("size_factor").isNaN))
   }
 
+  test("an all-zero gene gets no geomean: no NaN size factor, the same factors without it") {
+    val df = Seq(("g1", "s1", 1.0), ("g1", "s2", 4.0), ("g2", "s1", 4.0), ("g2", "s2", 16.0),
+      ("g0", "s1", 0.0), ("g0", "s2", 0.0)).toDF("gene", "smp", "cnt")
+    def factors(d: org.apache.spark.sql.DataFrame) =
+      Normalization.sizeFactors(d, "gene", "smp", "cnt").collect()
+        .map(r => r.getString(0) -> r.getAs[Double]("size_factor")).toMap
+    val sf = factors(df)
+    assert(sf.values.forall(!_.isNaN), sf)
+    assert(sf == factors(df.filter(col("gene") =!= "g0")))
+    // vstTrend keeps the all-zero gene's rows: q = 0, finite vst
+    val v = Normalization.vstTrend(df, "gene", "smp", "cnt")
+      .filter(col("gene") === "g0").select("q", "vst").collect()
+    assert(v.length == 2 && v.forall(r => r.getDouble(0) == 0.0 && !r.getDouble(1).isNaN))
+  }
+
   test("trend VST: monotone, ~log2 at high counts, stabilizes NB variance") {
     // counts with true NB-style variance var ≈ mu + 0.13*mu^2 across a
     // mean range: u uniform on {-1,-2/3,...,1} has E[u²]=0.444, so

@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.Tcga
 import graft.queries.QueryCatalog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
@@ -1126,5 +1127,68 @@ class PlanSpec extends SparkSpec {
     assert(!nodes.exists(_.isInstanceOf[
       org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec]),
       "NOT IN fell back to a nested loop:\n" + df.queryExecution.executedPlan)
+  }
+
+  test("DE's prior collect and KM's subject frame aggregate the raw counts by gene ONCE") {
+    // D1's gene totals and the size factors' geomeans come from one
+    // per-gene pass (Normalization.withGeomean): one gene-keyed shuffle of
+    // an aggregate over the raw counts, and one broadcast of the kept
+    // genes, whichever branch reads them. A second shuffle or broadcast
+    // means the pass was split again (the geomean pruned from one
+    // branch, or a second gene aggregate).
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange,
+      ReusedExchangeExec, ShuffleExchangeExec}
+    val fx = TcgaFixtures.tables(spark)
+    val path = java.nio.file.Files.createTempDirectory("graft_plan_expr").toFile.getPath +
+      "/expression"
+    fx.expression.write.parquet(path)
+    val t = fx.copy(expression = spark.read.parquet(path))
+    // the plan that filled the frame's one library cache
+    def cachedPlan(df: DataFrame): SparkPlan =
+      df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r } match {
+        case Seq(r) => r.cacheBuilder.cachedPlan
+        case other => fail(s"expected one cache under the frame, got ${other.size}")
+      }
+    def rawGeneShuffle(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec =>
+        (e.outputPartitioning match {
+          case HashPartitioning(Seq(a: Attribute), _) => a.name == "gene_id"
+          case _ => false
+        }) && flatten(e.child).collectFirst { case a: BaseAggregateExec => a }
+          .exists(_.aggregateExpressions.exists(_.references.exists(_.name == "count"))) &&
+          flatten(e.child).exists(_.isInstanceOf[FileSourceScanExec])
+      case _ => false
+    }
+    def rawGeneStage(p: SparkPlan): Boolean = p match {
+      case r: ReusedExchangeExec => rawGeneShuffle(r.child)
+      case _ => rawGeneShuffle(p)
+    }
+    // the nodes below `p` down to, and including, the next exchanges
+    def toExchanges(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => toExchanges(a.executedPlan)
+      case q: QueryStageExec => toExchanges(q.plan)
+      case _: Exchange | _: ReusedExchangeExec => Seq(p)
+      case other => other +: other.children.flatMap(toExchanges)
+    }
+    def assertOnePass(plan: SparkPlan): Unit = {
+      // a reused exchange is a leaf here: each shuffle is counted once
+      assert(flatten(plan).count(rawGeneShuffle) == 1, plan)
+      val keptBroadcasts = flatten(plan).count {
+        case b: BroadcastExchangeExec => toExchanges(b.child).exists(rawGeneStage)
+        case _ => false
+      }
+      assert(keptBroadcasts == 1, plan)
+    }
+    val de = Tcga.differentialExpression(t, "short_letter_code", Seq("NT", "TP"))
+    assertOnePass(cachedPlan(de)) // the prior collect has filled it
+    de.write.format("noop").mode("overwrite").save() // releases the cells
+    val (curves, tests) = Tcga.kmByMedianExpression(t, Seq("DEG10", "GENE1"))
+    curves.write.format("noop").mode("overwrite").save()
+    assertOnePass(cachedPlan(curves))
+    tests.write.format("noop").mode("overwrite").save() // releases the strata
   }
 }

@@ -11,6 +11,25 @@ class SourcesSpec extends SparkSpec {
     val f = new java.io.File(dir, "genes.txt")
     Files.writeString(f.toPath, "brca1\ntp53\n\negfr\n")
     assert(CsvIO.readParamList(spark, f.getAbsolutePath) == Seq("BRCA1", "TP53", "EGFR"))
+    // quotes, a second column, surrounding blanks and an empty first
+    // column, read in one Spark job (no schema-inference job)
+    val g = new java.io.File(dir, "quoted.txt")
+    Files.writeString(g.toPath,
+      "\"kras\"\n\"a\tb\"\nmyc\tignored\n  pik3ca \n\tnot a gene\n")
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val read = try {
+      val r = CsvIO.readParamList(spark, g.getAbsolutePath)
+      var last = -1
+      while (last != started.get()) { last = started.get(); Thread.sleep(300) }
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(read == Seq("KRAS", "A\tB", "MYC", "PIK3CA"))
+    assert(started.get() <= 1, s"readParamList ran ${started.get()} Spark jobs")
   }
 
   test("A6: wide CSV export fills NULL with empty string and round-trips") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.functions.concat_ws
 
 import graft.functions.Survival
 
@@ -129,5 +130,36 @@ class SurvivalSpec extends SparkSpec {
           out.queryExecution.executedPlan)
       }
     } finally input.unpersist()
+  }
+
+  test("kmCurve plans no exchange over input hash-partitioned by its leading stratum key") {
+    val rows = (1 to 60).map(i => (s"g${i % 3}", if (i % 2 == 0) "a" else "b",
+      (i * 7 % 11).toLong, (i % 3 min 1).toLong))
+    val byGroup = rows.toDF("grp", "strat", "time", "event").repartition($"grp").persist()
+    val unpartitioned = rows.toDF("grp", "strat", "time", "event").persist()
+    try {
+      byGroup.count()
+      unpartitioned.count()
+      def exchanges(out: org.apache.spark.sql.DataFrame): Int = {
+        out.collect()
+        PlanNodes(out.queryExecution.executedPlan).count(_.isInstanceOf[Exchange])
+      }
+      val curves = Survival.kmCurve(byGroup, Seq("grp", "strat"), "time", "event")
+      assert(exchanges(curves) == 0, curves.queryExecution.executedPlan)
+      assert(exchanges(Survival.logRankBy(byGroup, "grp", "strat", "time", "event")) == 0)
+      val other = Survival.kmCurve(unpartitioned, Seq("grp", "strat"), "time", "event")
+      assert(exchanges(other) == 1, other.queryExecution.executedPlan)
+      // the same curve either way, and the same as the one-column stratum's
+      assert(curves.collect().toSet == other.collect().toSet)
+      val oneKey = Survival.kmCurve(
+        unpartitioned.select(concat_ws("|", $"grp", $"strat").as("gs"), $"time", $"event"),
+        "gs", "time", "event")
+      assert(curves.select(concat_ws("|", $"grp", $"strat").as("gs"), $"time",
+        $"n_risk", $"n_event", $"n_censor", $"survival", $"se", $"ci_lo", $"ci_hi")
+        .collect().toSet == oneKey.collect().toSet)
+    } finally {
+      byGroup.unpersist()
+      unpartitioned.unpersist()
+    }
   }
 }

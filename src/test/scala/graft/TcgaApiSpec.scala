@@ -109,6 +109,7 @@ class TcgaApiSpec extends SparkSpec {
     def strata = Tcga.medianStrata(
       Tcga.namedVst(t).filter(col("gene_name").isin(goi: _*)),
       Tcga.survivalSubjects(t.samples), Nil)
+      .withColumn("gs", concat_ws("|", col("gk"), col("strat")))
     val refCurves = Survival.kmCurve(strata, "gs", "time", "event")
       .withColumn("gene_name", split(col("gs"), "\\|").getItem(0))
       .withColumn("strat", split(col("gs"), "\\|").getItem(1))
@@ -217,5 +218,52 @@ class TcgaApiSpec extends SparkSpec {
       Seq("rn", "DEG10_NT", "DEG10_TP", "GENE1_NT", "GENE1_TP"))
     // ragged: per-column row counts NULL-pad to the longest column
     assert(ragged.count() == TcgaFixtures.nSamples / 2)
+  }
+
+  test("D1 drops all-zero and below-minTotal genes, and keeps all-zero ones at minTotal = 0") {
+    import spark.implicits._
+    val barcodes = t.samples.select("barcode").as[String].collect().sorted
+    // ZERO: 0 everywhere; LOW: total 9; EDGE: total 10 (kept at the default)
+    val extra = barcodes.toSeq.zipWithIndex.flatMap { case (b, i) =>
+      Seq(("ZERO", b, 0L), ("LOW", b, if (i == 0) 9L else 0L),
+        ("EDGE", b, if (i < 2) 5L else 0L))
+    }.toDF("gene_id", "barcode", "count")
+    val expression = t.expression.unionByName(extra)
+    def genes(df: org.apache.spark.sql.DataFrame) =
+      df.select("gene_id").distinct().as[String].collect().toSet
+    val kept = Tcga.prefilterGenes(expression)
+    assert(kept.columns.toSeq == expression.columns.toSeq)
+    val keptGenes = genes(kept)
+    assert(keptGenes.contains("EDGE") && !keptGenes.contains("LOW") &&
+      !keptGenes.contains("ZERO"))
+    val all = genes(Tcga.prefilterGenes(expression, minTotal = 0))
+    assert(all.contains("ZERO") && all.contains("LOW") && all == genes(expression))
+    // the rows a kept gene keeps are all of its rows
+    assert(kept.filter(col("gene_id") === "EDGE").count() == barcodes.length)
+    // the same genes and counts reach DE, and no size factor is NaN
+    val t2 = t.copy(expression = expression, genes = t.genes.unionByName(
+      Seq("ZERO", "LOW", "EDGE").map(g => (g, g)).toDF("gene_id", "gene_name")))
+    val sf = graft.functions.Normalization.sizeFactors(Tcga.prefilterGenes(expression, 0),
+      "gene_id", "barcode", "count").select("size_factor").as[Double].collect()
+    assert(sf.length == barcodes.length && sf.forall(x => !x.isNaN && x > 0))
+    val de = Tcga.differentialExpression(t2, "short_letter_code", Seq("NT", "TP"))
+      .select("gene_name").as[String].collect().toSet
+    assert(de.contains("EDGE") && !de.contains("LOW") && !de.contains("ZERO"))
+  }
+
+  test("an empty expression table gives empty DE and KM frames, with their columns") {
+    // a runtime-empty scan (the optimizer cannot fold it away), so the
+    // prior, the fit and the KM windows all run over no rows
+    val t0 = t.copy(expression = t.expression.filter(col("count") < 0))
+    val de = Tcga.differentialExpression(t0, "short_letter_code", Seq("NT", "TP"))
+    assert(de.columns.toSeq == Seq("gene_id", "gene_name", "contrast", "log2fc",
+      "lfc_se", "stat", "pvalue", "padj", "p_signif"))
+    assert(de.count() == 0)
+    val (curves, tests) = Tcga.kmByMedianExpression(t0, Seq("DEG10", "GENE1"))
+    assert(curves.columns.toSeq == Seq("time", "n_risk", "n_event", "n_censor",
+      "survival", "se", "ci_lo", "ci_hi", "gene_name", "strat"))
+    assert(tests.columns.toSeq == Seq("gene_name", "observed_a", "expected_a", "chi2",
+      "pvalue"))
+    assert(curves.count() == 0 && tests.count() == 0)
   }
 }
