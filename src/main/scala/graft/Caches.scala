@@ -50,13 +50,15 @@ import org.apache.spark.storage.StorageLevel
   * itself on the session's next action, so `Verify`'s and `Bench`'s
   * per-query `clearCache` also drains them.
   *
-  * `api.Tcga` has two persist sites:
-  *  - `differentialExpression` persists its NB-GLM cells (read by the
-  *    dispersion-prior collect and by the fit), released by the caller's
-  *    action on the returned frame;
-  *  - the one KM tail under `kmByMedianExpression` and `drugKmFanOut`
-  *    persists its subject frame, released once both the curves and the
-  *    tests have fed an action.
+  * The TCGA pipelines have two persist sites:
+  *  - `DiffExpression.deseq`, the one NB-GLM entry (behind
+  *    `Tcga.differentialExpression`, the d3/d4 catalog queries and
+  *    `FreezeModels`), persists its cells (read by the dispersion-prior
+  *    collect and by the fit), released by the caller's action on a frame
+  *    derived from the contrasts it returns;
+  *  - the one KM tail under `Tcga.kmByMedianExpression` and
+  *    `drugKmFanOut` persists its subject frame, released once both the
+  *    curves and the tests have fed an action.
   * Every other library persist names its frames at its call site. An
   * operator whose plan reads its input once persists nothing
   * (`Stats.bhAdjust`, `Survival.kmCurve` and `logRankBy`), and leaves a

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+import graft.functions.{CountCell, DiffExpression}
+import graft.queries.DomainQueries
 
 /** Dev main: runs the five bounded fits (PCA, PQ, BPE, the d3 NB-GLM
   * dispersions, the wt2 variance prior) once on the sf0.001 tables and
@@ -29,6 +32,7 @@ object FreezeModels {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val spark = GraftSession.harness(8).getOrCreate()
+    import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = Tables.embeddings(spark, sfDir)
@@ -42,41 +46,26 @@ object FreezeModels {
     val merges = graft.operators.Bpe.fit(
       graft.operators.Bpe.wordCounts(docs, "text"), 30)
     System.err.println("fitting nb-glm dispersions ...")
-    // the d3 fit itself (two-level design, EB-shrunk dispersions): the
-    // per-gene MAP alpha is the frozen model behind d3b's Wald apply;
-    // the prior's gamma-GLM trend (a0 + a1/mu) doubles as the frozen
-    // dispersion trend behind d6c's exact closed-form VST
-    val (nb, vstA0, vstA1) = {
-      import spark.implicits._
-      val (cellsDf, handles) =
-        graft.queries.DomainQueries.nbInput(spark, sfDir, 2)
-      val cells = cellsDf.as[graft.functions.CountCell]
-      val prior = graft.functions.DiffExpression.dispersionPrior(cells, 2)
-      val rows = graft.functions.DiffExpression
-        .waldTest(cells, Seq("NT", "TP"), Some(prior))
-        .toDF().select(col("gene"), col("dispersion"))
+    // the d3 and d4 fits (two-level and 5-level stage designs, EB-shrunk
+    // dispersions): each gene's MAP alpha is the frozen model behind d3b's
+    // Wald apply and d4b's contrast apply. The alphas are per gene, the
+    // same on each of its contrast rows.
+    def alphas(levels: Seq[String], pairs: Seq[(String, String)],
+        cells: Dataset[CountCell]): Array[(Long, Double)] =
+      DiffExpression.deseq(cells, levels, pairs).toDF()
+        .select(col("gene"), col("dispersion")).distinct()
         .orderBy(col("gene")).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
-      handles.foreach(_.unpersist()) // nbInput's contract: caller releases
-      (rows, prior.a0, prior.a1)
+    val (nb, vstA0, vstA1) = {
+      val cells = DomainQueries.nbInput(spark, sfDir, 2).as[CountCell]
+      // the d3 prior's gamma-GLM trend (a0 + a1/mu) doubles as the frozen
+      // dispersion trend behind d6c's exact closed-form VST
+      val prior = DiffExpression.dispersionPrior(cells, 2)
+      (alphas(Seq("NT", "TP"), Seq(("TP", "NT")), cells), prior.a0, prior.a1)
     }
     System.err.println("fitting 5-level nb-glm dispersions ...")
-    // the d4 fit (5-level stage design, EB-shrunk dispersions): the
-    // per-gene MAP alpha is the frozen model behind d4b's contrast apply
-    val nb5 = {
-      import spark.implicits._
-      val (cellsDf, handles) =
-        graft.queries.DomainQueries.nbInput(spark, sfDir, 5)
-      val cells = cellsDf.as[graft.functions.CountCell]
-      val prior = graft.functions.DiffExpression.dispersionPrior(cells, 5)
-      val rows = graft.functions.DiffExpression
-        .dispersions(cells, graft.queries.DomainQueries.stageLevels, Some(prior))
-        .toDF("gene", "alpha")
-        .orderBy(col("gene")).collect()
-        .map(r => (r.getLong(0), r.getDouble(1)))
-      handles.foreach(_.unpersist()) // nbInput's contract: caller releases
-      rows
-    }
+    val nb5 = alphas(DomainQueries.stageLevels, DomainQueries.stagePairs,
+      DomainQueries.nbInput(spark, sfDir, 5).as[CountCell])
     System.err.println("fitting wt2 variance prior ...")
     // Smyth EB moment fit on the pooled per-gene two-group VST variances
     // (the wt1 front end) — the frozen prior behind wt2's moderated apply

@@ -67,9 +67,8 @@ object Tcga {
     * @param goi          genes of interest by `gene_name` (B4); empty → all
     * @return long results `(gene_id, gene_name, contrast, log2fc,
     *         lfc_se, stat, pvalue, padj, p_signif)`. The NB-GLM cells are
-    *         persisted (the dispersion-prior collect and the fit read
-    *         them) and released once the returned frame has fed an
-    *         action (see [[graft.Caches]]). An `expression` with no
+    *         cached by `DiffExpression.deseq` and released once the
+    *         returned frame has fed an action. An `expression` with no
     *         rows (or no gene passing D1) gives an empty frame with
     *         these columns.
     * @throws IllegalArgumentException before any job runs, naming the
@@ -112,20 +111,16 @@ object Tcga {
         abs(hash(col("barcode"))).cast("long").as("smp"),
         col("count").cast("double").as("cnt"), col("cond"),
         col("size_factor").as("sf")).as[CountCell]
-      .persist() // feeds the dispersion-prior pass AND the per-gene fit
     val pairs = if (contrasts.nonEmpty) contrasts else Seq((levels.last, levels.head))
-    val prior = DiffExpression.dispersionPrior(cells, levels.size)
-    val de = DiffExpression.contrasts(cells, levels, pairs, Some(prior)).toDF()
+    val de = DiffExpression.deseq(cells, levels, pairs).toDF()
     val named = de.join(broadcast(genes), de("gene") === genes("gid"))
     // goi restriction BEFORE the BH adjustment: `results(data[keep,])`
     // (vital_status_DESeq.R:88-89) computes padj over the subset only
     val selected = if (goi.isEmpty) named else named.filter(inGoi(goi))
-    val out = Stats.bhAdjust(selected, "pvalue", "gene_id", partitionCols = Seq("contrast"))
+    Stats.bhAdjust(selected, "pvalue", "gene_id", partitionCols = Seq("contrast"))
       .select(col("gene_id"), col("gene_name"), col("contrast"),
         col("log2fc"), col("lfc_se"), col("stat"), col("pvalue"),
         col("padj"), Stats.signifBand(col("padj")).as("p_signif"))
-    graft.Caches.releaseAfterConsumers(Seq(out), cells.toDF())
-    out
   }
 
   /** D7 — per-gene two-group Wilcoxon on VST counts
@@ -225,13 +220,21 @@ object Tcga {
 
   /** N2 — the per-drug-class KM fan-out (drug_km_median_exp.R:38-130's
     * outer loop) as ONE plan: samples are tagged with every drug class
-    * they match (a class-table join over the exploded treatments, so a
-    * patient on two classes contributes to both cohorts), normalized per
-    * cohort, then split at the median inside each (drug_class, gene)
-    * cohort through the KM tail shared with [[kmByMedianExpression]]
-    * ([[kmTail]], with `drug_class` as the cohort key: one persisted
-    * subject frame, released once both outputs have fed a completed
-    * action).
+    * they match ([[classPatients]], so a patient on two classes
+    * contributes to both cohorts), normalized per cohort, then split at
+    * the median inside each (drug_class, gene) cohort through the KM tail
+    * shared with [[kmByMedianExpression]] ([[kmTail]], with `drug_class`
+    * as the cohort key: one persisted subject frame, released once both
+    * outputs have fed a completed action).
+    *
+    * Per-cohort normalization, as the reference does (vst on the SUBSET,
+    * drug_km_median_exp.R:61-67): expression is replicated per matching
+    * class, and D1 and the size-factor geomeans come from one per-(class,
+    * gene) pass (`Normalization.withGeomean` keyed by `cg` =
+    * `class|gene`), the size factors are keyed by (class, sample). The
+    * dispersion trend pools across cohorts (documented deviation: more
+    * stable for small cohorts; per-cohort sf is the load-bearing
+    * normalization).
     *
     * @return (curves, tests): curves keyed by (drug_class, gene_name,
     *         strat); tests one row per (drug_class, gene_name), the two
@@ -239,55 +242,48 @@ object Tcga {
     */
   def drugKmFanOut(t: TcgaTables, drugClasses: Seq[String],
       goi: Seq[String]): (DataFrame, DataFrame) = {
-    val spark = t.samples.sparkSession
-    import spark.implicits._
-    val classes = drugClasses.toDF("drug_class")
-    val matches = t.samples
-      .select(col("barcode"), col("submitter_id"), explode(col("treatments")).as("tr"))
-      .join(broadcast(classes),
-        col("tr.treatment_type") === col("drug_class") ||
-          col("tr.therapeutic_agents") === col("drug_class")) // B5
-      .select(col("drug_class"), substring(col("submitter_id"), 1, 12).as("patient"))
-      .distinct() // D12
     val cohortSamples = t.samples
-      .join(matches, substring(col("submitter_id"), 1, 12) === col("patient")) // C4
-      .select(col("drug_class"), t.samples("barcode").as("barcode"),
-        col("vital_status"), col("days_to_death"), col("paper_days_to_last_followup"))
+      .join(classPatients(t.samples, drugClasses),
+        substring(col("submitter_id"), 1, 12) === col("patient")) // C4
+      .select(col("drug_class"), col("barcode"), col("vital_status"),
+        col("days_to_death"), col("paper_days_to_last_followup"))
     val subjects = survivalSubjects(cohortSamples, "drug_class")
-    // per-cohort normalization, as the reference does (vst on the SUBSET,
-    // drug_km_median_exp.R:61-67): expression replicated per matching
-    // class, then prefilter + geomeans + size factors keyed by
-    // (class, gene) / (class, sample) via composite keys. The dispersion
-    // trend pools across cohorts (documented deviation: more stable for
-    // small cohorts; per-cohort sf is the load-bearing normalization).
-    // Every cell's (class, sample) is one subject, so the tail's median
-    // split sees exactly the cohort's subjects.
-    val cohortCells = t.expression
+    // every cell's (class, sample) is one subject, so the tail's median
+    // split sees exactly the cohort's subjects
+    val cells = t.expression
       .join(subjects.select(col("drug_class"), col("barcode")), "barcode")
       .withColumn("cg", concat_ws("|", col("drug_class"), col("gene_id")))
       .withColumn("cb", concat_ws("|", col("drug_class"), col("barcode")))
-      .withColumn("tot", sum(col("count")).over(Window.partitionBy(col("cg"))))
-      .filter(col("tot") >= 10) // D1 within the cohort
-      .drop("tot")
-    val vst = Normalization.vstTrend(cohortCells, "cg", "cb", "count")
+    val kept = Normalization.withGeomean(cells, "cg", "count", Some(10))
+    val vst = Normalization.vstTrendOf(kept, Normalization.sizeFactorsOf(kept, "cb", "count"),
+        "cg", "cb", "count")
+      .select(col("drug_class"), col("gene_id"), col("barcode"), col("vst"))
       .join(broadcast(t.genes), "gene_id")
       .filter(inGoi(goi))
-    kmTail(vst, subjects, Seq("drug_class"))
+    // the subjects are sample-sized: broadcast, the median strata keep
+    // their `gk` partitioning for the curves and the tests
+    kmTail(vst, broadcast(subjects), Seq("drug_class"))
   }
 
   /** N1+B5+D12+F3+C4 — drug-cohort restriction (drug_km_median_exp.R:36-56):
-    * explode the nested treatments table, match the drug class on either
-    * column, harvest distinct patient prefixes, semi-join the samples. */
-  def drugCohort(samples: DataFrame, drugClasses: Seq[String]): DataFrame = {
-    val cls = drugClasses.map(_.asInstanceOf[Any])
-    val patients = samples
-      .select(explode(col("treatments")).as("t"))
-      .filter(col("t.treatment_type").isin(cls: _*) ||
-        col("t.therapeutic_agents").isin(cls: _*))
-      .select(substring(col("t.submitter_id"), 1, 12).as("patient"))
-      .distinct()
-    samples.join(patients,
+    * the samples of every patient that [[classPatients]] matches. */
+  def drugCohort(samples: DataFrame, drugClasses: Seq[String]): DataFrame =
+    samples.join(classPatients(samples, drugClasses),
       substring(col("submitter_id"), 1, 12) === col("patient"), "left_semi")
+
+  /** N1+B5+D12 — the drug-class match: explode the nested treatments
+    * table, match each class on either column, and harvest the distinct
+    * `(drug_class, patient)` pairs, `patient` being the first 12
+    * characters of the treatment's `submitter_id`. */
+  private def classPatients(samples: DataFrame, drugClasses: Seq[String]): DataFrame = {
+    val spark = samples.sparkSession
+    import spark.implicits._
+    samples.select(explode(col("treatments")).as("t"))
+      .join(broadcast(drugClasses.toDF("drug_class")),
+        col("t.treatment_type") === col("drug_class") ||
+          col("t.therapeutic_agents") === col("drug_class")) // B5
+      .select(col("drug_class"), substring(col("t.submitter_id"), 1, 12).as("patient"))
+      .distinct() // D12
   }
 
   /** `gene_name` is one of the genes of interest (B4). */

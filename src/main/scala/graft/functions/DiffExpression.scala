@@ -323,13 +323,19 @@ object DiffExpression {
       }
   }
 
-  /** Two-group Wald test, `levels = Seq(reference, treatment)`: the one
-    * treatment-vs-reference contrast of [[contrasts]]. */
-  def waldTest(cells: Dataset[CountCell], levels: Seq[String],
-      prior: Option[DispersionPrior] = None,
-      minReplicatesForReplace: Int = MinReplicatesForReplace): Dataset[DEContrast] = {
-    require(levels.size == 2, s"waldTest needs 2 levels, got $levels")
-    contrasts(cells, levels, Seq((levels(1), levels(0))), prior, minReplicatesForReplace)
+  /** The NB-GLM front end every DE caller runs (`DESeq()` then
+    * `results()`' contrasts, vital_status_DESeq.R:51,89): the dispersion
+    * prior fitted over `cells` ([[dispersionPrior]]), then one fit per gene
+    * and every `(levelA, levelB)` pair of [[contrasts]] under it. `cells`
+    * is persisted, since the prior's collect and the fit both read it, and
+    * released once the returned frame has fed an action (see
+    * [[graft.Caches]]). */
+  def deseq(cells: Dataset[CountCell], levels: Seq[String],
+      pairs: Seq[(String, String)]): Dataset[DEContrast] = {
+    cells.persist()
+    val de = contrasts(cells, levels, pairs, Some(dispersionPrior(cells, levels.size)))
+    graft.Caches.releaseAfterConsumers(Seq(de.toDF()), cells.toDF())
+    de
   }
 
   /** Fit once per gene, then evaluate every `(levelA, levelB)` contrast from
@@ -369,22 +375,6 @@ object DiffExpression {
           }
         case None => Iterator.empty
       }
-    }
-  }
-
-  /** Per-gene fitted MAP dispersions for an arbitrary K-level design —
-    * the checkpoint extractor behind the fit/apply split (FreezeModels
-    * freezes these as literals; the apply stages d3b/d4b score against
-    * them closed-form). Same per-gene grouped fit as contrasts,
-    * emitting only `(gene, alpha)`. */
-  def dispersions(cells: Dataset[CountCell], levels: Seq[String],
-      prior: Option[DispersionPrior] = None,
-      minReplicatesForReplace: Int = MinReplicatesForReplace): Dataset[(Long, Double)] = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    perGene[(Long, Double)](cells) { (gene, it) =>
-      fitGene(gene, it, levels, prior, minReplicatesForReplace)
-        .map(f => (gene, f.dispersion)).iterator
     }
   }
 

@@ -163,13 +163,18 @@ object Normalization {
   def vstClosedForm(counts: DataFrame, geneCol: String, sampleCol: String,
       countCol: String, a0: Double, a1: Double): DataFrame = {
     require(a0 > 0 && a1 >= 0, s"vstClosedForm needs a0 > 0, a1 >= 0; got ($a0, $a1)")
-    // No persist — the ReuseExchange argument of vstTrend above
-    val c = counts
-    val sf = sizeFactors(c, geneCol, sampleCol, countCol)
-    c.join(broadcast(sf), sampleCol)
+    vstClosedFormOf(counts, sizeFactors(counts, geneCol, sampleCol, countCol),
+      sampleCol, countCol, a0, a1)
+  }
+
+  /** [[vstClosedForm]] of `counts` under the size factors `sf`, as
+    * [[vstTrendOf]] is to [[vstTrend]]. No persist — the ReuseExchange
+    * argument of vstTrendOf. */
+  private[graft] def vstClosedFormOf(counts: DataFrame, sf: DataFrame, sampleCol: String,
+      countCol: String, a0: Double, a1: Double): DataFrame =
+    counts.join(broadcast(sf), sampleCol)
       .withColumn("q", col(countCol) / col("size_factor"))
       .withColumn("vst", vstOf(col("q"), lit(a0), lit(a1)))
-  }
 
   /** DESeq2's closed-form VST of normalized count `q` under the trend
     * α(μ) = a0 + a1/μ — the one copy [[vstTrend]] and [[vstClosedForm]]

@@ -23,27 +23,14 @@ object DomainQueries {
 
   // ---- shared front end: long-form expression fact + condition dimension
 
-  private def cells(s: SparkSession, d: String): DataFrame =
-    // NOTE: no repartition before this groupBy — cells ≈ input cardinality
-    // (gene×sample nearly dense), so pre-spreading the one-task scan just
-    // adds a same-sized shuffle (benched +15% on the pipelines)
-    Tables.lineitem(s, d)
-      .groupBy(col("l_partkey").as("gene"), col("l_suppkey").as("smp"))
-      .agg(sum(col("l_quantity")).as("cnt"))
+  import StatsQueries.{cells, cellsSql}
 
-  private val cellsSql =
-    """SELECT l_partkey AS gene, l_suppkey AS smp, sum(l_quantity) AS cnt
-       FROM lineitem GROUP BY 1, 2"""
-
-  /** D1 prefilter: keep genes with Σcount ≥ 10 (vital_status_DESeq.R:47-48).
-    * A per-gene window total instead of a groupBy+semi-join: the fact table
-    * is scanned ONCE (Spark recomputes shared subtrees, so the join form
-    * would re-read and re-aggregate lineitem for the keep-list). */
+  /** D1 prefilter: keep genes with Σcount ≥ 10 (vital_status_DESeq.R:47-48),
+    * each kept row carrying its gene's `geomean` for the size factors
+    * (`Normalization.sizeFactorsOf`): one per-gene pass
+    * (`Normalization.withGeomean`) gives both. */
   private def keptCells(s: SparkSession, d: String): DataFrame =
-    cells(s, d)
-      .withColumn("tot", sum(col("cnt")).over(Window.partitionBy(col("gene"))))
-      .filter(col("tot") >= 10)
-      .drop("tot")
+    Normalization.withGeomean(cells(s, d), "gene", "cnt", Some(10))
 
   private val keptCellsSql =
     s"""SELECT cell.* FROM ($cellsSql) cell
@@ -61,10 +48,12 @@ object DomainQueries {
     * under any monotone transform — the switch changes `val`'s numbers
     * but not which hypotheses fire (modulo 6-dp tie structure, which the
     * oracle replays identically). */
-  private def vstVals(s: SparkSession, d: String): DataFrame =
-    Normalization.vstClosedForm(keptCells(s, d), "gene", "smp", "cnt",
-        FrozenModels.vstTrendA0, FrozenModels.vstTrendA1)
+  private def vstVals(s: SparkSession, d: String): DataFrame = {
+    val kc = keptCells(s, d)
+    Normalization.vstClosedFormOf(kc, Normalization.sizeFactorsOf(kc, "smp", "cnt"),
+        "smp", "cnt", FrozenModels.vstTrendA0, FrozenModels.vstTrendA1)
       .select(col("gene"), col("smp"), round(col("vst"), 6).as("val"))
+  }
 
   /** Shared oracle CTE chain `cellk → gm → sfac` (kept cells + geomean +
     * median-of-ratios size factors) — ONE copy serving vstValsSql and
@@ -349,26 +338,28 @@ object DomainQueries {
   private[graft] val stageLevels =
     Seq("Stage_0", "Stage_I", "Stage_II", "Stage_III", "Stage_IV")
 
-  /** Returns the cells frame plus the internal persist handles, which the
-    * caller releases against the frame it returns.
-    * Only the prefiltered fact (kc) and the sample-sized size factors are
-    * cached — NOT the joined cells: the dispersion-prior pass and the
-    * per-gene fit each re-read the kc cache through two broadcast joins,
-    * which is cache-read-priced, instead of paying a second fact-sized
-    * cache materialization (round-2's d3/d4 regression). */
-  private[graft] def nbInput(s: SparkSession, d: String,
-      levels: Int): (DataFrame, Seq[DataFrame]) = {
+  /** d4's 10 contrasts: every (earlier, later) pair of [[stageLevels]]. */
+  private[graft] val stagePairs = for {
+    i <- stageLevels.indices
+    j <- stageLevels.indices if i < j
+  } yield (stageLevels(i), stageLevels(j))
+
+  /** The NB-GLM cells `(gene, smp, cnt, cond, sf)` of d3/d4 over a
+    * `levels`-level design: D1's kept fact with its size factors and the
+    * condition. Not persisted: `DiffExpression.deseq` caches these joined
+    * cells, the one copy the prior collect and the fit both read. Caching
+    * them and the kept fact + size factors they are built from as well was
+    * round 2's d3/d4 regression (two fact-sized materializations). */
+  private[graft] def nbInput(s: SparkSession, d: String, levels: Int): DataFrame = {
     val cond =
       if (levels == 2) when(col("s_suppkey") % 2 === 0, "NT").otherwise("TP")
       else element_at(lit(stageLevels.toArray), (col("s_suppkey") % levels).cast("int") + 1)
     val dim = Tables.supplier(s, d).select(col("s_suppkey"), cond.as("cond"))
-    val kc = keptCells(s, d).persist()
-    val sf = Normalization.sizeFactors(kc, "gene", "smp", "cnt").persist()
-    val cells = kc.join(broadcast(sf), "smp")
+    val kc = keptCells(s, d)
+    kc.join(broadcast(Normalization.sizeFactorsOf(kc, "smp", "cnt")), "smp")
       .join(broadcast(dim), col("smp") === col("s_suppkey"))
       .select(col("gene"), col("smp"), col("cnt"), col("cond"),
         col("size_factor").as("sf"))
-    (cells, Seq(kc, sf))
   }
 
   /** D3 — per-gene NB-GLM Wald test (DESeq(), vital_status_DESeq.R:51) with
@@ -378,21 +369,17 @@ object DomainQueries {
     "d3_nbglm_wald",
     (s, d) => {
       import s.implicits._
-      val (cellsDf, handles) = nbInput(s, d, 2)
-      val cells = cellsDf.as[CountCell]
-      val prior = DiffExpression.dispersionPrior(cells, 2)
-      val de = DiffExpression.waldTest(cells, Seq("NT", "TP"), Some(prior)).toDF()
+      val de = DiffExpression.deseq(nbInput(s, d, 2).as[CountCell], Seq("NT", "TP"),
+        Seq(("TP", "NT"))).toDF()
       // DESeq2 results() semantics: Cook's outliers → pvalue/padj NULL,
       // independent filtering → padj NULL below the base_mean threshold;
       // signifBand propagates the NULLs (R's NA path, F5/F12)
-      val out = DiffExpression.results(de)
+      DiffExpression.results(de)
         .withColumn("p_signif", Stats.signifBand(col("padj")))
         .select(col("gene"), round(col("base_mean"), 6).as("base_mean"),
           round(col("log2fc"), 6).as("log2fc"), round(col("lfc_se"), 6).as("lfc_se"),
           round(col("stat"), 6).as("stat"), round(col("pvalue"), 6).as("pvalue"),
           round(col("padj"), 6).as("padj"), col("p_signif"))
-      graft.Caches.releaseAfterConsumers(Seq(out), handles: _*)
-      out
     },
     None)
 
@@ -426,7 +413,7 @@ object DomainQueries {
         FrozenModels.nbGenes.zip(FrozenModels.nbAlphas).toSeq)
         .toDF("gene", "alpha")
       val kc = keptCells(s, d).persist()
-      val sf = Normalization.sizeFactors(kc, "gene", "smp", "cnt").persist()
+      val sf = Normalization.sizeFactorsOf(kc, "smp", "cnt").persist()
       val c = kc.join(broadcast(sf), "smp")
         .join(broadcast(fz), "gene")
         .select(col("gene"), col("smp"), col("cnt"),
@@ -515,19 +502,10 @@ object DomainQueries {
     "d4_nbglm_contrasts",
     (s, d) => {
       import s.implicits._
-      val pairs = for {
-        i <- stageLevels.indices
-        j <- stageLevels.indices if i < j
-      } yield (stageLevels(i), stageLevels(j))
-      val (cellsDf, handles) = nbInput(s, d, 5)
-      val cells = cellsDf.as[CountCell]
-      val prior = DiffExpression.dispersionPrior(cells, 5)
-      val out = DiffExpression.contrasts(cells, stageLevels, pairs, Some(prior)).toDF()
+      DiffExpression.deseq(nbInput(s, d, 5).as[CountCell], stageLevels, stagePairs).toDF()
         .select(col("gene"), col("contrast"), round(col("log2fc"), 6).as("log2fc"),
           round(col("lfc_se"), 6).as("lfc_se"), round(col("stat"), 6).as("stat"),
           round(col("pvalue"), 6).as("pvalue"))
-      graft.Caches.releaseAfterConsumers(Seq(out), handles: _*)
-      out
     },
     None)
 
@@ -561,7 +539,7 @@ object DomainQueries {
         FrozenModels.nb5Genes.zip(FrozenModels.nb5Alphas).toSeq)
         .toDF("gene", "alpha")
       val kc = keptCells(s, d).persist()
-      val sf = Normalization.sizeFactors(kc, "gene", "smp", "cnt").persist()
+      val sf = Normalization.sizeFactorsOf(kc, "smp", "cnt").persist()
       val c = kc.join(broadcast(sf), "smp")
         .join(broadcast(fz), "gene")
         .select(col("gene"), col("smp"), col("cnt"),

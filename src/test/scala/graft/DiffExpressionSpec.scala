@@ -24,7 +24,7 @@ class DiffExpressionSpec extends SparkSpec {
 
   test("NB-GLM Wald recovers a 4x fold change with small p, null gene is ns") {
     val cells = (cellsFor(1L, 10, 40, 30) ++ cellsFor(2L, 25, 25, 30)).toDS()
-    val res = DiffExpression.waldTest(cells, Seq("A", "B"))
+    val res = DiffExpression.contrasts(cells, Seq("A", "B"), Seq(("B", "A")))
       .collect().map(r => r.gene -> r).toMap
     val de = res(1L)
     assert(math.abs(de.log2fc - 2.0) < 0.35, s"log2fc=${de.log2fc}")
@@ -45,7 +45,7 @@ class DiffExpressionSpec extends SparkSpec {
     //   3. stat = β₁/se (scale-invariant: log2fc/lfc_se), p = 2·Φ(−|stat|)
     val n = 40
     val cells = cellsFor(11L, 20, 60, n).toDS()
-    val r = DiffExpression.waldTest(cells, Seq("A", "B")).collect().head
+    val r = DiffExpression.contrasts(cells, Seq("A", "B"), Seq(("B", "A"))).collect().head
     val raw = cells.collect()
     def mean(cond: String) = {
       val v = raw.filter(_.cond == cond).map(_.cnt); v.sum / v.length
@@ -72,7 +72,7 @@ class DiffExpressionSpec extends SparkSpec {
 
   test("Wald log2FC sign follows level order (factor-level contrast direction)") {
     val cells = cellsFor(1L, 40, 10, 30).toDS()
-    val r = DiffExpression.waldTest(cells, Seq("A", "B")).collect().head
+    val r = DiffExpression.contrasts(cells, Seq("A", "B"), Seq(("B", "A"))).collect().head
     assert(r.log2fc < -1.0) // B relative to reference A is lower
   }
 
@@ -97,14 +97,16 @@ class DiffExpressionSpec extends SparkSpec {
     // same counts, but B samples carry sf=2 -> normalized B mean halves
     val base = cellsFor(3L, 20, 20, 30)
     val cells = base.map(c => if (c.cond == "B") c.copy(sf = 2.0) else c).toDS()
-    val r = DiffExpression.waldTest(cells, Seq("A", "B")).collect().head
+    val r = DiffExpression.contrasts(cells, Seq("A", "B"), Seq(("B", "A"))).collect().head
     assert(r.log2fc < -0.6 && r.log2fc > -1.4, s"log2fc=${r.log2fc}")
   }
 
   test("results are deterministic across repartitioning") {
     val cells = cellsFor(9L, 15, 30, 25)
-    val a = DiffExpression.waldTest(cells.toDS().repartition(1), Seq("A", "B")).collect().head
-    val b = DiffExpression.waldTest(cells.toDS().repartition(7), Seq("A", "B")).collect().head
+    def fit(width: Int) = DiffExpression.contrasts(cells.toDS().repartition(width),
+      Seq("A", "B"), Seq(("B", "A"))).collect().head
+    val a = fit(1)
+    val b = fit(7)
     assert(a == b)
   }
 
@@ -126,7 +128,7 @@ class DiffExpressionSpec extends SparkSpec {
     val clean = cellsFor(10L, 20, 22, 15)
     val spiked = cellsFor(11L, 20, 22, 15)
       .map(c => if (c.cond == "A" && c.smp == 0L) c.copy(cnt = 600.0) else c)
-    val res = DiffExpression.waldTest((clean ++ spiked).toDS(), Seq("A", "B"),
+    val res = DiffExpression.contrasts((clean ++ spiked).toDS(), Seq("A", "B"), Seq(("B", "A")),
         minReplicatesForReplace = Int.MaxValue)
       .collect().map(r => r.gene -> r).toMap
     assert(!res(10L).cooks_outlier, "clean gene must not be flagged")
@@ -141,13 +143,13 @@ class DiffExpressionSpec extends SparkSpec {
     val clean = cellsFor(20L, 20, 22, 15)
     val spiked = cellsFor(21L, 20, 22, 15)
       .map(c => if (c.cond == "A" && c.smp == 0L) c.copy(cnt = 600.0) else c)
-    val res = DiffExpression.waldTest((clean ++ spiked).toDS(), Seq("A", "B"))
+    val res = DiffExpression.contrasts((clean ++ spiked).toDS(), Seq("A", "B"), Seq(("B", "A")))
       .collect().map(r => r.gene -> r).toMap
     assert(!res(21L).cooks_outlier,
       "replaced+refit gene must not carry the outlier flag")
     // the refit undoes the spike: estimate moves back toward the clean
     // twin's, and the imputed count pulls base_mean off the inflated value
-    val noReplace = DiffExpression.waldTest(spiked.toDS(), Seq("A", "B"),
+    val noReplace = DiffExpression.contrasts(spiked.toDS(), Seq("A", "B"), Seq(("B", "A")),
       minReplicatesForReplace = Int.MaxValue).collect().head
     assert(math.abs(res(21L).log2fc - res(20L).log2fc) <
       math.abs(noReplace.log2fc - res(20L).log2fc),
@@ -157,7 +159,7 @@ class DiffExpressionSpec extends SparkSpec {
     // a 5-replicate group is below minReplicatesForReplace: flag, no refit
     val small = cellsFor(22L, 20, 22, 5)
       .map(c => if (c.cond == "A" && c.smp == 0L) c.copy(cnt = 600.0) else c)
-    val smallRes = DiffExpression.waldTest(small.toDS(), Seq("A", "B"))
+    val smallRes = DiffExpression.contrasts(small.toDS(), Seq("A", "B"), Seq(("B", "A")))
       .collect().head
     assert(smallRes.cooks_outlier,
       "below minReplicatesForReplace the gene must stay flagged, not refit")
@@ -297,7 +299,7 @@ class DiffExpressionSpec extends SparkSpec {
       }
     }.toDS()
     val prior = DiffExpression.dispersionPrior(cells, p = 2)
-    val fit = DiffExpression.waldTest(cells, Seq("A", "B"), Some(prior))
+    val fit = DiffExpression.contrasts(cells, Seq("A", "B"), Seq(("B", "A")), Some(prior))
       .collect().map(r => r.gene -> r).toMap
     assert(fit.size >= planted.size * genesPerFc - 5,
       s"fit dropped too many genes: ${fit.size}")

@@ -1191,4 +1191,46 @@ class PlanSpec extends SparkSpec {
     assertOnePass(cachedPlan(curves))
     tests.write.format("noop").mode("overwrite").save() // releases the strata
   }
+
+  test("drugKmFanOut normalizes each cohort in one per-(class, gene) pass, no window") {
+    // The per-cohort D1 and size-factor geomeans come from one pass keyed
+    // by cg = class|gene (Normalization.withGeomean), as kmByMedianExpression's
+    // come from one keyed by gene_id: the KM subject cache's plan holds no
+    // window over cg (a windowed D1) and no more cg-keyed shuffles than
+    // kmByMedianExpression's holds gene_id-keyed ones.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val t = TcgaFixtures.tables(spark)
+    val goi = Seq("DEG10", "GENE1")
+    // the nodes of the KM subject cache's executed plan; acting on both
+    // outputs releases the cache
+    def cacheNodes(outputs: (DataFrame, DataFrame)): Seq[SparkPlan] = {
+      val (curves, tests) = outputs
+      curves.write.format("noop").mode("overwrite").save()
+      val nodes = curves.queryExecution.withCachedData
+        .collect { case r: InMemoryRelation => r } match {
+        case Seq(r) => flatten(r.cacheBuilder.cachedPlan)
+        case other => fail(s"expected one cache under the curves, got ${other.size}")
+      }
+      tests.write.format("noop").mode("overwrite").save()
+      nodes
+    }
+    def shuffledBy(key: String)(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name == key
+        case _ => false
+      }
+      case _ => false
+    }
+    val drug = cacheNodes(Tcga.drugKmFanOut(t, Seq("Tamoxifen", "Chemotherapy"), goi))
+    val km = cacheNodes(Tcga.kmByMedianExpression(t, goi))
+    val cgWindows = drug.collect {
+      case w: WindowExec if w.partitionSpec.exists(_.references.exists(_.name == "cg")) => w
+    }
+    assert(cgWindows.isEmpty, cgWindows.mkString("\n"))
+    val (cg, gene) = (drug.count(shuffledBy("cg")), km.count(shuffledBy("gene_id")))
+    assert(gene > 0 && cg <= gene, s"$cg cg-keyed shuffles against $gene gene_id-keyed")
+  }
 }

@@ -34,6 +34,17 @@ if [ -n "$listeners" ] || [ "$audits" -gt 1 ]; then
   echo "listenerManager.register outside Caches.scala and Dedup's DropAudit: $listeners" >&2
   exit 1
 fi
+# cache registrations only go down (ROADMAP direction 7 aims at ~3): the
+# releaseAfterConsumers( call sites in src/main outside Caches.scala may not
+# exceed the committed count. Lower it when a site goes.
+max_registrations=37
+registrations=$(grep -rn 'releaseAfterConsumers(' src/main |
+  grep -vc '^src/main/scala/graft/Caches.scala:' || true)
+if [ "$registrations" -gt "$max_registrations" ]; then
+  echo "$registrations releaseAfterConsumers( call sites in src/main outside" \
+    "Caches.scala, more than the committed $max_registrations" >&2
+  exit 1
+fi
 # the benchmark's own build calls GraftSession.apply and the graft.api
 # surface: break either and the gate fails here, not at benchmark time
 (cd perfbench && sbt -batch compile)
