@@ -7,7 +7,6 @@ import scala.util.Try
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
@@ -37,12 +36,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * A caller that runs several actions over one returned frame recomputes
   * after the first — correct, just uncached; such callers should persist
-  * the returned frame themselves. `operators.Ranks` goes one step
-  * further: its stitch reads its cache's relation directly (both branches
-  * need the one range-partitioned copy), so an action that re-plans an
-  * output after its release rebuilds that cache outside the cache manager,
-  * and the rebuilt copy lives until the output frame is
-  * garbage-collected.
+  * the returned frame themselves.
   *
   * LEAK CASE: a consumer that is never acted on keeps its caches, and its
   * listener, until [[clearCaches]] (or until another release of the same
@@ -110,8 +104,7 @@ object Caches {
   /** Whether the action `qe` read `consumer`: its plan holds the
     * consumer's plan by reference, or, where the analyzer copied that
     * plan with fresh attribute ids (the right side of a join whose sides
-    * share lineage), a subtree with the same result. A frame built over a
-    * cache's relation (`operators.Ranks`' stitch) holds the cached plan. */
+    * share lineage), a subtree with the same result. */
   private def fedBy(qe: QueryExecution, consumer: DataFrame): Boolean = {
     val plan = GraftSqlBridge.logicalPlan(consumer)
     val logical = consumer.queryExecution.logical
@@ -123,14 +116,10 @@ object Caches {
   // query as an inner child, not a child
   private def holds(plan: LogicalPlan, hit: LogicalPlan => Boolean): Boolean =
     hit(plan) || plan.children.exists(holds(_, hit)) ||
-      (plan match {
-        case m: InMemoryRelation =>
-          Option(m.cacheBuilder.logicalPlan).exists(holds(_, hit))
-        case _ => plan.innerChildren.exists {
-          case p: LogicalPlan => holds(p, hit)
-          case _ => false
-        }
-      })
+      plan.innerChildren.exists {
+        case p: LogicalPlan => holds(p, hit)
+        case _ => false
+      }
 
   /** Unpersist `dfs` once the session has no active streaming queries
     * left — the streaming twin of [[releaseAfterConsumers]]. A stream-static

@@ -680,11 +680,12 @@ object Corpus {
     * count and a checkpointed label frame), checkpoints the deduped
     * corpus and then drops the labels. Every later stage reads those two
     * checkpoints, so its plan starts there. Decontamination, mixture and
-    * packing run only when the caller acts on a stage. Their internal
-    * caches (contamination's shingle dictionary, packing's ranged frame)
-    * are released once a stage that reads them has fed an action; one
-    * that is never acted on keeps its (unmaterialized) cache entry until
-    * `Caches.clearCaches` (see [[graft.Caches]]).
+    * packing run only when the caller acts on a stage. Contamination's
+    * internal cache (its shingle dictionary) is released once a stage
+    * that reads it has fed an action; one that is never acted on keeps
+    * its (unmaterialized) cache entry until `Caches.clearCaches` (see
+    * [[graft.Caches]]). Packing caches nothing: its prefix scan is one
+    * operator over one range exchange.
     *
     * The two checkpoints' blocks live until the caller drops `cleaned`,
     * `deduped` and every frame derived from them; Spark's `ContextCleaner`

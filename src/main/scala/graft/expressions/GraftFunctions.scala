@@ -74,12 +74,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction(
         (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
     }
-    // the (c)-tier custom operator: plans graft.plans.AsOfJoinPlan as the
-    // sorted-merge/broadcast AsOfJoinExec, with the injected pushdown
-    // rule restoring scan-level filtering through the custom node
-    // (NativeAsOf also self-registers both through the public
-    // experimental hooks for sessions built without extensions)
-    ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
+    // the custom operators: plans graft.plans.AsOfJoinPlan as the
+    // sorted-merge/broadcast AsOfJoinExec and graft.plans.OrderedScan as
+    // OrderedScanExec, with the injected pushdown rule restoring
+    // scan-level filtering through the as-of node (GraftStrategy.ensure
+    // registers the same three through the public experimental hooks for
+    // sessions built without extensions)
+    ext.injectPlannerStrategy(_ => new graft.plans.GraftStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsOfFilterPushdown)
     ext.injectOptimizerRule(_ => graft.plans.AsOfColumnPruning)
   }

@@ -1,135 +1,88 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+
+import graft.plans.{GraftStrategy, OrderedScan}
 
 /** Two-phase ordered scans — global or per-group row numbers and running
   * sums without the one-task-per-group window-sort anti-pattern.
   *
-  * A plain `row_number().over(Window.partitionBy(g).orderBy(k))` sorts
+  * A plain `row_number()` window partitioned by g and ordered by k sorts
   * each group in ONE task; with few (or no) groups that is a scale
   * killer. [[rowNumber]] and [[prefixSum]] (and so [[ntile]] and the
-  * quantiles) run on one core instead:
+  * quantiles) are one physical operator instead,
+  * [[graft.plans.OrderedScanExec]]: one range exchange and sort on
+  * (group ++ order), then
   *
-  *  1. [[ranged]] aliases the group keys to generated names (so arbitrary
-  *     EXPRESSIONS, not just named columns, group — the stitch joins by
-  *     name), range-partitions on (group ++ order), tags each row with its
-  *     physical partition `__pid`, and persists: the partition id must be
-  *     identical across the carry branch and the local branch. The cache
-  *     is released once the returned output has fed an action.
-  *  2. [[carry]] computes an exactly associative aggregate (`count`, or
-  *     `sum` over integers) per (group, partition), carries it over the
-  *     group's earlier partitions — with the group total alongside when
-  *     asked — and broadcast-joins that frame back onto the partition-local
-  *     running aggregate (a window over one physical partition, so the
-  *     tasks stay balanced).
+  *  1. one job that sums each group inside each range partition (a
+  *     count, or the integer value), folded on the driver into each
+  *     partition's carry — what its first group summed in earlier
+  *     partitions — and each group's total;
+  *  2. one pass over the same sorted partitions that adds the running
+  *     sum to the carry.
   *
-  * The only no-partition windows run over one row per (group, partition)
-  * — bounded by groups × the shuffle partition count — and the result is
-  * bit-identical to the single-window formulation at any partitioning
-  * (over doubles, `sum` carries the usual float-association caveat). NOTE
-  * the carry frame is broadcast: at LOW group cardinality (the catalog's
-  * flags/langs/classes) that is a few rows; a million-group caller should
-  * pre-aggregate or shard by group instead — the broadcast would then
-  * scale with the group count.
+  * Both passes read the one shuffle output, so nothing is cached and the
+  * returned frame stays lazy. The driver holds one entry per (group,
+  * partition) a group touches — at most groups + 2 × the shuffle
+  * partition count. Integer sums are exactly associative, so the result
+  * is identical to the single-window formulation at any partitioning.
   */
 object Ranks {
 
-  /** First phase of the core: `df` plus its group keys aliased to `__g0…`
-    * (the names are returned), range-partitioned on (group ++ order),
-    * tagged `__pid` and persisted. The persisted frame is returned too:
-    * the caller registers its release against the output it builds. The
-    * input is deliberately NOT persisted: the boundary-sampling pass
-    * re-reads upstream once, which for the fact-sized frames these scans
-    * target is cheaper at scale than a fact-sized cache materialization.
-    * A caller behind an expensive upstream persists its own input. */
-  private def ranged(df: DataFrame, grp: Seq[Column],
-      order: Seq[Column]): (DataFrame, Seq[String], DataFrame) = {
-    val g = grp.indices.map(i => s"__g$i")
-    val keyed = grp.zip(g).foldLeft(df) { case (d, (c, n)) => d.withColumn(n, c) }
-    val r = keyed.repartitionByRange((g.map(col) ++ order): _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-    // Both stitch branches scan the cache's own relation, not a lookup by
-    // plan. A lookup misses once the cache is released (a second action
-    // on the output), and in the self-join's fresh copy of a checkpoint
-    // leaf that records its partitioning (a checkpointed `spark.range`).
-    // The branch that misses runs its own range exchange with its own
-    // boundary sample, and its `__pid`s disagree with the other branch's.
-    // Read directly, a released cache is rebuilt by the next action that
-    // re-plans the output (a repeated action, or a second output over the
-    // same ranged plan acted on after the first one's release), and that
-    // copy lives outside the cache manager until the output is
-    // garbage-collected.
-    (GraftSqlBridge.ofRows(df.sparkSession, r.queryExecution.withCachedData), g, r)
-  }
-
-  /** An exactly associative aggregate the core carries: `part` over one
-    * (group, partition), `fold` over such parts, and `local` as the
-    * running form inside a partition. A row's result is its local value
-    * plus the carry (NULL, read as 0, on the group's first partition). */
-  private final case class Carry(part: Column, fold: Column => Column,
-      local: Column)
-
-  private val countCarry = Carry(count(lit(1)), sum(_), row_number())
-  private def sumCarry(v: Column) = Carry(sum(v), sum(_), sum(v))
-
-  /** Second phase of the core over a [[ranged]] frame `r` with group keys
-    * `g`: adds `out` = the running `agg` of each row in (group, `order`),
-    * and — when `total` is named — the group's total of `agg`. The
-    * per-(group, partition) carry frame is broadcast (see the object doc's
-    * group-cardinality note). */
-  private def carry(r: DataFrame, g: Seq[String], order: Seq[Column],
-      agg: Carry, out: String, total: String = ""): DataFrame = {
-    val gc = g.map(col)
-    val byPid = gc :+ col("__pid")
-    val wPrev = Window.partitionBy(gc: _*).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val parts = r.groupBy(byPid: _*).agg(agg.part.as("__part"))
-      .withColumn("__carry", agg.fold(col("__part")).over(wPrev))
-    val carried =
-      if (total.isEmpty) parts
-      else parts.withColumn(total, agg.fold(col("__part")).over(Window.partitionBy(gc: _*)))
-    val wLocal = Window.partitionBy(byPid: _*).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    r.withColumn("__local", agg.local.over(wLocal))
-      .join(broadcast(carried.drop("__part")), g :+ "__pid")
-      .withColumn(out, coalesce(col("__carry"), lit(0L)) + col("__local"))
-      .drop("__carry", "__local")
+  /** The core: `df` plus `out` = the running sum of `value` (a row count,
+    * never NULL, when `None`) over each `grp` group in `order`, and
+    * `total` = the group's sum. Group keys and order may be expressions;
+    * they are resolved against `df` the way a sort resolves them. */
+  private def scan(df: DataFrame, grp: Seq[Column], order: Seq[Column],
+      value: Option[Column], out: String, total: Option[String]): DataFrame = {
+    require(order.nonEmpty, "a two-phase scan needs an order")
+    val spark = df.sparkSession
+    GraftStrategy.ensure(spark, asOfRules = false)
+    val in = value.fold(df)(v => df.withColumn("__v", v))
+    val sorted = GraftSqlBridge.analyzed(in.sortWithinPartitions(grp ++ order: _*))
+      .asInstanceOf[Sort]
+    val v = value.fold[Expression](Literal(1L)) { _ =>
+      val a = sorted.child.output.find(_.name == "__v").get
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(a.dataType),
+        s"prefixSum sums integral values only, got ${a.dataType.sql}")
+      Cast(a, LongType)
+    }
+    val node = OrderedScan(sorted.order, grp.size, v,
+      AttributeReference(out, LongType, nullable = value.isDefined)(),
+      total.map(AttributeReference(_, LongType)()), sorted.child)
+    GraftSqlBridge.ofRows(spark, node).select(df.columns.toIndexedSeq.map(col) ++
+      (out +: total.toSeq).map(c => col(c).as(c)): _*)
   }
 
   /** `out` = 1-based rank of each row within its `grp` group under
     * `order`, plus `outN` = the group's total row count (handy for tile
-    * math) — a count carry of the core. Deterministic when (grp ++ order)
-    * is a total order; rows with fully-equal keys are interchangeable. */
+    * math) — a running count of the core. Deterministic when (grp ++
+    * order) is a total order; rows with fully-equal keys are
+    * interchangeable. */
   def rowNumber(df: DataFrame, grp: Seq[Column], order: Seq[Column],
-      out: String = "rn", outN: String = "__n"): DataFrame = {
-    val (r, g, cache) = ranged(df, grp, order)
-    val ranked = carry(r, g, order, countCarry, out, outN)
-      .select((df.columns.toIndexedSeq :+ out :+ outN).map(col): _*)
-    graft.Caches.releaseAfterConsumers(Seq(ranked), cache)
-    ranked
-  }
+      out: String = "rn", outN: String = "__n"): DataFrame =
+    scan(df, grp, order, None, out, Some(outN))
 
   /** Global (or per-group) running total of `value` under `order` — the
-    * distributed prefix-scan, a sum carry of the core; `outTotal`, when
-    * named, is the per-group grand total. Over integers it is
-    * bit-identical to the one-task `sum().over(Window.orderBy(...))`.
-    * Deterministic when (grp ++ order) is a total order.
+    * distributed prefix-scan, a running sum of the core; `outTotal`, when
+    * named, is the per-group grand total. `value` must be integral (it is
+    * summed as a `long`; a running double sum would change with the
+    * shuffle width), else an `IllegalArgumentException` naming its type
+    * is thrown before any job runs. Equal to the one-task running `sum`
+    * window, NULL values included: a NULL adds
+    * nothing, and the running total is NULL until the group's first
+    * non-NULL value. Deterministic when (grp ++ order) is a total order.
     *
     * This is the backbone of sequence-packing style pipelines (cumulative
     * token budgets over a 100 TB corpus) where the naive no-partition
     * window would funnel the corpus through one task. */
   def prefixSum(df: DataFrame, grp: Seq[Column], order: Seq[Column],
-      value: Column, out: String = "cumsum", outTotal: String = ""): DataFrame = {
-    val (r, g, cache) = ranged(df.withColumn("__v", value), grp, order)
-    val summed = carry(r, g, order, sumCarry(col("__v")), out, outTotal)
-      .select(((df.columns.toIndexedSeq :+ out) ++ Option(outTotal).filter(_.nonEmpty))
-        .map(col): _*)
-    graft.Caches.releaseAfterConsumers(Seq(summed), cache)
-    summed
-  }
+      value: Column, out: String = "cumsum", outTotal: String = ""): DataFrame =
+    scan(df, grp, order, Some(value), out, Option(outTotal).filter(_.nonEmpty))
 
   /** Exact per-group quantiles through the two-phase rank — the scale-safe
     * alternative to `percentile` (which buffers each group's values in one
@@ -175,7 +128,7 @@ object Ranks {
 
   /** [[quantilesByValue]] when the caller ALREADY HOLDS the tie-class
     * histogram (one row per (group, value) with `countCol` members) —
-    * e.g. a persisted class frame serving several chained quantile
+    * e.g. a cached class frame serving several chained quantile
     * passes. Same `ceil(q·n)`-rank semantics. */
   def quantilesOfClasses(classes: DataFrame, grp: Seq[String], value: String,
       countCol: String, qs: Seq[(String, Double)]): DataFrame = {
@@ -183,8 +136,8 @@ object Ranks {
       s"quantiles must be in (0,1]: $qs")
     require(grp.nonEmpty, "quantilesOfClasses needs grouping keys")
     // ONE pass: the prefix scan emits the per-group total alongside the
-    // cumulative count (it lives on the same broadcast offsets frame), so
-    // the rank target needs no second scan and no totals join
+    // cumulative count (the driver folds both from the same per-partition
+    // sums), so the rank target needs no second scan and no totals join
     val cum = prefixSum(
       classes.withColumn("__c", col(countCol).cast("long")),
       grp.map(col), Seq(col(value)), col("__c"), "__cum", "__n")

@@ -1,8 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -13,7 +12,7 @@ import org.apache.spark.sql.types.Decimal
 import org.apache.spark.unsafe.types.UTF8String
 
 /** NATIVE as-of join — the (c)-tier custom operator: a [[LogicalPlan]]
-  * node, a planner [[SparkStrategy]], and a physical [[SparkPlan]] running a
+  * node, a [[GraftStrategy]] case, and a physical [[SparkPlan]] running a
   * per-partition sorted merge. [[graft.operators.AsOfJoin]] remains the
   * compose-first implementation (union + one keyed window, SURVEY §2
   * aj1/s3); this node exists where that composition leaves money on the
@@ -60,7 +59,7 @@ object NativeAsOf {
       return graft.operators.AsOfJoin.asOf(
         left, right, keys, tsCol, payload, tieCol, prefix)
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    GraftStrategy.ensure(spark, asOfRules = true)
     val lPlan = GraftSqlBridge.analyzed(left)
     val rPlan0 = GraftSqlBridge.analyzed(right)
     // both sides often derive from ONE scan (self-as-of on an event
@@ -95,34 +94,6 @@ object NativeAsOf {
       attr(lPlan, tsCol), attr(rPlan, tsCol), attr(rPlan, tieCol),
       rightCarry.map(attr(rPlan, _)), outAttrs)
     GraftSqlBridge.ofRows(spark, node)
-  }
-
-  /** Register [[AsOfJoinStrategy]] + [[AsOfFilterPushdown]] once per
-    * session (public `experimental` hooks; [[graft.expressions
-    * .GraftExtensions]] injects both for externally-built sessions). */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    // a session built with GraftExtensions already carries the strategy
-    // and both rules via injectPlannerStrategy/injectOptimizerRule;
-    // re-adding them through the experimental hooks would run the
-    // pushdown/pruning rules twice per optimization pass (harmless but
-    // wasteful — flagged by the r5 advisor). The skip is gated on an
-    // APPLIED-extensions witness, not the conf string: Spark logs-and-
-    // continues when an extensions class fails to instantiate, so the
-    // conf merely MENTIONING GraftExtensions does not prove injection
-    // (r6 advisor). The planner's strategy list is ground truth, and
-    // both registration paths add the strategy and the two rules
-    // together, so strategy-present ⇔ rules-present.
-    if (spark.sessionState.planner.strategies
-        .exists(_.isInstanceOf[AsOfJoinStrategy])) return
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[AsOfJoinStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ new AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.exists(_ eq AsOfFilterPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AsOfFilterPushdown
-    if (!spark.experimental.extraOptimizations.exists(_ eq AsOfColumnPruning))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AsOfColumnPruning
   }
 }
 
@@ -203,31 +174,6 @@ final case class AsOfJoinPlan(
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsOfJoinPlan =
     copy(left = newLeft, right = newRight)
-}
-
-/** Plans [[AsOfJoinPlan]] physically, picking by right-side STATS the
-  * way the built-in join strategy picks BHJ vs SMJ: a right side under
-  * `spark.sql.autoBroadcastJoinThreshold` broadcasts
-  * ([[BroadcastAsOfJoinExec]] — the fact side is never shuffled OR
-  * sorted), anything larger takes the co-partitioned sorted merge
-  * ([[AsOfJoinExec]]). */
-final class AsOfJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case p: AsOfJoinPlan =>
-      val threshold = org.apache.spark.sql.internal.SQLConf.get
-        .autoBroadcastJoinThreshold
-      val exec =
-        if (threshold > 0 && p.right.stats.sizeInBytes <= threshold)
-          BroadcastAsOfJoinExec(p.leftKeys, p.rightKeys, p.leftTs, p.rightTs,
-            p.rightTie, p.payload, p.payloadOut,
-            planLater(p.left), planLater(p.right))
-        else
-          AsOfJoinExec(p.leftKeys, p.rightKeys, p.leftTs, p.rightTs,
-            p.rightTie, p.payload, p.payloadOut,
-            planLater(p.left), planLater(p.right))
-      exec :: Nil
-    case _ => Nil
-  }
 }
 
 /** Physical as-of join: children arrive co-partitioned on the keys

@@ -687,8 +687,9 @@ object RelationalQueries {
     "g1_order_by",
     (s, d) =>
       graft.operators.Ranks
-        // project first: Ranks persists, and a persist is a pruning
-        // barrier — unprojected it would cache all 9 part columns
+        // project first: the scan is a custom plan node, and pruning
+        // through it is not asserted anywhere — unprojected, all 9 part
+        // columns could ride the range exchange
         .rowNumber(Tables.part(s, d).select("p_partkey", "p_name"),
           grp = Nil, order = Seq(col("p_name"), col("p_partkey")), out = "rn")
         .select(col("rn"), col("p_partkey"), col("p_name")),

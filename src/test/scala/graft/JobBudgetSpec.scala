@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.functions._
 
 import graft.api.Tcga
+import graft.operators.Ranks
 
 /** Spark-job budgets for the TCGA reference operations. At reference
   * size a job costs scheduling, planning and codegen rather than data
@@ -67,6 +68,20 @@ class JobBudgetSpec extends SparkSpec {
       sink(tests)
     }
     assert(n <= 20, s"drugKmFanOut ran $n Spark jobs")
+  }
+
+  test("rowNumber and prefixSum each stay within their job budget") {
+    // 4 input partitions, 7 range partitions: the carries cross partitions.
+    // 4 jobs each: the range-bounds sample, the shuffle, the carry pass and
+    // the write (the cached self-join composition this replaced ran 9)
+    val in = spark.range(0, 20000, 1, 4).select(col("id"), (col("id") % 5).as("g"),
+      ((col("id") * 7919) % 20000).as("k"))
+    atWidth7 {
+      val rn = jobs(sink(Ranks.rowNumber(in, Seq(col("g")), Seq(col("k"), col("id")))))
+      val ps = jobs(sink(Ranks.prefixSum(in, Nil, Seq(col("k"), col("id")), col("k"))))
+      assert(rn <= 4, s"rowNumber ran $rn Spark jobs")
+      assert(ps <= 4, s"prefixSum ran $ps Spark jobs")
+    }
   }
 
   test("building kmByMedianExpression's frames stays within its rule-run budget") {

@@ -131,21 +131,18 @@ class PlanSpec extends SparkSpec {
   /** r8 (verdict #2/#3): stronger than [[assertNoPartitionWindowsBounded]]
     * — a GROUP-partitioned window is still the one-task-per-group sort
     * when the group cardinality is low (eval domains, sources). Asserts
-    * every WindowExec in the executed plan is either (a) over an input
-    * already cardinality-bounded by an aggregate below it, or (b) the
-    * two-phase local-rank window whose partitionSpec includes the
-    * physical `__pid` from [[graft.operators.Ranks.rowNumber]] —
-    * task-balanced by construction regardless of group cardinality. */
+    * every WindowExec in the executed plan is over an input already
+    * cardinality-bounded by an aggregate below it. Ranks run as
+    * [[graft.plans.OrderedScanExec]], which holds no window. */
   private def assertWindowsTwoPhaseOrBounded(df: DataFrame, what: String): Unit = {
     df.collect()
     val bad = flatten(df.queryExecution.executedPlan).collect {
       case w: WindowExec
-        if !w.partitionSpec.exists(_.references.exists(_.name == "__pid")) &&
-          !flatten(w.child).exists(_.isInstanceOf[BaseAggregateExec]) => w
+        if !flatten(w.child).exists(_.isInstanceOf[BaseAggregateExec]) => w
     }
     assert(bad.isEmpty,
-      s"$what: Window sorts an unbounded input without the two-phase " +
-        s"__pid partitioning (one-task-per-group shape):\n${bad.mkString("\n")}")
+      s"$what: Window sorts an unbounded input (one-task-per-group " +
+        s"shape):\n${bad.mkString("\n")}")
   }
 
   test("auc1/gc1 per-domain rankers are two-phase, never one sort task per domain") {
@@ -154,6 +151,8 @@ class PlanSpec extends SparkSpec {
       assertWindowsTwoPhaseOrBounded(df, q)
       assert(df.queryExecution.executedPlan.toString
         .toLowerCase.contains("rangepartitioning"), q)
+      assert(flatten(df.queryExecution.executedPlan)
+        .exists(_.isInstanceOf[graft.plans.OrderedScanExec]), q)
     }
   }
 

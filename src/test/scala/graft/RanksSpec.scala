@@ -15,10 +15,10 @@ class RanksSpec extends SparkSpec {
 
   // 3 uneven groups (sizes 103, 40, 1) with duplicate order values so the
   // id tiebreak is load-bearing, scattered over 7 input partitions
-  private lazy val df = spark.range(0, 144).repartition(7)
+  private def rows = spark.range(0, 144).repartition(7)
     .withColumn("g", when(col("id") < 103, "a").when(col("id") < 143, "b").otherwise("c"))
     .withColumn("v", (col("id") % 11).cast("int"))
-    .persist()
+  private lazy val df = rows.persist()
 
   test("rowNumber matches row_number over (g, v, id)") {
     val expect = df.withColumn("rn",
@@ -113,10 +113,9 @@ class RanksSpec extends SparkSpec {
 
   test("rowNumber and prefixSum over localCheckpoint and RDD inputs match a driver-side rank, twice") {
     // more rows per input partition than the range exchange samples, so
-    // the boundaries depend on the sample: a stitch branch that re-ran the
-    // range exchange instead of reading the persisted ranged frame would
-    // disagree with it on __pid and misrank rows. Both outputs are built
-    // before the first action, whose end releases both ranged caches.
+    // the boundaries depend on the sample: a carry pass that saw other
+    // boundaries than the row pass would misrank rows. Both outputs are
+    // built before the first action, and each is acted on twice.
     val n = 40000
     val base = spark.range(0, n, 1, 4).select($"id",
       (($"id" * 7919) % n).as("k"), ($"id" % 5).as("g")) // k: a permutation
@@ -133,7 +132,7 @@ class RanksSpec extends SparkSpec {
         val ranked = Ranks.rowNumber(in, Nil, Seq($"k")).select($"id", $"rn")
         val summed = Ranks.prefixSum(in, Seq($"g"), Seq($"k"), $"k", "cs")
           .select($"id", $"cs")
-        // the second action runs after the first released the ranged cache
+        // the second action plans and samples the range exchange again
         for (action <- Seq("first", "repeated")) {
           val gotRank = ranked.as[(Long, Long)].collect()
           val badRank = gotRank.count { case (id, rn) => rank(id) != rn }
@@ -166,54 +165,83 @@ class RanksSpec extends SparkSpec {
     }
   }
 
-  test("two rowNumber outputs built before either one's action leave no cache behind") {
-    spark.catalog.clearCache()
-    def ids() = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    // listener delivery is asynchronous: poll for the release
-    def settled(done: => Boolean): Boolean = {
-      val deadline = System.currentTimeMillis() + 20000
-      while (!done && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      done
+  test("prefixSum over NULL values matches the single-window running total and group total") {
+    // NULL on every odd id: at width 16 some range partitions start with a
+    // NULL row after non-NULL ones in the same group; groups 1 and 3 of
+    // `id % 4` are all NULL, so their running sums and totals are NULL
+    val withNulls = spark.range(0, 400, 1, 4).select($"id", ($"id" % 4).as("g"),
+      when($"id" % 2 === 1, lit(null)).otherwise($"id" % 11).as("v"))
+    withConf("spark.sql.shuffle.partitions" -> "16") {
+      assert(rangeSpan(withNulls, $"id") > 1, "one range partition: no carry")
+      for (grp <- Seq(Nil, Seq($"g"))) {
+        val running = Window.partitionBy(grp: _*).orderBy($"id")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val expect = withNulls.withColumn("cs", sum($"v").over(running))
+          .withColumn("tot", sum($"v").over(Window.partitionBy(grp: _*)))
+        val got = Ranks.prefixSum(withNulls, grp, Seq($"id"), $"v", "cs", "tot")
+        assert(got.except(expect).isEmpty && expect.except(got).isEmpty,
+          s"grouped by ${grp.mkString(",")}")
+      }
     }
-    val earlier = ids()
-    val a = Ranks.rowNumber(df, Seq($"g"), Seq($"v", $"id"))
-    val b = Ranks.rowNumber(df, Nil, Seq($"id"))
-    assert(a.collect().length == 144)
-    // a's action releases a's ranged cache and leaves b's in place
-    assert(settled((ids() -- earlier).isEmpty), "a's ranged cache outlived its action")
-    assert(!spark.sharedState.cacheManager.isEmpty, "a's action released b's ranged cache")
-    assert(b.collect().length == 144)
-    spark.catalog.clearCache()
-    assert(settled((ids() -- earlier).isEmpty),
-      s"persistent RDDs left: ${ids() -- earlier}")
   }
 
-  test("only the per-partition local rank windows the full data; offsets window on agg") {
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+  test("prefixSum rejects a non-integral value, naming its type, before any job runs") {
+    for ((v, t) <- Seq($"v".cast("double") -> "DOUBLE", $"v".cast("decimal(10,0)") ->
+        "DECIMAL(10,0)", $"g" -> "STRING")) {
+      val e = intercept[IllegalArgumentException](Ranks.prefixSum(df, Nil, Seq($"id"), v))
+      assert(e.getMessage.contains(t), e.getMessage)
+    }
+  }
+
+  test("two rowNumber outputs built before either one's action leave no cache behind") {
+    df.count() // the fixture's own cache
+    def ids() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val fixture = ids()
+    def none(step: String): Unit =
+      assert((ids() -- fixture).isEmpty, s"$step: persistent RDDs ${ids() -- fixture}")
+    val ranked = Ranks.rowNumber(df, Seq($"g"), Seq($"v", $"id"))
+    none("built")
+    val firsts = ranked.filter($"rn" === 1)
+    for (step <- Seq("a derived frame's action", "a second one")) {
+      assert(firsts.count() == 3)
+      none(step)
+    }
+    val a = Ranks.rowNumber(df, Nil, Seq($"v", $"id"))
+    val b = Ranks.rowNumber(df, Nil, Seq($"v", $"id"))
+    assert(a.collect().length == 144)
+    none("the first of two equal outputs")
+    assert(b.collect().length == 144)
+    none("the second of two equal outputs")
+    spark.catalog.clearCache()
+    none("clearCache")
+  }
+
+  test("rowNumber, prefixSum, ntile: one scan exec, one range exchange, no window or cache") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    // the persisted ranged frame's plan holds the range exchange
-    def flatten(p: org.apache.spark.sql.execution.SparkPlan) =
-      PlanNodes(p, intoCaches = true)
-    // built lazily: each output plans while its own ranged cache is live
-    val outs = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-      "ntile" -> (() => Ranks.ntile(df, Seq($"g"), Seq($"v", $"id"), 2)),
-      "prefixSum" -> (() => Ranks.prefixSum(df, Seq($"g"), Seq($"v", $"id"), $"v")))
-    for ((name, build) <- outs) {
-      val out = build()
+    import graft.plans.OrderedScanExec
+    // the uncached fixture: every node of the plan is the input's or the scan's
+    val in = rows
+    val outs = Seq(
+      "rowNumber" -> Ranks.rowNumber(in, Seq($"g"), Seq($"v", $"id")),
+      "prefixSum" -> Ranks.prefixSum(in, Seq($"g"), Seq($"v", $"id"), $"v"),
+      "ntile" -> Ranks.ntile(in, Seq($"g"), Seq($"v", $"id"), 2))
+    for ((name, out) <- outs) {
       out.collect()
-      val nodes = flatten(out.queryExecution.executedPlan)
-      val windows = nodes.collect { case w: WindowExec => w }
-      assert(windows.nonEmpty, name)
-      // every window that is NOT partitioned by __pid (i.e. the offsets /
-      // totals windows) must sit on an aggregate: one row per (g, __pid)
-      windows.filterNot(_.partitionSpec.exists(_.toString.contains("__pid"))).foreach { w =>
-        val aggBelow = flatten(w.child).exists {
-          case _: BaseAggregateExec => true
-          case _ => false
-        }
-        assert(aggBelow,
-          s"$name: window input must be an aggregate, not the fact table:\n$w")
+      val nodes = PlanNodes(out.queryExecution.executedPlan)
+      assert(nodes.count(_.isInstanceOf[OrderedScanExec]) == 1, s"$name: scan execs")
+      val ranges = nodes.count {
+        case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
       }
+      assert(ranges == 1, s"$name: $ranges range exchanges")
+      val extra = nodes.filter {
+        case _: WindowExec | _: BroadcastExchangeExec | _: InMemoryTableScanExec => true
+        case _ => false
+      }
+      assert(extra.isEmpty, s"$name:\n${extra.mkString("\n")}")
     }
   }
 }
