@@ -12,11 +12,21 @@ import org.apache.spark.storage.StorageLevel
 
 /** Cache-lifetime discipline for the library's internal `persist()` calls.
   *
-  * Library operators persist frames their plans reference more than once
-  * (see the scaladoc on each call site). Those caches must outlive the
-  * function that created them — the consuming action is the caller's — so
-  * they cannot be unpersisted before returning. Each is tied to the frame
-  * the function returns instead:
+  * The rule for keeping one: a library operator persists a frame only when
+  * a job outside the consuming action reads it (a construction-time count,
+  * collect or sketch build), or when a measurement shows the cache pays
+  * (the call site names it). Reads within the one action share their work
+  * through ReuseExchange instead: shape the branches so they read one
+  * identical exchange subtree (one `explode` over an array of per-band
+  * values rather than a union of per-band selects, null filters in the
+  * shared subtree rather than inferred into one branch), as the uncached
+  * `Dedup` candidate joins, `contamination`, `jaccardPairs`,
+  * `Corpus.nearDuplicates` and `tfidfTopTerms` do.
+  *
+  * The caches that stay must outlive the function that created them — the
+  * consuming action is the caller's — so they cannot be unpersisted
+  * before returning. Each is tied to the frame the function returns
+  * instead:
   *
   *  - [[releaseAfterConsumers]] — the batch rule. The caches are released
   *    once every listed consumer frame (usually the one returned frame;

@@ -60,12 +60,21 @@ object Corpus {
       textCol: String = "text", shingleN: Int = 3, numHashes: Int = 6,
       bandsOf: Int = 2, jaccardMin: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
-    // persist: shingles feed the signatures AND both sides of the verify
-    val sh = Dedup.shingleRows(docs, idCol, textCol, shingleN).persist()
+    // uncached: the signatures, the sizes and both verify join sides read
+    // one doc_id-keyed exchange of the exploded shingles. Without it the
+    // signature branch would run its own explode (min ignores duplicates,
+    // so the optimizer drops the distinct under it). The null filters sit
+    // in that shared subtree, as in contaminationBloom, so the joins infer
+    // none into one branch only; a NULL id never pairs and a shingle is
+    // never NULL, so they drop no output row
+    val sh = Dedup.shingleExplode(docs, Seq("doc_id" -> col(idCol)), textCol, shingleN)
+      .filter(col("doc_id").isNotNull && col("sh").isNotNull)
+      .repartition(col("doc_id"))
+      .distinct()
     val cands = Dedup.minhashCandidates(
       Dedup.minhashSignatures(sh, numHashes), numHashes, bandsOf, maxBucket)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
-    val out = cands
+    cands
       .join(sh.select(col("doc_id").as("doc_a"), col("sh")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_inter"))
@@ -75,8 +84,6 @@ object Corpus {
         col("n_inter") / (col("na") + col("nb") - col("n_inter")))
       .filter(col("jaccard") >= jaccardMin)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    graft.Caches.releaseAfterConsumers(Seq(out), sh)
-    out
   }
 
   /** Content fingerprints (X3): md5 of the first `prefixK` tokens and the
@@ -214,22 +221,25 @@ object Corpus {
     * callers round for cross-engine hashing. */
   def tfidfTopTerms(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", topK: Int = 3): DataFrame = {
-    // persisted: three consumers (per-doc totals, df, corpus count) —
-    // unpersisted, each re-runs the tokenize+explode+agg corpus pass
-    val tc = docs
+    // uncached, one tokenize + explode per action: the (doc_id, term)
+    // counts feed one chain, the per-doc token total and the term's doc
+    // count (df) are windows over it rather than a join of branches. The
+    // corpus count reads `docs` itself: a document has a term iff its text
+    // is not NULL (`tokens` gives [""] for empty text), so counting those
+    // ids needs no tokenizer
+    val counts = Dedup.spread(docs)
       .select(col(idCol).as("doc_id"),
         explode(TextFunctions.tokens(col(textCol))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .persist()
-    val withN = tc.withColumn("n_tok",
-      sum(col("tf")).over(org.apache.spark.sql.expressions.Window
+      .withColumn("n_tok", sum(col("tf")).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id"))))
-    val df = tc.groupBy("term").agg(count(lit(1)).as("df"))
-    val nDocs = tc.select(countDistinct(col("doc_id")).as("n_docs"))
+      .withColumn("df", count(lit(1)).over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("term"))))
+    val nDocs = docs.filter(col(textCol).isNotNull)
+      .select(countDistinct(col(idCol)).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
       .orderBy(round(col("score"), 9).desc, col("term").asc)
-    val out = withN.join(df, "term")
-      .crossJoin(broadcast(nDocs))
+    counts.crossJoin(broadcast(nDocs))
       .withColumn("score",
         (col("tf").cast("double") / col("n_tok")) *
           log(col("n_docs").cast("double") / col("df")))
@@ -237,8 +247,6 @@ object Corpus {
       .filter(col("rnk") <= topK)
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
         col("score"), col("rnk"))
-    graft.Caches.releaseAfterConsumers(Seq(out), tc)
-    out
   }
 
   /** Unigram-LM document scores (LM1): corpus-MLE token probabilities,

@@ -193,7 +193,10 @@ object Tcga {
     * @return (curves, tests): curves keyed by (gene_name, strat); tests one
     *         row per gene_name (the leading column) with chi2/pvalue. An
     *         `expression` with no rows gives two empty frames with these
-    *         columns.
+    *         columns. So does a cohort where every subject is alive: with
+    *         no event each curve stays at survival 1.0, and a curve row is
+    *         a death time, so there is none; and `logRankBy` gives no test
+    *         for a gene without an event.
     */
   def kmByMedianExpression(t: TcgaTables, goi: Seq[String]): (DataFrame, DataFrame) = {
     val (curves, tests) =
@@ -238,7 +241,9 @@ object Tcga {
     *
     * @return (curves, tests): curves keyed by (drug_class, gene_name,
     *         strat); tests one row per (drug_class, gene_name), the two
-    *         trailing columns
+    *         trailing columns. A class that matches no treatment has no
+    *         cohort, so it gives no rows, and the other classes' curves
+    *         and tests are those of a call without it.
     */
   def drugKmFanOut(t: TcgaTables, drugClasses: Seq[String],
       goi: Seq[String]): (DataFrame, DataFrame) = {

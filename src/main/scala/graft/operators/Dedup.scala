@@ -186,34 +186,35 @@ object Dedup {
     }
   }
 
+  /** (band, bkey) rows from a signature frame — shared by the symmetric
+    * and bipartite candidate joins. One `posexplode` over the array of
+    * per-band keys (the `Graphs.triangleCounts` corner idiom): a union of
+    * per-band selects would give each branch its own column-pruned
+    * signature aggregate, and each would re-run the shingle explode. */
+  private[graft] def bandRows(sigs: DataFrame, k: Int, bandsOf: Int): DataFrame =
+    sigs.select(col("doc_id"), posexplode(array((0 until k / bandsOf).map { b =>
+        md5(concat_ws("_", (0 until bandsOf).map(j => col(s"h${b * bandsOf + j}")): _*))
+      }: _*)).as(Seq("band", "bkey")))
+
   /** LSH banding: candidate pairs = docs sharing any band bucket.
     * @param bandsOf rows per band (k % bandsOf must be 0)
     * @param maxBucket buckets larger than this are dropped (and counted to
     *   the log) before the self-join — a degenerate bucket would otherwise
-    *   generate m² pairs in a single task */
-  /** (band, bkey) rows from a signature frame — shared by the symmetric
-    * and bipartite candidate joins. */
-  private[graft] def bandRows(sigs: DataFrame, k: Int, bandsOf: Int): DataFrame =
-    (0 until k / bandsOf).map { b =>
-      val cols = (0 until bandsOf).map(j => col(s"h${b * bandsOf + j}"))
-      sigs.select(col("doc_id"), lit(b).as("band"),
-        md5(concat_ws("_", cols: _*)).as("bkey"))
-    }.reduce(_ unionByName _)
-
+    *   generate m² pairs in a single task
+    *
+    * Nothing is cached: the signatures feed one band explode, and both
+    * sides of the self-join are the same capped plan, so they read one
+    * exchange (ReuseExchange). */
   def minhashCandidates(signatures: DataFrame, k: Int, bandsOf: Int,
       maxBucket: Int = 1000): DataFrame = {
     require(k % bandsOf == 0, "k must divide into bands")
-    val sigs = signatures.persist()
-    val bands = bandRows(sigs, k, bandsOf).persist()
-    val capped = capBuckets(bands, Seq(col("band"), col("bkey")), maxBucket,
-      "minhashCandidates")
-    val out = capped.as("x").join(capped.as("y"),
+    val capped = capBuckets(bandRows(signatures, k, bandsOf),
+      Seq(col("band"), col("bkey")), maxBucket, "minhashCandidates")
+    capped.as("x").join(capped.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    graft.Caches.releaseAfterConsumers(Seq(out), sigs, bands)
-    out
   }
 
   /** Signature-based Jaccard ESTIMATE for candidate pairs: the fraction
@@ -292,25 +293,23 @@ object Dedup {
     require(maxHamming < bits / bandBits,
       s"simhashNearPairs: maxHamming ($maxHamming) must be < nBands" +
         s" (${bits / bandBits}) for the pigeonhole guarantee")
-    val sigs = simhashes.persist()
-    val nBands = bits / bandBits
-    val bands = (0 until nBands).map { b =>
-      sigs.select(col("doc_id"), lit(b).as("band"),
-        shiftright(col("simhash"), b * bandBits)
-          .bitwiseAND(lit((1L << bandBits) - 1)).as("bkey"),
-        col("simhash"))
-    }.reduce(_ unionByName _).persist()
+    // one posexplode over the per-band keys, as in bandRows: the
+    // signatures feed one band explode, and both join sides read one
+    // exchange, so nothing is cached
+    val bandMask = lit((1L << bandBits) - 1)
+    val bands = simhashes.select(col("doc_id"), col("simhash"),
+      posexplode(array((0 until bits / bandBits).map(b =>
+        shiftright(col("simhash"), b * bandBits).bitwiseAND(bandMask)): _*))
+        .as(Seq("band", "bkey")))
     val capped = capBuckets(bands, Seq(col("band"), col("bkey")), maxBucket,
       "simhashNearPairs")
-    val out = capped.as("x").join(capped.as("y"),
+    capped.as("x").join(capped.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-    graft.Caches.releaseAfterConsumers(Seq(out), sigs, bands)
-    out
   }
 
   /** Train→test contamination check — the benchmark-leakage scan every
@@ -332,10 +331,9 @@ object Dedup {
     */
   def contamination(docs: DataFrame, idCol: String, textCol: String,
       trainFlag: Column, n: Int, maxShingleTrainDocs: Int = 1000): DataFrame = {
-    // Deliberately NOTHING fact-sized is persisted (the bf1 design): only
-    // the capped train-shingle DICTIONARY is cached; the test-side
-    // shingle stream is recomputed per consumer — a narrow re-scan, vs a
-    // corpus-sized cache that a 100 TB run cannot hold
+    // Nothing is cached. The split filters push below the explode, so the
+    // train branch explodes only train docs and the test branch only test
+    // docs: each shingle is made once per action
     val pairs = shingleExplode(docs,
       Seq("doc_id" -> col(idCol), "is_train" -> trainFlag), textCol, n)
     DropAudit.ensure(docs.sparkSession)
@@ -346,7 +344,6 @@ object Dedup {
           .as("dropped_rows"))
       .filter(col("__ndocs") <= maxShingleTrainDocs)
       .select("sh")
-      .persist()
     // ONE pass over the test side: distinct (doc, sh) — the same
     // partial-dedup shuffle a count_distinct pays internally, paid once
     // instead of once per aggregate — then totals AND hits off a single
@@ -356,7 +353,7 @@ object Dedup {
     // too (ADVICE r10: the dictionary join here is on sh, not doc_id, so
     // a NULL-id test doc with shared shingles WOULD otherwise emit a row
     // that the Bloom path drops)
-    val out = pairs.filter(!col("is_train"))
+    pairs.filter(!col("is_train"))
       .filter(col("doc_id").isNotNull)
       .select("doc_id", "sh").distinct()
       .join(trainSh.withColumn("__hit", lit(1)), Seq("sh"), "left")
@@ -365,8 +362,6 @@ object Dedup {
       .filter(col("n_shared") > 0)
       .withColumn("contamination", round(col("n_shared") / col("n_sh"), 6))
       .select("doc_id", "n_sh", "n_shared", "contamination")
-    graft.Caches.releaseAfterConsumers(Seq(out), trainSh)
-    out
   }
 
   /** Exact n-gram Jaccard inside a blocking key: pairs with
@@ -396,11 +391,12 @@ object Dedup {
     val sh = shingleExplode(docs,
         Seq("doc_id" -> col(idCol), "blk" -> col(blockCol)), textCol, n)
       .distinct()
-      .persist()
+    // both join sides are the same plan, so they read one exchange
+    // (ReuseExchange) and the shingles are made once, uncached
     val sized = capBuckets(sh, Seq(col("blk"), col("sh")), maxShingleDocs,
         "jaccardPairs")
       .withColumn("nsh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-    val out = sized.as("x").join(sized.as("y"),
+    sized.as("x").join(sized.as("y"),
         col("x.blk") === col("y.blk") && col("x.sh") === col("y.sh") &&
           col("x.doc_id") < col("y.doc_id") &&
           least(col("x.nsh"), col("y.nsh")) >=
@@ -412,8 +408,6 @@ object Dedup {
         round(col("n_inter") / (col("na") + col("nb") - col("n_inter")), 6))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "na", "nb", "n_inter", "jaccard")
-    graft.Caches.releaseAfterConsumers(Seq(out), sh)
-    out
   }
 
   /** Serialized Bloom sketch of a string column — the build side of the

@@ -228,11 +228,14 @@ object ScaleOpsQueries {
   private val dd8 = Q(
     "dd8_minhash_estimate",
     (s, d) => {
-      // no persist here: minhashCandidates persists the SAME signature
-      // plan internally, and cache lookup is by logical plan, so the
-      // estimate joins below read that one cached copy
+      // uncached: the banding and both estimate joins read one signature
+      // pass through ReuseExchange. The doc_id filter sits in that shared
+      // subtree; inferred from the estimate joins instead, it would reach
+      // their branches only and give the banding its own explode. A NULL
+      // id never pairs, so it drops no output row
       val sigs = Dedup.minhashSignaturesOf(
         Tables.documents(s, d), "doc_id", "text", 3, numHashes)
+        .filter(col("doc_id").isNotNull)
       Dedup.minhashJaccardEstimate(sigs,
         Dedup.minhashCandidates(sigs, numHashes, bandsOf, maxBucket), numHashes)
     },

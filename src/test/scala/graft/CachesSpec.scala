@@ -367,6 +367,30 @@ class CachesSpec extends SparkSpec {
         "a post-registration consumer has been observed (r13 ADVICE leak)")
   }
 
+  test("uncached dedup and corpus operators register no listener and add no persistent RDD") {
+    val ops = UncachedCorpusOps(spark, "/root/testdata/sf0.01")
+    // the session-wide bucket-cap audit registers on first use; build
+    // every frame once so it is in place before counting
+    ops.foreach(_.frame())
+    spark.catalog.clearCache()
+    spark.range(1).count()
+    def pending() = org.apache.spark.sql.QueryListeners.of(spark)
+      .count(_.getClass.getName.startsWith("graft.Caches$"))
+    settle(pending() == 0)
+    ops.foreach { op =>
+      val listeners = org.apache.spark.sql.QueryListeners.of(spark).size
+      val earlier = rddIds()
+      val df = op.frame()
+      assert(org.apache.spark.sql.QueryListeners.of(spark).size == listeners,
+        s"${op.name}: building the frame registered a query listener")
+      df.write.format("noop").mode("overwrite").save()
+      assert(org.apache.spark.sql.QueryListeners.of(spark).size == listeners,
+        s"${op.name}: the action left a query listener")
+      assert(rddIds() == earlier,
+        s"${op.name}: the action added persistent RDDs ${rddIds() -- earlier}")
+    }
+  }
+
   test("corpus near-dup + search session releases its caches too") {
     import spark.implicits._
     val docs = (1L to 60L)

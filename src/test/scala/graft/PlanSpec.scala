@@ -797,6 +797,41 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("dedup and corpus operators cache nothing and explode their input once") {
+    import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    for (op <- UncachedCorpusOps(spark, "/root/testdata/sf0.01")) {
+      val df = op.frame()
+      // the noop write's own execution, as the listener bus reports it
+      val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+      val capture = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (qe.analyzed.isInstanceOf[V2WriteCommand]) writes.put(qe)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(capture)
+      val qe =
+        try {
+          df.write.format("noop").mode("overwrite").save()
+          writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        } finally spark.listenerManager.unregister(capture)
+      assert(qe != null, s"${op.name}: the noop write was not reported")
+      val nodes = flatten(qe.executedPlan)
+      val p = qe.executedPlan.toString
+      assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
+        s"${op.name}: the executed plan reads a cache\n$p")
+      // the explodes emit each shingle (token) row once, and each doc's
+      // bands once: no branch re-runs the explode
+      val exploded = nodes.collect { case g: GenerateExec =>
+        g.metrics("numOutputRows").value }
+      assert(exploded.sum == op.explodeRows,
+        s"${op.name}: explodes emitted ${exploded.mkString(" + ")} rows, " +
+          s"expected ${op.explodeRows}\n$p")
+    }
+  }
+
   test("nested-schema pruning: reading struct metadata never drags the binary payload") {
     // The multimodal layout at 100 TB: an opaque binary payload column
     // beside a typed metadata STRUCT (the mm1/mm2 shape, written to

@@ -251,6 +251,32 @@ class TcgaApiSpec extends SparkSpec {
     assert(de.contains("EDGE") && !de.contains("LOW") && !de.contains("ZERO"))
   }
 
+  test("drugKmFanOut: a class matching no treatment adds no rows and moves no other class's") {
+    val goi = Seq("DEG10", "GENE1")
+    val (curves, tests) = Tcga.drugKmFanOut(t, Seq("Tamoxifen", "NoSuchDrug"), goi)
+    val (alone, aloneTests) = Tcga.drugKmFanOut(t, Seq("Tamoxifen"), goi)
+    val c = curves.collect()
+    val tst = tests.collect()
+    assert(c.nonEmpty && tst.nonEmpty)
+    assert(c.map(_.getAs[String]("drug_class")).toSet == Set("Tamoxifen"))
+    assert(tst.map(_.getAs[String]("drug_class")).toSet == Set("Tamoxifen"))
+    assert(c.toSet == alone.collect().toSet)
+    assert(tst.toSet == aloneTests.collect().toSet)
+  }
+
+  test("kmByMedianExpression with every subject alive gives empty curves and tests") {
+    val t0 = t.copy(samples = t.samples.withColumn("vital_status", lit("Alive")))
+    val (curves, tests) = Tcga.kmByMedianExpression(t0, Seq("DEG10", "GENE1"))
+    // each curve stays at survival 1.0, and a curve row is a death time:
+    // there is none
+    assert(curves.columns.toSeq == Seq("time", "n_risk", "n_event", "n_censor",
+      "survival", "se", "ci_lo", "ci_hi", "gene_name", "strat"))
+    assert(curves.count() == 0)
+    assert(tests.columns.toSeq == Seq("gene_name", "observed_a", "expected_a", "chi2",
+      "pvalue"))
+    assert(tests.count() == 0)
+  }
+
   test("an empty expression table gives empty DE and KM frames, with their columns") {
     // a runtime-empty scan (the optimizer cannot fold it away), so the
     // prior, the fit and the KM windows all run over no rows

@@ -37,12 +37,21 @@ fi
 # cache registrations only go down (ROADMAP direction 7 aims at ~3): the
 # releaseAfterConsumers( call sites in src/main outside Caches.scala may not
 # exceed the committed count. Lower it when a site goes.
-max_registrations=35
+max_registrations=29
 registrations=$(grep -rn 'releaseAfterConsumers(' src/main |
   grep -vc '^src/main/scala/graft/Caches.scala:' || true)
 if [ "$registrations" -gt "$max_registrations" ]; then
   echo "$registrations releaseAfterConsumers( call sites in src/main outside" \
     "Caches.scala, more than the committed $max_registrations" >&2
+  exit 1
+fi
+# nor may a removed cache come back as a persist with no registration: the
+# .persist( call sites in src/main may not exceed the committed count either
+max_persists=47
+persists=$( (grep -rn '\.persist(' src/main || true) | wc -l)
+if [ "$persists" -gt "$max_persists" ]; then
+  echo "$persists .persist( call sites in src/main, more than the committed" \
+    "$max_persists" >&2
   exit 1
 fi
 # the benchmark's own build calls GraftSession.apply and the graft.api
