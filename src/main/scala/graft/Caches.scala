@@ -19,9 +19,12 @@ import org.apache.spark.storage.StorageLevel
   * through ReuseExchange instead: shape the branches so they read one
   * identical exchange subtree (one `explode` over an array of per-band
   * values rather than a union of per-band selects, null filters in the
-  * shared subtree rather than inferred into one branch), as the uncached
-  * `Dedup` candidate joins, `contamination`, `jaccardPairs`,
-  * `Corpus.nearDuplicates` and `tfidfTopTerms` do.
+  * shared subtree rather than inferred into one branch by a join), or
+  * fold them into one aggregate or window chain, as the uncached `Dedup`
+  * candidate joins, `contamination`, `jaccardPairs`, `longestSelfRepeat`,
+  * `Corpus.nearDuplicates`, `tfidfTopTerms` and the query catalog
+  * (`graft.queries`) do. The catalog keeps one cache, cc1's scores, whose
+  * site names the measurement.
   *
   * The caches that stay must outlive the function that created them — the
   * consuming action is the caller's — so they cannot be unpersisted

@@ -69,8 +69,9 @@ object Tcga {
     *         lfc_se, stat, pvalue, padj, p_signif)`. The NB-GLM cells are
     *         cached by `DiffExpression.deseq` and released once the
     *         returned frame has fed an action. An `expression` with no
-    *         rows (or no gene passing D1) gives an empty frame with
-    *         these columns.
+    *         rows (or no gene passing D1), no sample of `levels`, or one
+    *         sample per level (no residual degree of freedom for a
+    *         dispersion) gives an empty frame with these columns.
     * @throws IllegalArgumentException before any job runs, naming the
     *         value, when `levels` has fewer than two distinct levels or
     *         repeats one, or a contrast names a level outside `levels` or
@@ -192,11 +193,13 @@ object Tcga {
     *
     * @return (curves, tests): curves keyed by (gene_name, strat); tests one
     *         row per gene_name (the leading column) with chi2/pvalue. An
-    *         `expression` with no rows gives two empty frames with these
-    *         columns. So does a cohort where every subject is alive: with
-    *         no event each curve stays at survival 1.0, and a curve row is
-    *         a death time, so there is none; and `logRankBy` gives no test
-    *         for a gene without an event.
+    *         `expression` or a cohort with no rows gives two empty frames
+    *         with these columns. So does a cohort where every subject is
+    *         alive: with no event each curve stays at survival 1.0, and a
+    *         curve row is a death time, so there is none; and `logRankBy`
+    *         gives no test for a gene without an event, nor for one whose
+    *         subjects all fall in one half of the median split (which
+    *         runs over every expression sample).
     */
   def kmByMedianExpression(t: TcgaTables, goi: Seq[String]): (DataFrame, DataFrame) = {
     val (curves, tests) =

@@ -413,7 +413,9 @@ object DiffExpression {
     val p = present.size
     val x = rows.map(r => levelIndex.getOrElse(r.cond, -1))
     val keep = x.indices.filter(i => x(i) >= 0).toArray
-    if (keep.length < 2) return None
+    // no more samples than coefficients: no dispersion to estimate
+    // (DESeq2 stops with an error here)
+    if (keep.length <= p) return None
     val y0 = keep.map(i => rows(i).cnt)
     val off = keep.map(i => math.log(math.max(rows(i).sf, MinMu)))
     val lvl = keep.map(i => x(i))

@@ -840,32 +840,29 @@ object Dedup {
     *         `repeat_frac` = longest_repeat / n_tok rounded to 6 dp */
   def longestSelfRepeat(docs: DataFrame, idCol: String, textCol: String,
       n: Int, maxOccPerGram: Int = 64): DataFrame = {
-    // toked is persisted too (narrow: id + count + token array): the doc
-    // totals join at the bottom would otherwise re-scan and re-tokenize
-    // the whole corpus — the cached copy is read twice (occ build +
-    // totals) for one materialization
+    // ONE exchange, by document: every later step is per document, so
+    // none shuffles again, and the explode and the token counts read it
     val toked = spread(docs).select(col(idCol).as("doc_id"),
         TextFunctions.tokens(col(textCol)).as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("n_tok"),
         col("toks"))
-      .persist()
-    val occ = toked.select(col("doc_id"), col("n_tok"),
-        posexplode(TextFunctions.shingles(col("toks"), n))
-          .as(Seq("pos", "gram")))
-      .persist()
+      .repartition(col("doc_id"))
     DropAudit.ensure(docs.sparkSession)
     val name = s"graft_capped_self_repeat_${auditSeq.getAndIncrement()}"
-    // within-doc repeated grams only, occurrence-capped per (doc, gram)
-    val dup = occ
-      .withColumn("occs",
-        count(lit(1)).over(Window.partitionBy(col("doc_id"), col("gram"))))
-      .observe(name, sum(when(col("occs") > maxOccPerGram, 1L).otherwise(0L))
+    // each repeated (doc, gram)'s sorted positions, occurrence-capped
+    val occs = size(col("ps"))
+    val lists = toked.select(col("doc_id"),
+        posexplode(TextFunctions.shingles(col("toks"), n)).as(Seq("pos", "gram")))
+      .groupBy("doc_id", "gram")
+      .agg(sort_array(collect_list(col("pos").cast("long"))).as("ps"))
+      .observe(name, sum(when(occs > maxOccPerGram, occs).otherwise(0))
         .as("dropped_rows"))
-      .filter(col("occs") >= 2 && col("occs") <= maxOccPerGram)
-    val pairs = dup.select(col("doc_id"), col("gram"), col("pos").cast("long").as("pa"))
-      .join(dup.select(col("doc_id"), col("gram"), col("pos").cast("long").as("pb")),
-        Seq("doc_id", "gram"))
-      .filter(col("pa") > col("pb"))
+      .filter(occs >= 2 && occs <= maxOccPerGram)
+    // pairs pa > pb: each position against the earlier ones in its list
+    val pairs = lists
+      .select(col("doc_id"), col("ps"), posexplode(col("ps")).as(Seq("i", "pa")))
+      .select(col("doc_id"), col("pa"),
+        explode(slice(col("ps"), lit(1), col("i"))).as("pb"))
       .withColumn("diag", col("pa") - col("pb"))
     val wLag = Window.partitionBy("doc_id", "diag").orderBy("pa")
     val best = pairs
@@ -883,14 +880,12 @@ object Dedup {
       .agg((max(col("pa")) - min(col("pa")) + n).as("rep_len"))
       .groupBy("doc_id")
       .agg(max(col("rep_len")).as("longest_repeat"))
-    val out = toked.select(col("doc_id"), col("n_tok"))
+    toked.select(col("doc_id"), col("n_tok"))
       .join(best, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tok"),
         coalesce(col("longest_repeat"), lit(0L)).as("longest_repeat"),
         round(coalesce(col("longest_repeat"), lit(0L)) / col("n_tok"), 6)
           .as("repeat_frac"))
-    graft.Caches.releaseAfterConsumers(Seq(out), toked, occ)
-    out
   }
 
   /** The APPLY step of span-level dedup: rebuild each document with every

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -85,6 +86,12 @@ object AnalyticsQueries {
                round(exp(-(s / n_tokens)), 6) AS ppl
              FROM d"""))
 
+  /** `(d_id, c)` of the docs with an id, for a `<=>` join to LM scores:
+    * an `===` join would infer a NULL-id filter into the LM chain's
+    * per-doc branch only, which then re-runs the corpus explode. */
+  private[queries] def docColumnById(docs: DataFrame, c: String): DataFrame =
+    docs.filter(col("doc_id").isNotNull).select(col("doc_id").as("d_id"), col(c))
+
   /** CC1 — CCNet-style perplexity bucketing (Wenzek et al. 2020,
     * "CCNet: Extracting High Quality Monolingual Datasets from Web Crawl
     * Data"): per LANGUAGE, documents sort by LM perplexity and split into
@@ -98,13 +105,11 @@ object AnalyticsQueries {
     "cc1_ccnet_buckets",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      // persisted: the quantile pass (range sampling + shuffle) and the
-      // final bucket join would otherwise each re-run the whole
-      // tokenize + LM-score chain — Catalyst does not dedupe common
-      // DataFrame subtrees (the rz1 `cls` lesson)
+      // cached: a count prunes the bucket side, which then re-runs the LM chain (1.41 → 1.76 s)
       val scores = graft.api.Corpus.languageModelScores(docs)
         .select(col("doc_id"), round(col("ppl"), 6).as("ppl"))
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
+        .join(docColumnById(docs, "lang"), col("doc_id") <=> col("d_id"))
+        .drop("d_id")
         .persist()
       val th = Ranks.quantiles(scores, Seq("lang"), "ppl", "doc_id",
         Seq(("t1", 1.0 / 3), ("t2", 2.0 / 3))).drop("n")
@@ -362,10 +367,10 @@ object AnalyticsQueries {
     * (1.4826·MAD), the outlier-immune standardization (mean/stddev moves
     * with the outliers it should flag; median/MAD has a 50% breakdown
     * point — the same family as the GLM's robustDispForCooks). Both
-    * exact quantile passes run over ONE persisted tie-class histogram:
+    * exact quantile passes read ONE tie-class histogram's exchange:
     * the median from the (flag, price) classes, the MAD from the SAME
     * frame remapped to |price − med| rows (a narrow projection, r16 —
-    * the fact itself is never re-aggregated or cached). The fact is
+    * the fact itself is never re-aggregated). The fact is
     * touched twice: the histogram agg and the final narrow projection
     * against the broadcast (med, mad) row per group. Rank-quantile
     * values are exact column values, so both engines agree bit-for-bit
@@ -376,18 +381,18 @@ object AnalyticsQueries {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_returnflag").as("flag"), col("l_extendedprice").as("price"))
-      // persisted: BOTH quantile passes read the class histogram (the
-      // median pass's range sampling + shuffle, then the MAD pass's
-      // dev-class remap) — unpersisted, the fact agg would run 3×
-      val cls = li.groupBy(col("flag"), col("price"))
-        .agg(count(lit(1)).as("__c")).persist()
+      // NULL flags (which the output's join drops) leave the shared
+      // histogram, not the MAD pass's copy only
+      val cls = li.filter(col("flag").isNotNull)
+        .groupBy(col("flag"), col("price"))
+        .agg(count(lit(1)).as("__c"))
       val med = Ranks.quantilesOfClasses(cls, Seq("flag"), "price", "__c",
           Seq("med" -> 0.5))
         .select(col("flag"), col("med"))
-      // MAD classes from the CACHED histogram directly — r5 routed this
+      // MAD classes from the histogram directly — r5 routed this
       // through the median's ranked frame, paying that pass's window +
       // offsets join a second time for columns (flag, price, __c) the
-      // cache already holds (the r5→r6 rz1 cut, ~25% off the in-suite
+      // histogram already holds (the r5→r6 rz1 cut, ~25% off the in-suite
       // time). `med` rides the grouping keys (constant per flag), so the
       // stat frame stays ONE subplan with the median chain inside it.
       // r16: NO re-aggregation into unique |price−med| classes — the
@@ -405,13 +410,11 @@ object AnalyticsQueries {
       val stats = Ranks.quantilesOfClasses(devCls, Seq("flag", "med"),
           "adev", "__c", Seq("mad" -> 0.5))
         .select(col("flag"), col("med"), col("mad"))
-      val out = li.join(broadcast(stats), "flag")
+      li.join(broadcast(stats), "flag")
         .select(col("l_orderkey"), col("l_linenumber"), col("flag"),
           round(col("price"), 6).as("price"),
           round((col("price") - col("med")) / (lit(1.4826) * col("mad")), 6)
             .as("robust_z"))
-      graft.Caches.releaseAfterConsumers(Seq(out), cls)
-      out
     },
     Some("""WITH r AS (SELECT l_orderkey, l_linenumber,
                          l_returnflag AS flag, l_extendedprice AS v,
@@ -919,27 +922,20 @@ object AnalyticsQueries {
   private val hh1 = Q(
     "hh1_heavy_hitters",
     (s, d) => {
+      // two corpus passes by design: one shared token stream would need
+      // a shuffle of every token by term, more than an exact count's
       val tok = Tables.documents(s, d)
         .select(explode(graft.operators.TextFunctions.tokens(col("text"))).as("term"))
-      // ONE sketch pass serves both candidates and the exact total: the
-      // Misra–Gries rows carry n, so the third corpus scan (a separate
-      // count agg) is free; the 1-row sketch frame is persisted so its
-      // two consumers don't re-run the sketch aggregation
-      val sk = tok
+      // ONE sketch pass: every Misra–Gries entry carries the exact total n
+      val cands = tok
         .agg(GraftFunctions.freqSketch(col("term"), hhK).as("sk"))
-        .persist()
-      val cands = sk.select(explode(col("sk")).as("e"))
-        .select(col("e.item").as("term"))
-      val n = sk.select(coalesce(element_at(col("sk"), 1).getField("n"),
-        lit(0L)).as("n_total"))
-      val out = tok.join(broadcast(cands), "term")
-        .groupBy("term").agg(count(lit(1)).as("cnt"))
-        .crossJoin(broadcast(n))
+        .select(explode(col("sk")).as("e"))
+        .select(col("e.item").as("term"), col("e.n").as("n_total"))
+      tok.join(broadcast(cands), "term")
+        .groupBy("term", "n_total").agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") > lit(hhPhi) * col("n_total"))
         .select(col("term"), col("cnt"),
           round(col("cnt") / col("n_total"), 6).as("share"))
-      graft.Caches.releaseAfterConsumers(Seq(out), sk)
-      out
     },
     Some(s"""WITH t AS ($toksSql),
              tok AS (SELECT unnest(toks) AS term FROM t),
@@ -1088,7 +1084,7 @@ object AnalyticsQueries {
     * spelling — separate dl / tf / df / stats frames — re-executes the
     * scan 4×, since Catalyst does not dedupe common DataFrame subtrees).
     * Every corpus scalar (N, avgdl, and each term's df) then reduces off
-    * that persisted per-doc frame into ONE 1-row broadcast; scoring +
+    * that per-doc frame (one exchange) into ONE 1-row broadcast; scoring +
     * top-k are a narrow map over matched docs feeding orderBy+limit —
     * TakeOrderedAndProject's per-partition heaps, no global sort.
     * Ranking key is `round(score, 9)` with a doc_id tiebreak on both
@@ -1103,7 +1099,6 @@ object AnalyticsQueries {
         sum(when(col("term") === t, 1L).otherwise(0L)).as(s"tf_$t"))
       val perDoc = tok.groupBy("doc_id")
         .agg(perDocAggs.head, perDocAggs.tail: _*)
-        .persist()
       val statAggs = Seq(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl")) ++
         bmTerms.map(t => sum((col(s"tf_$t") > 0).cast("long")).as(s"df_$t"))
       val stats = perDoc.agg(statAggs.head, statAggs.tail: _*)
@@ -1115,15 +1110,13 @@ object AnalyticsQueries {
           .otherwise(lit(0.0))
       }.reduce(_ + _)
       val nTerms = bmTerms.map(t => (col(s"tf_$t") > 0).cast("long")).reduce(_ + _)
-      val out = perDoc.filter(bmTerms.map(t => col(s"tf_$t") > 0).reduce(_ || _))
+      perDoc.filter(bmTerms.map(t => col(s"tf_$t") > 0).reduce(_ || _))
         .crossJoin(broadcast(stats))
         .withColumn("score0", w)
         .withColumn("n_terms", nTerms)
         .orderBy(round(col("score0"), 9).desc, col("doc_id"))
         .limit(bmTopK)
         .select(col("doc_id"), col("n_terms"), round(col("score0"), 6).as("score"))
-      graft.Caches.releaseAfterConsumers(Seq(out), perDoc)
-      out
     },
     Some(s"""WITH t AS ($toksSql),
              tok AS (SELECT doc_id, unnest(toks) AS term FROM t),
@@ -1570,8 +1563,8 @@ object AnalyticsQueries {
     * combine); the depth-way fan-out and the register agg touch the
     * VOCABULARY; the register table is 1024 cells at any corpus size
     * and rides a broadcast join; top-k is TakeOrderedAndProject. The
-    * count frame is persisted — three consumers (registers, top-k,
-    * estimate probes), one materialization. */
+    * count frame's consumers (registers, top-k, estimate probes) read
+    * its one aggregate exchange. */
   private val cs1 = Q(
     "cs1_countmin_est",
     (s, d) => {
@@ -1579,16 +1572,13 @@ object AnalyticsQueries {
         .select(explode(graft.operators.TextFunctions.tokens(col("text")))
           .as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-        .persist()
       val regs = graft.operators.Sketches
         .countMinRegisters(tc, "token", "cnt", cmDepth, cmWidth)
       val top = tc.orderBy(col("cnt").desc, col("token")).limit(50)
-      val out = graft.operators.Sketches
+      graft.operators.Sketches
         .countMinEstimate(top, "token", regs, cmDepth, cmWidth)
         .select(col("token"), col("cnt").as("n_true"), col("est").as("n_est"),
           (col("est") - col("cnt")).as("overcount"))
-      graft.Caches.releaseAfterConsumers(Seq(out), tc)
-      out
     },
     Some {
       val h = OracleSql.hash60("'cm:'||CAST(r AS VARCHAR)||':'||token")

@@ -216,15 +216,13 @@ object CurationQueries {
       val flagged = sigs.join(
         docs.select(col("doc_id"),
           (substring(col("source"), 4, 10).cast("int") < refSplit).as("is_ref")),
-        "doc_id").persist()
-      val out = Dedup.minhashCandidatesAgainst(
+        "doc_id")
+      Dedup.minhashCandidatesAgainst(
           flagged.filter(!col("is_ref")).drop("is_ref"),
           flagged.filter(col("is_ref")).drop("is_ref"),
           ddK, ddBandsOf, ddMaxBucket)
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_ref_matches"), min("ref_id").as("first_ref"))
-      graft.Caches.releaseAfterConsumers(Seq(out), flagged)
-      out
     },
     Some {
       val p = Dedup.MinhashP
@@ -1322,9 +1320,9 @@ object CurationQueries {
     * scaled NLL mass per domain (≈ 4e11 docs at 20 nats/token), unlike
     * the DECIMAL/HUGEINT pairs (auc1/bs1) whose products overflow 64
     * bits far sooner. Scale shape: the one heavy pass is the lm
-    * chain itself; everything after is domain-cardinality (`persist`
-    * bounds the chain to one execution — the cc1 lesson; both
-    * normalizing scalars ride broadcast 1-row cross joins). */
+    * chain itself; everything after is domain-cardinality (every
+    * consumer reads the per-domain agg's one exchange, so the chain runs
+    * once; both normalizing scalars ride broadcast 1-row cross joins). */
   private val dm1 = Q(
     "dm1_doremi_weights",
     (s, d) => {
@@ -1332,10 +1330,9 @@ object CurationQueries {
       val ds = graft.api.Corpus.languageModelScores(docs)
         .select(col("doc_id"),
           round(-col("mean_logprob") * lit(1000000.0)).cast("long").as("smi"))
-        .join(docs.select(col("doc_id"), col("source")), "doc_id")
+        .join(AnalyticsQueries.docColumnById(docs, "source"), col("doc_id") <=> col("d_id"))
         .groupBy(col("source")).agg(
           count(lit(1)).as("n_docs"), sum(col("smi")).as("ts"))
-        .persist()
       val g = ds.agg(sum(col("n_docs")).as("gn"), sum(col("ts")).as("gs"))
       val e = ds.crossJoin(broadcast(g))
         .withColumn("mean_nll", col("ts").cast("double") /
@@ -1345,13 +1342,11 @@ object CurationQueries {
             col("gs").cast("double") / (col("gn").cast("double") * lit(1000000.0))))
         .withColumn("em", round(exp(col("excess")) * lit(1000000.0)).cast("long"))
       val z = e.agg(sum(col("em")).as("zt"))
-      val out = e.crossJoin(broadcast(z))
+      e.crossJoin(broadcast(z))
         .select(col("source"), col("n_docs"),
           round(col("mean_nll"), 6).as("mean_nll"),
           round(col("excess"), 6).as("excess"),
           round(col("em").cast("double") / col("zt").cast("double"), 6).as("weight"))
-      graft.Caches.releaseAfterConsumers(Seq(out), ds)
-      out
     },
     Some(s"""WITH ${AnalyticsQueries.lmDocSql},
           sc AS (SELECT doc_id,

@@ -412,8 +412,8 @@ object DomainQueries {
       val fz = s.createDataFrame(
         FrozenModels.nbGenes.zip(FrozenModels.nbAlphas).toSeq)
         .toDF("gene", "alpha")
-      val kc = keptCells(s, d).persist()
-      val sf = Normalization.sizeFactorsOf(kc, "smp", "cnt").persist()
+      val kc = keptCells(s, d)
+      val sf = Normalization.sizeFactorsOf(kc, "smp", "cnt")
       val c = kc.join(broadcast(sf), "smp")
         .join(broadcast(fz), "gene")
         .select(col("gene"), col("smp"), col("cnt"),
@@ -438,7 +438,7 @@ object DomainQueries {
         side("NT", "n", "n_nt"), side("NT", "snorm", "s_nt"),
         side("TP", "q", "q_tp"), side("TP", "i", "i_tp"),
         side("TP", "n", "n_tp"), side("TP", "snorm", "s_tp"))
-      val out = wide
+      wide
         .filter(col("n_nt") >= 2 && col("n_tp") >= 2 &&
           col("q_nt") > 0 && col("q_tp") > 0 &&
           col("i_nt") > 0 && col("i_tp") > 0)
@@ -452,8 +452,6 @@ object DomainQueries {
           round(col("se") / lit(ln2), 6).as("lfc_se"),
           col("zr").as("stat"),
           round(Stats.normalSfTwoSided(col("zr")), 6).as("pvalue"))
-      graft.Caches.releaseAfterConsumers(Seq(out), kc, sf)
-      out
     },
     Some {
       val ln2 = math.log(2.0).toString
@@ -538,13 +536,16 @@ object DomainQueries {
       val fz = s.createDataFrame(
         FrozenModels.nb5Genes.zip(FrozenModels.nb5Alphas).toSeq)
         .toDF("gene", "alpha")
-      val kc = keptCells(s, d).persist()
-      val sf = Normalization.sizeFactorsOf(kc, "smp", "cnt").persist()
+      // cond's NULL filter (NULL only with smp, which joins no size
+      // factor) sits in the subtree the size factors read too
+      val kc = keptCells(s, d)
+        .withColumn("cond", element_at(lit(stageLevels.toArray),
+          (col("smp") % 5).cast("int") + 1))
+        .filter(col("cond").isNotNull)
+      val sf = Normalization.sizeFactorsOf(kc, "smp", "cnt")
       val c = kc.join(broadcast(sf), "smp")
         .join(broadcast(fz), "gene")
-        .select(col("gene"), col("smp"), col("cnt"),
-          element_at(lit(stageLevels.toArray),
-            (col("smp") % 5).cast("int") + 1).as("cond"),
+        .select(col("gene"), col("smp"), col("cnt"), col("cond"),
           col("size_factor").as("sf"), col("alpha"))
       val grp = c.groupBy(col("gene"), col("cond")).agg(
           sum(col("cnt")).as("sy"), sum(col("sf")).as("ssf"),
@@ -557,7 +558,7 @@ object DomainQueries {
         .groupBy(col("gene"), col("cond")).agg(
           max(col("q")).as("q"), max(col("n")).as("n"), sum(col("w")).as("i"))
         .filter(col("n") >= 2 && col("q") > 0 && col("i") > 0)
-      val out = info.as("a").join(info.as("b"),
+      info.as("a").join(info.as("b"),
           col("a.gene") === col("b.gene") && col("a.cond") < col("b.cond"))
         .withColumn("lfc", log(col("a.q")) - log(col("b.q")))
         .withColumn("se", sqrt(lit(1.0) / col("a.i") + lit(1.0) / col("b.i")))
@@ -568,8 +569,6 @@ object DomainQueries {
           round(col("se") / lit(ln2), 6).as("lfc_se"),
           col("zr").as("stat"),
           round(Stats.normalSfTwoSided(col("zr")), 6).as("pvalue"))
-      graft.Caches.releaseAfterConsumers(Seq(out), kc, sf)
-      out
     },
     Some {
       val ln2 = math.log(2.0).toString

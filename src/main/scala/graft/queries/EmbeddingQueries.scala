@@ -229,14 +229,14 @@ object EmbeddingQueries {
       val qvecs = emb.filter(col("vec_id").isin(qids: _*))
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-      val codes = Pq.encode(emb, "embedding", model).persist()
-      val out = qids.filter(qvecs.contains).map { qid =>
+      // the three top-k branches read one exchange of the codes, so the
+      // corpus is encoded once
+      val codes = Pq.encode(emb, "embedding", model).repartition(col("vec_id"))
+      qids.filter(qvecs.contains).map { qid =>
         Pq.adcTopK(codes, model, qvecs(qid), k = 10)
           .select(lit(qid).as("q_id"), col("vec_id"),
             round(col("adc_d2"), 6).as("adc_d2"))
       }.reduce(_.unionByName(_))
-      graft.Caches.releaseAfterConsumers(Seq(out), codes)
-      out
     },
     None)
 

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{AsOfJoin, Dedup, Ranks, Sampling, TextFunctions}
@@ -133,20 +134,18 @@ object PipelineQueries {
     * divide once at the end.
     *
     * Scale shape: ONE corpus pass (the shared (source, token) count
-    * agg); corpus token totals re-aggregate the vocabulary-sized frame;
-    * the (token)-keyed join is vocabulary-sized, the (source)-keyed
-    * totals broadcast, and the final agg is domain-cardinality. No
-    * windows, no per-domain sort. */
+    * agg); `kt` and `n_s` are windows over it and `nn` its 1-row agg. (A
+    * join on `source` would infer a NULL filter into its branch only,
+    * re-running the pass; the output's filter stops at the `kt` window.) */
   private val jd1 = Q(
     "jd1_domain_divergence",
     (s, d) => {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val tc = sourceTokenCounts(s, d).persist()
-      val ns = tc.groupBy(col("source")).agg(sum(col("k")).as("n_s"))
-      val ct = tc.groupBy(col("token")).agg(sum(col("k")).as("kt"))
-      val nn = ns.agg(sum(col("n_s")).as("nn"))
-      val out = tc.join(ct, "token")
-        .join(broadcast(ns), "source")
+      val tc = sourceTokenCounts(s, d)
+      val nn = tc.agg(sum(col("k")).as("nn"))
+      tc.withColumn("kt", sum(col("k")).over(Window.partitionBy(col("token"))))
+        .withColumn("n_s", sum(col("k")).over(Window.partitionBy(col("source"))))
+        .filter(col("source").isNotNull)
         .crossJoin(broadcast(nn))
         .withColumn("e",
           round(log(col("n_s").cast("double") / col("k")) * lit(1000000.0))
@@ -163,8 +162,6 @@ object PipelineQueries {
             (col("n_s").cast("double") * lit(1000000.0)), 6).as("entropy"),
           round(col("sf").cast("double") /
             (col("n_s").cast("double") * lit(1000000.0)), 6).as("kl_corpus"))
-      graft.Caches.releaseAfterConsumers(Seq(out), tc)
-      out
     },
     Some(s"""WITH $tcSql,
              ns AS (SELECT source, CAST(sum(k) AS BIGINT) AS n_s
@@ -287,34 +284,31 @@ object PipelineQueries {
     * the support filter prunes the bigram frame BEFORE its two
     * (token)-keyed joins against the unigram counts, scalar totals ride
     * one broadcast row, and the top-k plans as TakeOrderedAndProject
-    * (per-partition heaps, no global sort). Both count frames are
-    * persisted — the bigram frame feeds the total and the filtered
-    * path, the unigram frame the total and both w1/w2 joins — and both
-    * are vocabulary-bounded, not corpus-sized. */
+    * (per-partition heaps, no global sort). Each count frame has several
+    * consumers — the bigram frame the total and the filtered path, the
+    * unigram frame the total and both w1/w2 joins — and they all read
+    * its one aggregate exchange, so each explode runs once. */
   private val pm1 = Q(
     "pm1_pmi_bigrams",
     (s, d) => {
       val t = Tables.documents(s, d)
         .select(TextFunctions.tokens(col("text")).as("toks"))
-      // persisted: three plan subtrees consume uni (the nn total and the
-      // two w1/w2 joins); without the persist the corpus-sized
-      // explode+agg would re-execute per subtree unless exchange reuse
-      // happens to dedupe it — same reasoning as bi0 below, and uni is
-      // likewise vocabulary-bounded, not corpus-sized
       val uni = t.select(explode(col("toks")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("cw"))
-        .persist()
       val bi0 = t
         .select(explode(TextFunctions.shingles(col("toks"), 2)).as("bg"))
         .groupBy(col("bg")).agg(count(lit(1)).as("cxy"))
-        .persist()
       val totals = uni.agg(sum(col("cw")).as("nn"))
         .crossJoin(bi0.agg(sum(col("cxy")).as("mm")))
-      val out = bi0.filter(col("cxy") >= pmiMinCount)
+      bi0.filter(col("cxy") >= pmiMinCount)
         .withColumn("w1", split(col("bg"), " ").getItem(0))
         .withColumn("w2", split(col("bg"), " ").getItem(1))
-        .join(uni.select(col("w").as("w1"), col("cw").as("cx")), "w1")
-        .join(uni.select(col("w").as("w2"), col("cw").as("cy")), "w2")
+        // `<=>` (no side is NULL): `===` infers a NULL filter into this
+        // branch only, which then re-runs the bigram explode
+        .join(uni.select(col("w").as("u1"), col("cw").as("cx")),
+          col("w1") <=> col("u1"))
+        .join(uni.select(col("w").as("u2"), col("cw").as("cy")),
+          col("w2") <=> col("u2"))
         .crossJoin(broadcast(totals))
         .withColumn("pmi", round(log(
           col("cxy").cast("double") / col("mm") /
@@ -324,8 +318,6 @@ object PipelineQueries {
           col("cx").as("n_left"), col("cy").as("n_right"), col("pmi"))
         .orderBy(col("pmi").desc, col("bigram"))
         .limit(100)
-      graft.Caches.releaseAfterConsumers(Seq(out), uni, bi0)
-      out
     },
     Some(s"""WITH t AS ($toksSql),
              u0 AS (SELECT unnest(toks) AS w FROM t),

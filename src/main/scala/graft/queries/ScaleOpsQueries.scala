@@ -443,15 +443,16 @@ object ScaleOpsQueries {
   private val ss2 = Q(
     "ss2_lsh_ann",
     (s, d) => {
-      // persist: the md5-heavy bucket projection feeds corpus AND queries
-      val e = embNorm(s, d).withColumn("bucket", bucketCol(col("v"))).persist()
+      // the query filter pushes below the bucket projection, so the
+      // query side buckets only its own rows
+      val e = embNorm(s, d).withColumn("bucket", bucketCol(col("v")))
       val q = e.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket"))
       // O(k)-state deterministic rerank (the ss1/ss3 r12 rewiring): the
       // bucket join already cuts the scored frame ~2^planes-fold, but the
       // row_number spelling still shuffled and sorted ALL of it — the
       // aggregate's map-side combine ships ≤ k rows per (query, partition)
-      val out = e.join(broadcast(q), Seq("bucket"))
+      e.join(broadcast(q), Seq("bucket"))
         .filter(col("vec_id") =!= col("q_id"))
         .withColumn("cos", cosine("qv", "v"))
         .groupBy("q_id")
@@ -461,8 +462,6 @@ object ScaleOpsQueries {
         .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
           col("col.vec_id").as("vec_id"), col("col.bucket").as("bucket"),
           round(col("col.cos"), 6).as("cos"))
-      graft.Caches.releaseAfterConsumers(Seq(out), e)
-      out
     },
     Some(s"""WITH e AS (SELECT *, $bucketSql AS bucket FROM ($embNormSql)),
              q AS (SELECT vec_id AS q_id, embedding, nrm AS qn, bucket

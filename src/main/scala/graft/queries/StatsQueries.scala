@@ -776,35 +776,31 @@ object StatsQueries {
     * Built ON wt1: the Spark side consumes `wt1.run`'s output frame and
     * the oracle WRAPS wt1's own oracle SQL as a CTE, so the two queries
     * can never diverge on what the p-values are. Everything downstream
-    * of wt1 is integer bin counts and two scalar divisions (the n-frame
-    * rides a broadcast 1-row cross join; the 2000-row p frame is
-    * persisted so the Welch chain runs once).
+    * of wt1 is integer bin counts and two scalar divisions: ONE per-bin
+    * aggregate (with each bin's count of p > λ), whose totals are
+    * windows over its ≤ 21 rows, so the Welch chain runs once.
     *
-    * The p frame is released once the returned frame has fed an action
-    * (see [[graft.Caches]]). The re-run of the full wt1 chain when BOTH
-    * wt1 and pv1 execute in one session is deliberate: catalog queries are
-    * self-contained by contract (no cross-query shared caches), and the
-    * 2000-gene screen is cheap relative to cache-coordination coupling;
-    * a caller auditing a truly expensive screen should pass its own
-    * persisted stat frame. */
+    * The re-run of the full wt1 chain when BOTH wt1 and pv1 execute in
+    * one session is deliberate: catalog queries are self-contained by
+    * contract (no cross-query shared caches), and the 2000-gene screen is
+    * cheap relative to cache-coordination coupling; a caller auditing a
+    * truly expensive screen should pass its own persisted stat frame. */
   private val pv1 = Q(
     "pv1_pvalue_qc",
     (s, d) => {
-      val base = wt1.run(s, d).select(col("pvalue")).persist()
-      val n = base.agg(count(lit(1)).as("n_tot"),
-        sum(when(col("pvalue") > 0.5, 1L).otherwise(0L)).as("n_hi"))
-      val out = base
-        .withColumn("bin",
-          least(floor(col("pvalue") * lit(20.0)).cast("long"), lit(19L)))
-        .groupBy(col("bin")).agg(count(lit(1)).as("n_genes"))
-        .crossJoin(broadcast(n))
+      val all = Window.partitionBy()
+      wt1.run(s, d)
+        .groupBy(least(floor(col("pvalue") * lit(20.0)).cast("long"), lit(19L))
+          .as("bin"))
+        .agg(count(lit(1)).as("n_genes"),
+          sum(when(col("pvalue") > 0.5, 1L).otherwise(0L)).as("n_hi_bin"))
+        .withColumn("n_tot", sum(col("n_genes")).over(all))
+        .withColumn("n_hi", sum(col("n_hi_bin")).over(all))
         .select(col("bin"), col("n_genes"),
           round(col("n_genes").cast("double") / col("n_tot").cast("double"), 6)
             .as("frac"),
           round(least(lit(1.0), col("n_hi").cast("double") /
             (lit(0.5) * col("n_tot").cast("double"))), 6).as("pi0"))
-      graft.Caches.releaseAfterConsumers(Seq(out), base)
-      out
     },
     Some(s"""WITH base AS (${wt1.oracle.get}),
           s AS (SELECT CAST(count(*) AS BIGINT) AS n_tot,

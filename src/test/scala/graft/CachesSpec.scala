@@ -367,28 +367,39 @@ class CachesSpec extends SparkSpec {
         "a post-registration consumer has been observed (r13 ADVICE leak)")
   }
 
-  test("uncached dedup and corpus operators register no listener and add no persistent RDD") {
-    val ops = UncachedCorpusOps(spark, "/root/testdata/sf0.01")
+  /** Building each frame registers no query listener, and writing it to
+    * a `noop` sink leaves none and adds no persistent RDD. */
+  private def assertCachesNothing(ops: Seq[(String, () => org.apache.spark.sql.DataFrame)]): Unit = {
     // the session-wide bucket-cap audit registers on first use; build
     // every frame once so it is in place before counting
-    ops.foreach(_.frame())
+    ops.foreach(_._2())
     spark.catalog.clearCache()
     spark.range(1).count()
     def pending() = org.apache.spark.sql.QueryListeners.of(spark)
       .count(_.getClass.getName.startsWith("graft.Caches$"))
     settle(pending() == 0)
-    ops.foreach { op =>
+    ops.foreach { case (name, frame) =>
       val listeners = org.apache.spark.sql.QueryListeners.of(spark).size
       val earlier = rddIds()
-      val df = op.frame()
+      val df = frame()
       assert(org.apache.spark.sql.QueryListeners.of(spark).size == listeners,
-        s"${op.name}: building the frame registered a query listener")
+        s"$name: building the frame registered a query listener")
       df.write.format("noop").mode("overwrite").save()
       assert(org.apache.spark.sql.QueryListeners.of(spark).size == listeners,
-        s"${op.name}: the action left a query listener")
+        s"$name: the action left a query listener")
       assert(rddIds() == earlier,
-        s"${op.name}: the action added persistent RDDs ${rddIds() -- earlier}")
+        s"$name: the action added persistent RDDs ${rddIds() -- earlier}")
     }
+  }
+
+  test("uncached dedup and corpus operators register no listener and add no persistent RDD") {
+    assertCachesNothing(UncachedCorpusOps(spark, "/root/testdata/sf0.01")
+      .map(op => op.name -> op.frame))
+  }
+
+  test("uncached catalog queries register no listener and add no persistent RDD") {
+    assertCachesNothing(UncachedCatalogQueries(spark, "/root/testdata/sf0.01")
+      .map(op => op.name -> op.frame))
   }
 
   test("corpus near-dup + search session releases its caches too") {

@@ -797,39 +797,74 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("dedup and corpus operators cache nothing and explode their input once") {
+  /** The executed plan of `df` written to a `noop` sink, as the listener
+    * bus reports the write's own execution. */
+  private def noopWritePlan(df: DataFrame, what: String): SparkPlan = {
     import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
-    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
+    val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val capture = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.isInstanceOf[V2WriteCommand]) writes.put(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(capture)
+    val qe =
+      try {
+        df.write.format("noop").mode("overwrite").save()
+        writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      } finally spark.listenerManager.unregister(capture)
+    assert(qe != null, s"$what: the noop write was not reported")
+    qe.executedPlan
+  }
+
+  test("dedup and corpus operators cache nothing and explode their input once") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     for (op <- UncachedCorpusOps(spark, "/root/testdata/sf0.01")) {
-      val df = op.frame()
-      // the noop write's own execution, as the listener bus reports it
-      val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
-      val capture = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          if (qe.analyzed.isInstanceOf[V2WriteCommand]) writes.put(qe)
-        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(capture)
-      val qe =
-        try {
-          df.write.format("noop").mode("overwrite").save()
-          writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-        } finally spark.listenerManager.unregister(capture)
-      assert(qe != null, s"${op.name}: the noop write was not reported")
-      val nodes = flatten(qe.executedPlan)
-      val p = qe.executedPlan.toString
+      val plan = noopWritePlan(op.frame(), op.name)
+      val nodes = flatten(plan)
       assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]),
-        s"${op.name}: the executed plan reads a cache\n$p")
+        s"${op.name}: the executed plan reads a cache\n$plan")
       // the explodes emit each shingle (token) row once, and each doc's
       // bands once: no branch re-runs the explode
       val exploded = nodes.collect { case g: GenerateExec =>
         g.metrics("numOutputRows").value }
       assert(exploded.sum == op.explodeRows,
         s"${op.name}: explodes emitted ${exploded.mkString(" + ")} rows, " +
-          s"expected ${op.explodeRows}\n$p")
+          s"expected ${op.explodeRows}\n$plan")
     }
+  }
+
+  test("uncached catalog queries read no cache and compute each shared intermediate once") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val faults = UncachedCatalogQueries(spark, "/root/testdata/sf0.01").flatMap { op =>
+      val plan = noopWritePlan(op.frame(), op.name)
+      val nodes = flatten(plan)
+      val cached =
+        if (nodes.exists(_.isInstanceOf[InMemoryTableScanExec]))
+          Some(s"${op.name}: the executed plan reads a cache\n$plan")
+        else None
+      // an explode with no aggregate under it reads the input's rows (the
+      // others explode per-key arrays: sketch entries, band keys, pairs);
+      // together those emit each token (shingle) row once
+      val exploded = nodes.collect {
+        case g: GenerateExec
+            if !flatten(g.child).exists(_.isInstanceOf[BaseAggregateExec]) =>
+          g.metrics("numOutputRows").value
+      }
+      val scanned = nodes.collect { case f: FileSourceScanExec =>
+        f.metrics("numOutputRows").value }
+      def rows(what: String, got: Seq[Long], expected: Option[Long]) =
+        expected.filter(_ != got.sum).map(e =>
+          s"${op.name}: $what ${got.mkString(" + ")} rows, expected $e\n$plan")
+      cached ++ rows("input explodes emitted", exploded, op.corpusExplodeRows) ++
+        rows("scans read", scanned, op.scanRows)
+    }
+    assert(faults.isEmpty, faults.mkString("\n\n"))
   }
 
   test("nested-schema pruning: reading struct metadata never drags the binary payload") {

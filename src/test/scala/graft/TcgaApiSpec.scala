@@ -292,4 +292,48 @@ class TcgaApiSpec extends SparkSpec {
       "pvalue"))
     assert(curves.count() == 0 && tests.count() == 0)
   }
+
+  private def noNaN(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.collect().forall(r => (0 until r.length).forall(i => r.get(i) match {
+      case d: Double => !d.isNaN
+      case _ => true
+    }))
+
+  test("a samples side that leaves the cohort empty gives empty DE and KM frames") {
+    // a runtime-empty filter (the optimizer cannot fold it away): the
+    // expression side is intact, no sample of it has a condition or a time
+    val t0 = t.copy(samples = t.samples.filter(col("barcode").startsWith("none")))
+    val de = Tcga.differentialExpression(t0, "short_letter_code", Seq("NT", "TP"))
+    assert(de.columns.toSeq == Seq("gene_id", "gene_name", "contrast", "log2fc",
+      "lfc_se", "stat", "pvalue", "padj", "p_signif"))
+    assert(de.count() == 0)
+    val (curves, tests) = Tcga.kmByMedianExpression(t0, Seq("DEG10", "GENE1"))
+    assert(curves.columns.toSeq == Seq("time", "n_risk", "n_event", "n_censor",
+      "survival", "se", "ci_lo", "ci_hi", "gene_name", "strat"))
+    assert(tests.columns.toSeq == Seq("gene_name", "observed_a", "expected_a", "chi2",
+      "pvalue"))
+    assert(curves.count() == 0 && tests.count() == 0)
+  }
+
+  test("one sample per level: an empty DE frame, and KM curves and tests with no NaN") {
+    // one dead subject per condition: two samples for the two coefficients
+    // of NT vs TP leave no residual degree of freedom for a dispersion
+    val dead = t.samples.filter(col("vital_status") === "Dead")
+      .select("barcode", "short_letter_code").collect()
+      .groupBy(_.getString(1)).values.map(_.map(_.getString(0)).min).toSeq
+    assert(dead.size == 2)
+    val t1 = t.copy(samples = t.samples.filter(col("barcode").isin(dead: _*)))
+    val de = Tcga.differentialExpression(t1, "short_letter_code", Seq("NT", "TP"))
+    assert(de.count() == 0)
+    val goi = (0 until TcgaFixtures.nGenes by 10).map(g => s"DEG$g")
+    val (curves, tests) = Tcga.kmByMedianExpression(t1, goi)
+    // each gene's two subjects: one or two curves, each of one subject
+    // per step, and a test only where they fall in different halves
+    assert(curves.count() > 0 && noNaN(curves))
+    assert(curves.filter(col("n_risk") > 2).count() == 0)
+    assert(noNaN(tests))
+    val split = curves.groupBy("gene_name").agg(countDistinct("strat").as("k"))
+      .filter(col("k") === 2).select("gene_name").collect().map(_.getString(0)).toSet
+    assert(tests.select("gene_name").collect().map(_.getString(0)).toSet == split)
+  }
 }

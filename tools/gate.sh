@@ -37,7 +37,7 @@ fi
 # cache registrations only go down (ROADMAP direction 7 aims at ~3): the
 # releaseAfterConsumers( call sites in src/main outside Caches.scala may not
 # exceed the committed count. Lower it when a site goes.
-max_registrations=29
+max_registrations=15
 registrations=$(grep -rn 'releaseAfterConsumers(' src/main |
   grep -vc '^src/main/scala/graft/Caches.scala:' || true)
 if [ "$registrations" -gt "$max_registrations" ]; then
@@ -47,7 +47,7 @@ if [ "$registrations" -gt "$max_registrations" ]; then
 fi
 # nor may a removed cache come back as a persist with no registration: the
 # .persist( call sites in src/main may not exceed the committed count either
-max_persists=47
+max_persists=29
 persists=$( (grep -rn '\.persist(' src/main || true) | wc -l)
 if [ "$persists" -gt "$max_persists" ]; then
   echo "$persists .persist( call sites in src/main, more than the committed" \
